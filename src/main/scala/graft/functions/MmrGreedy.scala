@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   * Exists for a measured r19 reason (guide §"job count"): the greedy
   * pick r depends on picks 1..r−1 BY DEFINITION, so the r18 spelling
   * ran k−1 driver-sequenced checkpoint rounds (anti-join + argmax +
-  * union each) over relations that are ≤ m rows per query — JobProfile
+  * union each) over relations that are ≤ m rows per query — a job profile
   * measured 40 jobs / no stage over 0.3 s: pure scheduling latency at
   * sf0.1, and k−1 cluster-wide barriers at 100 TB. Both inputs are
   * bounded by the LITERAL m (top-m candidates, m·(m−1) pair sims),

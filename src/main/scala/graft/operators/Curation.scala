@@ -1411,7 +1411,7 @@ object Curation extends CurationClusters {
     // token stream entering the rebuild fold are byte-tiny after their
     // exchanges, so AQE coalesced each to ONE partition while the
     // per-row work (window + per-doc collect_list/array_sort) is
-    // array-sized — JobProfile showed two 0.3–0.5 s single-task stages.
+    // array-sized — a job profile showed two 0.3–0.5 s single-task stages.
     // An exact-N keyed repartition pins the width WITHOUT adding an
     // exchange: the window's partitionBy("doc_id") and the rebuild's
     // groupBy("doc_id") requirements are satisfied by

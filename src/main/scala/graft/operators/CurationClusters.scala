@@ -921,13 +921,8 @@ private[operators] trait CurationClusters extends CurationQuality {
     * text or grows past |clusters| rows.
     */
   def clusterSizes(spark: SparkSession, dir: String, maxRounds: Int = 30): DataFrame =
-    // x121 is the bench's contraction-family load CANARY (and mid-run
-    // probe): it runs on the PINNED r18 contraction so its recorded
-    // load-gate baseline stays calibrated while every other consumer
-    // gets the r19 loop. Labels are bit-identical (see the pinned
-    // copy's scaladoc), so the histogram is unchanged.
     clusterSizesOf(
-      Graph.connectedComponentsPinned(
+      Graph.connectedComponents(
         Dedup.simhashNearDupPairs(spark, dir).select(col("d1"), col("d2")), maxRounds),
       spark, dir)
 

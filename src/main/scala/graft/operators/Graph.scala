@@ -95,65 +95,6 @@ object Graph {
     labels.select(col("node").as("doc_id"), col("label").as("cluster")).orderBy("doc_id")
   }
 
-  /** The r18 contraction VERBATIM, kept exclusively for the bench's
-    * contraction-family load canary (`x121_cluster_sizes` — canary AND
-    * mid-run probe in `graft.Bench`): its recorded BASELINE.md column
-    * (3.03 s) calibrates the session load gate, so the code under it
-    * must stay frozen while [[connectedComponents]] gets faster — a
-    * faster canary would read a genuinely loaded session as quiet,
-    * which inverts the canary's job (the r19 VERDICT task 3 ask,
-    * spelled there as "move the canary to a pinned copy of the old
-    * code path"). Labels are bit-identical to [[connectedComponents]]
-    * by the r19 argument above (the optimization only removed a
-    * distinct and recomputation, never changed a label), so x121's
-    * RESULT is unchanged — only its cost model is pinned.
-    * Do not optimize this copy; do not route anything else through it.
-    */
-  private[operators] def connectedComponentsPinned(
-      pairRelation: DataFrame, maxRounds: Int = 30): DataFrame = {
-    val pairs = pairRelation.localCheckpoint()
-    val edges = pairs.select(col("d1").as("u"), col("d2").as("v"))
-      .union(pairs.select(col("d2").as("u"), col("d1").as("v")))
-      .localCheckpoint()
-    var labels = edges.groupBy(col("u").as("node")).agg(min("v").as("m"))
-      .select(col("node"), least(col("node"), col("m")).as("label"))
-      .localCheckpoint()
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
-      val ledges = edges
-        .join(labels.select(col("node").as("u"), col("label").as("lu")), "u")
-        .join(labels.select(col("node").as("v"), col("label").as("lv")), "v")
-        .filter(col("lu") =!= col("lv"))
-        .select(col("lu").as("u"), col("lv").as("v"))
-        .distinct()
-        .localCheckpoint()
-      if (ledges.isEmpty) converged = true
-      else {
-        def f = ledges.groupBy(col("u").as("old")).agg(min("v").as("m"))
-          .select(col("old"), least(col("old"), col("m")).as("nw"))
-        val mid = labels.select(col("node").as("h1n"), col("label").as("h2"))
-          .join(f.select(col("old"), col("nw")), col("h1n") === col("nw"))
-          .select(col("old"), col("h2"))
-        val g = f
-          .join(mid.withColumnRenamed("h2", "h2m"), Seq("old"), "left")
-          .select(col("old"), coalesce(col("h2m"), col("nw")).as("h2v"))
-          .join(f.select(col("old").as("fo"), col("nw").as("h3")),
-            col("h2v") === col("fo"), "left")
-          .select(col("old"), coalesce(col("h3"), col("h2v")).as("nw"))
-        labels = labels
-          .join(g, labels("label") === g("old"), "left")
-          .select(labels("node"), coalesce(g("nw"), labels("label")).as("label"))
-          .localCheckpoint()
-        round += 1
-      }
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"dedupClusters did not converge within $maxRounds rounds — labels would be wrong")
-    labels.select(col("node").as("doc_id"), col("label").as("cluster")).orderBy("doc_id")
-  }
-
   /** EXACT-integer damped PageRank over an arbitrary undirected pair
     * relation `(d1, d2)` — the second iterative graph engine next to
     * [[connectedComponents]], exposed generically for the same reason:

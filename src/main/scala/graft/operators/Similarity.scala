@@ -219,7 +219,7 @@ object Similarity extends SimilarityIndexOps {
     // r19 (guide §2.4 / job-count): the k−1 greedy rounds ran as k−1
     // DRIVER-SEQUENCED checkpoint jobs (anti-join + argmax + union per
     // pick), each a chain of broadcast builds over relations that are m
-    // rows per query BY CONSTRUCTION — JobProfile measured 40 jobs, no
+    // rows per query BY CONSTRUCTION — a job profile measured 40 jobs, no
     // stage over 0.3 s: pure round-trip overhead, and at 100 TB the k−1
     // cluster-wide barriers are the same mistake at worse latency. The
     // greedy selection is per-query sequential by DEFINITION (pick r

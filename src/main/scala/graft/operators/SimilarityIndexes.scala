@@ -1855,8 +1855,8 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     // r19 (VERDICT r18 task 2): the r18 query-side spread is REMOVED on
     // this path — the driver measured it regressing the queries it was
     // meant to help (x179 1.26→1.54 s, x191 2.53→2.82 s vs the pre-opt
-    // base) and a same-session A/B this round confirmed it (see
-    // OPTIMIZATION_r19.md). The float path (ivfTopKOverCells) keeps its
+    // base) and a same-session A/B against the spread-free path
+    // confirmed it. The float path (ivfTopKOverCells) keeps its
     // spread: there the per-pair work is a dim-wide dot product and the
     // one-task expansion measured 3.8–4.3 s (x175); here it is m table
     // lookups over ALREADY-PRUNED code rows, so the added exchange (and

@@ -48,18 +48,17 @@ object QueryIndexGen {
       .getOrElse("SparkEntry (inline)")
   }
 
-  /** `path:line` of `def <method>` in src/main — the clickable anchor. */
+  /** `path#method` of the first `def <method>` in src/main — the anchor.
+    * Named by method, not line, so an unrelated edit that shifts lines
+    * cannot stale the index.
+    */
   private def defSite(mainSources: Seq[(Path, String)], api: String): String = {
     val method = api.substring(api.indexOf('.') + 1)
     val pat = raw"def\s+$method\b".r
-    val hits = for {
-      (p, src) <- mainSources
-      m <- pat.findFirstMatchIn(src).toSeq
-    } yield {
-      val line = src.substring(0, m.start).count(_ == '\n') + 1
-      s"`${p.toString.stripPrefix("src/main/scala/")}:$line`"
-    }
-    if (hits.isEmpty) "—" else hits.head
+    mainSources.collectFirst {
+      case (p, src) if pat.findFirstIn(src).isDefined =>
+        s"`${p.toString.stripPrefix("src/main/scala/")}#$method`"
+    }.getOrElse("—")
   }
 
   /** Test files that exercise the method (or name the key directly). */

@@ -24,13 +24,23 @@ class QueryIndexSpec extends AnyFunSuite {
 
   test("every query key resolves to a real def-site anchor") {
     val fresh = QueryIndexGen.render()
-    // the def-site column (3rd) degrading to the — placeholder means the
-    // parse lost track of an operator: fail with the rows. The specs
+    // the def-site column (3rd) is `path#method`; it must name a file
+    // under src/main that really holds `def method`. Degrading to the —
+    // placeholder means the parse lost track of an operator. The specs
     // column MAY be — (some parity keys are exercised only through the
     // driver oracle + streaming twins), so it is not asserted here.
+    val anchor = raw"`([^`#]+)#([A-Za-z0-9]+)`".r
     val broken = fresh.linesIterator
       .filter(_.startsWith("| `"))
-      .filter(_.split("\\|")(3).trim == "—").toSeq
+      .filterNot { row =>
+        row.split("\\|")(3).trim match {
+          case anchor(file, method) =>
+            val p = Paths.get("src/main/scala", file)
+            Files.exists(p) &&
+              raw"def\s+$method\b".r.findFirstIn(new String(Files.readAllBytes(p), "UTF-8")).isDefined
+          case _ => false
+        }
+      }.toSeq
     assert(broken.isEmpty, s"unresolved def-site rows:\n${broken.mkString("\n")}")
   }
 }

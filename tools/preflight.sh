@@ -7,6 +7,9 @@
 #   2. QueryIndexSpec         — QUERY_INDEX.md anchors not stale
 #   3. 3-query smoke Verify   — one query per heavy family actually runs
 #      end-to-end at sf0.001 and oracle-passes in DuckDB
+#   4. perfbench self-tests   — the benchmark's statistics and schedule
+#   5. perfbench scalac build — src/main + perfbench/src compile together,
+#      so a main-source change that breaks the benchmark fails here
 # Exit 0 = safe to commit. Anything else = DO NOT COMMIT THE SNAPSHOT.
 #
 # Usage: tools/preflight.sh [sf-dir]   (default /root/testdata/sf0.001)
@@ -17,21 +20,21 @@ SMOKE=${PREFLIGHT_SMOKE:-x1_exact_dedup,x105_pq_recall,x119_vocab_coverage}
 OUT=$(mktemp -d /tmp/preflight.XXXXXX)
 trap 'rm -rf "$OUT"' EXIT
 
-echo "[preflight] 1/3 Test/compile"
+echo "[preflight] 1/5 Test/compile"
 if ! sbt -batch "Test/compile" >"$OUT/compile.log" 2>&1; then
   tail -30 "$OUT/compile.log"
   echo "[preflight] FAIL: Test/compile broken — this is exactly the r17 loss; fix before committing" >&2
   exit 1
 fi
 
-echo "[preflight] 2/3 QueryIndexSpec (QUERY_INDEX.md staleness)"
+echo "[preflight] 2/5 QueryIndexSpec (QUERY_INDEX.md staleness)"
 if ! sbt -batch "testOnly graft.QueryIndexSpec" >"$OUT/index.log" 2>&1; then
   tail -30 "$OUT/index.log"
   echo "[preflight] FAIL: QUERY_INDEX.md is stale — run: sbt \"Test/runMain graft.QueryIndexGen\" and re-check" >&2
   exit 1
 fi
 
-echo "[preflight] 3/3 smoke Verify ($SMOKE @ $SF)"
+echo "[preflight] 3/5 smoke Verify ($SMOKE @ $SF)"
 if ! SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} \
     sbt -batch "runMain graft.Verify $SF $OUT/verify $SMOKE" >"$OUT/verify.log" 2>&1; then
   tail -30 "$OUT/verify.log"
@@ -48,4 +51,21 @@ if ! python3 tools/check.py "$SF" "$OUT/verify" >"$OUT/check.log" 2>&1; then
   exit 1
 fi
 tail -1 "$OUT/check.log"
+
+echo "[preflight] 4/5 perfbench self-tests"
+if ! python3 -m unittest discover -s perfbench/tests >"$OUT/perftest.log" 2>&1; then
+  tail -30 "$OUT/perftest.log"
+  echo "[preflight] FAIL: perfbench self-tests" >&2
+  exit 1
+fi
+
+echo "[preflight] 5/5 perfbench scalac build (src/main + perfbench/src)"
+# the jar directory perfbench/run.py uses: $SPARK_HOME/jars, else build.sbt's unmanagedBase
+JARS=${SPARK_HOME:+$SPARK_HOME/jars}
+JARS=${JARS:-$(sed -n 's/^unmanagedBase := file("\(.*\)")$/\1/p' build.sbt)}
+if ! bash perfbench/build.sh "$OUT/perfbench-classes" "$JARS" >"$OUT/perfbuild.log" 2>&1; then
+  tail -30 "$OUT/perfbuild.log"
+  echo "[preflight] FAIL: perfbench does not compile against src/main" >&2
+  exit 1
+fi
 echo "[preflight] OK — safe to commit"
