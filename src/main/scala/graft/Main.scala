@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.admin.{TopicAdmin, TopicMetadataClient}
 import graft.config.ReplicatorConfig
@@ -44,49 +44,32 @@ object Main {
       if (failures.isEmpty) Right(cfg) else Left(failures)
     }
 
-  /** Phase C: start the replication stream (D1–D7) — the built-in
-    * at-least-once sink by default; the transactional record-complete
-    * path when `--exactly-once` was requested (D6, reference:
-    * FlinkKafkaReplicator.java:120-124); drain-and-stop when
-    * `--backfill` was requested (extension — uses the at-least-once
-    * sink; the `--backfill --exactly-once` combination is rejected by
+  /** Phase C: start the replication stream (D1–D7) through the
+    * record-complete sender sink: the transactional path when
+    * `--exactly-once` was requested (D6, reference:
+    * FlinkKafkaReplicator.java:120-124), else at-least-once — draining
+    * and stopping when `--backfill` was requested (extension; the
+    * `--backfill --exactly-once` combination is rejected by
     * [[ReplicatorConfig.fromArgs]], so no silent downgrade can occur
-    * here).
+    * here). `sourceOverride` replaces the Kafka reader (MemoryStream in
+    * specs — this build has no Kafka connector or brokers).
     */
   def startStream(
       spark: SparkSession,
       cfg: ReplicatorConfig,
       checkpointLocation: String,
-      senderFor: ReplicatorConfig => graft.streaming.RecordSenderFactory,
+      senders: graft.streaming.RecordSenderFactory,
       sourceOverride: Option[org.apache.spark.sql.DataFrame] = None): StreamingQuery =
-    sourceOverride match {
-      case None =>
-        if (cfg.backfill)
-          Pipeline.startBackfill(spark, cfg, checkpointLocation)
-        else if (cfg.exactlyOnce)
-          Pipeline.startExactlyOnce(spark, cfg, checkpointLocation,
-            commitDir(checkpointLocation), senderFor(cfg))
-        else
-          Pipeline.start(spark, cfg, checkpointLocation)
-      case Some(src) =>
-        // broker-free edge (MemoryStream in specs — this build has no
-        // Kafka connector or brokers): the SAME mode dispatch, with the
-        // built-in kafka sink replaced by the record-complete sender
-        // sink, so argv → reconcile → stream → rows composes end-to-end
-        if (cfg.exactlyOnce)
-          Pipeline.startExactlyOnce(spark, cfg, checkpointLocation,
-            commitDir(checkpointLocation), senderFor(cfg), Some(src))
-        else
-          Pipeline.startAtLeastOnceComplete(spark, cfg, checkpointLocation,
-            senderFor(cfg), Some(src),
-            trigger =
-              if (cfg.backfill)
-                Some(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              else None)
-    }
+    if (cfg.exactlyOnce)
+      Pipeline.startExactlyOnce(spark, cfg, checkpointLocation,
+        commitDir(checkpointLocation), senders, sourceOverride)
+    else
+      Pipeline.startAtLeastOnceComplete(spark, cfg, checkpointLocation,
+        senders, sourceOverride,
+        trigger = Option.when(cfg.backfill)(Trigger.AvailableNow()))
 
   /** The exactly-once commit directory for a checkpoint — ONE derivation
-    * shared by the scope minting and both `startStream` dispatch sites:
+    * shared by the scope minting and the `startStream` dispatch:
     * [[progressScope]]'s lifecycle contract ("the scope dies with a
     * checkpoint wipe") holds only because `_scope` lives in the same
     * directory the markers do.
@@ -168,10 +151,15 @@ object Main {
 
   /** Full lifecycle with the reference's fixed-delay restart policy
     * (4 attempts / 10 s, reference: FlinkKafkaReplicator.java:99).
-    * When no `senderFor` is injected, the default factory's pooled
-    * producers are SHUT DOWN once the stream terminates for good —
-    * without this, a wipe-and-rerun in one long-lived JVM strands the
-    * old token's producers (fenced by the rerun, never closed).
+    * The sender factory is resolved ONCE per run: the default factory
+    * decides legacy-key honouring from whether `_scope` exists, and its
+    * first call mints `_scope`, so a second call would compute a
+    * different pool token. Every restart therefore reuses the first
+    * factory, and the shutdown closes that factory's pool. When no
+    * `senderFor` is injected, the pooled producers are SHUT DOWN once
+    * the stream terminates for good — without this, a wipe-and-rerun in
+    * one long-lived JVM strands the old token's producers (fenced by
+    * the rerun, never closed).
     */
   def run(
       args: Array[String],
@@ -182,12 +170,12 @@ object Main {
       sourceOverride: Option[org.apache.spark.sql.DataFrame] = None): Either[Seq[String], Unit] =
     preflight(args, clientFor).map { cfg =>
       val senders = senderFor
-        .getOrElse(defaultSenderFactory(spark, checkpointLocation))
+        .getOrElse(defaultSenderFactory(spark, checkpointLocation))(cfg)
       try
         Pipeline.runWithRestarts()(() =>
           startStream(spark, cfg, checkpointLocation, senders, sourceOverride))
       finally if (senderFor.isEmpty) { // injected factories are caller-owned
-        senders(cfg) match {
+        senders match {
           case p: graft.streaming.PooledSenderFactory => p.shutdownAll()
           case _ => ()
         }

@@ -1,117 +1,94 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.graft.shim
 import org.apache.spark.sql.types._
 
-/** One scored candidate flowing into the top-k accumulator. */
-final case class TopKEntry(sim: Double, cid: Long)
-
-/** Wrapper for the finished result (a plain `Seq` output type has no
-  * public `Encoders` constructor; a one-field product does).
-  */
-final case class TopKResult(entries: Seq[TopKEntry])
-
-/** Bounded accumulator: the best `k` entries seen so far, kept sorted by
-  * (sim desc, cid asc). `n` is the filled prefix length of the arrays.
-  */
-final case class TopKBuf(sims: Array[Double], cids: Array[Long], var n: Int)
-
-/** Map-side bounded top-k per group — the scale-safe spelling of
-  * "rank per query, keep the first k".
-  *
-  * A `row_number` window over the scored stream shuffles EVERY scored
-  * pair by qid before any row is discarded: for brute-force similarity
-  * that is an n·m-row exchange that dwarfs everything else at 100×
-  * scale. As a typed aggregate the accumulator is a k-bounded sorted
-  * buffer, Spark runs it in partial mode BEFORE the exchange
-  * (ObjectHashAggregate partial → shuffle → final merge), and the
-  * exchange carries at most |queries|·k rows per map partition instead
-  * of the full scored stream.
+/** Bounded top-k accumulator: the best `k` (= `sims.length`) entries
+  * seen so far, kept sorted by (sim desc, cid asc). `n` is the filled
+  * prefix length of the arrays.
   *
   * Ordering contract (must match the DuckDB oracles' `ORDER BY sim
   * DESC, cid`): higher sim first; IEEE `==` equality (so 0.0 and -0.0
   * tie, as in both engines' SQL comparisons) breaks ties by lower cid.
   * Dot products never produce NaN here (inputs are finite floats).
   */
-final class TopKAggregator(k: Int)
-    extends Aggregator[TopKEntry, TopKBuf, TopKResult] {
-
-  require(k > 0, s"top-k requires k > 0, got $k")
-
-  /** a strictly better than b under (sim desc, cid asc)? */
-  @inline private def better(aSim: Double, aCid: Long, bSim: Double, bCid: Long): Boolean =
-    if (aSim == bSim) aCid < bCid else aSim > bSim
-
-  override def zero: TopKBuf = TopKBuf(new Array[Double](k), new Array[Long](k), 0)
+final case class TopKBuf(sims: Array[Double], cids: Array[Long], var n: Int) {
 
   /** Insert one entry, keeping the buffer sorted; O(k) shift only when
     * the entry beats the current worst, O(1) reject otherwise — the
     * common case once the buffer is warm.
     */
-  override def reduce(b: TopKBuf, e: TopKEntry): TopKBuf = {
-    if (b.n < k || better(e.sim, e.cid, b.sims(b.n - 1), b.cids(b.n - 1))) {
-      var i = math.min(b.n, k - 1) // insertion slot, walking left
-      while (i > 0 && better(e.sim, e.cid, b.sims(i - 1), b.cids(i - 1))) {
-        b.sims(i) = b.sims(i - 1); b.cids(i) = b.cids(i - 1); i -= 1
+  def insert(sim: Double, cid: Long): TopKBuf = {
+    val k = sims.length
+    if (n < k || TopKBuf.better(sim, cid, sims(n - 1), cids(n - 1))) {
+      var i = math.min(n, k - 1) // insertion slot, walking left
+      while (i > 0 && TopKBuf.better(sim, cid, sims(i - 1), cids(i - 1))) {
+        sims(i) = sims(i - 1); cids(i) = cids(i - 1); i -= 1
       }
-      b.sims(i) = e.sim; b.cids(i) = e.cid
-      if (b.n < k) b.n += 1
+      sims(i) = sim; cids(i) = cid
+      if (n < k) n += 1
     }
-    b
+    this
   }
 
-  /** Merge two sorted buffers — the classic two-pointer merge, bounded
-    * at k (runs once per (group, map partition) at the final aggregate).
+  /** Merge with another sorted buffer of the same `k` — the classic
+    * two-pointer merge, bounded at k (runs once per (group, map
+    * partition) at the final aggregate).
     */
-  override def merge(b1: TopKBuf, b2: TopKBuf): TopKBuf = {
-    if (b2.n == 0) return b1
-    if (b1.n == 0) return b2
-    val out = zero
+  def merge(other: TopKBuf): TopKBuf = {
+    if (other.n == 0) return this
+    if (n == 0) return other
+    val out = TopKBuf.empty(sims.length)
     var i = 0; var j = 0
-    while (out.n < k && (i < b1.n || j < b2.n)) {
-      val takeLeft = j >= b2.n ||
-        (i < b1.n && better(b1.sims(i), b1.cids(i), b2.sims(j), b2.cids(j)))
-      if (takeLeft) { out.sims(out.n) = b1.sims(i); out.cids(out.n) = b1.cids(i); i += 1 }
-      else { out.sims(out.n) = b2.sims(j); out.cids(out.n) = b2.cids(j); j += 1 }
+    while (out.n < sims.length && (i < n || j < other.n)) {
+      val takeLeft = j >= other.n ||
+        (i < n && TopKBuf.better(sims(i), cids(i), other.sims(j), other.cids(j)))
+      if (takeLeft) { out.sims(out.n) = sims(i); out.cids(out.n) = cids(i); i += 1 }
+      else { out.sims(out.n) = other.sims(j); out.cids(out.n) = other.cids(j); j += 1 }
       out.n += 1
     }
     out
   }
-
-  override def finish(b: TopKBuf): TopKResult =
-    TopKResult((0 until b.n).map(i => TopKEntry(b.sims(i), b.cids(i))))
-
-  override def bufferEncoder: Encoder[TopKBuf] = Encoders.product[TopKBuf]
-  override def outputEncoder: Encoder[TopKResult] = Encoders.product[TopKResult]
 }
 
-/** The NATIVE spelling of [[TopKAggregator]] — a
-  * `TypedImperativeAggregate` whose `update` reads (sim, cid) straight
-  * off the bound input row and whose buffer is the same primitive-array
-  * [[TopKBuf]]. Same ordering contract ((sim desc, cid asc), IEEE `==`
-  * ties), same `struct<entries: array<struct<sim, cid>>>` result — the
-  * per-group top-k SETS are bit-identical to the udaf's.
+object TopKBuf {
+  def empty(k: Int): TopKBuf = TopKBuf(new Array[Double](k), new Array[Long](k), 0)
+
+  /** a strictly better than b under (sim desc, cid asc)? */
+  @inline def better(aSim: Double, aCid: Long, bSim: Double, bCid: Long): Boolean =
+    if (aSim == bSim) aCid < bCid else aSim > bSim
+}
+
+/** Map-side bounded top-k per group — the scale-safe spelling of
+  * "rank per query, keep the first k" — as a native
+  * `TypedImperativeAggregate` over the primitive-array [[TopKBuf]].
   *
-  * Exists for a measured r18 reason: the `udaf(Aggregator)` wrapper
-  * (ScalaAggregator) pays an encoder round-trip PER INPUT ROW — on the
-  * 400k-pair sf0.1 brute-force expansion the top-k partial aggregation
-  * cost ~0.5 s wall / ~15 s CPU over 32 cores (~30 µs/row) against
-  * ~0.2 s for the identical expansion folding through a built-in sum;
-  * this expression's update is two bound-reference reads + the O(1)
-  * reject/O(k) insert, with serialization only at the per-(group,
-  * partition) shuffle boundary. The aggregation sits under EVERY
-  * ANN/top-k query (presentTopK/rankedTopK — the x5 family, the PQ/IVF
-  * family, BM25, trending keys), so the wrapper tax was paid on every
-  * scored pair the engine produces. [[TopKAggregator]] stays as the
-  * spec-pinned reference implementation the property tests exercise
-  * reduce/merge laws against.
+  * A `row_number` window over the scored stream shuffles EVERY scored
+  * pair by qid before any row is discarded: for brute-force similarity
+  * that is an n·m-row exchange that dwarfs everything else at 100×
+  * scale. As an aggregate the accumulator is a k-bounded sorted buffer,
+  * Spark runs it in partial mode BEFORE the exchange
+  * (ObjectHashAggregate partial → shuffle → final merge), and the
+  * exchange carries at most |queries|·k rows per map partition instead
+  * of the full scored stream.
+  *
+  * Native rather than a `udaf(Aggregator)` for a measured r18 reason:
+  * the wrapper (ScalaAggregator) pays an encoder round-trip PER INPUT
+  * ROW — on the 400k-pair sf0.1 brute-force expansion the top-k partial
+  * aggregation cost ~0.5 s wall / ~15 s CPU over 32 cores (~30 µs/row)
+  * against ~0.2 s for the identical expansion folding through a
+  * built-in sum; this expression's update is two bound-reference reads
+  * + the O(1) reject/O(k) insert, with serialization only at the
+  * per-(group, partition) shuffle boundary. The aggregation sits under
+  * EVERY ANN/top-k query (presentTopK/rankedTopK — the x5 family, the
+  * PQ/IVF family, BM25, trending keys). Result shape:
+  * `struct<entries: array<struct<sim, cid>>>`, sorted best-first.
   */
 case class TopKExpression(
     left: Expression,
@@ -123,43 +100,16 @@ case class TopKExpression(
 
   require(k > 0, s"top-k requires k > 0, got $k")
 
-  @inline private def better(aSim: Double, aCid: Long, bSim: Double, bCid: Long): Boolean =
-    if (aSim == bSim) aCid < bCid else aSim > bSim
-
-  override def createAggregationBuffer(): TopKBuf =
-    TopKBuf(new Array[Double](k), new Array[Long](k), 0)
+  override def createAggregationBuffer(): TopKBuf = TopKBuf.empty(k)
 
   override def update(b: TopKBuf, input: InternalRow): TopKBuf = {
     val s = left.eval(input)
     val c = right.eval(input)
     if (s == null || c == null) return b // null-ignoring, the SQL agg norm
-    val sim = s.asInstanceOf[Double]
-    val cid = c.asInstanceOf[Long]
-    if (b.n < k || better(sim, cid, b.sims(b.n - 1), b.cids(b.n - 1))) {
-      var i = math.min(b.n, k - 1)
-      while (i > 0 && better(sim, cid, b.sims(i - 1), b.cids(i - 1))) {
-        b.sims(i) = b.sims(i - 1); b.cids(i) = b.cids(i - 1); i -= 1
-      }
-      b.sims(i) = sim; b.cids(i) = cid
-      if (b.n < k) b.n += 1
-    }
-    b
+    b.insert(s.asInstanceOf[Double], c.asInstanceOf[Long])
   }
 
-  override def merge(b1: TopKBuf, b2: TopKBuf): TopKBuf = {
-    if (b2.n == 0) return b1
-    if (b1.n == 0) return b2
-    val out = createAggregationBuffer()
-    var i = 0; var j = 0
-    while (out.n < k && (i < b1.n || j < b2.n)) {
-      val takeLeft = j >= b2.n ||
-        (i < b1.n && better(b1.sims(i), b1.cids(i), b2.sims(j), b2.cids(j)))
-      if (takeLeft) { out.sims(out.n) = b1.sims(i); out.cids(out.n) = b1.cids(i); i += 1 }
-      else { out.sims(out.n) = b2.sims(j); out.cids(out.n) = b2.cids(j); j += 1 }
-      out.n += 1
-    }
-    out
-  }
+  override def merge(b1: TopKBuf, b2: TopKBuf): TopKBuf = b1.merge(b2)
 
   override def eval(b: TopKBuf): Any = {
     val entries = new Array[Any](b.n)
@@ -212,9 +162,7 @@ case class TopKExpression(
 }
 
 object TopKExpression {
-  /** Identical to the udaf result shape (`Encoders.product[TopKResult]`):
-    * downstream code reads `nb.entries` and the per-entry `sim`/`cid`.
-    */
+  /** Downstream code reads `nb.entries` and the per-entry `sim`/`cid`. */
   val resultType: StructType = StructType(Seq(
     StructField("entries", ArrayType(StructType(Seq(
       StructField("sim", DoubleType, nullable = false),

@@ -1047,7 +1047,7 @@ object Curation extends CurationClusters {
     * contract is "give me 10k eval docs per language", not a percentage.
     *
     * Spelled as a map-side bounded top-k aggregate
-    * ([[graft.functions.TopKAggregator]] over the NEGATED hash — smallest
+    * ([[graft.functions.TopKExpression]] over the NEGATED hash — smallest
     * draws win), NOT a `row_number` window: the window spelling shuffles
     * the ENTIRE corpus by stratum before discarding all but k rows per
     * language; the aggregate folds each map partition down to ≤ k

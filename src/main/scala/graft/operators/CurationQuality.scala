@@ -278,7 +278,7 @@ private[operators] trait CurationQuality {
     * shape for curriculum/eval-set selection.
     *
     * Spelled as a map-side bounded top-k aggregate
-    * ([[graft.functions.TopKAggregator]]), NOT a `row_number` window —
+    * ([[graft.functions.TopKExpression]]), NOT a `row_number` window —
     * the same argument as [[fixedSample]]: the window spelling shuffles
     * the ENTIRE scored corpus by lang before discarding all but k rows
     * per language; the aggregate folds each map partition down to ≤ k

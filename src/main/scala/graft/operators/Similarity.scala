@@ -30,7 +30,7 @@ object Similarity extends SimilarityIndexOps {
     * must change in exactly one place.
     *
     * Spelled as a map-side bounded aggregate
-    * ([[graft.functions.TopKAggregator]]), NOT a `row_number` window: a
+    * ([[graft.functions.TopKExpression]]), NOT a `row_number` window: a
     * window over the scored stream would shuffle every scored pair by
     * qid before discarding any (for brute force that is the full n·m
     * relation — the one plan shape here that would NOT survive a 100×
@@ -1397,7 +1397,7 @@ object Similarity extends SimilarityIndexOps {
       .orderBy("dim")
 
   /** Ranked candidates without the presentation projection: (qid, cid,
-    * rank) from the same map-side bounded [[graft.functions.TopKAggregator]]
+    * rank) from the same map-side bounded [[graft.functions.TopKExpression]]
     * contract as [[presentTopK]] ((sim desc, cid asc), ranks by buffer
     * position). Shared by the fusion and re-rank pipelines, which need
     * the rank as an INPUT to further scoring rather than as output.

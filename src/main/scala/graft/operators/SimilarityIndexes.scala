@@ -554,17 +554,8 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
   private def embSig(spark: SparkSession, dir: String): String =
     IndexCache.dirSignature(spark, Seq(s"$dir/embeddings.parquet"))
 
-  /** The uncached training run behind [[pqCodebooks]] — see there for
-    * the algorithm contract.
-    */
-  private[graft] def trainPqCodebooks(
-      spark: SparkSession, dir: String, m: Int, ksub: Int,
-      iters: Int): (Array[Array[Array[Long]]], Int) =
-    trainPqCodebooksOn(
-      int8Corpus(spark, dir).localCheckpoint(), // seeds + one scan per round
-      m, ksub, iters)
-
-  /** [[trainPqCodebooks]] over an ALREADY-MATERIALIZED `(vec_id, qv)`
+  /** The uncached training run behind [[pqCodebooks]] (see there for
+    * the algorithm contract), over an ALREADY-MATERIALIZED `(vec_id, qv)`
     * int8 relation — the shared body, reused by the OPQ-permuted layout
     * (the permuted corpus trains its own codebooks; geometry contract
     * identical).
@@ -1819,7 +1810,7 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
   /** The composite probe over an EXPLICIT code-row relation — shared by
     * the static layout ([[ivfPqTopKFromIndex]] reads `cells/`) and the
     * streaming-maintained layout (EXT-6ao probes the live GENERATION
-    * directory resolved by `StreamOps.ivfPqIndex`). `sidecarPath` is
+    * directory validated by `StreamIndexOps.ivfPqProbeLive`). `sidecarPath` is
     * where the stamped centroids/codebook/meta live — the two layouts
     * share it.
     *

@@ -140,7 +140,7 @@ final case class HeavyHitterEntry(key: Long, count: Long, err: Long)
 final case class HeavyHitters(entries: Seq[HeavyHitterEntry])
 
 /** SpaceSaving as a typed Spark aggregate — the [[graft.functions
-  * .TopKAggregator]] shape: the buffer is the live summary object
+  * .TopKExpression]] shape: the buffer is the live summary object
   * (ObjectHashAggregate keeps it unserialized within a partition), so
   * every map partition folds its keys locally and the exchange carries
   * one ≤-capacity entry list per partition, never the key stream. The

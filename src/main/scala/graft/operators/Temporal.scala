@@ -288,7 +288,7 @@ object Temporal {
     * Scale: one (window, key) partial agg — map-side combine folds each
     * partition's repeats before the exchange — then the per-window top-k
     * is the map-side bounded aggregate ([[graft.functions
-    * .TopKAggregator]]) over the aggregated relation: the second
+    * .TopKExpression]]) over the aggregated relation: the second
     * exchange carries ≤ |windows|·k rows per partition, never the key
     * stream; no rank window anywhere. Counts ride the aggregator's
     * Double score losslessly (exact to 2⁵³) and come back as BIGINT.

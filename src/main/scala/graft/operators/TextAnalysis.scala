@@ -336,7 +336,7 @@ object TextAnalysis {
     *    only the ≤ |probes|·|matching docs| candidate rows, and the
     *    1-row corpus stats ride a broadcast cross join;
     *  - per-term top-k is the map-side bounded aggregate
-    *    ([[graft.functions.TopKAggregator]]), not a `row_number`
+    *    ([[graft.functions.TopKExpression]]), not a `row_number`
     *    window: the exchange carries ≤ |probes|·k rows per partition,
     *    not every scored candidate.
     */

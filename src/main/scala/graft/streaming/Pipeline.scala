@@ -1,33 +1,26 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamReader, DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.{DataStreamReader, StreamingQuery, Trigger}
 
 import graft.config.ReplicatorConfig
 
 /** The replication dataflow (SURVEY.md §2.1, D1–D7), Spark-first:
-  * `readStream(kafka) → envelope transform → writeStream(kafka)`.
+  * `readStream(kafka) → foreachBatch(KafkaBatchWriter) → target cluster`.
   *
-  * The transform itself is pure DataFrame → DataFrame so it can be driven
-  * by any source (MemoryStream in tests, Kafka in production) — the
+  * Every delivery mode produces through the record-complete
+  * [[KafkaBatchWriter]] sender sink, so the record timestamp and the
+  * partition routing ride the envelope in both the at-least-once and the
+  * exactly-once mode (reference: KafkaMessageSerializationSchema.java:19-20).
+  * The source is a parameter, so any stream of envelope rows drives the
+  * same sink (MemoryStream or files in tests, Kafka in production) — the
   * reference couples them (reference: FlinkKafkaReplicator.java:126-134).
   *
-  * Scale note: the plan is a narrow source→project→sink pipeline — no
-  * wide operator, so Catalyst inserts no exchange; each Kafka partition
+  * Scale note: the plan is a narrow source→sink pipeline — no wide
+  * operator, so Catalyst inserts no exchange; each Kafka partition
   * streams through one task regardless of cluster size.
   */
 object Pipeline {
-
-  /** D4 + D5 — the whole "query": identity over the envelope, with
-    * partition routing preserved or dropped. Keeping the `partition`
-    * column means the Kafka sink writes each record back to its source
-    * partition (reference: KafkaMessageSerializationSchema.java:19);
-    * dropping it delegates to the producer's DefaultPartitioner exactly
-    * like `--no-preserve-partitioning` (reference: :9-13).
-    */
-  def transform(df: DataFrame, preservePartitioning: Boolean): DataFrame =
-    if (preservePartitioning) df else df.drop("partition")
 
   /** D1 + D2 + D3 — Kafka source wiring: regex subscription, header
     * propagation, offset-reset policy, and `consumer.*` passthrough
@@ -82,35 +75,6 @@ object Pipeline {
       .parquet(dir)
   }
 
-  /** D6 + D7 — Kafka sink wiring: at-least-once transactional-batch write
-    * with checkpointing; the trigger period mirrors the reference's
-    * checkpoint interval (reference: FlinkKafkaReplicator.java:99-102).
-    */
-  def kafkaSink(
-      df: DataFrame,
-      cfg: ReplicatorConfig,
-      checkpointLocation: String,
-      trigger: Option[Trigger] = None): DataStreamWriter[Row] = {
-    val writer = df.writeStream
-      .format("kafka")
-      .option("checkpointLocation", checkpointLocation)
-      // explicit trigger parameter — callers must not rely on a second
-      // .trigger() call's last-write-wins to override this one
-      .trigger(trigger.getOrElse(Trigger.ProcessingTime(cfg.checkpointIntervalMs)))
-    cfg.effectiveProducerProps.foldLeft(writer) { case (w, (k, v)) =>
-      w.option(s"kafka.$k", v)
-    }
-  }
-
-  /** D6 exactly-once path — Spark's Kafka sink is at-least-once; the
-    * reference's `Semantic.EXACTLY_ONCE` (reference:
-    * FlinkKafkaReplicator.java:120-124) maps to idempotent batch commit:
-    * `foreachBatch` keyed by `batchId`, skipping batches already marked
-    * committed. The marker write must land only after `write` succeeds,
-    * giving effectively-once output for any idempotent/transactional
-    * `write` (a transactional KafkaProducer in production; any sink in
-    * tests).
-    */
   /** How many sealed batches' marker directories are retained before
     * [[idempotentForeachBatch]] prunes them. A replay can only reach
     * back as far as the checkpoint's own recovery horizon (the last
@@ -121,6 +85,14 @@ object Pipeline {
     */
   val CommitMarkerRetention: Long = 64L
 
+  /** D6 exactly-once path — the reference's `Semantic.EXACTLY_ONCE`
+    * (reference: FlinkKafkaReplicator.java:120-124) maps to idempotent
+    * batch commit: `foreachBatch` keyed by `batchId`, skipping batches
+    * already marked committed. The marker write must land only after
+    * `write` succeeds, giving effectively-once output for any
+    * idempotent/transactional `write` (a transactional KafkaProducer in
+    * production; any sink in tests).
+    */
   def idempotentForeachBatch(
       commitDir: String,
       write: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
@@ -164,21 +136,11 @@ object Pipeline {
     }
   }
 
-  /** Whole pipeline, Kafka to Kafka (at-least-once, built-in sink — the
-    * reference's default semantic). Returns the started query.
-    */
-  def start(spark: SparkSession, cfg: ReplicatorConfig, checkpointLocation: String): StreamingQuery = {
-    val src = kafkaSource(spark, cfg).load()
-    kafkaSink(transform(src, cfg.preservePartitioning), cfg, checkpointLocation).start()
-  }
-
-  /** The `--exactly-once` pipeline: same source, but the sink is
-    * [[KafkaBatchWriter.exactlyOnceSink]] — record-complete produce
-    * (timestamp + partition/DefaultPartitioner routing handled by the
-    * sender, so the envelope keeps its `partition` column here) with
-    * idempotent per-batch commit. With a transactional sender this is
-    * the reference's `Semantic.EXACTLY_ONCE` (reference:
-    * FlinkKafkaReplicator.java:120-124) on Spark's microbatch model.
+  /** The `--exactly-once` pipeline: [[KafkaBatchWriter.exactlyOnceSink]]
+    * — record-complete produce with idempotent per-batch commit. With a
+    * transactional sender this is the reference's `Semantic.EXACTLY_ONCE`
+    * (reference: FlinkKafkaReplicator.java:120-124) on Spark's
+    * microbatch model.
     */
   def startExactlyOnce(
       spark: SparkSession,
@@ -187,27 +149,20 @@ object Pipeline {
       commitDir: String,
       senders: RecordSenderFactory,
       sourceOverride: Option[DataFrame] = None): StreamingQuery =
-    sourceOverride.getOrElse(kafkaSource(spark, cfg).load())
-      .writeStream
-      .option("checkpointLocation", checkpointLocation)
-      .trigger(Trigger.ProcessingTime(cfg.checkpointIntervalMs))
-      .foreachBatch(KafkaBatchWriter.exactlyOnceSink(
-        senders, cfg.preservePartitioning, commitDir))
-      .start()
+    startSink(spark, cfg, checkpointLocation, sourceOverride, None,
+      KafkaBatchWriter.exactlyOnceSink(senders, cfg.preservePartitioning, commitDir))
 
-  /** At-least-once RECORD-COMPLETE pipeline: the reference forwards the
-    * record timestamp in BOTH delivery modes (reference:
-    * KafkaMessageSerializationSchema.java:20), but Spark's built-in
-    * kafka sink has no timestamp column in its write schema — records
-    * replicated through [[start]] are re-stamped at produce time. Where
-    * that fidelity matters (log-compaction retention, time-indexed
-    * consumers), this variant routes the SAME source through the
-    * [[KafkaBatchWriter]] sender sink with a plain flush barrier:
-    * at-least-once delivery, full envelope including the timestamp. The
-    * trade is explicit: [[start]] keeps the connector's own batching and
-    * needs no sender binding; this path needs the deploy-time
-    * kafka-clients binding (like `--exactly-once`) and buys envelope
-    * completeness.
+  /** The at-least-once pipeline (the reference's default semantic): the
+    * [[KafkaBatchWriter]] sender sink with a plain flush barrier, so the
+    * full envelope, timestamp included, is delivered (reference:
+    * KafkaMessageSerializationSchema.java:20).
+    *
+    * `trigger` defaults to the checkpoint-interval processing-time
+    * trigger. `--backfill` passes `Trigger.AvailableNow` — beyond the
+    * reference's surface (Flink's unbounded source can't do this without
+    * cancellation): drain everything currently in the subscribed topics
+    * in rate-limited microbatches, commit the checkpoint, and STOP.
+    * Restarting later (any mode) resumes from the committed offsets.
     */
   def startAtLeastOnceComplete(
       spark: SparkSession,
@@ -215,34 +170,28 @@ object Pipeline {
       checkpointLocation: String,
       senders: RecordSenderFactory,
       sourceOverride: Option[DataFrame] = None,
-      trigger: Option[Trigger] = None): StreamingQuery = {
-    val sinkFn: (DataFrame, Long) => Unit =
-      KafkaBatchWriter.write(senders, cfg.preservePartitioning)
+      trigger: Option[Trigger] = None): StreamingQuery =
+    startSink(spark, cfg, checkpointLocation, sourceOverride, trigger,
+      KafkaBatchWriter.write(senders, cfg.preservePartitioning))
+
+  /** The one sink chain both delivery modes share: source (the Kafka
+    * reader unless overridden) → checkpointed `foreachBatch(sink)`; the
+    * trigger period mirrors the reference's checkpoint interval
+    * (reference: FlinkKafkaReplicator.java:99-102).
+    */
+  private def startSink(
+      spark: SparkSession,
+      cfg: ReplicatorConfig,
+      checkpointLocation: String,
+      sourceOverride: Option[DataFrame],
+      trigger: Option[Trigger],
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
     sourceOverride.getOrElse(kafkaSource(spark, cfg).load())
       .writeStream
       .option("checkpointLocation", checkpointLocation)
       .trigger(trigger.getOrElse(Trigger.ProcessingTime(cfg.checkpointIntervalMs)))
-      .foreachBatch(sinkFn)
+      .foreachBatch(sink)
       .start()
-  }
-
-  /** `--backfill` mode — beyond the reference's surface (Flink's
-    * unbounded source can't do this without cancellation):
-    * `Trigger.AvailableNow` drains everything currently in the subscribed
-    * topics in rate-limited microbatches, commits the checkpoint, and
-    * STOPS. The operational "replicate what exists, then cut over"
-    * shape; restarting later (any mode) resumes from the committed
-    * offsets.
-    */
-  def startBackfill(
-      spark: SparkSession,
-      cfg: ReplicatorConfig,
-      checkpointLocation: String): StreamingQuery = {
-    val src = kafkaSource(spark, cfg).load()
-    kafkaSink(transform(src, cfg.preservePartitioning), cfg, checkpointLocation,
-      trigger = Some(Trigger.AvailableNow()))
-      .start()
-  }
 
   /** D7 restart analog — fixed-delay retry around `awaitTermination`
     * (reference: FlinkKafkaReplicator.java:99 — 4 attempts / 10 s).

@@ -395,22 +395,12 @@ private[streaming] trait StreamIndexOps { self: StreamOps.type =>
           org.apache.spark.sql.functions.col("cell"))
     }
 
-  /** The probe-side resolver for a [[maintainIvfPqIndex]] index — the
-    * live generation's code-row relation (vec_id, codes, cell), the
-    * generational twin of the static layout's `cells/`. Same cutover-
-    * race retry as [[lshIndex]]. The partition column `cell` is
-    * recovered from the directory layout, so a literal cell filter on
-    * this relation partition-prunes exactly like the static index.
-    */
-  def ivfPqIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String): DataFrame =
-    liveIndex(spark, indexDir, "IVF-PQ")
-
   /** EXT-6ao's probe: [[graft.operators.Similarity.ivfPqTopKFromIndex]]
     * served from the LIVE GENERATION of a streaming-maintained index —
     * identical plan (stamped refusals, static partition pruning, ADC
     * scoring, bounded top-k fold) with two generational deltas: the code
-    * rows come from [[ivfPqIndex]]'s resolver, and duplicate candidate
-    * ids from at-least-once replays are dropped before scoring
+    * rows come from the stamp-checked live generation, and duplicate
+    * candidate ids from at-least-once replays are dropped before scoring
     * (replay-immunity — see [[maintainIvfPqIndex]]). Law (spec-pinned):
     * once the maintainer has ingested exactly a corpus, this probe
     * equals `ivfPqTopKFromIndex` over `writeIvfPqIndex` of that corpus,

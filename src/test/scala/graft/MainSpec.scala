@@ -151,6 +151,32 @@ class MainSpec extends AnyFunSuite with SparkSuite {
     assert(r == Right(()))
     assert(E2ESender.snapshot().length == 4, "backfill must drain everything that existed")
   }
+
+  test("run() resolves the sender factory once: a restart after a sink failure reuses it") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val c = clients(Seq(TopicSpec("app.events", 2)), Seq(TopicSpec("app.events", 2)))
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-e2e-restart").toString
+    E2ESender.clear()
+    FailOnceSender.armed.set(true)
+    val stream = MemoryStream[graft.model.KafkaMessage]
+    stream.addData(e2eMsg(0, 0), e2eMsg(1, 1))
+    val resolved = new java.util.concurrent.atomic.AtomicInteger(0)
+    // --backfill: the restarted drain self-terminates, so run() returns
+    // after exactly one restart (the fixed 10 s restart delay included)
+    val r = Main.run(baseArgs :+ "--backfill", spark, c, ckpt,
+      senderFor = Some { _ =>
+        resolved.incrementAndGet()
+        graft.streaming.RecordSenderFactory.uniform(() => new FailOnceSender)
+      },
+      sourceOverride = Some(stream.toDF()))
+    assert(r == Right(()))
+    assert(!FailOnceSender.armed.get, "the injected sink failure must have fired")
+    assert(resolved.get == 1, "every restart must reuse the factory resolved at start")
+    assert(E2ESender.snapshot().map(_._1).distinct.sorted ==
+      Seq(1700000000000L, 1700000000001L), "the restart must deliver every record")
+  }
 }
 
 /** JVM-static sink for the end-to-end lifecycle specs (executors share
@@ -174,4 +200,18 @@ object E2ESender {
     import scala.jdk.CollectionConverters._
     records.asScala.toSeq
   }
+}
+
+/** An [[E2ESender]] whose first commit barrier in the JVM fails while
+  * armed — an injected sink failure that ends the query and forces a
+  * restart.
+  */
+class FailOnceSender extends E2ESender {
+  override def flush(): Unit =
+    if (FailOnceSender.armed.compareAndSet(true, false))
+      throw new RuntimeException("injected sink failure")
+}
+
+object FailOnceSender {
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
 }

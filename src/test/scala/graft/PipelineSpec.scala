@@ -3,11 +3,11 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.{KafkaMessage, MessageHeader}
-import graft.streaming.Pipeline
+import graft.streaming.{Pipeline, RecordSenderFactory}
 
 /** D1–D7 streaming semantics over MemoryStream (no broker, SURVEY.md §5.3). */
 class PipelineSpec extends AnyFunSuite with SparkSuite {
@@ -26,104 +26,76 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     msg("foo", 0, 2L, "k3".getBytes, null),
     msg("foo", 0, 3L, Array.empty[Byte], Array.empty[Byte]))
 
-  test("identity transform preserves the envelope byte-exactly") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[KafkaMessage]
-    stream.addData(fixtures)
-    val q = Pipeline.transform(stream.toDF(), preservePartitioning = true)
-      .writeStream.format("memory").queryName("identity_out").start()
-    try q.processAllAvailable() finally q.stop()
-    val got = spark.table("identity_out")
-    assert(got.columns.toSeq == KafkaMessage.columns)
-    val rows = KafkaMessage.toDS(got).collect().sortBy(_.offset)
-    fixtures.zip(rows).foreach { case (exp, act) =>
-      assert(act.topic == exp.topic && act.partition == exp.partition)
-      assert(java.util.Arrays.equals(act.key, exp.key), s"key of ${exp.offset}")
-      assert(java.util.Arrays.equals(act.value, exp.value), s"value of ${exp.offset}")
-      assert(act.timestamp == exp.timestamp)
-      assert(act.headers.length == exp.headers.length)
-      act.headers.zip(exp.headers).foreach { case (a, e) =>
-        assert(a.key == e.key && java.util.Arrays.equals(a.value, e.value))
-      }
-    }
-  }
+  private lazy val cfg = graft.config.ReplicatorConfig.fromArgs(Seq(
+    "--topics", "t",
+    "--consumer.bootstrap.servers", "s:9092",
+    "--consumer.group.id", "g",
+    "--producer.bootstrap.servers", "d:9092")).toOption.get
 
-  test("no-preserve-partitioning drops only the partition column") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[KafkaMessage]
-    stream.addData(fixtures)
-    val q = Pipeline.transform(stream.toDF(), preservePartitioning = false)
-      .writeStream.format("memory").queryName("nopreserve_out").start()
-    try q.processAllAvailable() finally q.stop()
-    val got = spark.table("nopreserve_out")
-    assert(got.columns.toSeq == KafkaMessage.columns.filterNot(_ == "partition"))
-    assert(got.count() == fixtures.size)
-  }
+  /** The at-least-once production sink over a MemoryStream, producing
+    * into [[CollectingSender]].
+    */
+  private def startSink(
+      stream: MemoryStream[KafkaMessage],
+      ckpt: String,
+      trigger: Option[Trigger] = None) =
+    Pipeline.startAtLeastOnceComplete(spark, cfg, ckpt,
+      RecordSenderFactory.uniform(() => new CollectingSender),
+      sourceOverride = Some(stream.toDF()), trigger = trigger)
+
+  // each fixture's timestamp encodes its offset, so the sorted sent
+  // timestamps are the delivered offsets
+  private def sentTimestamps(): Seq[Long] =
+    CollectingSender.snapshot().map(_.tsMs).sorted
+  private val allTimestamps = fixtures.map(_.timestamp.getTime)
 
   test("checkpoint resume: no loss across stop/restart (at-least-once)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
+    CollectingSender.clear()
     val ckpt = Files.createTempDirectory("graft-ckpt").toString
-    val out = Files.createTempDirectory("graft-out").toString
     val stream = MemoryStream[KafkaMessage]
     stream.addData(fixtures.take(2))
-    def start() = Pipeline.transform(stream.toDF(), preservePartitioning = true)
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt).start()
-    val q1 = start()
+    val q1 = startSink(stream, ckpt)
     q1.processAllAvailable(); q1.stop()
     stream.addData(fixtures.drop(2))
-    val q2 = start()
+    val q2 = startSink(stream, ckpt)
     q2.processAllAvailable(); q2.stop()
-    val offsets = spark.read.parquet(out).select("offset")
-      .as[Long].collect().sorted
-    assert(offsets.toSeq == Seq(0L, 1L, 2L, 3L))
+    assert(sentTimestamps() == allTimestamps)
   }
 
   test("backfill trigger drains available data and terminates on its own") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[KafkaMessage]
+    CollectingSender.clear()
+    val stream = MemoryStream[KafkaMessage]
     stream.addData(fixtures: _*)
-    // same transform as the Kafka pipeline; AvailableNow = drain + stop
-    val q = Pipeline.transform(stream.toDF(), preservePartitioning = true)
-      .writeStream.format("memory").queryName("backfill_out")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    // AvailableNow = drain + stop, the --backfill trigger
+    val q = startSink(stream, Files.createTempDirectory("graft-bf").toString,
+      Some(Trigger.AvailableNow()))
     assert(q.awaitTermination(30000), "backfill query must self-terminate")
-    assert(spark.table("backfill_out").count() == fixtures.length.toLong)
+    assert(sentTimestamps() == allTimestamps)
   }
 
   test("backfill → continuous cutover from one checkpoint: no loss, no duplication") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
+    CollectingSender.clear()
     val ckpt = Files.createTempDirectory("graft-cutover-ckpt").toString
-    val out = Files.createTempDirectory("graft-cutover-out").toString
     val stream = MemoryStream[KafkaMessage]
     stream.addData(fixtures.take(2))
     // phase 1 — the --backfill shape: AvailableNow drains what exists,
-    // commits the checkpoint, and self-terminates (Pipeline.startBackfill
-    // with the memory source standing in for the Kafka reader)
-    val q1 = Pipeline.transform(stream.toDF(), preservePartitioning = true)
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    // commits the checkpoint, and self-terminates
+    val q1 = startSink(stream, ckpt, Some(Trigger.AvailableNow()))
     assert(q1.awaitTermination(30000), "backfill must self-terminate")
     // data that arrives between the drain and the cutover
     stream.addData(fixtures.drop(2))
-    // phase 2 — continuous mode restarted from the SAME checkpoint
-    // (Pipeline.start's default processing-time trigger shape)
-    val q2 = Pipeline.transform(stream.toDF(), preservePartitioning = true)
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .start()
+    // phase 2 — continuous mode (the default processing-time trigger)
+    // restarted from the SAME checkpoint
+    val q2 = startSink(stream, ckpt)
     q2.processAllAvailable(); q2.stop()
     // every offset exactly once across the mode switch
-    val offsets = spark.read.parquet(out).select("offset").as[Long].collect().sorted.toSeq
-    assert(offsets == Seq(0L, 1L, 2L, 3L))
+    assert(sentTimestamps() == allTimestamps)
   }
 
   test("runWithRestarts consumes an attempt when (re)starting the query itself fails") {
@@ -185,22 +157,36 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     assert(writes == Vector((7L, 4L), (8L, 4L)))
   }
 
+  test("identity transform preserves the envelope byte-exactly") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    CollectingSender.clear()
+    val stream = MemoryStream[KafkaMessage]
+    stream.addData(fixtures)
+    // the replicator forwards records unchanged from source to sink
+    val q = startSink(stream, Files.createTempDirectory("graft-identity").toString)
+    try q.processAllAvailable() finally q.stop()
+    val sent = CollectingSender.snapshot().sortBy(_.tsMs)
+    assert(sent.length == fixtures.length)
+    // null key, null value, empty arrays, duplicate and empty-valued headers
+    fixtures.zip(sent).foreach { case (exp, act) =>
+      assert(act.topic == exp.topic && act.partition.contains(exp.partition))
+      assert(java.util.Arrays.equals(act.key, exp.key), s"key of ${exp.offset}")
+      assert(java.util.Arrays.equals(act.value, exp.value), s"value of ${exp.offset}")
+      assert(act.headers.length == exp.headers.length)
+      act.headers.zip(exp.headers).foreach { case ((k, v), e) =>
+        assert(k == e.key && java.util.Arrays.equals(v, e.value))
+      }
+    }
+  }
+
   test("record-complete at-least-once: timestamps forwarded where the built-in sink would re-stamp") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.RecordSenderFactory
     CollectingSender.clear()
-    val cfg = graft.config.ReplicatorConfig.fromArgs(Seq(
-      "--topics", "t",
-      "--consumer.bootstrap.servers", "s:9092",
-      "--consumer.group.id", "g",
-      "--producer.bootstrap.servers", "d:9092")).toOption.get
-    val ckpt = Files.createTempDirectory("graft-alo").toString
     val stream = MemoryStream[KafkaMessage]
     stream.addData(fixtures.take(2))
-    val q = Pipeline.startAtLeastOnceComplete(spark, cfg, ckpt,
-      RecordSenderFactory.uniform(() => new CollectingSender),
-      sourceOverride = Some(stream.toDF()))
+    val q = startSink(stream, Files.createTempDirectory("graft-alo").toString)
     try q.processAllAvailable() finally q.stop()
     val sent = CollectingSender.snapshot().sortBy(_.tsMs)
     // D5 in the DEFAULT delivery mode: the record timestamp rides the

@@ -6,7 +6,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.config.ReplicatorConfig
 import graft.functions.KafkaMurmur2
 import graft.model.{KafkaMessage, MessageHeader}
-import graft.streaming.Pipeline
 
 /** Property-based invariants (SURVEY.md §5.4): byte-exact envelope
   * round-trip — the core correctness property of a replicator — plus
@@ -46,22 +45,24 @@ class PropertySpec extends AnyFunSuite with SparkSuite {
     key, value, headers)
 
   test("envelope round-trips byte-exactly through the identity pipeline") {
+    import graft.streaming.{KafkaBatchWriter, RecordSenderFactory}
+    // the sender sees no offset (the target assigns its own), so compare
+    // the delivered envelopes as a multiset of canonical values
+    def canon(topic: String, partition: Option[Int], tsMs: Long,
+        key: Array[Byte], value: Array[Byte],
+        headers: Seq[(String, Array[Byte])]) =
+      (topic, partition, tsMs, Option(key).map(_.toSeq), Option(value).map(_.toSeq),
+        headers.map { case (k, v) => (k, Option(v).map(_.toSeq)) }).toString
     check(Prop.forAll(Gen.listOfN(8, genMsg)) { msgs =>
-      val out = KafkaMessage.toDS(
-        Pipeline.transform(KafkaMessage.toDF(spark, msgs), preservePartitioning = true))
-        .collect().sortBy(_.offset)
-      val exp = msgs.sortBy(_.offset)
-      assert(out.length == exp.length)
-      out.zip(exp).foreach { case (a, e) =>
-        assert(a.topic == e.topic && a.partition == e.partition && a.offset == e.offset)
-        assert(a.timestamp == e.timestamp)
-        assert(java.util.Arrays.equals(a.key, e.key))
-        assert(java.util.Arrays.equals(a.value, e.value))
-        assert(a.headers.length == e.headers.length)
-        a.headers.zip(e.headers).foreach { case (ah, eh) =>
-          assert(ah.key == eh.key && java.util.Arrays.equals(ah.value, eh.value))
-        }
-      }
+      CollectingSender.clear()
+      // the production sink body, one microbatch
+      KafkaBatchWriter.write(RecordSenderFactory.uniform(() => new CollectingSender),
+        preservePartitioning = true)(KafkaMessage.toDF(spark, msgs), 0L)
+      val out = CollectingSender.snapshot()
+        .map(s => canon(s.topic, s.partition, s.tsMs, s.key, s.value, s.headers)).sorted
+      val exp = msgs.map(m => canon(m.topic, Some(m.partition), m.timestamp.getTime,
+        m.key, m.value, m.headers.toSeq.map(h => (h.key, h.value)))).sorted
+      assert(out == exp)
       true
     })
   }
@@ -105,14 +106,13 @@ class PropertySpec extends AnyFunSuite with SparkSuite {
     })
   }
 
-  test("TopKAggregator: any 2-way partition split merges to the sorted-take-k reference") {
-    import graft.functions.{TopKAggregator, TopKEntry}
+  test("TopKExpression: any 2-way partition split merges to the sorted-take-k reference") {
     // narrow value ranges FORCE sim ties (exercising the cid tie-break)
     // and repeated (sim, cid) pairs (duplicates are kept, not deduped)
     val genEntry = for {
       sim <- Gen.chooseNum(-30, 30).map(_ / 10.0)
       cid <- Gen.chooseNum(0L, 20L)
-    } yield TopKEntry(sim, cid)
+    } yield (sim, cid)
     val gen = for {
       k <- Gen.chooseNum(1, 6)
       n <- Gen.chooseNum(0, 60)
@@ -120,19 +120,19 @@ class PropertySpec extends AnyFunSuite with SparkSuite {
       cut <- Gen.chooseNum(0, n)
     } yield (k, entries, cut)
     check(Prop.forAll(gen) { case (k, entries, cut) =>
-      val agg = new TopKAggregator(k)
-      def fold(es: Seq[TopKEntry]) = es.foldLeft(agg.zero)((b, e) => agg.reduce(b, e))
+      val agg = new TopKKernel(k)
       val (l, r) = entries.splitAt(cut)
-      val merged = agg.finish(agg.merge(fold(l), fold(r))).entries
-      val direct = agg.finish(fold(entries)).entries
+      val merged = agg.entries(agg.merge(agg.fold(l), agg.fold(r)))
+      val direct = agg.entries(agg.fold(entries))
       // the law every query relies on: partial-agg over ANY partition
       // split == the row_number-window (sort + take k) spelling
-      val ref = entries.sortBy(e => (-e.sim, e.cid)).take(k)
+      val ref = entries.sortBy { case (sim, cid) => (-sim, cid) }.take(k)
       assert(merged == ref, s"merged=$merged ref=$ref")
       assert(direct == ref, s"direct=$direct ref=$ref")
       true
     }, n = 200)
   }
+
 
   test("winnowing laws: planted-copy guarantee, subset of gram hashes, density bound") {
     val genTok = Gen.chooseNum(0, 25).map(i => s"t$i")
@@ -161,4 +161,31 @@ class PropertySpec extends AnyFunSuite with SparkSuite {
       true
     }, n = 200)
   }
+}
+
+/** Drives the production top-k kernel ([[graft.functions.TopKExpression]])
+  * the way a partial aggregate does: `update` per input row, and a
+  * `serialize`/`deserialize` round-trip — the shuffle boundary — before
+  * every merge.
+  */
+class TopKKernel(k: Int) {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.BoundReference
+  import org.apache.spark.sql.types.{DoubleType, LongType}
+  import graft.functions.{TopKBuf, TopKExpression}
+
+  private val agg = TopKExpression(
+    BoundReference(0, DoubleType, nullable = false),
+    BoundReference(1, LongType, nullable = false), k)
+
+  def fold(es: Seq[(Double, Long)]): TopKBuf =
+    es.foldLeft(agg.createAggregationBuffer()) { case (b, (sim, cid)) =>
+      agg.update(b, InternalRow(sim, cid))
+    }
+
+  def merge(b1: TopKBuf, b2: TopKBuf): TopKBuf =
+    agg.merge(agg.deserialize(agg.serialize(b1)), agg.deserialize(agg.serialize(b2)))
+
+  def entries(b: TopKBuf): Seq[(Double, Long)] =
+    (0 until b.n).map(i => (b.sims(i), b.cids(i)))
 }

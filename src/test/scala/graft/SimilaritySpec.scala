@@ -253,22 +253,19 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     assert(forQ10.head.getDouble(3) > 0.89)
   }
 
-  test("TopKAggregator matches sort-and-take under any reduce/merge split") {
+  test("TopKExpression matches sort-and-take under any update/merge split") {
     val rnd = new scala.util.Random(42)
     for (_ <- 1 to 100) {
       val k = 1 + rnd.nextInt(6)
-      val agg = new graft.functions.TopKAggregator(k)
+      val agg = new TopKKernel(k)
       val n = rnd.nextInt(40)
       // coarse sims force tie-breaks; small cid range forces duplicates
-      val entries = Seq.fill(n)(
-        graft.functions.TopKEntry(rnd.nextInt(5) / 4.0, rnd.nextInt(20).toLong))
+      val entries = Seq.fill(n)((rnd.nextInt(5) / 4.0, rnd.nextInt(20).toLong))
       val expected = entries
-        .sortWith((a, b) => if (a.sim == b.sim) a.cid < b.cid else a.sim > b.sim)
+        .sortWith((a, b) => if (a._1 == b._1) a._2 < b._2 else a._1 > b._1)
         .take(k)
       val (l, r) = entries.splitAt(if (n == 0) 0 else rnd.nextInt(n + 1))
-      val b1 = l.foldLeft(agg.zero)(agg.reduce)
-      val b2 = r.foldLeft(agg.zero)(agg.reduce)
-      assert(agg.finish(agg.merge(b1, b2)).entries == expected)
+      assert(agg.entries(agg.merge(agg.fold(l), agg.fold(r))) == expected)
     }
   }
 

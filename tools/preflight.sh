@@ -11,6 +11,8 @@
 #   5. perfbench scalac build — src/main + perfbench/src compile together,
 #      so a main-source change that breaks the benchmark fails here
 # Exit 0 = safe to commit. Anything else = DO NOT COMMIT THE SNAPSHOT.
+# It first prints the main-Scala line count, so a change's net size
+# (ROADMAP aim 2) is read off the gate rather than counted by hand.
 #
 # Usage: tools/preflight.sh [sf-dir]   (default /root/testdata/sf0.001)
 set -u
@@ -19,6 +21,8 @@ SF=${1:-/root/testdata/sf0.001}
 SMOKE=${PREFLIGHT_SMOKE:-x1_exact_dedup,x105_pq_recall,x119_vocab_coverage}
 OUT=$(mktemp -d /tmp/preflight.XXXXXX)
 trap 'rm -rf "$OUT"' EXIT
+
+echo "[preflight] main Scala lines: $(find src/main -name '*.scala' | xargs cat | wc -l)"
 
 echo "[preflight] 1/5 Test/compile"
 if ! sbt -batch "Test/compile" >"$OUT/compile.log" 2>&1; then
