@@ -500,7 +500,7 @@ object SparkEntry
     // round-robin permutation — the operator the x105/x181 coding-loss
     // decomposition calls for when x109 flags correlated dimensions
     "x189_pq_codes_opq" -> ((s, dir) =>
-      Similarity.pqCodesOpq(s, dir, m = pqM, ksub = pqKsub, iters = pqIters)),
+      Similarity.pqCodes(s, dir, m = pqM, ksub = pqKsub, iters = pqIters, opq = true)),
     // the CHOSEN refined-composite operating point, read back from the
     // sidecar the tuner STAMPED into the persisted index: the sweep
     // measured (x187's discipline at the wider opp grid), the selection

@@ -87,14 +87,32 @@ object Similarity extends SimilarityIndexOps {
     val bytes = measuredBytes.get(key) match {
       case b: java.lang.Long => b.longValue()
       case null =>
-        val est = estRowBytes()
-        // unknown row width -> fail SAFE: record "too big", never hint
-        val b = if (est < 0) Long.MaxValue else df.count() * est
+        val b = measuredSize(df, estRowBytes)
         measuredBytes.putIfAbsent(key, b)
         b
     }
     if (bytes <= maxBytes) broadcast(df) else df
   }
+
+  /** The same guard for a CALLER-SUPPLIED relation (a probe's query
+    * batch): measured on every call and never memoized. Such a batch is
+    * no statistic of an immutable input, and there is no stable key for
+    * it — an identity-hash key grows the memo by one entry per probe
+    * call, and a later batch that reuses a collected batch's hash would
+    * inherit its size and its broadcast decision.
+    */
+  private[operators] def broadcastIfMeasuredNow(
+      df: DataFrame, estRowBytes: () => Long, maxBytes: Long): DataFrame =
+    if (maxBytes > 0 && measuredSize(df, estRowBytes) <= maxBytes) broadcast(df) else df
+
+  private def measuredSize(df: DataFrame, estRowBytes: () => Long): Long = {
+    val est = estRowBytes()
+    // unknown row width -> fail SAFE: record "too big", never hint
+    if (est < 0) Long.MaxValue else df.count() * est
+  }
+
+  /** Entries in the session-lifetime measurement memo (spec access). */
+  private[graft] def measuredBytesEntries: Int = measuredBytes.size
 
   /** Decouple a row-EXPANSION's parallelism from its input's SCAN
     * granularity: a corpus parquet a few MB wide arrives as ONE scan

@@ -449,9 +449,7 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     val qRaw = queries.select(col("vec_id").as("qid"),
       packSignBits(col("embedding"), 0, loBits).as("qlo"),
       (if (hiBits > 0) packSignBits(col("embedding"), 32, hiBits) else lit(0L)).as("qhi"))
-    val qSig = broadcastIfMeasuredUnder(qRaw,
-      s"$sidecarPath|qsig|${System.identityHashCode(queries)}",
-      () => 3L * 8 + 64, maxBroadcastBytes)
+    val qSig = broadcastIfMeasuredNow(qRaw, () => 3L * 8 + 64, maxBroadcastBytes)
     val sigProjected = sigRows.select(col("vec_id").as("cid"), col("lo"), col("hi"))
     val idx = expansionPartitioned(
       if (dedupReplays) sigProjected.dropDuplicates("cid") else sigProjected)
@@ -462,13 +460,7 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     val cand = rankedTopK(
       ham.select(col("qid"), col("cid"), (lit(0.0) - col("ham").cast("double")).as("sim")),
       candidates).select("qid", "cid")
-    val qe = queries.select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val ce = Tables.embeddings(spark, corpusDir)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-    val scored = broadcast(cand.join(qe, Seq("qid")))
-      .join(ce, Seq("cid"))
-      .select(col("qid"), col("cid"), dot(col("qe"), col("ce")).as("sim"))
-    presentTopK(scored, k)
+    refineByFloatStore(spark, corpusDir, cand, queries, k)
   }
 
   /** Product-quantization codebooks: the vector space split into `m`
@@ -640,12 +632,24 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     * Scale: ONE narrow corpus pass (the [[pqAssign]] literal-codebook
     * projection) — zero shuffles beyond the presentation sort at any
     * corpus size; the codebook build reads `ksub` rows.
+    *
+    * EXT-S36 (`x189_pq_codes_opq`) is `opq = true`: the same encoding
+    * under the [[opqPermutation]] layout ([[PqLayout]]) — x104's output
+    * contract over the decorrelated subspace split. Reading it next to
+    * x104 at the same (m, ksub) prices the layout: the recon-err delta is
+    * the coding loss the permutation did (or did not) recover on this
+    * corpus, and [[pqRecall]] with `opq = true` prices it in recall
+    * terms. Invariance law (spec-pinned): at m = 1 the subspace split is
+    * the whole vector, and distances are permutation-invariant when query
+    * and codebook share the permutation — both layouts are bit-equal
+    * there; for m > 1 the split (and hence the coding geometry)
+    * genuinely changes.
     */
   def pqCodes(
       spark: SparkSession, dir: String, m: Int = 8, ksub: Int = 16,
-      iters: Int = 2): DataFrame = {
-    val (cb, dsub) = pqCodebooks(spark, dir, m, ksub, iters)
-    pqAssign(int8Corpus(spark, dir), cb, dsub)
+      iters: Int = 2, opq: Boolean = false): DataFrame = {
+    val layout = new PqLayout(spark, dir, m, ksub, iters, opq)
+    pqAssign(layout.corpus, layout.cb, layout.dsub)
       .select(col("vec_id"), concat_ws(",", col("codes")).as("codes_csv"), col("recon_err"))
       .orderBy("vec_id")
   }
@@ -736,93 +740,33 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
   private def permutedVec(qv: Column, perm: Seq[Int]): Column =
     array(perm.map(d => element_at(qv, lit(d + 1))): _*)
 
-  /** EXT-S36 (`x189_pq_codes_opq`) — PQ corpus encoding under the
-    * [[opqPermutation]] layout: the corpus is permuted row-locally,
-    * codebooks are TRAINED on the permuted corpus (same seeds-by-id +
-    * exact-integer Lloyd contract as [[pqCodebooks]], through the same
-    * stamp-validated train-once cache), and every vector is encoded to
-    * its `m` codes + exact reconstruction error — x104's output
-    * contract over the decorrelated subspace split. Reading this next
-    * to x104 at the same (m, ksub) prices the layout: the recon-err
-    * delta is the coding loss the permutation did (or did not) recover
-    * on this corpus, and [[pqRecallOpq]] prices it in recall terms.
+  /** The PQ coding LAYOUT of `dir` — resolved once here for every PQ
+    * operator, index writer and sweep: the int8 corpus the codes are
+    * trained on and encode, its trained codebooks and `dsub` (the
+    * stamp-validated train-once cache), and the query-side projection
+    * that puts a float embedding into the same layout.
     *
-    * Invariance law (spec-pinned): at m = 1 the subspace split is the
-    * whole vector, and distances are permutation-invariant when query
-    * and codebook share the permutation — the operator is bit-equal to
-    * [[pqCodes]] there; for m > 1 the split (and hence the coding
-    * geometry) genuinely changes.
+    * `opq = false` is the plain layout: the corpus is the lazy
+    * [[int8Corpus]] scan and the codebooks are [[pqCodebooks]].
+    * `opq = true` is the [[opqPermutation]] layout: the corpus is
+    * permuted row-locally and materialized (it feeds training, encoding
+    * and the query side), and the codebooks are TRAINED on the permuted
+    * corpus (same seeds-by-id + exact-integer Lloyd contract). The
+    * corpus is lazy in both: a codebook cache hit never builds it, so a
+    * caller that only needs the codebooks pays no permuted-corpus pass.
     */
-  def pqCodesOpq(
-      spark: SparkSession, dir: String, m: Int = 8, ksub: Int = 16,
-      iters: Int = 2): DataFrame = {
-    val (corpusP, cb, dsub) = opqCodedCorpus(spark, dir, m, ksub, iters)
-    pqAssign(corpusP, cb, dsub)
-      .select(col("vec_id"), concat_ws(",", col("codes")).as("codes_csv"), col("recon_err"))
-      .orderBy("vec_id")
-  }
-
-  /** The shared OPQ build: permuted int8 corpus (materialized — it
-    * feeds training, encoding, and the query side) + its trained
-    * codebooks from the stamp-validated cache.
-    */
-  private def opqCodedCorpus(
-      spark: SparkSession, dir: String, m: Int, ksub: Int,
-      iters: Int): (DataFrame, Array[Array[Array[Long]]], Int) = {
-    val perm = opqPermutation(spark, dir, m)
-    val corpusP = int8Corpus(spark, dir)
-      .select(col("vec_id"), permutedVec(col("qv"), perm).as("qv"))
-      .localCheckpoint()
-    val (cb, dsub) = pqCodebooksCached(spark, dir, "-opq", m, ksub, iters)(corpusP)
-    (corpusP, cb, dsub)
-  }
-
-  /** [[pqTopK]] under the OPQ layout: identical ADC serving plan, the
-    * permuted corpus coded by permuted-trained codebooks, query side
-    * permuted by the same literal (asymmetric ADC unchanged).
-    */
-  def pqTopKOpq(
-      spark: SparkSession,
-      dir: String,
-      k: Int = 3,
-      queryMod: Int = 10,
-      m: Int = 8,
-      ksub: Int = 16,
-      maxBroadcastBytes: Long = 64L << 20,
-      iters: Int = 2): DataFrame = {
-    val (corpusP, cb, dsub) = opqCodedCorpus(spark, dir, m, ksub, iters)
-    val codes = pqAssign(corpusP, cb, dsub).select(col("vec_id").as("cid"), col("codes"))
-    val queriesRaw = corpusP.filter(pmod(col("vec_id"), lit(queryMod)) === 0)
-      .select(col("vec_id").as("qid"), col("qv").as("qe"))
-    val queries = broadcastIfMeasuredUnder(queriesRaw,
-      s"$dir|pqopqq|mod=$queryMod",
-      () => { val b = embRowBytes(queriesRaw, "qe"); if (b < 0) b else b * 2 },
-      maxBroadcastBytes)
-    adcTopK(queries, codes, cb, dsub, k)
-  }
-
-  /** [[pqRecall]] under the OPQ layout — the measured answer to "did
-    * decorrelating the subspaces buy ADC recall at this (m, ksub)?".
-    * The truth leg is the UNPERMUTED float brute force: a permutation
-    * shared by query and corpus is cosine-invariant, so the true
-    * neighbor sets are identical and the delta vs [[pqRecall]] is pure
-    * coding-geometry effect.
-    */
-  def pqRecallOpq(
-      spark: SparkSession,
-      dir: String,
-      k: Int = 3,
-      queryMod: Int = 10,
-      m: Int = 8,
-      ksub: Int = 16,
-      maxBroadcastBytes: Long = 64L << 20,
-      iters: Int = 2): DataFrame = {
-    val exact = bruteForceTopK(spark, dir, k, queryMod)
-      .select(col("vec_id"), col("neighbor_id"))
-      .localCheckpoint() // consumed by the query list AND the hit join
-    val approx = pqTopKOpq(spark, dir, k, queryMod, m, ksub, maxBroadcastBytes, iters)
-      .select(col("vec_id"), col("neighbor_id"))
-    recallTail(exact, approx, k)
+  private final class PqLayout(
+      spark: SparkSession, dir: String, m: Int, ksub: Int, iters: Int, opq: Boolean) {
+    val perm: Option[Seq[Int]] = if (opq) Some(opqPermutation(spark, dir, m)) else None
+    lazy val corpus: DataFrame = perm.fold(int8Corpus(spark, dir))(p =>
+      int8Corpus(spark, dir)
+        .select(col("vec_id"), permutedVec(col("qv"), p).as("qv"))
+        .localCheckpoint())
+    val (cb, dsub) = perm.fold(pqCodebooks(spark, dir, m, ksub, iters))(_ =>
+      pqCodebooksCached(spark, dir, "-opq", m, ksub, iters)(corpus))
+    /** a float embedding column, quantized into this layout */
+    def int8(embedding: Column): Column =
+      perm.fold(int8Quantize(embedding))(p => permutedVec(int8Quantize(embedding), p))
   }
 
   /** Per-query ADC distance TABLE (Jégou et al., PAMI 2011 — asymmetric
@@ -830,7 +774,7 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     * prescribes): for an int8 query vector `qe`, entry
     * `[s][c] = ‖q_s‖² − 2·q_s·cb[s][c] + ‖cb[s][c]‖²` — m·ksub exact
     * BIGINTs computed ONCE per query row, so every scored pair
-    * afterwards costs m array lookups ([[adcDistFromTable]]). The
+    * afterwards costs m array lookups ([[adcSim]]). The
     * query side keeps full int8 precision; only the corpus pays the
     * compression. This replaced a per-PAIR spelling (each candidate
     * re-sliced the query and re-dotted it against code-indexed codebook
@@ -847,16 +791,25 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       qe: Column, cb: Array[Array[Array[Long]]], dsub: Int): Column =
     graft.functions.PqOps.adc_table(qe, cb)
 
-  /** The pair-side ADC distance off a [[adcTableCol]] column `dtab`:
-    * Σ_s dtab[s][codes_s] — the same exact BIGINT terms [[adcDist]]
-    * computes, summed in the same subspace order, so rankings and
-    * emitted distances are bit-identical.
+  /** The pair-side ADC score off a [[adcTableCol]] column `dtab`: the
+    * exact BIGINT distance Σ_s dtab[s][codes_s], summed in subspace
+    * order and negated into the `sim` every top-k fold ranks by
+    * (ascending distance, ties to the lowest cid).
     */
-  private def adcDistFromTable(m: Int): Column =
-    (0 until m).map { s =>
+  private def adcSim(m: Int): Column =
+    (lit(0L) - (0 until m).map { s =>
       element_at(element_at(col("dtab"), s + 1),
         element_at(col("codes"), s + 1) + 1)
-    }.reduce(_ + _)
+    }.reduce(_ + _)).cast("double").as("sim")
+
+  /** [[presentTopK]] over ADC-scored pairs, the score emitted as the
+    * exact BIGINT `adc_dist` so the oracle hash-checks the distances
+    * themselves, not just the ordering.
+    */
+  private def presentAdcTopK(scored: DataFrame, k: Int): DataFrame =
+    presentTopK(scored, k)
+      .select(col("vec_id"), col("rank"), col("neighbor_id"),
+        (lit(0.0) - col("sim4")).cast("bigint").as("adc_dist"))
 
   /** The shared ADC top-k plan: queries `(qid, qe: array<bigint>)` ×
     * codes `(cid, codes: array<int>)` under the caller's broadcast
@@ -879,12 +832,8 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     // join's own broadcast/exchange of that side — never recomputed per
     // pair), so the expansion stream pays m lookups per candidate.
     val q = queries.withColumn("dtab", adcTableCol(col("qe"), cb, dsub))
-    val scored = q.join(expansionPartitioned(codes), col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        (lit(0L) - adcDistFromTable(cb.length)).cast("double").as("sim"))
-    presentTopK(scored, k)
-      .select(col("vec_id"), col("rank"), col("neighbor_id"),
-        (lit(0.0) - col("sim4")).cast("bigint").as("adc_dist"))
+    presentAdcTopK(q.join(expansionPartitioned(codes), col("qid") =!= col("cid"))
+      .select(col("qid"), col("cid"), adcSim(cb.length)), k)
   }
 
   /** PQ-coded approximate top-k (ADC serving): the corpus is scanned as
@@ -893,7 +842,10 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     * distance TABLE (ksub·m literal entries) touches real vector
     * components. The scored stream folds map-side to ≤ |queries|·k rows
     * per partition before the one exchange ([[presentTopK]]'s plan).
-    * Query side broadcast only under the measured guard.
+    * Query side broadcast only under the measured guard. `opq = true`
+    * serves the [[PqLayout]] OPQ layout: the permuted corpus coded by
+    * permuted-trained codebooks, the query side permuted by the same
+    * literal (asymmetric ADC unchanged).
     */
   def pqTopK(
       spark: SparkSession,
@@ -903,17 +855,18 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       m: Int = 8,
       ksub: Int = 16,
       maxBroadcastBytes: Long = 64L << 20,
-      iters: Int = 2): DataFrame = {
-    val (cb, dsub) = pqCodebooks(spark, dir, m, ksub, iters)
-    val corpus = int8Corpus(spark, dir)
-    val codes = pqAssign(corpus, cb, dsub).select(col("vec_id").as("cid"), col("codes"))
-    val queriesRaw = corpus.filter(pmod(col("vec_id"), lit(queryMod)) === 0)
+      iters: Int = 2,
+      opq: Boolean = false): DataFrame = {
+    val layout = new PqLayout(spark, dir, m, ksub, iters, opq)
+    val codes = pqAssign(layout.corpus, layout.cb, layout.dsub)
+      .select(col("vec_id").as("cid"), col("codes"))
+    val queriesRaw = layout.corpus.filter(pmod(col("vec_id"), lit(queryMod)) === 0)
       .select(col("vec_id").as("qid"), col("qv").as("qe"))
     val queries = broadcastIfMeasuredUnder(queriesRaw,
-      s"$dir|pqq|mod=$queryMod",
+      s"$dir|${if (opq) "pqopqq" else "pqq"}|mod=$queryMod",
       () => { val b = embRowBytes(queriesRaw, "qe"); if (b < 0) b else b * 2 },
       maxBroadcastBytes)
-    adcTopK(queries, codes, cb, dsub, k)
+    adcTopK(queries, codes, layout.cb, layout.dsub, k)
   }
 
   /** EXT-S21 (x105) — PQ recall audit: [[pqTopK]]'s ADC ranking
@@ -922,7 +875,11 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     * scan: read next to [[quantizedRecall]] (int8, 4×), the recall-vs-
     * bytes curve is what picks the serving representation — and because
     * ADC distances are exact integers, a recall loss here is pure
-    * quantization geometry, never engine float noise.
+    * quantization geometry, never engine float noise. `opq = true`
+    * answers "did decorrelating the subspaces buy ADC recall at this
+    * (m, ksub)?": the truth leg stays the UNPERMUTED float brute force
+    * (a permutation shared by query and corpus is cosine-invariant), so
+    * the delta between the two layouts is pure coding-geometry effect.
     */
   def pqRecall(
       spark: SparkSession,
@@ -932,11 +889,12 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       m: Int = 8,
       ksub: Int = 16,
       maxBroadcastBytes: Long = 64L << 20,
-      iters: Int = 2): DataFrame = {
+      iters: Int = 2,
+      opq: Boolean = false): DataFrame = {
     val exact = bruteForceTopK(spark, dir, k, queryMod)
       .select(col("vec_id"), col("neighbor_id"))
       .localCheckpoint() // consumed by the query list AND the hit join
-    val approx = pqTopK(spark, dir, k, queryMod, m, ksub, maxBroadcastBytes, iters)
+    val approx = pqTopK(spark, dir, k, queryMod, m, ksub, maxBroadcastBytes, iters, opq)
       .select(col("vec_id"), col("neighbor_id"))
     recallTail(exact, approx, k)
   }
@@ -978,51 +936,46 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       iters: Int = 2): DataFrame = {
     require(nprobe >= 1 && nprobe <= nCentroids,
       s"nprobe ($nprobe) must be in [1, nCentroids=$nCentroids]")
-    val (cb, dsub) = pqCodebooks(spark, dir, m, ksub, iters)
+    val layout = new PqLayout(spark, dir, m, ksub, iters, opq = false)
     val (withCell, scoredCells) = ivfAssignment(spark, dir, nCentroids)
-    // the one coded-corpus pass: PQ codes projected row-locally over the
-    // cell-labeled assignment, cell label riding through (no re-join).
-    // MATERIALIZED before the scoring join, for two reasons measured at
-    // the 10× slice (119 s -> see BASELINE r15): (a) without a stage
-    // boundary the encode projection (m·ksub inline argmin distances)
-    // FUSES with the ADC scoring projection into one generated method
-    // that exceeds Janino's limit — whole-stage codegen falls back to
-    // interpreted eval for the whole pipeline, the costliest stage of
-    // the query; (b) the assignment's cell-hash partitioning would make
-    // scoring task skew mirror cell-population skew (the x172 census) —
-    // the round-robin spread evens the expansion, and the broadcast
-    // probe join needs no co-location. The checkpoint is the in-memory
-    // twin of what writeIvfPqIndex persists: encode once, probe many.
-    val corpusCoded = pqAssign(
-      withCell.select(col("vec_id"), col("cell"),
-        int8Quantize(col("embedding")).as("qv")),
-      cb, dsub, passthrough = Seq("cell"))
-      .select(col("cell"), col("vec_id").as("cid"), col("codes"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .localCheckpoint()
+    val corpusCoded = cellCodedCorpus(withCell, layout)
     // query side: sample FIRST (unprobed corpus rows never pay the
     // nprobe-cell sort), keep full int8 precision (asymmetric ADC), fan
     // out to the nprobe best cells under the ivfProbe tie-break
-    val qSrc = withCell.filter(pmod(col("vec_id"), lit(queryMod)) === 0)
-    val q =
-      if (nprobe == 1)
-        qSrc.select(col("vec_id").as("qid"),
-          adcTableCol(int8Quantize(col("embedding")), cb, dsub).as("dtab"),
-          col("cell"))
-      else
-        qSrc.select(col("vec_id").as("qid"),
-          adcTableCol(int8Quantize(col("embedding")), cb, dsub).as("dtab"),
-          probeCellsCol(scoredCells, nCentroids, nprobe).as("cell"))
+    val q = withCell.filter(pmod(col("vec_id"), lit(queryMod)) === 0)
+      .select(col("vec_id").as("qid"),
+        adcTableCol(layout.int8(col("embedding")), layout.cb, layout.dsub).as("dtab"),
+        (if (nprobe == 1) col("cell")
+         else probeCellsCol(scoredCells, nCentroids, nprobe)).as("cell"))
     // a candidate lives in exactly ONE cell and a query's probe cells
     // are distinct, so no (qid, cid) pair repeats — no dedup needed
-    val scored = q.join(corpusCoded, Seq("cell"))
+    presentAdcTopK(q.join(corpusCoded, Seq("cell"))
       .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        (lit(0L) - adcDistFromTable(cb.length)).cast("double").as("sim"))
-    presentTopK(scored, k)
-      .select(col("vec_id"), col("rank"), col("neighbor_id"),
-        (lit(0.0) - col("sim4")).cast("bigint").as("adc_dist"))
+      .select(col("qid"), col("cid"), adcSim(layout.cb.length)), k)
   }
+
+  /** The coded-corpus pass of the IVF-PQ composite ([[ivfPqTopK]] and
+    * both tuning sweeps): PQ codes in `layout` projected row-locally
+    * over the cell-labeled assignment, cell label riding through (no
+    * re-join). MATERIALIZED before the scoring join, for two reasons
+    * measured at the 10× slice (119 s -> see BASELINE r15): (a) without
+    * a stage boundary the encode projection FUSES with the ADC scoring
+    * projection into one generated method that exceeds Janino's limit —
+    * whole-stage codegen falls back to interpreted eval for the whole
+    * pipeline, the costliest stage of the query; (b) the assignment's
+    * cell-hash partitioning would make scoring task skew mirror
+    * cell-population skew (the x172 census) — the round-robin spread
+    * evens the expansion, and the broadcast probe join needs no
+    * co-location. The checkpoint is the in-memory twin of what
+    * writeIvfPqIndex persists: encode once, probe many.
+    */
+  private def cellCodedCorpus(withCell: DataFrame, layout: PqLayout): DataFrame =
+    pqAssign(
+      withCell.select(col("vec_id"), col("cell"), layout.int8(col("embedding")).as("qv")),
+      layout.cb, layout.dsub, passthrough = Seq("cell"))
+      .select(col("cell"), col("vec_id").as("cid"), col("codes"))
+      .repartition(withCell.sparkSession.sparkContext.defaultParallelism)
+      .localCheckpoint()
 
   /** EXT-S20b — persisted PQ index: the one expensive corpus pass
     * (encode) written once; every later query batch scans 8-byte code
@@ -1032,8 +985,8 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     * parameter-bundling contract of [[writeIvfIndex]]/[[writeSignIndex]]:
     * probes read the geometry from the index itself and REFUSE a
     * mismatched query batch rather than mis-rank.
-    */
-  /** `opq = true` persists the index under the [[opqPermutation]]
+    *
+    * `opq = true` persists the index under the [[opqPermutation]]
     * layout — the deployment the r17 measurement singled out as OPQ's
     * home: PURE-ADC serving (no float store reachable at query time,
     * no refine tail to absorb coding error — the +5.6% relative ADC
@@ -1054,30 +1007,44 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       iters: Int = 2,
       opq: Boolean = false): Unit = {
     import spark.implicits._
-    val perm = if (opq) Some(opqPermutation(spark, dir, m)) else None
-    val corpus = perm.fold(int8Corpus(spark, dir))(p =>
-      int8Corpus(spark, dir)
-        .select(col("vec_id"), permutedVec(col("qv"), p).as("qv"))
-        .localCheckpoint())
-    val (cb, dsub) = perm match {
-      case None => pqCodebooks(spark, dir, m, ksub, iters)
-      case Some(_) => pqCodebooksCached(spark, dir, "-opq", m, ksub, iters)(corpus)
-    }
-    pqAssign(corpus, cb, dsub)
+    val layout = new PqLayout(spark, dir, m, ksub, iters, opq)
+    pqAssign(layout.corpus, layout.cb, layout.dsub)
       .select(col("vec_id"), col("codes"))
       .write.mode("overwrite").parquet(s"$indexPath/codes")
+    writePqSidecars(spark, indexPath, layout.cb, layout.dsub)
+    layout.perm.foreach { p =>
+      p.zipWithIndex.map { case (d, pos) => (pos, d) }.toDF("pos", "d")
+        .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/perm")
+    }
+  }
+
+  /** The bounded sidecar tables of a persisted PQ or IVF-PQ index — the
+    * one spelling shared by [[writePqIndex]], [[writeIvfPqIndex]] and the
+    * streaming init [[initIvfPqIndex]] (a drifted stamp layout would make
+    * every probe refusal lie): `centroids/` with the [[writeIvfIndex]]
+    * `n_centroids` stamp when `cents` is given, then `codebook/` and the
+    * one-row (m, ksub, dim) `meta/` stamp.
+    */
+  private def writePqSidecars(
+      spark: SparkSession,
+      indexPath: String,
+      cb: Array[Array[Array[Long]]],
+      dsub: Int,
+      cents: Seq[(Int, Seq[Float])] = Nil): Unit = {
+    import spark.implicits._
+    if (cents.nonEmpty)
+      cents.toDF("cid", "embedding")
+        .withColumn("n_centroids", lit(cents.length))
+        .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/centroids")
     val rows = for {
       s <- cb.indices; c <- cb(s).indices; d <- cb(s)(c).indices
     } yield (s, c, d, cb(s)(c)(d))
     rows.toDF("s", "code", "d", "v")
       .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/codebook")
+    val ksub = cb.headOption.map(_.length).getOrElse(0)
     spark.range(1)
-      .select(lit(m).as("m"), lit(ksub).as("ksub"), lit(m * dsub).as("dim"))
+      .select(lit(cb.length).as("m"), lit(ksub).as("ksub"), lit(cb.length * dsub).as("dim"))
       .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/meta")
-    perm.foreach { p =>
-      p.zipWithIndex.map { case (d, pos) => (pos, d) }.toDF("pos", "d")
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/perm")
-    }
   }
 
   /** The stamped layout permutation of a persisted PQ index, or None
@@ -1128,8 +1095,7 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       .select(col("vec_id").as("qid"),
         perm.fold(int8Quantize(col("embedding")))(p =>
           permutedVec(int8Quantize(col("embedding")), p)).as("qe"))
-    val q = broadcastIfMeasuredUnder(qRaw,
-      s"$indexPath|pqq|${System.identityHashCode(queries)}",
+    val q = broadcastIfMeasuredNow(qRaw,
       () => { val b = embRowBytes(qRaw, "qe"); if (b < 0) b else b * 2 },
       maxBroadcastBytes)
     val codes = spark.read.parquet(s"$indexPath/codes")
@@ -1244,8 +1210,9 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     refineByFloatStore(spark, corpusDir, cand, queries, k)
   }
 
-  /** The exact-refine tail shared by the persisted serving path and the
-    * streaming live probe (EXT-6as): re-rank a bounded (qid, cid)
+  /** The exact-refine tail shared by the persisted serving paths (the
+    * sign-sketch probe and the IVF-PQ refine) and the streaming live
+    * probe (EXT-6as): re-rank a bounded (qid, cid)
     * candidate relation by the exact float dot, corpus vectors fetched
     * BY CANDIDATE ID from `corpusDir` — the sketch/store separation
     * ([[hammingTopKFromIndex]]'s contract: the candidate relation is
@@ -1339,8 +1306,6 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       require(m >= 1 && ksub >= 1, s"degenerate geometry ($nc, $m, $ksub)")
     }
     import spark.implicits._
-    val maxNp = nprobes.max
-    val npArr = typedlit(nprobes)
     // the one float brute truth leg, shared by every sweep cell
     val exact = bruteForceTopK(spark, dir, k, queryMod)
       .select(col("vec_id"), col("neighbor_id"))
@@ -1350,49 +1315,10 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     def assignment(nc: Int): (DataFrame, Column) =
       assignments.getOrElseUpdate(nc, ivfAssignment(spark, dir, nc))
     geometries.map { case (nc, m, ksub) =>
-      val (cb, dsub) = pqCodebooks(spark, dir, m, ksub, iters)
+      val layout = new PqLayout(spark, dir, m, ksub, iters, opq = false)
       val (withCell, scoredCells) = assignment(nc)
-      // the one coded-corpus pass of this geometry cell (x176's build
-      // half: cell label rides the encode projection, spread + pinned
-      // before the scoring join — the codegen-fusion/skew note there)
-      val corpusCoded = pqAssign(
-        withCell.select(col("vec_id"), col("cell"),
-          int8Quantize(col("embedding")).as("qv")),
-        cb, dsub, passthrough = Seq("cell"))
-        .select(col("cell"), col("vec_id").as("cid"), col("codes"))
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint()
-      // query fan-out ONCE at the widest probe width, probe RANK carried
-      // (posexplode over the same best-first slice as probeCellsCol —
-      // identical tie-break): nprobe = np is the prank ≤ np slice.
-      // Materialized: |queries|·maxNp narrow rows, consumed by the one
-      // scoring pass AND the candidate-cost census
-      val qSrc = withCell.filter(pmod(col("vec_id"), lit(queryMod)) === 0)
-      val q = qSrc
-        .select(col("vec_id").as("qid"),
-          adcTableCol(int8Quantize(col("embedding")), cb, dsub).as("dtab"),
-          posexplode(slice(reverse(array_sort(scoredCells)), 1, maxNp)).as(Seq("pr", "pc")))
-        .select(col("qid"), col("dtab"), (col("pr") + 1).cast("int").as("prank"),
-          (lit(nc - 1) - col("pc").getField("nk")).as("cell"))
-        .localCheckpoint()
-      // scanned-candidate cost from the |cells|-row census — never from
-      // a materialized pair relation: Σ probed |cell|, minus the one
-      // self-pair each query sheds in its (always-probed) argmax cell.
-      // r18: EVERY sweep point's census comes out of ONE bounded
-      // aggregation — each (prank, csz) row is dealt row-locally to the
-      // points with np >= prank and folded by np; the prank = 1 count
-      // recovers the per-query self-pair correction (every np probes
-      // rank 1, so the group count at any np IS |queries|). This
-      // replaces a per-point filter+agg over a checkpointed qSized
-      // relation plus a driver-side count() job.
-      val cellSizes = corpusCoded.groupBy("cell").agg(count(lit(1)).as("csz"))
-      val candByNp = q.select(col("prank"), col("cell"))
-        .join(broadcast(cellSizes), Seq("cell"))
-        .select(col("csz"), col("prank"),
-          explode(filter(npArr, n => n >= col("prank"))).as("np"))
-        .groupBy("np")
-        .agg(sum(col("csz")).as("cand_sum"),
-          sum(when(col("prank") === 1, lit(1L)).otherwise(lit(0L))).as("nq"))
+      val (_, candByNp, scoredAll) =
+        sweepProbePlan(withCell, scoredCells, nc, layout, nprobes, queryMod)
       // r18 (guide §2.4): ONE ADC expansion at the widest probe width
       // replaces the per-point re-expansion — the coded-corpus join, the
       // m-lookup ADC scoring, and the bounded TopK exchange each ran
@@ -1402,14 +1328,9 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       // keyed by (np, qid) folds all sweep points map-side. Top-k sets
       // per point are unchanged: the np slice of the deal IS the
       // prank <= np candidate set under the same sim and tie-break.
-      val scoredAll = q.join(corpusCoded, Seq("cell"))
-        .filter(col("qid") =!= col("cid"))
-        .select(col("qid"), col("cid"), col("prank"),
-          (lit(0L) - adcDistFromTable(cb.length)).cast("double").as("sim"))
       val topkAgg = graft.functions.TopK.topk(k)
       val byNp = scoredAll
-        .select(col("qid"), col("sim"), col("cid"),
-          explode(filter(npArr, n => n >= col("prank"))).as("np"))
+        .select(col("qid"), col("sim"), col("cid"), dealToPoints(nprobes, "prank", "np"))
         .groupBy(col("np"), col("qid"))
         .agg(topkAgg(col("sim"), col("cid")).as("nb"))
         .select(col("np"), col("qid").as("vec_id"), explode(col("nb.entries")).as("e"))
@@ -1434,6 +1355,66 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
           round(col("n_hits").cast("double") / (col("n_queries") * k), 4))
     }.reduce(_ unionByName _).orderBy("n_centroids", "m", "ksub", "nprobe")
   }
+
+  /** The probe plan both tuning sweeps share for one (nCentroids,
+    * layout) geometry, returned as (fan-out, census, scored pairs):
+    *  - the coded corpus ([[cellCodedCorpus]]);
+    *  - the query fan-out ONCE at the widest probe width, probe RANK
+    *    carried (posexplode over the same best-first slice as
+    *    probeCellsCol — identical tie-break): nprobe = np is the
+    *    `prank ≤ np` slice. Each fan-out row carries the per-query ADC
+    *    distance TABLE in place of the raw int8 query, so every scored
+    *    pair pays m lookups. Materialized: |queries|·maxNp rows
+    *    (|queries|·maxNp·m·ksub-bounded), consumed by the scoring pass
+    *    AND the census;
+    *  - the scanned-candidate census from the |cells|-row cell-size
+    *    table — never from a materialized pair relation: Σ probed
+    *    |cell| per np as `cand_sum`, minus `nq`, the one self-pair each
+    *    query sheds in its (always-probed) argmax cell. r18: EVERY sweep
+    *    point's census comes out of ONE bounded aggregation — each
+    *    (prank, csz) row is dealt row-locally to the points with
+    *    np >= prank and folded by np; the prank = 1 count recovers the
+    *    per-query self-pair correction (every np probes rank 1, so the
+    *    group count at any np IS |queries|). This replaced a per-point
+    *    filter+agg over a checkpointed qSized relation plus a
+    *    driver-side count() job;
+    *  - the ADC expansion at the widest width, each pair carrying its
+    *    probe rank for the caller's per-point deal.
+    */
+  private def sweepProbePlan(
+      withCell: DataFrame,
+      scoredCells: Column,
+      nCentroids: Int,
+      layout: PqLayout,
+      nprobes: Seq[Int],
+      queryMod: Int): (DataFrame, DataFrame, DataFrame) = {
+    val corpusCoded = cellCodedCorpus(withCell, layout)
+    val q = withCell.filter(pmod(col("vec_id"), lit(queryMod)) === 0)
+      .select(col("vec_id").as("qid"),
+        adcTableCol(layout.int8(col("embedding")), layout.cb, layout.dsub).as("dtab"),
+        posexplode(slice(reverse(array_sort(scoredCells)), 1, nprobes.max)).as(Seq("pr", "pc")))
+      .select(col("qid"), col("dtab"), (col("pr") + 1).cast("int").as("prank"),
+        (lit(nCentroids - 1) - col("pc").getField("nk")).as("cell"))
+      .localCheckpoint()
+    val cellSizes = corpusCoded.groupBy("cell").agg(count(lit(1)).as("csz"))
+    val candByNp = q.select(col("prank"), col("cell"))
+      .join(broadcast(cellSizes), Seq("cell"))
+      .select(col("csz"), col("prank"), dealToPoints(nprobes, "prank", "np"))
+      .groupBy("np")
+      .agg(sum(col("csz")).as("cand_sum"),
+        sum(when(col("prank") === 1, lit(1L)).otherwise(lit(0L))).as("nq"))
+    val scoredAll = q.join(corpusCoded, Seq("cell"))
+      .filter(col("qid") =!= col("cid"))
+      .select(col("qid"), col("cid"), col("prank"), adcSim(layout.cb.length))
+    (q, candByNp, scoredAll)
+  }
+
+  /** Deal a row to every sweep point whose width covers its `rank` —
+    * the nesting law both sweeps fold by: point p sees exactly the rows
+    * of rank ≤ p.
+    */
+  private def dealToPoints(points: Seq[Int], rank: String, as: String): Column =
+    explode(filter(typedlit(points), p => p >= col(rank))).as(as)
 
   /** EXT-S35 (`x187_refined_tuning_sweep`) — the refined composite's
     * OPERATING-POINT tuning table: per (nprobe × shortlist) point, at a
@@ -1479,8 +1460,8 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     * (nprobe, shortlist) grid point matching x186's defaults carries
     * exactly x186's hit mass. Recall is NOT claimed monotone in nprobe
     * (x181's ADC-impostor caveat applies to the shortlist's content).
-    */
-  /** `opq = true` sweeps the table under the [[opqPermutation]] layout:
+    *
+    * `opq = true` sweeps the table under the [[opqPermutation]] layout:
     * the PQ subspace split (codebooks, corpus codes, query subvectors)
     * moves to the decorrelated deal while the COARSE quantizer, the
     * truth leg, and the float refine stay in unpermuted space (cosine
@@ -1488,33 +1469,17 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     * set changes). The question this knob answers: does a better-coded
     * shortlist CAPTURE the true neighbors earlier, letting a smaller
     * shortlist — fewer float fetches — clear the same recall budget?
+    *
+    * `maxFetchBroadcastBytes` bounds the float-fetch broadcast (r19, the
+    * r18 ADVICE item): the fused fetch relation carries
+    * |queries|·maxSl·|nprobes| rows WITH float embeddings — |nprobes|×
+    * more than the r18 per-width loop broadcast — so the hint rides a
+    * MEASURED bound (|queries| counted from the cached fan-out, the rest
+    * literals) instead of firing unconditionally: past the bound the
+    * join degrades to the planner's keyed shuffle, the correct 100 TB
+    * fallback.
     */
   def refinedTuningSweep(
-      spark: SparkSession,
-      dir: String,
-      nCentroids: Int = 16,
-      m: Int = 8,
-      ksub: Int = 16,
-      iters: Int = 2,
-      nprobes: Seq[Int] = Seq(2, 4, 8),
-      shortlists: Seq[Int] = Seq(8, 16, 32),
-      k: Int = 3,
-      queryMod: Int = 10,
-      opq: Boolean = false): DataFrame =
-    refinedTuningSweepBounded(spark, dir, nCentroids, m, ksub, iters,
-      nprobes, shortlists, k, queryMod, opq)
-
-  /** [[refinedTuningSweep]] with the float-fetch broadcast bound
-    * exposed (r19, the r18 ADVICE item): the fused fetch relation
-    * carries |queries|·maxSl·|nprobes| rows WITH float embeddings —
-    * |nprobes|× more than the r18 per-width loop broadcast — so the
-    * hint now rides a MEASURED bound (|queries| counted from the
-    * cached fan-out, the rest literals) instead of unconditionally:
-    * past the bound the join degrades to the planner's keyed shuffle,
-    * the correct 100 TB fallback. Package-private so the spec can
-    * force a tiny bound and pin the no-hint fallback.
-    */
-  private[graft] def refinedTuningSweepBounded(
       spark: SparkSession,
       dir: String,
       nCentroids: Int = 16,
@@ -1536,61 +1501,17 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     require(shortlists.forall(_ >= k),
       s"shortlists (${shortlists.mkString(",")}) must be >= k ($k)")
     import spark.implicits._
-    val maxNp = nprobes.max
     val maxSl = shortlists.max
     // the one float brute truth leg, shared by every sweep point
     val exact = bruteForceTopK(spark, dir, k, queryMod)
       .select(col("vec_id"), col("neighbor_id"))
       .localCheckpoint()
-    val perm = if (opq) Some(opqPermutation(spark, dir, m)) else None
-    def q8(c: Column): Column =
-      perm.fold(int8Quantize(c))(p => permutedVec(int8Quantize(c), p))
-    val (cb, dsub) = perm match {
-      case None => pqCodebooks(spark, dir, m, ksub, iters)
-      case Some(p) => pqCodebooksCached(spark, dir, "-opq", m, ksub, iters)(
-        int8Corpus(spark, dir)
-          .select(col("vec_id"), permutedVec(col("qv"), p).as("qv"))
-          .localCheckpoint())
-    }
+    val layout = new PqLayout(spark, dir, m, ksub, iters, opq)
     val (withCell, scoredCells) = ivfAssignment(spark, dir, nCentroids)
-    // the one coded-corpus pass (x176's build half: cell label rides the
-    // encode projection; spread + pinned — the codegen-fusion/skew note)
-    val corpusCoded = pqAssign(
-      withCell.select(col("vec_id"), col("cell"),
-        q8(col("embedding")).as("qv")),
-      cb, dsub, passthrough = Seq("cell"))
-      .select(col("cell"), col("vec_id").as("cid"), col("codes"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .localCheckpoint()
-    // query fan-out once at the widest probe width, probe RANK carried
-    // (the x182 spelling — identical tie-break to probeCellsCol); the
-    // fan-out rows carry the per-query ADC distance TABLE in place of
-    // the raw int8 query (the checkpoint materializes it once per
-    // (query, probe-cell) row — |queries|·maxNp·m·ksub-bounded), so
-    // every per-nprobe re-scan pays m lookups per candidate
-    val qSrc = withCell.filter(pmod(col("vec_id"), lit(queryMod)) === 0)
-    val q = qSrc
-      .select(col("vec_id").as("qid"),
-        adcTableCol(q8(col("embedding")), cb, dsub).as("dtab"),
-        posexplode(slice(reverse(array_sort(scoredCells)), 1, maxNp)).as(Seq("pr", "pc")))
-      .select(col("qid"), col("dtab"), (col("pr") + 1).cast("int").as("prank"),
-        (lit(nCentroids - 1) - col("pc").getField("nk")).as("cell"))
-      .localCheckpoint()
-    // scanned-candidate cost from the |cells|-row census (x182's rule,
-    // r18: one bounded aggregation serves every probe width — see
-    // ivfPqTuningSweep's census note; nq recovers |queries| from the
-    // always-probed rank-1 rows, replacing the checkpointed qSized
-    // relation and its driver-side count() job)
-    val npArr = typedlit(nprobes)
-    val slArr = typedlit(shortlists)
-    val cellSizes = corpusCoded.groupBy("cell").agg(count(lit(1)).as("csz"))
-    val candByNp = q.select(col("prank"), col("cell"))
-      .join(broadcast(cellSizes), Seq("cell"))
-      .select(col("csz"), col("prank"),
-        explode(filter(npArr, n => n >= col("prank"))).as("np"))
-      .groupBy("np")
-      .agg(sum(col("csz")).as("cand_sum"),
-        sum(when(col("prank") === 1, lit(1L)).otherwise(lit(0L))).as("nq"))
+    // the coded corpus, the widest-probe fan-out, its census and the one
+    // ADC expansion: x182's plan (sweepProbePlan)
+    val (q, candByNp, scoredAll) =
+      sweepProbePlan(withCell, scoredCells, nCentroids, layout, nprobes, queryMod)
     // the float store, touched ONLY by candidate-id joins in the refine
     val emb = Tables.embeddings(spark, dir)
     val fq = emb.select(col("vec_id").as("qid"), col("embedding").as("fqe"))
@@ -1602,14 +1523,9 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     // once and dealt row-locally to every width with np >= its probe
     // rank. Rankings per width are unchanged (same candidate set, same
     // sim, same tie-break), so every shortlist rank-slice is unchanged.
-    val scoredAll = q.join(corpusCoded, Seq("cell"))
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), col("prank"),
-        (lit(0L) - adcDistFromTable(cb.length)).cast("double").as("sim"))
     val topMax = graft.functions.TopK.topk(maxSl)
     val adcTopAll = scoredAll
-      .select(col("qid"), col("sim"), col("cid"),
-        explode(filter(npArr, n => n >= col("prank"))).as("np"))
+      .select(col("qid"), col("sim"), col("cid"), dealToPoints(nprobes, "prank", "np"))
       .groupBy(col("np"), col("qid"))
       .agg(topMax(col("sim"), col("cid")).as("nb"))
       .select(col("np"), col("qid"), posexplode(col("nb.entries")).as(Seq("pos", "e")))
@@ -1627,7 +1543,7 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     // thing to hit the 8 GB broadcast wall at a production query
     // batch. Past the bound the planner keeps its keyed shuffle join.
     val nQ = q.filter(col("prank") === 1).count() // one cheap cached job
-    val fetchEstBytes = nQ * maxSl * nprobes.length * (4L * m * dsub + 96L)
+    val fetchEstBytes = nQ * maxSl * nprobes.length * (4L * m * layout.dsub + 96L)
     val fetchRel = adcTopAll.join(fq, Seq("qid"))
     val refScoredAll =
       (if (fetchEstBytes <= maxFetchBroadcastBytes) broadcast(fetchRel) else fetchRel)
@@ -1638,7 +1554,7 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     val topkAgg = graft.functions.TopK.topk(k)
     val refTop = refScoredAll
       .select(col("np"), col("qid"), col("cid"), col("sim"),
-        explode(filter(slArr, s => s >= col("adc_rank"))).as("sl"))
+        dealToPoints(shortlists, "adc_rank", "sl"))
       .groupBy(col("np"), col("sl"), col("qid"))
       .agg(topkAgg(col("sim"), col("cid")).as("nb"))
       .select(col("np"), col("sl"), col("qid").as("vec_id"),
@@ -1649,7 +1565,7 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     val hitRows = refTop.join(exact, Seq("vec_id", "neighbor_id"), "left_semi")
       .groupBy("np", "sl").agg(count(lit(1)).as("n_hits"))
     val ffRows = refScoredAll
-      .select(col("np"), explode(filter(slArr, s => s >= col("adc_rank"))).as("sl"))
+      .select(col("np"), dealToPoints(shortlists, "adc_rank", "sl"))
       .groupBy("np", "sl").agg(count(lit(1)).as("n_float_fetches"))
     val nQueries = exact.select("vec_id").distinct()
       .agg(count(lit(1)).as("n_queries"))
@@ -1668,17 +1584,6 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       .orderBy("nprobe", "shortlist")
   }
 
-  /** EXT-S31b — persisted IVF-PQ index (the on-disk FAISS IVFADC
-    * layout): ONE corpus pass assigns the coarse cell and the PQ codes
-    * in the same projection ([[ivfPqTopK]]'s build half) and writes
-    * `cells/` (vec_id, codes) PARTITIONED BY the coarse cell, plus the
-    * two bounded sidecar tables — `centroids/` with the
-    * [[writeIvfIndex]] `n_centroids` stamp and `codebook/` + `meta/`
-    * with the [[writePqIndex]] geometry stamp. No float corpus vector
-    * is written at all: the index IS the (nprobe/nCentroids ×
-    * m/4·dim)-shrunk serving relation, and the only float rows on disk
-    * are the nCentroids coarse centroids.
-    */
   /** The IVF seed centroids as driver literals — bounded by
     * construction (nCentroids rows), the same collect class as every
     * centroid table in this file. Shared by the index writer and the
@@ -1718,6 +1623,17 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       cb, dsub, passthrough = Seq("cell"))
   }
 
+  /** EXT-S31b — persisted IVF-PQ index (the on-disk FAISS IVFADC
+    * layout): ONE corpus pass assigns the coarse cell and the PQ codes
+    * in the same projection ([[ivfPqTopK]]'s build half) and writes
+    * `cells/` (vec_id, codes) PARTITIONED BY the coarse cell, plus the
+    * two bounded sidecar tables — `centroids/` with the
+    * [[writeIvfIndex]] `n_centroids` stamp and `codebook/` + `meta/`
+    * with the [[writePqIndex]] geometry stamp. No float corpus vector
+    * is written at all: the index IS the (nprobe/nCentroids ×
+    * m/4·dim)-shrunk serving relation, and the only float rows on disk
+    * are the nCentroids coarse centroids.
+    */
   def writeIvfPqIndex(
       spark: SparkSession,
       dir: String,
@@ -1731,7 +1647,7 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     ivfPqAssignProjection(Tables.embeddings(spark, dir), cents, cb, dsub)
       .select(col("vec_id"), col("codes"), col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$indexPath/cells")
-    writeIvfPqSidecars(spark, indexPath, cents, nCentroids, cb, m, dsub)
+    writePqSidecars(spark, indexPath, cb, dsub, cents)
   }
 
   /** EXT-6ao's init half — train the IVF-PQ GEOMETRY on `dir` and write
@@ -1754,34 +1670,7 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       iters: Int = 2): Unit = {
     val (cb, dsub) = pqCodebooks(spark, dir, m, ksub, iters)
     val cents = ivfSeedCentroids(spark, dir, nCentroids)
-    writeIvfPqSidecars(spark, indexPath, cents, nCentroids, cb, m, dsub)
-  }
-
-  /** The bounded sidecar tables of a persisted IVF-PQ index — the one
-    * spelling shared by the static writer and the streaming init (a
-    * drifted stamp layout would make every probe refusal lie).
-    */
-  private def writeIvfPqSidecars(
-      spark: SparkSession,
-      indexPath: String,
-      cents: Seq[(Int, Seq[Float])],
-      nCentroids: Int,
-      cb: Array[Array[Array[Long]]],
-      m: Int,
-      dsub: Int): Unit = {
-    import spark.implicits._
-    cents.toDF("cid", "embedding")
-      .withColumn("n_centroids", lit(nCentroids))
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/centroids")
-    val rows = for {
-      s <- cb.indices; c <- cb(s).indices; d <- cb(s)(c).indices
-    } yield (s, c, d, cb(s)(c)(d))
-    rows.toDF("s", "code", "d", "v")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/codebook")
-    val ksub = cb.headOption.map(_.length).getOrElse(0)
-    spark.range(1)
-      .select(lit(m).as("m"), lit(ksub).as("ksub"), lit(m * dsub).as("dim"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/meta")
+    writePqSidecars(spark, indexPath, cb, dsub, cents)
   }
 
   /** EXT-S31b probe — [[ivfPqTopK]] served from the PERSISTED index:
@@ -1859,16 +1748,10 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     // bounds the expansion to |q|·(small) cheap ADC lookups. A larger
     // pruned index plans a shuffle join, whose exchange spreads the
     // query side anyway.
-    val qSpread = queries
-    val q =
-      if (nprobe == 1)
-        qSpread.select(col("vec_id").as("qid"),
-          adcTableCol(int8Quantize(col("embedding")), cb, dsub).as("dtab"),
-          argmaxCell(scoredCells, nCentroids).as("cell"))
-      else
-        qSpread.select(col("vec_id").as("qid"),
-          adcTableCol(int8Quantize(col("embedding")), cb, dsub).as("dtab"),
-          probeCellsCol(scoredCells, nCentroids, nprobe).as("cell"))
+    val q = queries.select(col("vec_id").as("qid"),
+      adcTableCol(int8Quantize(col("embedding")), cb, dsub).as("dtab"),
+      (if (nprobe == 1) argmaxCell(scoredCells, nCentroids)
+       else probeCellsCol(scoredCells, nCentroids, nprobe)).as("cell"))
     val idxPruned =
       if (staticPrune) {
         // cell-only derivation: the prune pass never re-evaluates the
@@ -1883,12 +1766,8 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     // freshly-written cell partitions are small files locally — spread
     // the probe expansion off the scan's task count (the x175 site)
     val idx = expansionPartitioned(idxDeduped)
-    val scored = q.join(idx, Seq("cell")).filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        (lit(0L) - adcDistFromTable(cb.length)).cast("double").as("sim"))
-    presentTopK(scored, k)
-      .select(col("vec_id"), col("rank"), col("neighbor_id"),
-        (lit(0.0) - col("sim4")).cast("bigint").as("adc_dist"))
+    presentAdcTopK(q.join(idx, Seq("cell")).filter(col("qid") =!= col("cid"))
+      .select(col("qid"), col("cid"), adcSim(cb.length)), k)
   }
 
   /** The operating-point SELECTION rule over a [[refinedTuningSweep]]

@@ -163,12 +163,21 @@ object Sources {
     * data into place is a rename the caller performs after validating —
     * dropping the only copy mid-rewrite must stay impossible by
     * construction.
+    *
+    * A PARTITIONED dataset passes its `partitionCols`: the rewrite then
+    * re-partitions BY those columns and writes `partitionBy` again, so
+    * the compacted copy keeps the directory layout static partition
+    * pruning depends on (a flat rewrite would fold `cell=<n>/` back into
+    * ordinary columns and every probe would scan every file). Each
+    * partition value's rows co-locate, so the output is one file per
+    * live partition value per target slice.
     */
   def compactParquet(
       spark: SparkSession,
       inDir: String,
       outDir: String,
-      targetBytes: Long = 128L * 1024 * 1024): Unit = {
+      targetBytes: Long = 128L * 1024 * 1024,
+      partitionCols: Seq[String] = Nil): Unit = {
     require(targetBytes > 0, "targetBytes must be positive")
     require(new org.apache.hadoop.fs.Path(inDir).toUri.getPath !=
       new org.apache.hadoop.fs.Path(outDir).toUri.getPath,
@@ -178,8 +187,11 @@ object Sources {
     val fs = in.getFileSystem(spark.sessionState.newHadoopConf())
     val bytes = fs.getContentSummary(in).getLength
     val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(inDir)
-      .repartition(nFiles)
-      .write.mode(SaveMode.ErrorIfExists).parquet(outDir)
+    val data = spark.read.parquet(inDir)
+    (if (partitionCols.isEmpty) data.repartition(nFiles)
+     else data.repartition(nFiles, partitionCols.map(col): _*))
+      .write.mode(SaveMode.ErrorIfExists)
+      .partitionBy(partitionCols: _*)
+      .parquet(outDir)
   }
 }

@@ -187,13 +187,8 @@ private[streaming] trait StreamIndexOps { self: StreamOps.type =>
           // crashed before its _live marker: incomplete, redo from scratch
           if (fs.exists(next)) fs.delete(next, true)
           relations.foreach { r =>
-            if (r.partitionCols.isEmpty)
-              graft.sources.Sources.compactParquet(
-                spark, sub(genPath, r).toString, sub(next, r).toString, targetBytes)
-            else
-              compactPartitionedParquet(
-                spark, sub(genPath, r).toString, sub(next, r).toString,
-                targetBytes, r.partitionCols)
+            graft.sources.Sources.compactParquet(spark, sub(genPath, r).toString,
+              sub(next, r).toString, targetBytes, r.partitionCols)
           }
           // the compacted generation carries the SAME validated stamp
           stampNow.foreach(s => claimOrValidateStamp(fs, next, s))
@@ -208,34 +203,6 @@ private[streaming] trait StreamIndexOps { self: StreamOps.type =>
         ()
       }
       .start()
-  }
-
-  /** [[graft.sources.Sources.compactParquet]]'s new-directory contract
-    * for a PARTITIONED generation: the rewrite re-partitions BY THE
-    * PARTITION COLUMNS and writes `partitionBy` again, so the compacted
-    * generation keeps the directory layout the probe's static partition
-    * pruning depends on (a flat rewrite would fold `cell=<n>/` back
-    * into ordinary columns and every probe would scan every file). Each
-    * partition value's rows co-locate, so the output is one file per
-    * live partition value per target slice — small per-batch appends
-    * collapse exactly like the flat compactor's.
-    */
-  private def compactPartitionedParquet(
-      spark: org.apache.spark.sql.SparkSession,
-      inDir: String,
-      outDir: String,
-      targetBytes: Long,
-      partitionCols: Seq[String]): Unit = {
-    require(targetBytes > 0, "targetBytes must be positive")
-    val in = new org.apache.hadoop.fs.Path(inDir)
-    val fs = in.getFileSystem(spark.sessionState.newHadoopConf())
-    val bytes = fs.getContentSummary(in).getLength
-    val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(inDir)
-      .repartition(nFiles, partitionCols.map(org.apache.spark.sql.functions.col): _*)
-      .write.mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
-      .partitionBy(partitionCols: _*)
-      .parquet(outDir)
   }
 
   /** The probe-side resolver for a [[maintainLshIndex]] index: the LIVE
@@ -352,7 +319,7 @@ private[streaming] trait StreamIndexOps { self: StreamOps.type =>
     * directory layout inside `gen-<n>/` is exactly the static index's
     * `cells/` layout and the probe's static partition pruning engages
     * unchanged. Compaction preserves the partitioning
-    * ([[compactPartitionedParquet]]).
+    * ([[graft.sources.Sources.compactParquet]] with the partition columns).
     *
     * At-least-once appends suffice (the 6h argument, one step stronger):
     * a replayed microbatch re-encodes DETERMINISTICALLY — same stamped

@@ -464,6 +464,13 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     // knobs, never WHICH queries are audited
     val nQ = rows.values.head._1
     assert(rows.values.forall(_._1 == nQ))
+    // both sweeps count scanned candidates through one probe plan: at the
+    // same (16, 8, 16) geometry x182's per-nprobe census is x187's
+    val x182Cands = Similarity.ivfPqTuningSweep(spark, sfDir,
+      geometries = Seq((16, 8, 16)), nprobes = nprobes, k = 3, queryMod = 10)
+      .collect().map(r => r.getInt(3) -> r.getLong(5)).toMap
+    assert(nprobes.map(np => rows((np, shortlists.head))._2) == nprobes.map(x182Cands),
+      s"x187 candidate census must equal x182's at the same geometry: $x182Cands")
     // scanned-candidate counts strictly nest in nprobe (probe sets nest)
     // and are flat in shortlist (the refine tail never rescans codes)
     for (sl <- shortlists) {
@@ -520,7 +527,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     val hinted = Similarity.refinedTuningSweep(spark, sfDir, nCentroids = 16,
       nprobes = Seq(2, 4), shortlists = Seq(8, 16), k = 3, queryMod = 10)
       .collect().map(_.toSeq).toSeq
-    val unhinted = Similarity.refinedTuningSweepBounded(spark, sfDir, nCentroids = 16,
+    val unhinted = Similarity.refinedTuningSweep(spark, sfDir, nCentroids = 16,
       nprobes = Seq(2, 4), shortlists = Seq(8, 16), k = 3, queryMod = 10,
       maxFetchBroadcastBytes = 0L)
       .collect().map(_.toSeq).toSeq
@@ -552,10 +559,19 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     // the unpermuted encode
     val base = Similarity.pqCodes(spark, sfDir, m = 1, ksub = 16, iters = 2)
       .collect().map(_.toString).toSeq
-    val opq = Similarity.pqCodesOpq(spark, sfDir, m = 1, ksub = 16, iters = 2)
+    val opq = Similarity.pqCodes(spark, sfDir, m = 1, ksub = 16, iters = 2, opq = true)
       .collect().map(_.toString).toSeq
     assert(opq == base && opq.nonEmpty,
       "m=1 OPQ encode must be bit-equal to the unpermuted encode")
+    // the same law carries through the ADC ranking and the recall audit
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] = df.collect().map(_.toString).toSeq
+    val topK = rows(Similarity.pqTopK(spark, sfDir, m = 1, ksub = 16, iters = 2))
+    assert(topK.nonEmpty && topK ==
+      rows(Similarity.pqTopK(spark, sfDir, m = 1, ksub = 16, iters = 2, opq = true)),
+      "m=1 OPQ ADC top-k must be bit-equal to the unpermuted one")
+    assert(rows(Similarity.pqRecall(spark, sfDir, m = 1, ksub = 16, iters = 2)) ==
+      rows(Similarity.pqRecall(spark, sfDir, m = 1, ksub = 16, iters = 2, opq = true)),
+      "m=1 OPQ recall must be bit-equal to the unpermuted recall")
   }
 
   test("ivfPqTopKRefined (x186): refine never loses hits; degenerates to brute force at full probe + full shortlist") {
@@ -984,6 +1000,33 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     assert(e2.getMessage.contains("corrupt pq index"))
   }
 
+  test("probe query batches are measured per call: repeated probes add no broadcast-memo entry") {
+    val hdir = TestTables.embeddingsDir(spark,
+      (0L to 19L).map(i => i -> Seq.tabulate(8)(d => math.sin(i * 3.7 + d).toFloat)))
+    val signIdx = s"$hdir/sign-index"
+    val pqIdx = s"$hdir/pq-index"
+    Similarity.writeSignIndex(spark, hdir, signIdx, dim = 8)
+    Similarity.writePqIndex(spark, hdir, pqIdx, m = 2, ksub = 4)
+    // a fresh query relation per call, as a serving loop builds them
+    def queries() = graft.operators.Tables.embeddings(spark, hdir)
+      .filter(col("vec_id") % 5 === 0)
+    def probes(): (Seq[String], Seq[String]) = (
+      Similarity.hammingTopKFromIndex(spark, signIdx, hdir, queries(), candidates = 4, k = 2)
+        .collect().map(_.toString).toSeq,
+      Similarity.pqTopKFromIndex(spark, pqIdx, queries(), k = 2)
+        .collect().map(_.toString).toSeq)
+    val before = Similarity.measuredBytesEntries
+    val first = probes()
+    (1 to 3).foreach(_ => assert(probes() == first, "a repeated probe changed its result"))
+    assert(Similarity.measuredBytesEntries == before,
+      "probe query batches must not accumulate in the session-lifetime memo")
+    // and the per-call measurement leaves the results where they were
+    assert(first._1 == Similarity.hammingTopK(spark, hdir, candidates = 4, k = 2,
+      queryMod = 5, dim = 8).collect().map(_.toString).toSeq && first._1.nonEmpty)
+    assert(first._2 == Similarity.pqTopK(spark, hdir, k = 2, queryMod = 5, m = 2, ksub = 4)
+      .collect().map(_.toString).toSeq && first._2.nonEmpty)
+  }
+
   test("persisted PQ index with the OPQ layout: probe equals in-memory pqTopKOpq; legacy layout untouched; corrupt perm refused") {
     import org.apache.spark.sql.functions.col
     val dir = "/root/testdata/sf0.001"
@@ -996,7 +1039,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     // layout — bit-equal to the in-memory OPQ ADC over the same corpus
     val got = Similarity.pqTopKFromIndex(spark, idxPath, queries, k = 3)
       .collect().map(_.toString).toSeq
-    val expect = Similarity.pqTopKOpq(spark, dir, k = 3, queryMod = 10)
+    val expect = Similarity.pqTopK(spark, dir, k = 3, queryMod = 10, opq = true)
       .collect().map(_.toString).toSeq
     assert(got == expect && got.nonEmpty,
       "persisted OPQ probe diverged from the in-memory OPQ ADC")

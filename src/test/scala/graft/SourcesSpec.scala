@@ -111,6 +111,24 @@ class SourcesSpec extends AnyFunSuite with SparkSuite {
     // input untouched; in-place compaction rejected
     assert(new java.io.File(in).listFiles.count(_.getName.endsWith(".parquet")) == 64)
     intercept[IllegalArgumentException](Sources.compactParquet(spark, in, in))
+    // a partitionBy input keeps its cell=<n>/ layout through the rewrite
+    val pin = Files.createTempDirectory("graft-compact-pin").toString + "/cells"
+    val pout = Files.createTempDirectory("graft-compact-pout").toString + "/cells"
+    val rows = (1 to 6400).map(i => (i.toLong, s"row$i", i % 4))
+    rows.toDF("id", "v", "cell").repartition(64).write.partitionBy("cell").parquet(pin)
+    def layout(dir: String): Seq[(String, Int)] =
+      new java.io.File(dir).listFiles.filter(_.isDirectory).sortBy(_.getName).toSeq
+        .map(d => d.getName -> d.listFiles.count(_.getName.endsWith(".parquet")))
+    assert(layout(pin).map(_._1) == (0 to 3).map(c => s"cell=$c"))
+    Sources.compactParquet(spark, pin, pout, partitionCols = Seq("cell"))
+    // one partition value's rows co-locate: one file per live cell
+    assert(layout(pout) == (0 to 3).map(c => s"cell=$c" -> 1), layout(pout))
+    assert(spark.read.parquet(pout).as[(Long, String, Int)].collect().sorted.toSeq ==
+      rows.sorted)
+    // the partitioned path refuses an in-place compaction too
+    intercept[IllegalArgumentException](
+      Sources.compactParquet(spark, pin, pin, partitionCols = Seq("cell")))
+    assert(layout(pin).map(_._2).forall(_ > 1), "in-place refusal must leave the input intact")
   }
 
   test("writePartitioned: default refuses to clobber an existing corpus; Overwrite is opt-in") {
