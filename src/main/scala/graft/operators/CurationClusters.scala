@@ -183,9 +183,11 @@ private[operators] trait CurationClusters extends CurationQuality {
   /** Label read with an EXPLICIT schema: a corpus with zero near-dup
     * pairs writes an empty partitioned relation (no parquet files), and
     * schema inference would refuse it — an empty cluster index is a
-    * legitimate index, not a corrupt one.
+    * legitimate index, not a corrupt one. The one spelling of the label
+    * layout, shared with the streaming gates in
+    * [[graft.streaming.StreamOps]].
     */
-  private def readLabels(spark: SparkSession, indexPath: String): DataFrame =
+  private[graft] def readLabels(spark: SparkSession, indexPath: String): DataFrame =
     spark.read.schema("doc_id LONG, cluster LONG, bucket INT")
       .parquet(s"$indexPath/labels")
 

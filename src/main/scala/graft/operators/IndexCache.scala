@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 
 /** Session-lifetime memo for DRIVER-SIDE persisted-index sidecar reads
-  * (coarse centroids, PQ codebooks/meta, sign meta, BM25 stats, cluster
+  * (coarse centroids, PQ codebooks/meta, sign meta, BM25 meta, cluster
   * meta — the r15 verdict's "fixed per-probe driver overhead": each
   * probe re-ran 2–4 tiny parquet jobs, most of x175's ~4 s toy-scale
   * floor over its in-memory twin and a per-microbatch tax in the

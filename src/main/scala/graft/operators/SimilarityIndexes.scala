@@ -713,25 +713,28 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     *
     * Driver footprint: |dim| (dim, strength) rows — the bounded-collect
     * class of the centroid tables. The Gram pass is [[dimGram]]'s one
-    * corpus scan.
+    * corpus scan, paid once per (corpus, m): the permutation is memoized
+    * under the embeddings listing signature that also keys the trained
+    * codebooks ([[pqCodebooksCached]]), so a warm OPQ call runs no Gram.
     */
-  def opqPermutation(spark: SparkSession, dir: String, m: Int = 8): Seq[Int] = {
-    import spark.implicits._
-    val strengths = dimGram(spark, dir)
-      .select(explode(array(
-        struct(col("i").as("d"), abs(col("g")).as("a")),
-        struct(col("j").as("d"), abs(col("g")).as("a")))).as("e"))
-      .select(col("e.d").as("d"), col("e.a").as("a"))
-      .groupBy("d").agg(max("a").as("strength"))
-      .as[(Int, Long)].collect() // |dim| rows — bounded by construction
-    val dim = strengths.length
-    require(m >= 1 && dim % m == 0, s"opq: dim $dim is not divisible by m=$m")
-    val dsub = dim / m
-    val ranked = strengths.sortBy { case (d, s) => (-s, d) }.map(_._1)
-    val perm = Array.fill(dim)(0)
-    for (r <- 0 until dim) perm((r % m) * dsub + (r / m)) = ranked(r)
-    perm.toSeq
-  }
+  def opqPermutation(spark: SparkSession, dir: String, m: Int = 8): Seq[Int] =
+    IndexCache.cached(spark, s"opq|$dir|$m", Seq(s"$dir/embeddings.parquet")) {
+      import spark.implicits._
+      val strengths = dimGram(spark, dir)
+        .select(explode(array(
+          struct(col("i").as("d"), abs(col("g")).as("a")),
+          struct(col("j").as("d"), abs(col("g")).as("a")))).as("e"))
+        .select(col("e.d").as("d"), col("e.a").as("a"))
+        .groupBy("d").agg(max("a").as("strength"))
+        .as[(Int, Long)].collect() // |dim| rows — bounded by construction
+      val dim = strengths.length
+      require(m >= 1 && dim % m == 0, s"opq: dim $dim is not divisible by m=$m")
+      val dsub = dim / m
+      val ranked = strengths.sortBy { case (d, s) => (-s, d) }.map(_._1)
+      val perm = Array.fill(dim)(0)
+      for (r <- 0 until dim) perm((r % m) * dsub + (r / m)) = ranked(r)
+      perm.toSeq
+    }
 
   /** The permuted-vector projection: position p of the output reads
     * input dimension `perm(p)` — row-local, exact, order fixed by the

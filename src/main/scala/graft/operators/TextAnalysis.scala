@@ -372,58 +372,73 @@ object TextAnalysis {
       k1, b, k)
   }
 
-  /** EXT-T9b build — persist the BM25 inverted index: [[termFreq]]'s
-    * postings `(token, doc_id, tf)` written PARTITIONED by a murmur3
-    * token bucket, the per-token `df` lexicon partitioned the same way,
-    * the per-document length table, and a one-row `stats` stamp carrying
-    * `(n_docs, total_toks, n_buckets)` — the lexical twin of
+  /** The BM25 index relations of a document batch, from ONE
+    * [[termFreq]] pass — the layout the static build writes under its
+    * root and the streaming maintainer appends into every `gen-<n>/`:
+    *  - `postings (doc_id, token, tf, bucket)`, partitioned by the
+    *    [[bm25Bucket]] of the token;
+    *  - `doclens (doc_id, dl)`, one row per document, dl = 0 for a doc
+    *    the tokenizer cannot see (null text), so `count(doclens)` is the
+    *    corpus's `count(*)` and `sum(dl)` its token total.
+    * Every corpus global a probe needs is an exact BIGINT count or sum
+    * over these two additive relations ([[bm25TopKOverRelations]]), so
+    * the layout stays exact under appends.
+    */
+  private[graft] def bm25Relations(docs: DataFrame, nBuckets: Int): (DataFrame, DataFrame) = {
+    val tf = termFreq(docs)
+    val doclens = docs.select(col("doc_id"))
+      .join(tf.groupBy("doc_id").agg(sum("tf").as("dl")), Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("dl"), lit(0L)).as("dl"))
+    (tf.withColumn("bucket", bm25Bucket(col("token"), nBuckets)), doclens)
+  }
+
+  /** The read schemas of the BM25 index relations — declared, so a
+    * probe's reads plan without a schema-inference job. */
+  private val Bm25Postings = "doc_id BIGINT, token STRING, tf BIGINT, bucket INT"
+  private val Bm25Doclens = "doc_id BIGINT, dl BIGINT"
+  private val Bm25Lexicon = "token STRING, df BIGINT"
+
+  /** EXT-T9b build — persist the BM25 inverted index: the `meta/`
+    * bucket-count stamp ([[initBm25Index]]), the [[bm25Relations]]
+    * generation layout (bucket-partitioned postings and doc lengths),
+    * and a flat per-token `df` lexicon that [[bm25TopKFromIndexAuto]]
+    * derives its probe terms from — the lexical twin of
     * [[Similarity.writeIvfIndex]]'s "train once, probe forever" layout.
     *
     * Bucketing by `pmod(hash(token), nBuckets)` rather than by raw token
     * is the 100 TB point: a token-per-directory layout would create one
     * partition per vocabulary entry (millions of tiny directories — a
     * metastore/list-files pathology), while a fixed bucket count keeps
-    * directory fan-out bounded and lets a probe pin its terms' buckets
-    * as a LITERAL partition filter ([[Similarity.ivfTopKFromIndex]]'s
-    * staticPrune discipline — the planner prunes before execution, no
-    * DPP heuristic involved). The `n_buckets` stamp follows
+    * directory fan-out bounded and lets a probe read only its terms'
+    * bucket directories. The `n_buckets` stamp follows
     * [[Dedup.bandSignatures]]'s parameter-bundling contract: a probe
     * hashing terms with a different bucket count would silently read the
     * wrong partitions, so the probe derives buckets from the stamp, and
-    * refuses a corrupt stats table outright.
+    * refuses a corrupt stamp outright. No corpus statistic is stamped:
+    * the probe derives df, n_docs and total_toks exactly from the
+    * relations, as the live probe must (a stamp cannot stay exact for
+    * rows appended since the last compaction).
     */
   def writeBm25Index(
       spark: SparkSession,
       dir: String,
       indexPath: String,
       nBuckets: Int = 64): Unit = {
-    require(nBuckets >= 1, s"nBuckets ($nBuckets) must be positive")
-    val docs = Tables.documents(spark, dir)
-    val tf = termFreq(docs)
-    tf.withColumn("bucket", bm25Bucket(col("token"), nBuckets))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$indexPath/postings")
-    tf.groupBy("token").agg(count(lit(1)).as("df"))
-      .withColumn("bucket", bm25Bucket(col("token"), nBuckets))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$indexPath/lexicon")
-    tf.groupBy("doc_id").agg(sum("tf").as("dl"))
-      .write.mode("overwrite").parquet(s"$indexPath/doclens")
-    docs.agg(count(lit(1)).as("n_docs"))
-      .crossJoin(tf.agg(sum("tf").as("total_toks")))
-      .withColumn("n_buckets", lit(nBuckets))
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/stats")
+    initBm25Index(spark, indexPath, nBuckets)
+    val (postings, doclens) = bm25Relations(Tables.documents(spark, dir), nBuckets)
+    postings.write.mode("overwrite").partitionBy("bucket").parquet(s"$indexPath/postings")
+    doclens.write.mode("overwrite").parquet(s"$indexPath/doclens")
+    postings.groupBy("token").agg(count(lit(1)).as("df"))
+      .write.mode("overwrite").parquet(s"$indexPath/lexicon")
   }
 
-  /** EXT-6at's init half — stamp the BM25 layout (`meta/` with the ONE
-    * row a probe must agree with the maintainer on: `n_buckets`) and
-    * nothing else: postings and doc-length rows are then populated
-    * incrementally by the streaming maintainer
-    * ([[graft.streaming.StreamOps.maintainBm25Index]]) — unlike the
-    * vector indexes there is NO training step at all, so the composite
-    * "train once" here is just the bucket-count contract. The corpus
-    * stats the static layout bakes into `stats/` are deliberately NOT
-    * stamped: df, n_docs, and total_toks CHANGE with every arrival, and
-    * the live probe derives them exactly from the generational rows
-    * instead of trusting a stamp that is stale the moment it is written.
+  /** Stamp a BM25 index root: `meta/` with the ONE row a probe must
+    * agree with the writer on, `n_buckets`. [[writeBm25Index]] calls it
+    * before writing the relations; for a streaming index (EXT-6at) it is
+    * the whole init — postings and doc-length rows are then populated
+    * incrementally by [[graft.streaming.StreamOps.maintainBm25Index]].
+    * Unlike the vector indexes there is NO training step: the composite
+    * "train once" here is just the bucket-count contract.
     */
   def initBm25Index(
       spark: SparkSession, indexPath: String, nBuckets: Int = 64): Unit = {
@@ -432,41 +447,97 @@ object TextAnalysis {
       .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/meta")
   }
 
-  /** The stamped bucket count of an EXT-6at maintained BM25 index —
-    * shared by the maintainer's ingest projection and the live probe
-    * (the [[bm25Bucket]] one-spelling contract needs both sides to read
-    * the same stamp). Memoized per listing signature (the
-    * [[IndexCache]] contract); a corrupt stamp refuses on every read.
+  /** The stamped bucket count of a BM25 index — the one stamp reader,
+    * shared by the static probe, the maintainer's ingest projection and
+    * the live probe (the [[bm25Bucket]] one-spelling contract needs
+    * every side to read the same stamp). Memoized per listing signature
+    * (the [[IndexCache]] contract); a corrupt stamp refuses on every
+    * read.
     */
   private[graft] def loadBm25NBuckets(
       spark: SparkSession, indexPath: String): Int =
     IndexCache.cached(
       spark, s"bm25meta|$indexPath", Seq(s"$indexPath/meta")) {
-      val rows = spark.read.parquet(s"$indexPath/meta")
-        .select("n_buckets").collect()
-      require(rows.length == 1, s"corrupt bm25 index meta: ${rows.length} rows")
+      val rows = spark.read.schema("n_buckets INT").parquet(s"$indexPath/meta").collect()
+      require(rows.length == 1, s"corrupt index: ${rows.length} bm25 meta rows")
       val nb = rows.head.getInt(0)
-      require(nb >= 1, s"corrupt bm25 index meta: n_buckets $nb")
+      require(nb >= 1, s"corrupt index: bm25 n_buckets stamp $nb")
       Integer.valueOf(nb)
     }.intValue()
+
+  /** The ONE BM25 probe plan, over a relation root in the
+    * [[bm25Relations]] layout — the static index root, or a live
+    * generation of a streaming-maintained index. Every corpus global is
+    * derived EXACTLY from the relations: df per probed term as a
+    * per-token window count over the bucket-pruned postings (the rows
+    * the scoring reads, scanned once; terms outside the probe never
+    * pay), n_docs and total_toks as the BIGINT count and sum of the doc
+    * lengths (order-insensitive, so generations and compactions cannot
+    * move them). `dedupReplays` collapses the
+    * byte-identical rows an at-least-once replay re-appends, over the
+    * pruned postings only, before df or scoring sees them. The tail is
+    * [[bm25ScoreTail]], so scores are bit-equal to [[bm25TopK]] over the
+    * same corpus for the same terms. A term with no postings contributes
+    * no rows.
+    *
+    * Planning runs no Spark job: the terms' buckets come from a local
+    * relation (collected on the driver without a job), only those
+    * buckets' directories are listed and read, and every read carries
+    * its declared schema. The cost: the doc-length aggregate scans the
+    * 16-byte doclens rows per probe (linear in docs, not tokens);
+    * bucket pruning bounds the postings bytes, the relation that scales
+    * with tokens.
+    */
+  private[graft] def bm25TopKOverRelations(
+      spark: SparkSession,
+      root: String,
+      nBuckets: Int,
+      terms: Seq[String],
+      k1: Double,
+      b: Double,
+      k: Int,
+      dedupReplays: Boolean): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    require(terms.nonEmpty, "probe term list must be non-empty")
+    val probeTerms = terms.distinct
+    val buckets = probeTerms.toDF("token").select(bm25Bucket(col("token"), nBuckets))
+      .collect().map(_.getInt(0)).distinct
+    // read only the probed buckets' directories: discovering partitions
+    // under `postings/` lists every bucket, and past
+    // `parallelPartitionDiscovery.threshold` (32) directories Spark
+    // lists them in a Spark job
+    val postingsDir = new org.apache.hadoop.fs.Path(s"$root/postings")
+    val fs = postingsDir.getFileSystem(spark.sessionState.newHadoopConf())
+    val bucketDirs = buckets.toSeq
+      .map(bk => new org.apache.hadoop.fs.Path(postingsDir, s"bucket=$bk"))
+      .filter(fs.exists).map(_.toString)
+    val postings =
+      if (bucketDirs.isEmpty)
+        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+          org.apache.spark.sql.types.StructType.fromDDL(Bm25Postings))
+      else spark.read.schema(Bm25Postings).option("basePath", postingsDir.toString)
+        .parquet(bucketDirs: _*)
+    val matched = postings.filter(col("token").isin(probeTerms: _*))
+      .select("token", "doc_id", "tf")
+    val cand = if (dedupReplays) matched.dropDuplicates("token", "doc_id") else matched
+    val allDl = spark.read.schema(Bm25Doclens).parquet(s"$root/doclens")
+    val dl = if (dedupReplays) allDl.dropDuplicates("doc_id") else allDl
+    val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("total_toks"))
+    bm25ScoreTail(
+      cand
+        .withColumn("df", count(lit(1)).over(Window.partitionBy("token")))
+        .join(dl, "doc_id")
+        .crossJoin(broadcast(stats)),
+      k1, b, k)
+  }
 
   /** EXT-T9b probe — BM25 top-k documents for a caller-supplied term
     * list against a PERSISTED index: identical scores, tie-breaks, and
     * presentation to [[bm25TopK]] over the same corpus for the same
     * terms (spec-asserted bit-exact), with the corpus pass replaced by a
-    * bucket-pruned read.
-    *
-    * Plan: the probe terms' buckets are computed through the SAME
-    * `pmod(hash(…))` expression the build used (a |terms|-bounded local
-    * relation — the legitimate bounded collect), pinned as a literal
-    * partition filter on both the postings and lexicon reads; the
-    * pruned lexicon join bounds the scoring relation to the probed
-    * terms' postings; doc lengths join AFTER that filter so the
-    * doc_id equi-join keys only candidate rows. Corpus-level stats ride
-    * in as literals from the one-row stamp. Per-term top-k is the same
-    * map-side bounded [[graft.functions.TopK]] aggregate. A term absent
-    * from the lexicon simply contributes no rows — same as never having
-    * been selected as a probe.
+    * bucket-pruned read — [[bm25TopKOverRelations]] on the index root,
+    * no replay dedup (a static build writes each row once).
     */
   def bm25TopKFromIndex(
       spark: SparkSession,
@@ -474,40 +545,9 @@ object TextAnalysis {
       terms: Seq[String],
       k1: Double = 1.2,
       b: Double = 0.75,
-      k: Int = 5): DataFrame = {
-    import spark.implicits._
-    require(terms.nonEmpty, "probe term list must be non-empty")
-    // memoized per (indexPath, listing signature) — the IndexCache
-    // contract: an unchanged index pays the 1-row stats job once per
-    // session; a rewrite re-reads and re-validates
-    val (nDocs, totToks, nBuckets) = IndexCache.cached(
-        spark, s"bm25stats|$indexPath", Seq(s"$indexPath/stats")) {
-      val statsRows = spark.read.parquet(s"$indexPath/stats")
-        .select("n_docs", "total_toks", "n_buckets").collect()
-      require(statsRows.length == 1, s"corrupt index: ${statsRows.length} stats rows")
-      val nb = statsRows.head.getInt(2)
-      require(nb >= 1, s"corrupt index: n_buckets stamp $nb")
-      (statsRows.head.getLong(0), statsRows.head.getLong(1), nb)
-    }
-    val probeRel = terms.distinct.toDF("token")
-      .withColumn("bucket", bm25Bucket(col("token"), nBuckets))
-    val buckets = probeRel.select("bucket").distinct().as[Int].collect().toSeq
-    val lexicon = spark.read.parquet(s"$indexPath/lexicon")
-      .filter(col("bucket").isin(buckets.map(Int.box): _*))
-    val probes = lexicon.join(broadcast(probeRel.select("token")), "token")
-      .select("token", "df")
-    val postings = spark.read.parquet(s"$indexPath/postings")
-      .filter(col("bucket").isin(buckets.map(Int.box): _*))
-      .select("token", "doc_id", "tf")
-    val dl = spark.read.parquet(s"$indexPath/doclens")
-    bm25ScoreTail(
-      postings
-        .join(broadcast(probes), "token")
-        .join(dl, "doc_id")
-        .withColumn("n_docs", lit(nDocs))
-        .withColumn("total_toks", lit(totToks)),
-      k1, b, k)
-  }
+      k: Int = 5): DataFrame =
+    bm25TopKOverRelations(spark, indexPath, loadBm25NBuckets(spark, indexPath),
+      terms, k1, b, k, dedupReplays = false)
 
   /** EXT-T9c (`x184_bm25_topk_indexed`) — [[bm25TopKFromIndex]] made
     * self-contained for the oracle gate: the probe TERMS are derived
@@ -519,7 +559,7 @@ object TextAnalysis {
     * x69's oracle verbatim (the x174/x175/x179 write→stamp→probe
     * discipline, completing all 6 persisted indexes).
     *
-    * The term derivation is a column-pruned TakeOrdered over the
+    * The term derivation is a column-pruned TakeOrdered over the flat
     * lexicon (driver receives `nQueries` rows — the legitimate bounded
     * collect; global df order inherently needs the whole lexicon, same
     * as x69's probe selection over tf); the probe itself is the
@@ -533,8 +573,7 @@ object TextAnalysis {
       nQueries: Int = 10,
       k: Int = 5,
       minTokenLen: Int = 6): DataFrame = {
-    val terms = spark.read.parquet(s"$indexPath/lexicon")
-      .select(col("token"), col("df"))
+    val terms = spark.read.schema(Bm25Lexicon).parquet(s"$indexPath/lexicon")
       .filter(length(col("token")) >= minTokenLen)
       .orderBy(col("df").desc, col("token"))
       .limit(nQueries)
@@ -956,6 +995,41 @@ object TextAnalysis {
       .orderBy(desc("n_pairs"), col("left_sym"), col("right_sym"))
       .limit(topN)
 
+  /** A word's BPE base symbols, one per CODE POINT: a supplementary
+    * character is one symbol, never two UTF-16 surrogate halves (Spark's
+    * `length`/`substr` semantics). The one split both trainers and
+    * [[bpeFertility]] start from.
+    */
+  private def bpeSymbols(word: String): Array[String] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    var i = 0
+    while (i < word.length) {
+      val n = Character.charCount(word.codePointAt(i))
+      out += word.substring(i, i + n)
+      i += n
+    }
+    out.toArray
+  }
+
+  /** Apply one merge `(l, r)` to a word's symbols: the left-to-right
+    * skip-after-merge scan ("aaaa" + (a,a) → [aa, aa], NOT [aa, a]
+    * twice), shared by both trainers and [[bpeFertility]].
+    */
+  private def applyBpeMerge(syms: Array[String], l: String, r: String): Array[String] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    var i = 0
+    while (i < syms.length) {
+      if (i + 1 < syms.length && syms(i) == l && syms(i + 1) == r) {
+        out += l + r
+        i += 2
+      } else {
+        out += syms(i)
+        i += 1
+      }
+    }
+    out.toArray
+  }
+
   /** EXT-T15 — iterative BPE merge training: `nMerges` rounds of
     * count-pairs → pick the argmax → apply it to the vocabulary, the
     * actual BPE training loop (Sennrich et al. 2016) under the repo's
@@ -966,9 +1040,9 @@ object TextAnalysis {
     * |vocab|-bounded — the corpus is scanned once, for the initial word
     * count.
     *
-    * Merge application is a Scala UDF over the word's symbol array: the
-    * left-to-right skip-after-merge scan ("aaaa" + (a,a) → [aa, aa],
-    * NOT [aa, a] twice) is inherently sequential per word — no
+    * Words split by [[bpeSymbols]] and merges apply by
+    * [[applyBpeMerge]], both as Scala UDFs over the word's symbols: the
+    * skip-after-merge scan is inherently sequential per word — no
     * declarative spelling exists — and word-local, so the UDF never
     * breaks a shuffle boundary. Ties rank by (count DESC, left, right),
     * the [[bpePairStats]] order, making the whole training run
@@ -978,26 +1052,14 @@ object TextAnalysis {
       spark: SparkSession,
       dir: String,
       nMerges: Int = 10): Seq[(Int, String, String, Long)] = {
+    val split = udf((word: String) => bpeSymbols(word).toSeq)
     val applyMerge = udf { (syms: Seq[String], l: String, r: String) =>
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      var i = 0
-      while (i < syms.length) {
-        if (i + 1 < syms.length && syms(i) == l && syms(i + 1) == r) {
-          out += l + r
-          i += 2
-        } else {
-          out += syms(i)
-          i += 1
-        }
-      }
-      out.toSeq
+      applyBpeMerge(syms.toArray, l, r).toSeq
     }
     var vocab = Tables.documents(spark, dir)
       .select(explode(Tables.tokens(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("n_word"))
-      .select(
-        expr("transform(sequence(1, length(word)), i -> substr(word, i, 1))").as("syms"),
-        col("n_word"))
+      .select(split(col("word")).as("syms"), col("n_word"))
       .localCheckpoint()
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var rank = 1
@@ -1038,16 +1100,15 @@ object TextAnalysis {
     * job collects it and the merge loop never touches the cluster again.
     *
     * Exact-equality contract with [[trainBpeMerges]], pinned by spec:
-    *  - words split to symbols by CODE POINT (the relational `substr`
-    *    semantics), never UTF-16 code units — a supplementary character
-    *    is one symbol in both spellings;
+    *  - words split to symbols by CODE POINT ([[bpeSymbols]], the same
+    *    split), never UTF-16 code units — a supplementary character is
+    *    one symbol in both spellings;
     *  - ties rank by (count DESC, left, right) with strings compared as
     *    UTF-8 BYTES — Spark's binary string ordering — so the merge list
     *    is bit-identical to the relational loop on any input;
     *  - pair counts weight every adjacent POSITION by n_word (the
     *    relational explode counts overlaps: [a,a,a] holds (a,a) twice);
-    *  - merge application is the same left-to-right skip-after-merge
-    *    scan.
+    *  - merge application is the same [[applyBpeMerge]] scan.
     * Per round, only the words CONTAINING the merged pair are
     * re-segmented (an inverted pair→words index, the subword-nmt
     * optimization) — the cost of a round is proportional to the pair's
@@ -1061,18 +1122,8 @@ object TextAnalysis {
       .select(explode(Tables.tokens(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("n_word"))
       .collect()
-    def codePoints(w: String): Array[String] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      var i = 0
-      while (i < w.length) {
-        val n = Character.charCount(w.codePointAt(i))
-        out += w.substring(i, i + n)
-        i += n
-      }
-      out.toArray
-    }
     trainBpeMergesInMemory(
-      vocabRows.map(r => (codePoints(r.getString(0)), r.getLong(1))), nMerges)
+      vocabRows.map(r => (bpeSymbols(r.getString(0)), r.getLong(1))), nMerges)
   }
 
   /** The in-memory BPE loop over a pre-segmented weighted vocabulary —
@@ -1114,20 +1165,6 @@ object TextAnalysis {
       }
     }
     words.indices.foreach(tally(_, 1L))
-    def applyMerge(syms: Array[String], l: String, r: String): Array[String] = {
-      val out = mutable.ArrayBuffer.empty[String]
-      var i = 0
-      while (i < syms.length) {
-        if (i + 1 < syms.length && syms(i) == l && syms(i + 1) == r) {
-          out += l + r
-          i += 2
-        } else {
-          out += syms(i)
-          i += 1
-        }
-      }
-      out.toArray
-    }
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var rank = 1
     while (rank <= nMerges && pairCount.nonEmpty) {
@@ -1153,7 +1190,7 @@ object TextAnalysis {
         }
         if (has) {
           tally(wi, -1L)
-          words(wi) = applyMerge(syms, l, r)
+          words(wi) = applyBpeMerge(syms, l, r)
           tally(wi, 1L)
         }
       }
@@ -1171,36 +1208,22 @@ object TextAnalysis {
     * read this table to size per-language vocab budgets).
     *
     * The corpus collapses to (lang, word, n_word) FIRST, so the
-    * sequential merge application (a word-local UDF — the same
-    * skip-after-merge scan as training, no declarative spelling exists)
+    * sequential merge application (a word-local UDF — training's
+    * [[bpeSymbols]] split and [[applyBpeMerge]] scan)
     * runs once per DISTINCT word per language, never per occurrence —
     * [[bpePairStats]]' vocabulary trick again; at 100 TB the only
     * corpus-sized pass is the word count. `fertility` is
     * Σ n_word·|bpe(word)| / Σ n_word: two exact BIGINT sums, ONE IEEE
-    * division. Empty merge list ⇒ every word splits to its characters
-    * (fertility = weighted mean word length), the law the spec pins.
+    * division. Empty merge list ⇒ every word splits to its code points
+    * (fertility = weighted mean `length`), the law the spec pins.
     */
   def bpeFertility(
       spark: SparkSession,
       dir: String,
       merges: Seq[(String, String)]): DataFrame = {
     val nSub = udf { (word: String) =>
-      var syms: Seq[String] = word.map(_.toString)
-      merges.foreach { case (l, r) =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[String]
-        var i = 0
-        while (i < syms.length) {
-          if (i + 1 < syms.length && syms(i) == l && syms(i + 1) == r) {
-            out += l + r
-            i += 2
-          } else {
-            out += syms(i)
-            i += 1
-          }
-        }
-        syms = out.toSeq
-      }
-      syms.length.toLong
+      merges.foldLeft(bpeSymbols(word)) { case (syms, (l, r)) => applyBpeMerge(syms, l, r) }
+        .length.toLong
     }
     Tables.documents(spark, dir)
       .select(col("lang"), explode(Tables.tokens(col("text"))).as("word"))

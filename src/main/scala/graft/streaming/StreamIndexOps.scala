@@ -121,21 +121,17 @@ private[streaming] trait StreamIndexOps { self: StreamOps.type =>
       : org.apache.spark.sql.streaming.StreamingQuery =
     maintainGenerationalRelations(docs, indexDir, checkpointLocation,
       compactEvery, targetBytes, generationStamp,
-      Seq(GenRelation("", partitionCols, signaturesOf)))
+      Seq(GenRelation("", partitionCols)))(batch => Seq(signaturesOf(batch)))
 
   /** One sub-relation of a generational index: `subdir` inside each
     * `gen-<n>/` ("" = the generation root, every single-relation
-    * maintainer's layout — unchanged on disk), its partition columns,
-    * and the per-microbatch row derivation. EXT-6at introduced the
-    * multi-relation form: a BM25 generation carries bucket-partitioned
-    * postings AND flat doc-length rows, compacted together and cut over
-    * by the ONE `_live` marker so a probe never sees them split across
-    * generations.
+    * maintainer's layout — unchanged on disk) and its partition columns.
+    * EXT-6at introduced the multi-relation form: a BM25 generation
+    * carries bucket-partitioned postings AND flat doc-length rows,
+    * compacted together and cut over by the ONE `_live` marker so a
+    * probe never sees them split across generations.
     */
-  private case class GenRelation(
-      subdir: String,
-      partitionCols: Seq[String],
-      rows: Dataset[org.apache.spark.sql.Row] => DataFrame)
+  private case class GenRelation(subdir: String, partitionCols: Seq[String])
 
   private def maintainGenerationalRelations(
       docs: DataFrame,
@@ -144,7 +140,8 @@ private[streaming] trait StreamIndexOps { self: StreamOps.type =>
       compactEvery: Long,
       targetBytes: Long,
       generationStamp: Option[org.apache.spark.sql.SparkSession => String],
-      relations: Seq[GenRelation])
+      relations: Seq[GenRelation])(
+      rowsOf: Dataset[org.apache.spark.sql.Row] => Seq[DataFrame])
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(compactEvery > 0, "compactEvery must be positive")
     require(relations.nonEmpty, "a generational index needs >= 1 relation")
@@ -165,12 +162,15 @@ private[streaming] trait StreamIndexOps { self: StreamOps.type =>
         // drifted one (a retrain over a live index requires a rebuild)
         val stampNow = generationStamp.map(_(spark))
         stampNow.foreach(s => claimOrValidateStamp(fs, genPath, s))
-        // multi-relation appends are ordered as declared; a crash
-        // between them leaves a partial batch whose replay re-appends
-        // byte-identical rows (the at-least-once contract the probes'
-        // distincts already absorb)
-        relations.foreach { r =>
-          val writer = r.rows(batch).write.mode("append")
+        // one derivation per batch returns every relation; appends are
+        // ordered as declared, and a crash between them leaves a partial
+        // batch whose replay re-appends byte-identical rows (the
+        // at-least-once contract the probes' distincts already absorb)
+        val rows = rowsOf(batch)
+        require(rows.length == relations.length,
+          s"${rows.length} relations derived for ${relations.length} declared")
+        relations.zip(rows).foreach { case (r, df) =>
+          val writer = df.write.mode("append")
           (if (r.partitionCols.nonEmpty) writer.partitionBy(r.partitionCols: _*)
            else writer).parquet(sub(genPath, r).toString)
         }
@@ -602,12 +602,11 @@ private[streaming] trait StreamIndexOps { self: StreamOps.type =>
     * per-row function" completion argument (6h/6o/6p/6ao/6ap/6aq/6ar)
     * deliberately carved out — BM25's df / n_docs / avgdl are
     * corpus-GLOBAL, so no stamp written at build time stays true under
-    * arrivals. The resolution: the generation stores only ADDITIVE,
-    * row-local relations — bucket-partitioned postings `(token, doc_id,
-    * tf)` via the batch's own [[graft.operators.TextAnalysis.termFreq]]
-    * pass, and per-document lengths `(doc_id, dl)` (dl = 0 for docs the
-    * tokenizer cannot see, so n_docs counts EVERY arrival exactly like
-    * the static builder's `count(*)` over documents) — and the PROBE
+    * arrivals. The resolution: every generation holds the static
+    * index's ADDITIVE relations
+    * ([[graft.operators.TextAnalysis.bm25Relations]] — bucket-partitioned
+    * postings and per-document lengths, from the batch's one
+    * [[graft.operators.TextAnalysis.termFreq]] pass), and the probe
     * derives every global exactly from them ([[bm25ProbeLive]]). The
     * only stamped contract is `n_buckets`
     * ([[graft.operators.TextAnalysis.initBm25Index]]'s `meta/`): buckets
@@ -631,62 +630,28 @@ private[streaming] trait StreamIndexOps { self: StreamOps.type =>
       compactEvery: Long = 16L,
       targetBytes: Long = 128L * 1024 * 1024)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, sum}
-    // r18 (ADVICE): ONE checkpointed termFreq pass per microbatch,
-    // shared by the doclens aggregation and the postings projection —
-    // the two relation lambdas previously each re-ran the tokenize +
-    // explode + groupBy pass (and its checkpoint job) on the same
-    // batch. Single-slot identity memo is safe: foreachBatch hands the
-    // relations the same Dataset object within one batch, and batches
-    // are processed one at a time per query.
-    val tfSlot = new java.util.concurrent.atomic.AtomicReference[
-      (Dataset[org.apache.spark.sql.Row], DataFrame)]()
-    def tf(batch: Dataset[org.apache.spark.sql.Row]): DataFrame = {
-      val hit = tfSlot.get()
-      if (hit != null && (hit._1 eq batch)) hit._2
-      else {
-        val computed = graft.operators.TextAnalysis.termFreq(batch.toDF())
-        tfSlot.set((batch, computed))
-        computed
-      }
-    }
+    def nBuckets(spark: org.apache.spark.sql.SparkSession): Int =
+      graft.operators.TextAnalysis.loadBm25NBuckets(spark, indexPath)
     maintainGenerationalRelations(docs, indexPath, checkpointLocation,
       compactEvery, targetBytes,
-      generationStamp = Some { spark =>
-        s"bm25:nbuckets=${graft.operators.TextAnalysis.loadBm25NBuckets(spark, indexPath)}"
-      },
-      relations = Seq(
-        GenRelation("doclens", Nil, { batch =>
-          batch.toDF().select(col("doc_id"))
-            .join(tf(batch).groupBy("doc_id").agg(sum("tf").as("dl")),
-              Seq("doc_id"), "left")
-            .select(col("doc_id"), coalesce(col("dl"), lit(0L)).as("dl"))
-        }),
-        GenRelation("postings", Seq("bucket"), { batch =>
-          val spark = batch.sparkSession
-          val nBuckets =
-            graft.operators.TextAnalysis.loadBm25NBuckets(spark, indexPath)
-          tf(batch).withColumn("bucket",
-            graft.operators.TextAnalysis.bm25Bucket(col("token"), nBuckets))
-        })))
+      generationStamp = Some(spark => s"bm25:nbuckets=${nBuckets(spark)}"),
+      relations = Seq(GenRelation("doclens", Nil), GenRelation("postings", Seq("bucket")))) {
+      batch =>
+        val (postings, doclens) = graft.operators.TextAnalysis.bm25Relations(
+          batch.toDF(), nBuckets(batch.sparkSession))
+        Seq(doclens, postings)
+    }
   }
 
   /** EXT-6at's probe: BM25 top-k served from the LIVE GENERATION of a
-    * streaming-maintained index, every corpus global derived EXACTLY
-    * from the generational rows at probe time — df per probed term from
-    * the bucket-pruned, replay-deduped postings (the same rows the
-    * scoring reads; terms outside the probe never pay), n_docs and
-    * total_toks from the distinct doc-length relation (BIGINT count and
-    * sum — order-insensitive, so generations and replays cannot move
-    * them). The scoring/presentation tail is the ONE shared spelling
-    * ([[graft.operators.TextAnalysis.bm25ScoreTail]]), so live scores
-    * are bit-equal to the static probe's over the same corpus — the law
-    * the spec pins across generations, replays, and compactions. The
-    * honest cost note: the doc-length aggregate scans the full 16-byte
-    * doclens relation per probe (the sign-index full-scan class, linear
-    * in docs, not tokens); a serving loop amortizes it per microbatch,
-    * and bucket pruning still bounds the postings bytes — the relation
-    * that scales with corpus TOKENS.
+    * streaming-maintained index — the static probe's plan
+    * ([[graft.operators.TextAnalysis.bm25TopKOverRelations]]: df and the
+    * doc-length stats derived exactly from the generation's rows,
+    * bucket-pruned postings, no Spark job to plan) over the
+    * stamp-validated live generation, with replay dedup on. Law
+    * (spec-pinned): once the maintainer has ingested exactly a corpus,
+    * this equals `bm25TopKFromIndex` over `writeBm25Index` of that
+    * corpus, across generations, replays and compactions.
     */
   def bm25ProbeLive(
       spark: org.apache.spark.sql.SparkSession,
@@ -695,33 +660,11 @@ private[streaming] trait StreamIndexOps { self: StreamOps.type =>
       k1: Double = 1.2,
       b: Double = 0.75,
       k: Int = 5): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{broadcast, col, count, lit, sum}
-    require(terms.nonEmpty, "probe term list must be non-empty")
     val nBuckets = graft.operators.TextAnalysis.loadBm25NBuckets(spark, indexDir)
     val genPath = validatedLiveGeneration(spark, indexDir, "BM25",
       s"bm25:nbuckets=$nBuckets")
-    val probeRel = terms.distinct.toDF("token")
-      .withColumn("bucket",
-        graft.operators.TextAnalysis.bm25Bucket(col("token"), nBuckets))
-    val buckets = probeRel.select("bucket").distinct().as[Int].collect().toSeq
-    // replay shield: byte-identical re-appends collapse BEFORE df or
-    // scoring sees them — over the PRUNED rows only, the 6ao discipline
-    val postings = spark.read.parquet(s"$genPath/postings")
-      .filter(col("bucket").isin(buckets.map(Int.box): _*))
-      .select("token", "doc_id", "tf")
-      .dropDuplicates("token", "doc_id")
-    val cand = postings.join(broadcast(probeRel.select("token")), "token")
-      .localCheckpoint()
-    val dfRel = cand.groupBy("token").agg(count(lit(1)).as("df"))
-    val dl = spark.read.parquet(s"$genPath/doclens").dropDuplicates("doc_id")
-    val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("total_toks"))
-    graft.operators.TextAnalysis.bm25ScoreTail(
-      cand
-        .join(broadcast(dfRel), "token")
-        .join(dl, "doc_id")
-        .crossJoin(broadcast(stats)),
-      k1, b, k)
+    graft.operators.TextAnalysis.bm25TopKOverRelations(
+      spark, genPath.toString, nBuckets, terms, k1, b, k, dedupReplays = true)
   }
 
   /** Highest `gen-<n>` under `root` bearing a `_live` marker. With

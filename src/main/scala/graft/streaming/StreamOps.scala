@@ -1255,8 +1255,7 @@ object StreamOps extends StreamIndexOps {
     // is well-formed at stream start without paying a parquet job per
     // start on an unchanged index
     graft.operators.Curation.clusterIndexBuckets(spark, indexPath)
-    val labels = spark.read.schema("doc_id LONG, cluster LONG, bucket INT")
-      .parquet(s"$indexPath/labels")
+    val labels = graft.operators.Curation.readLabels(spark, indexPath)
       .select(col("doc_id"), col("cluster").as("_idx_cluster"))
     docs.join(labels, Seq("doc_id"), "left")
       .withColumn("cluster", coalesce(col("_idx_cluster"), col("doc_id")))
@@ -1299,8 +1298,7 @@ object StreamOps extends StreamIndexOps {
     val spark = docs.sparkSession
     // memoized meta read — see clusterGateStream
     graft.operators.Curation.clusterIndexBuckets(spark, indexPath)
-    val labels = spark.read.schema("doc_id LONG, cluster LONG, bucket INT")
-      .parquet(s"$indexPath/labels")
+    val labels = graft.operators.Curation.readLabels(spark, indexPath)
       .select(col("doc_id"), col("cluster"))
     val famSplits = labels
       .select(col("cluster").as("_fam"),

@@ -574,6 +574,18 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
       "m=1 OPQ recall must be bit-equal to the unpermuted recall")
   }
 
+  test("opqPermutation memo: a second OPQ encode of an unchanged corpus reruns no Gram pass") {
+    val sfDir = "/root/testdata/sf0.001"
+    def encode(): Seq[String] =
+      Similarity.pqCodes(spark, sfDir, m = 8, ksub = 16, iters = 2, opq = true)
+        .collect().map(_.toString).toSeq
+    val first = encode()
+    val (second, activity) = SparkActivity.during(spark)(encode())
+    assert(second == first && first.nonEmpty)
+    val gram = activity.sqlCallSites.filter(_.contains("dimGram"))
+    assert(gram.isEmpty, s"the warm OPQ encode re-ran the Gram pass:\n${gram.mkString("\n\n")}")
+  }
+
   test("ivfPqTopKRefined (x186): refine never loses hits; degenerates to brute force at full probe + full shortlist") {
     val sfDir = "/root/testdata/sf0.001"
     def hits(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =

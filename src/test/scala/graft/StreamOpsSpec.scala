@@ -1540,6 +1540,49 @@ class StreamOpsSpec extends AnyFunSuite with SparkSuite {
       s"expected the re-stamp refusal, got: ${err.getMessage}")
   }
 
+  test("BM25 probes: planning a warm static and a warm live probe runs zero Spark jobs") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, length}
+    implicit val sqlCtx = spark.sqlContext
+    // a vocabulary that populates more than 32 of the default 64
+    // buckets: past 32 directories, listing every bucket is a Spark job
+    val words = (0 until 400).map(i => f"term$i%04d")
+    val docs = (0 until 200).map(d =>
+      d.toLong -> (0 until 12).map(j => words((d * 7 + j * 31) % words.length)).mkString(" "))
+    val dir = TestTables.documentsDir(spark, docs)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-bm25-plan").toString
+    graft.operators.TextAnalysis.writeBm25Index(spark, dir, s"$tmp/static")
+    val populated = new java.io.File(s"$tmp/static/postings").listFiles()
+      .count(_.getName.startsWith("bucket="))
+    assert(populated > 32, s"only $populated of 64 buckets populated")
+    graft.operators.TextAnalysis.initBm25Index(spark, s"$tmp/live")
+    val stream = MemoryStream[(Long, String)]
+    val q = StreamOps.maintainBm25Index(
+      stream.toDF().toDF("doc_id", "text"), s"$tmp/live", s"$tmp/ckpt")
+    try {
+      docs.grouped((docs.length + 1) / 2).foreach { g =>
+        stream.addData(g.toIndexedSeq); q.processAllAvailable()
+      }
+    } finally q.stop()
+    val terms = spark.read.parquet(s"$tmp/static/lexicon")
+      .filter(length(col("token")) >= 6)
+      .orderBy(col("df").desc, col("token")).limit(5)
+      .collect().map(_.getString(0)).toSeq
+    assert(terms.nonEmpty)
+    def static() = graft.operators.TextAnalysis.bm25TopKFromIndex(spark, s"$tmp/static", terms)
+    def live() = StreamOps.bm25ProbeLive(spark, s"$tmp/live", terms)
+    // warm: the first probes read and memoize the bucket-count stamp
+    val expect = static().collect().map(_.toString).toSeq
+    assert(expect.nonEmpty && live().collect().map(_.toString).toSeq == expect)
+    val ((s, l), activity) = SparkActivity.during(spark)((static(), live()))
+    assert(activity.jobs == 0,
+      s"planning the warm BM25 probes ran ${activity.jobs} Spark jobs:\n" +
+        activity.sqlCallSites.mkString("\n\n"))
+    // planning is not execution: the plans still answer, and agree
+    assert(s.collect().map(_.toString).toSeq == expect)
+    assert(l.collect().map(_.toString).toSeq == expect)
+  }
+
   test("EXT-6aq maintainSignIndex: live probe equals the static probe across generations + replays; retrain refused") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, lit, pmod}
@@ -1729,8 +1772,8 @@ class StreamOpsSpec extends AnyFunSuite with SparkSuite {
     import scala.jdk.CollectionConverters._
     assert(results.asScala.toSet == expect && expect.nonEmpty)
     // the bucket-pruned scan: each 2-term microbatch pins ≤2 of 64
-    // buckets as a literal partition filter on postings AND lexicon —
-    // never the whole token layout
+    // buckets as a literal partition filter on postings — never the
+    // whole token layout
     val perBatch = scannedFiles.asScala.toSeq
     assert(perBatch.length == 2)
     perBatch.foreach { n =>

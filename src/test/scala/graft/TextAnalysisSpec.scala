@@ -287,13 +287,14 @@ class TextAnalysisSpec extends AnyFunSuite with SparkSuite {
     // a term absent from the lexicon contributes no rows — same output
     val withGhost = TextAnalysis.bm25TopKFromIndex(spark, idx, terms :+ "nonexistent7")
     assert(withGhost.collect().map(_.toSeq).toSeq == expected.map(_.toSeq).toSeq)
-    // refusal contracts: empty probe list; a corrupt (two-row) stamp
+    // refusal contracts: empty probe list; a corrupt (two-row) stamp —
+    // `meta/`, the index's one stamp
     intercept[IllegalArgumentException] {
       TextAnalysis.bm25TopKFromIndex(spark, idx, Seq.empty)
     }
     val bad = s"$d/bm25-bad"
-    val stats = spark.read.parquet(s"$idx/stats")
-    stats.union(stats).write.mode("overwrite").parquet(s"$bad/stats")
+    val meta = spark.read.parquet(s"$idx/meta")
+    meta.union(meta).write.mode("overwrite").parquet(s"$bad/meta")
     val e = intercept[IllegalArgumentException] {
       TextAnalysis.bm25TopKFromIndex(spark, bad, Seq("elephant"))
     }
@@ -546,16 +547,23 @@ class TextAnalysisSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("bpeFertility: empty merges give weighted mean word length; merges reduce it per lang") {
-    // en: ab x2, abc x1 -> chars: (2*2 + 3)/3; de: xy x1 -> 2/1
+    // en: ab x2, abc x1 -> chars: (2*2 + 3)/3; de: xy x1 -> 2/1;
+    // fr: one word of a supplementary character (U+1F600, two UTF-16
+    // code units) and x -> 2 code points, the `length` of the word
+    val smile = "\uD83D\uDE00"
     val d = TestTables.documentsLangDir(spark, Seq(
-      (1L, "ab abc ab", "en"), (2L, "xy", "de")))
+      (1L, "ab abc ab", "en"), (2L, "xy", "de"), (3L, s"${smile}x", "fr")))
     val base = TextAnalysis.bpeFertility(spark, d, merges = Nil).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    assert(base.toSeq == Seq(("de", 1L, 2L, 2.0), ("en", 3L, 7L, 7.0 / 3.0)))
-    // merge (a,b): ab -> 1 symbol, abc -> [ab, c] = 2; de untouched
-    val merged = TextAnalysis.bpeFertility(spark, d, merges = Seq(("a", "b"))).collect()
+    assert(base.toSeq == Seq(("de", 1L, 2L, 2.0), ("en", 3L, 7L, 7.0 / 3.0),
+      ("fr", 1L, 2L, 2.0)))
+    // merge (a,b): ab -> 1 symbol, abc -> [ab, c] = 2; de untouched;
+    // a merge involving the supplementary character applies like any other
+    val merged = TextAnalysis.bpeFertility(spark, d,
+      merges = Seq(("a", "b"), (smile, "x"))).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    assert(merged.toSeq == Seq(("de", 1L, 2L, 2.0), ("en", 3L, 4L, 4.0 / 3.0)))
+    assert(merged.toSeq == Seq(("de", 1L, 2L, 2.0), ("en", 3L, 4L, 4.0 / 3.0),
+      ("fr", 1L, 1L, 1.0)))
     // a trained merge list applies in rank order: (a,a) then (aa,aa)
     val d2 = TestTables.documentsDir(spark, Seq(1L -> "aaaa aaaa aa"))
     val trained = TextAnalysis.trainBpeMerges(spark, d2, nMerges = 2)
