@@ -227,7 +227,7 @@ private[operators] trait CurationClusters extends CurationQuality {
     * `doc_id` query relation — `cluster` falls back to the doc's own id
     * (a never-clustered doc is its own canonical), `clustered` says
     * which. The 100 TB point, [[Similarity.ivfTopKFromIndex]]'s
-    * staticPrune discipline verbatim: the batch's DISTINCT buckets — at
+    * static-pruning discipline verbatim: the batch's DISTINCT buckets — at
     * most `n_buckets` values by construction, the legitimate bounded
     * collect — pin a LITERAL partition filter on the label read, so the
     * probe touches buckets/n_buckets of the index FILES by the PLANNER,

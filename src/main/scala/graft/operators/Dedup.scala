@@ -80,6 +80,38 @@ object Dedup {
       lit(s"bucket saturated (> $cap rows share one group key) — $knob"))
       .isNull)
 
+  /** The bucket-local pair generator shared by every grouped detector
+    * here (x3's and x116's posting lists, the LSH band buckets, the
+    * SimHash bands): group `rows` by `keys` into a `collect_list` of
+    * `entry` as `ds`, apply [[guardBucketSize]], drop singleton groups,
+    * and expand every ordered pair of entries as two chained explodes
+    * named `names`. The |bucket|² pairs STREAM through the Generate
+    * operators row by row — never one |bucket|²-element array in a
+    * single row (which is what OOMs on a hot bucket at scale; per-row
+    * memory here is O(|bucket|)). `probes` filters the first side
+    * before the second explode (x116 probes with prefix entries only);
+    * each caller applies its own pair filter to the result.
+    */
+  private def guardedPairs(
+      rows: DataFrame,
+      keys: Seq[Column],
+      entry: Column,
+      maxBucket: Int,
+      knob: String,
+      names: (String, String) = ("x", "y"),
+      probes: Option[Column] = None): DataFrame = {
+    val (x, y) = names
+    val firsts = guardBucketSize(
+        rows.groupBy(keys: _*).agg(collect_list(entry).as("ds")), maxBucket, knob)
+      .filter(size(col("ds")) >= 2)
+      .select(col("ds"), explode(col("ds")).as(x))
+    probes.fold(firsts)(firsts.filter)
+      .select(col(x), explode(col("ds")).as(y))
+  }
+
+  private val hotPostingKnob =
+    "a posting list this hot means a near-universal shingle — raise the threshold or maxBucket"
+
   /** COUNT-FIRST saturation guard (the r16 audit note on
     * [[guardBucketSize]]): for a truly degenerate bucket the in-plan
     * assert evaluates only AFTER `collect_list` has buffered the bucket
@@ -121,6 +153,58 @@ object Dedup {
       .withColumn("jaccard", col("inter").cast("double") / (col("n1") + col("n2") - col("inter")))
       .filter(col("jaccard") >= threshold)
 
+  /** Rows per band of a MinHash-LSH banding, refusing a (numHashes,
+    * bands) choice that does not divide evenly: bands > numHashes would
+    * make it 0 — every document shares every (empty) band signature and
+    * the "sub-quadratic path" silently runs a full quadratic verify —
+    * and a non-divisible choice silently discards trailing hashes.
+    */
+  private def rowsPerBand(numHashes: Int, bands: Int): Int = {
+    require(bands >= 1 && numHashes >= bands && numHashes % bands == 0,
+      s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
+    numHashes / bands
+  }
+
+  /** The MinHash signature pass over a `(doc_id, shs)` relation: the
+    * documents with a non-empty shingle array (docs with < k tokens
+    * never enter the oracle's exploded relation) and their `numHashes`
+    * seeded min-hashes as `(doc_id, mh)`, in one compiled row-local
+    * pass ([[graft.functions.MinHashesExpression]]) — no shuffle before
+    * bucketing. Returns both, since the verify joins read the arrays.
+    * A caller that reuses the signatures checkpoints them itself.
+    */
+  private def minhashSignatures(arrays: DataFrame, numHashes: Int): (DataFrame, DataFrame) = {
+    val arr = arrays.filter(size(col("shs")) > 0)
+    (arr, arr.select(col("doc_id"),
+      graft.functions.MinHashes.minhashes(col("shs"), numHashes).as("mh")))
+  }
+
+  /** The PPJoin prefix ranking shared by [[ngramJaccard]] (x3) and
+    * [[containmentJoin]] (x116): every (doc_id, n, shingle) posting with
+    * its document frequency `df` and its rank `rn` in the document under
+    * the global (df asc, shingle) order, plus the prefix predicate
+    * `rn ≤ n − ⌈t·n⌉ + 1` at `threshold`. x3 keeps only prefix rows; x116
+    * keeps every posting and flags the prefix ones.
+    *
+    * Every ⌈n·t⌉ subtracts ε first: double rounding can push n·t just
+    * above its exact rational value, and an over-estimated ceil SHORTENS
+    * the prefix — the lossy direction. ε only ever admits borderline
+    * candidates (verification is exact). The per-doc rank is a window: it
+    * sorts each shuffle partition by (doc, df, shingle) inside Tungsten
+    * and ranks streamingly (an A/B against a groupBy + collect_list +
+    * row-local array_sort spelling measured the window ~30% faster).
+    */
+  private def prefixRanked(arr: DataFrame, threshold: Double): (DataFrame, Column) = {
+    import org.apache.spark.sql.expressions.Window
+    val sh = arr.select(col("doc_id"), col("n"), explode(col("shs")).as("shingle"))
+    val freq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
+    val prefLen = (col("n") - ceil(col("n") * threshold - 1e-9) + 1).cast("int")
+    (sh.join(freq, "shingle")
+      .withColumn("rn",
+        row_number().over(Window.partitionBy("doc_id").orderBy(col("df"), col("shingle")))),
+      col("rn") <= prefLen)
+  }
+
   /** EXT-D3 — all-pairs n-gram (3-token shingle) Jaccard join at a
     * threshold, PPJoin-style. Exactness argument: if J(A,B) ≥ t and the
     * length filter |B| ≥ t·|A| holds, then |A∩B| ≥ ⌈t·|A|⌉, so A and B
@@ -152,37 +236,18 @@ object Dedup {
       spark: SparkSession,
       threshold: Double,
       maxBucket: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val sh = arr.select(col("doc_id"), col("n"), explode(col("shs")).as("shingle"))
-    val freq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-    // every ceil(n·t) below subtracts ε first: double rounding can push
-    // n·t just above its exact rational value, and an over-estimated
-    // ceil SHORTENS the prefix / tightens the length filter — the lossy
-    // direction. ε only ever admits borderline candidates (verification
-    // is exact), mirroring the positional filter's guard.
-    def ceilEps(c: Column): Column = ceil(c - 1e-9)
-    val prefLen = (col("n") - ceilEps(col("n") * threshold) + 1).cast("int")
-    // per-doc ranking via a window: sorts each shuffle partition by
-    // (doc, df, shingle) inside Tungsten and ranks streamingly. (An A/B
-    // against the groupBy + collect_list + row-local array_sort spelling
-    // measured the window ~30% faster — the object aggregation of struct
-    // lists costs more than the partition sort it avoids.)
-    val pref = sh.join(freq, "shingle")
-      .withColumn("rn",
-        row_number().over(Window.partitionBy("doc_id").orderBy(col("df"), col("shingle"))))
-      .filter(col("rn") <= prefLen)
+    val (ranked, inPrefix) = prefixRanked(arr, threshold)
+    val pref = ranked
+      .filter(inPrefix)
       .select(col("doc_id"), col("n"), col("rn").as("pos"), col("shingle"))
     // inverted-index candidate generation WITHOUT a self-join: group the
     // prefix postings by shingle and emit ordered pairs within each
-    // posting list. A self-join spelling computes the whole upstream
-    // pipeline once per side (exchange reuse does not fire across
-    // self-join sides here); this shape computes it once. Posting lists
-    // are short by construction (prefixes only), so the in-group pair
-    // expansion is row-local and skew-safe.
-    // pair expansion as two chained explodes: |bucket|² pairs STREAM
-    // through the Generate operators row by row — never materialized as
-    // one |bucket|²-element array in a single row (which is what OOMs on
-    // a hot posting at scale; per-row memory here is O(|bucket|))
+    // posting list ([[guardedPairs]]). A self-join spelling computes the
+    // whole upstream pipeline once per side (exchange reuse does not
+    // fire across self-join sides here); this shape computes it once.
+    // Posting lists are short by construction (prefixes only), so the
+    // in-group pair expansion is row-local and skew-safe. The length
+    // filter subtracts the same ε as the prefix length.
     // positional filter (lossless, PPJoin): a collision at prefix
     // positions (px, py) can lead to at most 1 + min(nx−px, ny−py) total
     // overlap, and J ≥ t needs overlap ≥ t·(nx+ny)/(1+t); collisions
@@ -204,16 +269,9 @@ object Dedup {
     // shuffle) but pins their width to the session's parallelism, the
     // expansionPartitioned doctrine applied to post-shuffle stages.
     val par = spark.sparkContext.defaultParallelism
-    val candidates = guardBucketSize(
-      pref
-        .repartition(par, col("shingle"))
-        .groupBy("shingle")
-        .agg(collect_list(struct(col("doc_id"), col("n"), col("pos"))).as("ds")),
-      maxBucket, "a posting list this hot means a near-universal shingle — " +
-        "raise the threshold or maxBucket")
-      .filter(size(col("ds")) >= 2)
-      .select(col("ds"), explode(col("ds")).as("x"))
-      .select(col("x"), explode(col("ds")).as("y"))
+    val candidates = guardedPairs(
+        pref.repartition(par, col("shingle")), Seq(col("shingle")),
+        struct(col("doc_id"), col("n"), col("pos")), maxBucket, hotPostingKnob)
       .filter(col("x.doc_id") < col("y.doc_id") &&
         col("x.n") >= ceil(col("y.n") * threshold - 1e-9) &&
         col("y.n") >= ceil(col("x.n") * threshold - 1e-9) &&
@@ -244,28 +302,12 @@ object Dedup {
       bands: Int = 4,
       threshold: Double = 0.8,
       maxBucket: Int = 1 << 20): DataFrame = {
-    // bands > numHashes would make rowsPerBand 0 — every document shares
-    // every (empty) band signature and the "sub-quadratic path" silently
-    // runs a full quadratic verify; non-divisible values silently discard
-    // trailing hashes
-    require(bands >= 1 && numHashes >= bands && numHashes % bands == 0,
-      s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
-    val rowsPerBand = numHashes / bands
-    // docs with no shingles (< k tokens) never enter the oracle's
-    // exploded relation; drop them before the signature pass
-    val arr = shingleArrays(spark, dir).filter(size(col("shs")) > 0)
-    // all numHashes seeded min-hashes in one compiled row-local pass
-    // ([[graft.functions.MinHashesExpression]]): the whole signature
-    // computation is a narrow projection — the previous spelling
-    // exploded numHashes rows per shingle (16× the posting stream,
-    // 4.2M rows at sf0.1) through two keyed shuffles before bucketing.
-    // (shingleArrays is already repartitioned + materialized, so the md5
-    // work runs spread across cores, not on the scan's single split.)
-    val sig = bandedSignatures(
-      arr.select(col("doc_id"),
-        graft.functions.MinHashes.minhashes(col("shs"), numHashes).as("mh")),
-      bands, rowsPerBand)
-    verifyJaccard(bandCandidates(sig, rowsPerBand, maxBucket), arr, threshold)
+    val rpb = rowsPerBand(numHashes, bands)
+    // shingleArrays is already repartitioned + materialized, so the md5
+    // work runs spread across cores, not on the scan's single split
+    val (arr, mh) = minhashSignatures(shingleArrays(spark, dir), numHashes)
+    val sig = bandedSignatures(mh, bands, rpb)
+    verifyJaccard(bandCandidates(sig, rpb, maxBucket), arr, threshold)
       .select("d1", "d2", "jaccard")
       .orderBy("d1", "d2")
   }
@@ -328,13 +370,15 @@ object Dedup {
     * audits the OPERATING POINT).
     *
     * Scale: the 16-hash signature relation is computed ONCE
-    * (checkpointed — |docs| rows of 16 longs; re-banding is a row-local
-    * explode per config, the md5 work is never repaid), each banding's
-    * candidates stay bucket-bounded under the saturation guard, and
-    * every distinct candidate pair is verified ONCE (union → distinct →
-    * one verify join, then a per-config membership join). The PPJoin
-    * truth leg is the deliberate x3 cost — the sweep is an offline
-    * tuning query, run when the banding choice is on the table.
+    * (checkpointed — |docs| rows of 16 longs, the md5 work is never
+    * repaid). When the configs nest (every rows-per-band a multiple of
+    * the finest's), one candidate pass at the finest banding carries
+    * every config's candidates, each verified ONCE, and the per-config
+    * census is one 1-row fold of band-equality flags; otherwise each
+    * banding pays its own candidate pass and the union is verified once.
+    * Candidates stay bucket-bounded under the saturation guard. The
+    * PPJoin truth leg is the deliberate x3 cost — the sweep is an
+    * offline tuning query, run when the banding choice is on the table.
     */
   def bandSweep(
       spark: SparkSession,
@@ -348,10 +392,8 @@ object Dedup {
       b >= 1 && numHashes % b == 0),
       s"every band count in $bandConfigs must divide numHashes ($numHashes)")
     val arrAll = shingleArrays(spark, dir)
-    val arr = arrAll.filter(size(col("shs")) > 0)
-    val mhRel = arr.select(col("doc_id"),
-        graft.functions.MinHashes.minhashes(col("shs"), numHashes).as("mh"))
-      .localCheckpoint() // one md5 pass feeds every banding
+    val (arr, mh) = minhashSignatures(arrAll, numHashes)
+    val mhRel = mh.localCheckpoint() // one md5 pass feeds every banding
     // r19 (guide §2.4): band layouts NEST whenever every config's
     // rows-per-band is a multiple of the FINEST config's (bands are
     // consecutive slices from hash 0, so a coarse band is a
@@ -438,31 +480,35 @@ object Dedup {
 
   /** Ordered candidate pairs (d1 < d2, distinct) from a banded signature
     * relation — the ONE spelling of LSH self-collision bucketing, shared
-    * by [[minhashLsh]] and [[lshCalibration]] (a drifting copy would
-    * silently change which candidates one operator sees). Same
-    * inverted-index shape as ngramJaccard: bucket by full band
-    * signature, then STREAMING pair expansion (chained explodes —
-    * per-row memory stays O(|bucket|) even on a degenerate band
-    * signature), with the saturation guard converting a mis-sized
+    * by [[minhashLsh]], [[bandSweep]], [[editNearDup]] and
+    * [[seedMatchedCandidates]] (a drifting copy would silently change
+    * which candidates one operator sees): bucket by full band signature,
+    * then [[guardedPairs]], whose saturation guard converts a mis-sized
     * banding into an actionable failure.
     */
   private def bandCandidates(sig: DataFrame, rowsPerBand: Int, maxBucket: Int): DataFrame =
-    guardBucketSize(
-      sig
-        .groupBy(col("band") +: (0 until rowsPerBand).map(r => col(s"m$r")): _*)
-        .agg(collect_list(col("doc_id")).as("ds")),
-      maxBucket, "widen the bands (more hashes per band) or raise maxBucket")
-      .filter(size(col("ds")) >= 2)
-      .select(col("ds"), explode(col("ds")).as("d1"))
-      .select(col("d1"), explode(col("ds")).as("d2"))
+    guardedPairs(sig, col("band") +: (0 until rowsPerBand).map(r => col(s"m$r")),
+        col("doc_id"), maxBucket, "widen the bands (more hashes per band) or raise maxBucket",
+        names = ("d1", "d2"))
       .filter(col("d1") < col("d2"))
+      .select("d1", "d2")
+      .distinct()
+
+  /** Batch-vs-index LSH collision, shared by [[incrementalMinhash]] and
+    * [[indexCandidates]]: fresh band rows (`d1`) equi-joined with indexed
+    * band rows (`d2`) on the full band key `band, m0..m{r-1}`, as
+    * distinct (d1, d2) pairs — the indexed side is never self-joined,
+    * and a repeated index row only repeats a collision.
+    */
+  private def bandJoin(fresh: DataFrame, indexed: DataFrame, rowsPerBand: Int): DataFrame =
+    fresh.join(indexed, "band" +: (0 until rowsPerBand).map(r => s"m$r"))
       .select("d1", "d2")
       .distinct()
 
   /** Band-explode a `(doc_id, mh: array<bigint>)` relation into one row
     * per (doc, band) with the band's hashes as columns `m0..m{r-1}` —
-    * the LSH bucketing key shared by [[minhashLsh]] (self-collision) and
-    * [[incrementalMinhash]] (batch-vs-index collision).
+    * the LSH bucketing key of both self-collision ([[bandCandidates]])
+    * and batch-vs-index collision ([[bandJoin]]).
     */
   private def bandedSignatures(mh: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
     mh
@@ -494,22 +540,14 @@ object Dedup {
       numHashes: Int = 16,
       bands: Int = 4,
       threshold: Double = 0.8): DataFrame = {
-    require(bands >= 1 && numHashes >= bands && numHashes % bands == 0,
-      s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
-    val rowsPerBand = numHashes / bands
-    val arr = shingleArrays(spark, dir).filter(size(col("shs")) > 0)
+    val rpb = rowsPerBand(numHashes, bands)
+    val (arr, sigs) = minhashSignatures(shingleArrays(spark, dir), numHashes)
     // materialized once: both parity branches consume the signature pass
     // (the md5 minhash computation is the expensive row-local step)
-    val mh = arr.select(col("doc_id"),
-      graft.functions.MinHashes.minhashes(col("shs"), numHashes).as("mh"))
-      .localCheckpoint()
-    val sig = bandedSignatures(mh, bands, rowsPerBand)
-    val bandKey = Seq("band") ++ (0 until rowsPerBand).map(r => s"m$r")
+    val sig = bandedSignatures(sigs.localCheckpoint(), bands, rpb)
     val index = sig.filter(col("doc_id") % 2 === 0).withColumnRenamed("doc_id", "d2")
     val fresh = sig.filter(col("doc_id") % 2 === 1).withColumnRenamed("doc_id", "d1")
-    val candidates = fresh.join(index, bandKey)
-      .select("d1", "d2").distinct()
-    verifyJaccard(candidates, arr, threshold)
+    verifyJaccard(bandJoin(fresh, index, rpb), arr, threshold)
       .groupBy(col("d1").as("doc_id"))
       // best match row-locally: max struct = highest jaccard, then
       // highest -d2 = lowest corpus doc id
@@ -581,18 +619,13 @@ object Dedup {
     val banded = simhashes(spark, dir, bits)
       .select(col("doc_id"), col("simhash"), explode(sequence(lit(0), lit(bands - 1))).as("b"))
       .withColumn("band_val", expr(s"shiftright(simhash, int(b * $bandBits)) & $mask"))
-    // streaming pair expansion (see ngramJaccard). Scale note: 12-bit
+    // streaming pair expansion ([[guardedPairs]]). Scale note: 12-bit
     // bands saturate as the corpus approaches 4096·|avg bucket| docs —
     // widen bandBits (fewer, wider bands) with the corpus, keeping
     // maxHamming ≤ bands−1 for exactness.
-    guardBucketSize(
-      banded
-        .groupBy("b", "band_val")
-        .agg(collect_list(struct(col("doc_id"), col("simhash"))).as("ds")),
-      maxBucket, "widen bandBits (fewer, wider bands) or raise maxBucket")
-      .filter(size(col("ds")) >= 2)
-      .select(col("ds"), explode(col("ds")).as("x"))
-      .select(col("x"), explode(col("ds")).as("y"))
+    guardedPairs(banded, Seq(col("b"), col("band_val")),
+        struct(col("doc_id"), col("simhash")), maxBucket,
+        "widen bandBits (fewer, wider bands) or raise maxBucket")
       .filter(col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
         expr("CAST(bit_count(x.simhash ^ y.simhash) AS BIGINT)").as("hamming"))
@@ -615,15 +648,11 @@ object Dedup {
     * [[indexCandidates]] validates them at probe time.
     */
   def bandSignatures(docs: DataFrame, numHashes: Int = 16, bands: Int = 4): DataFrame = {
-    require(bands >= 1 && numHashes >= bands && numHashes % bands == 0,
-      s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
-    val arr = docs
-      .select(col("doc_id"), Tables.shingles(Tables.tokens(col("text"))).as("shs"))
-      .filter(size(col("shs")) > 0)
-    bandedSignatures(
-      arr.select(col("doc_id"),
-        graft.functions.MinHashes.minhashes(col("shs"), numHashes).as("mh")),
-      bands, numHashes / bands)
+    val rpb = rowsPerBand(numHashes, bands)
+    val (_, mh) = minhashSignatures(
+      docs.select(col("doc_id"), Tables.shingles(Tables.tokens(col("text"))).as("shs")),
+      numHashes)
+    bandedSignatures(mh, bands, rpb)
       .withColumn("num_hashes", lit(numHashes))
       .withColumn("bands", lit(bands))
   }
@@ -813,8 +842,7 @@ object Dedup {
       index: DataFrame,
       numHashes: Int = 16,
       bands: Int = 4): DataFrame = {
-    require(bands >= 1 && numHashes >= bands && numHashes % bands == 0,
-      s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
+    val rpb = rowsPerBand(numHashes, bands)
     require(index.columns.contains("num_hashes") && index.columns.contains("bands"),
       "index does not carry its (num_hashes, bands) parameters — rebuild it with bandSignatures")
     // null params = a pre-stamping index file appended to by a stamped
@@ -828,12 +856,11 @@ object Dedup {
     require(params.isEmpty || params.flatten.sameElements(Array((numHashes, bands))),
       s"index was built with (num_hashes, bands) = ${params.flatten.mkString(", ")}; " +
         s"probing with ($numHashes, $bands) would silently drop true candidates")
-    val bandKey = Seq("band") ++ (0 until numHashes / bands).map(r => s"m$r")
-    bandSignatures(freshDocs, numHashes, bands).withColumnRenamed("doc_id", "d1")
-      .drop("num_hashes", "bands")
-      .join(index.withColumnRenamed("doc_id", "d2").drop("num_hashes", "bands"), bandKey)
-      .select("d1", "d2")
-      .distinct()
+    bandJoin(
+      bandSignatures(freshDocs, numHashes, bands).withColumnRenamed("doc_id", "d1")
+        .drop("num_hashes", "bands"),
+      index.withColumnRenamed("doc_id", "d2").drop("num_hashes", "bands"),
+      rpb)
   }
 
   /** EXT-D10 — LSH estimator calibration: for every band-colliding
@@ -842,34 +869,48 @@ object Dedup {
     * error. This is how the banding is tuned on real corpora — the
     * estimator's error distribution on actual candidates (not the
     * textbook variance) decides whether 16 hashes suffice or 64 are
-    * needed — and it reuses the production relations: signatures
-    * materialized once feed the banding and both sides of the seed-match
-    * count; exact Jaccard is verified on candidates only, the same
-    * candidates-only discipline as [[minhashLsh]] itself. Pairs whose
-    * shingle sets share nothing (possible only via a raw md5 value
-    * collision) are excluded — both engines derive pairs from shared
-    * content.
-    *
-    * The seed-match count is an interpreted `zip_with` lambda ON
-    * CANDIDATE PAIRS ONLY — a 16-element array op per surviving pair,
-    * not a per-token hot path (the codegen-expression rule targets the
-    * latter).
+    * needed — and it reuses the production relations: the candidates,
+    * seed-match counts and exact overlaps are [[seedMatchedCandidates]],
+    * verified on candidates only, the same candidates-only discipline
+    * as [[minhashLsh]] itself.
     */
   def lshCalibration(
       spark: SparkSession,
       dir: String,
       numHashes: Int = 16,
       bands: Int = 4,
-      maxBucket: Int = 1 << 20): DataFrame = {
-    require(bands >= 1 && numHashes >= bands && numHashes % bands == 0,
-      s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
-    val rowsPerBand = numHashes / bands
-    val arr = shingleArrays(spark, dir).filter(size(col("shs")) > 0)
-    val sigs = arr
-      .select(col("doc_id"), graft.functions.MinHashes.minhashes(col("shs"), numHashes).as("mh"))
-      .localCheckpoint() // consumed by the banding and twice by the match join
-    val candidates = bandCandidates(
-      bandedSignatures(sigs, bands, rowsPerBand), rowsPerBand, maxBucket)
+      maxBucket: Int = 1 << 20): DataFrame =
+    seedMatchedCandidates(spark, dir, numHashes, bands, maxBucket)
+      .withColumn("est_jaccard", col("n_match").cast("double") / numHashes)
+      .withColumn("abs_err", abs(col("est_jaccard") - col("jaccard")))
+      .select("d1", "d2", "n_match", "est_jaccard", "jaccard", "abs_err")
+      .orderBy("d1", "d2")
+
+  /** The candidate stage of the two MinHash ESTIMATOR audits,
+    * [[lshCalibration]] (x52) and [[containmentEstimate]] (x125): every
+    * LSH band candidate (d1 < d2) with its seed-match count `n_match`
+    * and its exact shingle overlap (`inter`, `n1`, `n2`, `jaccard` from
+    * [[verifyJaccard]] at threshold 0), keeping pairs that share at
+    * least one shingle — a pair sharing none arises only from a raw md5
+    * value collision, and both engines derive pairs from shared content.
+    * Signatures are materialized once and feed the banding AND both
+    * sides of the match join; exact overlap runs on candidates only.
+    *
+    * The seed-match count is an interpreted `zip_with` lambda ON
+    * CANDIDATE PAIRS ONLY — a numHashes-element array op per surviving
+    * pair, not a per-token hot path (the codegen-expression rule
+    * targets the latter).
+    */
+  private def seedMatchedCandidates(
+      spark: SparkSession,
+      dir: String,
+      numHashes: Int,
+      bands: Int,
+      maxBucket: Int): DataFrame = {
+    val rpb = rowsPerBand(numHashes, bands)
+    val (arr, mh) = minhashSignatures(shingleArrays(spark, dir), numHashes)
+    val sigs = mh.localCheckpoint() // consumed by the banding and twice by the match join
+    val candidates = bandCandidates(bandedSignatures(sigs, bands, rpb), rpb, maxBucket)
       .join(sigs.select(col("doc_id").as("d1"), col("mh").as("mh1")), "d1")
       .join(sigs.select(col("doc_id").as("d2"), col("mh").as("mh2")), "d2")
       .withColumn("n_match",
@@ -877,10 +918,6 @@ object Dedup {
       .select("d1", "d2", "n_match")
     verifyJaccard(candidates, arr, threshold = 0.0)
       .filter(col("inter") >= 1)
-      .withColumn("est_jaccard", col("n_match").cast("double") / numHashes)
-      .withColumn("abs_err", abs(col("est_jaccard") - col("jaccard")))
-      .select("d1", "d2", "n_match", "est_jaccard", "jaccard", "abs_err")
-      .orderBy("d1", "d2")
   }
 
   /** EXT-D9 — near-dup DEGREE per document: how many near-duplicate
@@ -1103,20 +1140,14 @@ object Dedup {
       bands: Int = 4,
       minSim: Double = 0.5,
       maxBucket: Int = 1 << 20): DataFrame = {
-    require(bands >= 1 && numHashes >= bands && numHashes % bands == 0,
-      s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
-    val rowsPerBand = numHashes / bands
-    val arr = shingleArrays(spark, dir).filter(size(col("shs")) > 0)
-    val sig = bandedSignatures(
-      arr.select(col("doc_id"),
-        graft.functions.MinHashes.minhashes(col("shs"), numHashes).as("mh")),
-      bands, rowsPerBand)
+    val rpb = rowsPerBand(numHashes, bands)
+    val (_, mh) = minhashSignatures(shingleArrays(spark, dir), numHashes)
     // spread the verify (r18): bandCandidates' distinct output is a
     // byte-tiny AQE-coalesced exchange, but each surviving pair pays an
     // O(len²) levenshtein — the whole verify otherwise runs in one
     // task. The repartition moves only (d1, d2) pairs; bandCandidates
-    // itself (shared with the x52 canary) is untouched.
-    val cand = bandCandidates(sig, rowsPerBand, maxBucket)
+    // itself (shared with x2 and x52) is untouched.
+    val cand = bandCandidates(bandedSignatures(mh, bands, rpb), rpb, maxBucket)
       .repartition(spark.sparkContext.defaultParallelism)
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"), length(col("text")).cast("long").as("len"))
@@ -1167,35 +1198,24 @@ object Dedup {
       dir: String,
       threshold: Double = 0.9,
       maxBucket: Int = 1 << 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val arr = shingleArrays(spark, dir).filter(col("n") > 0)
-    val sh = arr.select(col("doc_id"), col("n"), explode(col("shs")).as("shingle"))
-    val freq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-    def ceilEps(c: Column): Column = ceil(c - 1e-9)
-    val prefLen = (col("n") - ceilEps(col("n") * threshold) + 1).cast("int")
-    val ranked = sh.join(freq, "shingle")
-      .withColumn("rn",
-        row_number().over(Window.partitionBy("doc_id").orderBy(col("df"), col("shingle"))))
-      .select(col("doc_id"), col("n"), col("shingle"),
-        (col("rn") <= prefLen).as("in_prefix"))
+    val (ranked, inPrefix) = prefixRanked(arr, threshold)
+    val postings = ranked
+      .select(col("doc_id"), col("n"), col("shingle"), inPrefix.as("in_prefix"))
     // x is the PROBE (the smaller side, ties by id — each unordered pair
-    // is generated in exactly one role); y ranges over the FULL posting
-    // list, so the large side needs no prefix at all
+    // is generated in exactly one role), taken from prefix entries only;
+    // y ranges over the FULL posting list, so the large side needs no
+    // prefix at all
     // exact-N keyed repartitions (r18): same post-shuffle AQE-collapse
     // fix as ngramJaccard — the pair expansion and the IntersectSize
     // verify otherwise run single-task downstream of byte-tiny
     // exchanges; the aggregation/distinct reuse the partitioning, so no
     // exchange is added
     val par = spark.sparkContext.defaultParallelism
-    val candidates = guardBucketSize(
-      ranked.repartition(par, col("shingle")).groupBy("shingle")
-        .agg(collect_list(struct(col("doc_id"), col("n"), col("in_prefix"))).as("ds")),
-      maxBucket, "a posting list this hot means a near-universal shingle — " +
-        "raise the threshold or maxBucket")
-      .filter(size(col("ds")) >= 2)
-      .select(col("ds"), explode(col("ds")).as("x"))
-      .filter(col("x.in_prefix"))
-      .select(col("x"), explode(col("ds")).as("y"))
+    val candidates = guardedPairs(
+        postings.repartition(par, col("shingle")), Seq(col("shingle")),
+        struct(col("doc_id"), col("n"), col("in_prefix")), maxBucket, hotPostingKnob,
+        probes = Some(col("x.in_prefix")))
       .filter(col("x.n") < col("y.n") ||
         (col("x.n") === col("y.n") && col("x.doc_id") < col("y.doc_id")))
       .select(col("x.doc_id").as("d_small"), col("y.doc_id").as("d_large"))
@@ -1230,11 +1250,10 @@ object Dedup {
     * at 1: with sizes far apart, `Ĉ > 1` is the estimator's real bias
     * for truncated copies, and reporting it raw is the audit's point.
     *
-    * Pairs present in the x52 convention: band candidates that share at
-    * least one shingle (`inter ≥ 1`), canonicalized to x116's
-    * (d_small, d_large) orientation. Cost discipline is x52's verbatim:
-    * signatures materialized once feed the banding AND both match-count
-    * probes; exact intersection runs on candidates only.
+    * Pairs are x52's: the candidates come from the stage the two audits
+    * share ([[seedMatchedCandidates]]: band candidates that share at
+    * least one shingle, `inter ≥ 1`), canonicalized to x116's
+    * (d_small, d_large) orientation.
     */
   def containmentEstimate(
       spark: SparkSession,
@@ -1242,24 +1261,9 @@ object Dedup {
       numHashes: Int = 16,
       bands: Int = 4,
       maxBucket: Int = 1 << 20): DataFrame = {
-    require(bands >= 1 && numHashes >= bands && numHashes % bands == 0,
-      s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
-    val rowsPerBand = numHashes / bands
-    val arr = shingleArrays(spark, dir).filter(size(col("shs")) > 0)
-    val sigs = arr
-      .select(col("doc_id"), graft.functions.MinHashes.minhashes(col("shs"), numHashes).as("mh"))
-      .localCheckpoint() // consumed by the banding and twice by the match join
-    val candidates = bandCandidates(
-      bandedSignatures(sigs, bands, rowsPerBand), rowsPerBand, maxBucket)
-      .join(sigs.select(col("doc_id").as("d1"), col("mh").as("mh1")), "d1")
-      .join(sigs.select(col("doc_id").as("d2"), col("mh").as("mh2")), "d2")
-      .withColumn("n_match",
-        expr("aggregate(zip_with(mh1, mh2, (x, y) -> IF(x = y, 1L, 0L)), 0L, (a, v) -> a + v)"))
-      .select("d1", "d2", "n_match")
     val smallFirst = col("n1") < col("n2") ||
       (col("n1") === col("n2") && col("d1") < col("d2"))
-    verifyJaccard(candidates, arr, threshold = 0.0)
-      .filter(col("inter") >= 1)
+    seedMatchedCandidates(spark, dir, numHashes, bands, maxBucket)
       .select(
         when(smallFirst, col("d1")).otherwise(col("d2")).as("d_small"),
         when(smallFirst, col("d2")).otherwise(col("d1")).as("d_large"),
@@ -1401,25 +1405,6 @@ object Dedup {
       .orderBy("source_a", "source_b")
   }
 
-  /** EXT-D19 (`x130_chunk_novelty`) — per-document chunk-novelty score
-    * for an incoming batch: each NEW document (odd doc_id — the x93/
-    * x102 snapshot binding) scored by how many of its CDC chunks
-    * already exist in the corpus (even doc_id side), with the known
-    * fraction. The ingest-time dedup SCORE that is robust to edits:
-    * x24's digest check answers only "seen verbatim before"; a
-    * re-crawled page with one edited sentence scores ~0 there but
-    * ~(n−1)/n here, because content-defined boundaries resync around
-    * the edit — so the score separates genuinely-novel documents from
-    * edited duplicates BEFORE any pairwise machinery runs. Chunks are
-    * counted ONCE per (doc, digest) (a within-doc repeated chunk is
-    * repetition, x20's signal, not corpus novelty).
-    *
-    * Scale: both sides are the row-local chunker; the membership check
-    * is a LEFT join keyed by digest against the corpus side's distinct
-    * relation (x24's LEFT ANTI shape, kept as LEFT + flag because the
-    * per-doc FRACTION is the output); the fold is one doc_id-keyed
-    * partial agg. Linear end to end.
-    */
   /** EXT-D20 (`x131_threshold_sweep`) — near-dup THRESHOLD sensitivity:
     * the exact-Jaccard pair relation materialized ONCE at the lowest
     * swept threshold, then per candidate threshold the pair count, the
@@ -1483,6 +1468,25 @@ object Dedup {
       .orderBy("pct")
   }
 
+  /** EXT-D19 (`x130_chunk_novelty`) — per-document chunk-novelty score
+    * for an incoming batch: each NEW document (odd doc_id — the x93/
+    * x102 snapshot binding) scored by how many of its CDC chunks
+    * already exist in the corpus (even doc_id side), with the known
+    * fraction. The ingest-time dedup SCORE that is robust to edits:
+    * x24's digest check answers only "seen verbatim before"; a
+    * re-crawled page with one edited sentence scores ~0 there but
+    * ~(n−1)/n here, because content-defined boundaries resync around
+    * the edit — so the score separates genuinely-novel documents from
+    * edited duplicates BEFORE any pairwise machinery runs. Chunks are
+    * counted ONCE per (doc, digest) (a within-doc repeated chunk is
+    * repetition, x20's signal, not corpus novelty).
+    *
+    * Scale: both sides are the row-local chunker; the membership check
+    * is a LEFT join keyed by digest against the corpus side's distinct
+    * relation (x24's LEFT ANTI shape, kept as LEFT + flag because the
+    * per-doc FRACTION is the output); the fold is one doc_id-keyed
+    * partial agg. Linear end to end.
+    */
   def chunkNovelty(
       spark: SparkSession,
       dir: String,

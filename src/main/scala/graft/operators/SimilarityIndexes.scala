@@ -84,32 +84,6 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       argmaxCell(scoredCells, cents.length).as("cell"))
   }
 
-  /** EXT-S13 probe path: top-k cosine neighbors for an arbitrary
-    * `(vec_id, embedding)` query relation against a PERSISTED index —
-    * identical results, tie-breaks, and presentation to running
-    * [[ivfTopK]] over the same corpus (spec-asserted), with the corpus
-    * pass replaced by a pruned read of the probed cells.
-    *
-    * The centroid table is collected driver-side — bounded by
-    * CONSTRUCTION (nCentroids rows, validated against the stamp), the
-    * same bounded-broadcast rule as every centroid literal in this
-    * file. Probe cells are derived on the query side only (nprobe
-    * fan-out); the index side is read already partitioned by cell, so
-    * the equi-join shuffles only the query fan-out at most.
-    *
-    * `staticPrune` (default ON) pins the batch's DISTINCT probe cells —
-    * at most nCentroids values by construction, the legitimate bounded
-    * collect — as a literal partition filter on the index read, so the
-    * pruned scan is guaranteed by the PLANNER (`PartitionFilters` with
-    * `selectedPartitions` resolved before execution), not left to the
-    * dynamic-partition-pruning heuristic (which does not consider an
-    * unfiltered query batch "selective" and would scan every cell).
-    * Cost: one extra narrow pass over the query side to derive the cell
-    * set — for any index big enough to matter, reading
-    * nprobe/nCentroids of the FILES repays it immediately. This is the
-    * per-microbatch serving shape (EXT-6i): train once, probe each
-    * arriving query batch against only the cells it fans out to.
-    */
   /** Bounded centroid-table read + stamp validation shared by every
     * persisted-probe path (EXT-S13's refusal contract): nCentroids rows
     * by construction, returned sorted by cid with the validated count.
@@ -245,7 +219,7 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     scala.util.hashing.MurmurHash3.orderedHash(flat.result()).toHexString
   }
 
-  /** The batch's DISTINCT probe cells for a staticPrune literal filter:
+  /** The batch's DISTINCT probe cells for the static partition filter:
     * ≤ nCentroids values by construction (cells are 0..nCentroids−1),
     * so the collect is bounded no matter how large the query relation
     * is. Derived from a CELL-ONLY projection of the raw query relation
@@ -264,16 +238,40 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     cellsOnly.distinct().as[Int].collect().toSeq
   }
 
+  /** EXT-S13 probe path: top-k cosine neighbors for an arbitrary
+    * `(vec_id, embedding)` query relation against a PERSISTED index —
+    * identical results, tie-breaks, and presentation to running
+    * [[ivfTopK]] over the same corpus (spec-asserted), with the corpus
+    * pass replaced by a pruned read of the probed cells.
+    *
+    * The centroid table is collected driver-side — bounded by
+    * CONSTRUCTION (nCentroids rows, validated against the stamp), the
+    * same bounded-broadcast rule as every centroid literal in this
+    * file. Probe cells are derived on the query side only (nprobe
+    * fan-out); the index side is read already partitioned by cell, so
+    * the equi-join shuffles only the query fan-out at most.
+    *
+    * The probe pins the batch's DISTINCT probe cells — at most
+    * nCentroids values by construction, the legitimate bounded collect —
+    * as a literal partition filter on the index read, so the pruned scan
+    * is guaranteed by the PLANNER (`PartitionFilters` with
+    * `selectedPartitions` resolved before execution), not left to the
+    * dynamic-partition-pruning heuristic (which does not consider an
+    * unfiltered query batch "selective" and would scan every cell).
+    * Cost: one extra narrow pass over the query side to derive the cell
+    * set — for any index big enough to matter, reading
+    * nprobe/nCentroids of the FILES repays it immediately. This is the
+    * per-microbatch serving shape (EXT-6i): train once, probe each
+    * arriving query batch against only the cells it fans out to.
+    */
   def ivfTopKFromIndex(
       spark: SparkSession,
       indexPath: String,
       queries: DataFrame,
       k: Int = 3,
-      nprobe: Int = 1,
-      staticPrune: Boolean = true): DataFrame =
+      nprobe: Int = 1): DataFrame =
     ivfTopKOverCells(spark, indexPath,
-      spark.read.parquet(s"$indexPath/cells"), queries, k, nprobe,
-      staticPrune, dedupReplays = false)
+      spark.read.parquet(s"$indexPath/cells"), queries, k, nprobe, dedupReplays = false)
 
   /** The float-IVF probe over an EXPLICIT cell relation — shared by the
     * static layout (reads `cells/`) and the streaming-maintained one
@@ -290,7 +288,6 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       queries: DataFrame,
       k: Int,
       nprobe: Int,
-      staticPrune: Boolean,
       dedupReplays: Boolean): DataFrame = {
     val (cents, nCentroids) = loadCoarseCentroids(spark, sidecarPath)
     require(nprobe >= 1 && nprobe <= nCentroids,
@@ -311,12 +308,8 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       else
         qSpread.select(col("vec_id").as("qid"), col("embedding").as("qe"),
           probeCellsCol(scoredCells, nCentroids, nprobe).as("cell"))
-    val idxRaw = cellRows
-    val idxPruned =
-      if (staticPrune) {
-        val cells = distinctProbeCells(queries, scoredCells, nCentroids, nprobe)
-        idxRaw.filter(col("cell").isin(cells.map(Int.box): _*))
-      } else idxRaw
+    val cells = distinctProbeCells(queries, scoredCells, nCentroids, nprobe)
+    val idxPruned = cellRows.filter(col("cell").isin(cells.map(Int.box): _*))
     // expansionPartitioned on the streamed index side: a freshly-written
     // cell-partitioned index is SMALL FILES locally, so the scan arrives
     // as one partition and a broadcast-joined probe batch then runs the
@@ -1173,15 +1166,7 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     val cand = ivfPqTopK(spark, dir, shortlist, nCentroids, queryMod, nprobe,
       m, ksub, iters)
       .select(col("vec_id").as("qid"), col("neighbor_id").as("cid"))
-    val emb = Tables.embeddings(spark, dir)
-    val qe = emb.select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val ce = emb.select(col("vec_id").as("cid"), col("embedding").as("ce"))
-    // candidate relation ≤ |queries|·shortlist rows — bounded by
-    // construction, per the repo broadcast rule (hammingTopK's tail)
-    val scored = broadcast(cand.join(qe, Seq("qid")))
-      .join(ce, Seq("cid"))
-      .select(col("qid"), col("cid"), dot(col("qe"), col("ce")).as("sim"))
-    presentTopK(scored, k)
+    refineByFloatStore(spark, dir, cand, Tables.embeddings(spark, dir), k)
   }
 
   /** EXT-S34b — [[ivfPqTopKRefined]] served from the PERSISTED IVF-PQ
@@ -1204,17 +1189,16 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       queries: DataFrame,
       k: Int = 3,
       nprobe: Int = 2,
-      shortlist: Int = 32,
-      staticPrune: Boolean = true): DataFrame = {
+      shortlist: Int = 32): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    val cand = ivfPqTopKFromIndex(spark, indexPath, queries, shortlist,
-      nprobe, staticPrune)
+    val cand = ivfPqTopKFromIndex(spark, indexPath, queries, shortlist, nprobe)
       .select(col("vec_id").as("qid"), col("neighbor_id").as("cid"))
     refineByFloatStore(spark, corpusDir, cand, queries, k)
   }
 
-  /** The exact-refine tail shared by the persisted serving paths (the
-    * sign-sketch probe and the IVF-PQ refine) and the streaming live
+  /** The exact-refine tail shared by the in-memory IVF-PQ refine (x186,
+    * whose queries are the corpus table), the persisted serving paths
+    * (the sign-sketch probe and the IVF-PQ refine) and the streaming live
     * probe (EXT-6as): re-rank a bounded (qid, cid)
     * candidate relation by the exact float dot, corpus vectors fetched
     * BY CANDIDATE ID from `corpusDir` — the sketch/store separation
@@ -1682,22 +1666,20 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     * the [[ivfTopKFromIndex]] centroid stamp (a corrupt coarse
     * quantizer must refuse, not mis-route probes) and the
     * [[pqTopKFromIndex]] measured query width vs the coded dim (a
-    * mismatched batch must refuse, not mis-rank) — and both prune
-    * paths: `staticPrune` pins the batch's distinct probe cells as a
-    * literal partition filter (≤ nCentroids values, the bounded
-    * collect), so the planner guarantees only nprobe/nCentroids of the
-    * code FILES are read, each an 8-byte-per-row scan.
+    * mismatched batch must refuse, not mis-rank) — and its static
+    * pruning: the batch's distinct probe cells pin a literal partition
+    * filter (≤ nCentroids values, the bounded collect), so the planner
+    * guarantees only nprobe/nCentroids of the code FILES are read, each
+    * an 8-byte-per-row scan.
     */
   def ivfPqTopKFromIndex(
       spark: SparkSession,
       indexPath: String,
       queries: DataFrame,
       k: Int = 3,
-      nprobe: Int = 2,
-      staticPrune: Boolean = true): DataFrame =
+      nprobe: Int = 2): DataFrame =
     ivfPqTopKOverCells(spark, indexPath,
-      spark.read.parquet(s"$indexPath/cells"), queries, k, nprobe,
-      staticPrune, dedupReplays = false)
+      spark.read.parquet(s"$indexPath/cells"), queries, k, nprobe, dedupReplays = false)
 
   /** The composite probe over an EXPLICIT code-row relation — shared by
     * the static layout ([[ivfPqTopKFromIndex]] reads `cells/`) and the
@@ -1724,7 +1706,6 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       queries: DataFrame,
       k: Int,
       nprobe: Int,
-      staticPrune: Boolean,
       dedupReplays: Boolean): DataFrame = {
     val (cents, nCentroids) = loadCoarseCentroids(spark, sidecarPath)
     require(nprobe >= 1 && nprobe <= nCentroids,
@@ -1755,13 +1736,10 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       adcTableCol(int8Quantize(col("embedding")), cb, dsub).as("dtab"),
       (if (nprobe == 1) argmaxCell(scoredCells, nCentroids)
        else probeCellsCol(scoredCells, nCentroids, nprobe)).as("cell"))
-    val idxPruned =
-      if (staticPrune) {
-        // cell-only derivation: the prune pass never re-evaluates the
-        // int8 quantize projection the probe side carries
-        val cells = distinctProbeCells(queries, scoredCells, nCentroids, nprobe)
-        cellRows.filter(col("cell").isin(cells.map(Int.box): _*))
-      } else cellRows
+    // cell-only derivation: the prune pass never re-evaluates the int8
+    // quantize projection the probe side carries
+    val cells = distinctProbeCells(queries, scoredCells, nCentroids, nprobe)
+    val idxPruned = cellRows.filter(col("cell").isin(cells.map(Int.box): _*))
     val idxProjected = idxPruned
       .select(col("cell"), col("vec_id").as("cid"), col("codes"))
     val idxDeduped =
@@ -1933,8 +1911,7 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       indexPath: String,
       corpusDir: String,
       queries: DataFrame,
-      k: Int = 3,
-      staticPrune: Boolean = true): DataFrame = {
+      k: Int = 3): DataFrame = {
     val point = loadOperatingPoint(spark, indexPath)
       .select("nprobe", "shortlist").collect().head
     // r18 (ADVICE): the stamped shortlist must cover the serve call's k
@@ -1946,7 +1923,6 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
         s"${point.getInt(1)} < requested k ($k) — the index was tuned " +
         "for a smaller k; re-run tuneIvfPqIndex with k >= the serve k")
     ivfPqTopKRefinedFromIndex(spark, indexPath, corpusDir, queries, k,
-      nprobe = point.getInt(0), shortlist = point.getInt(1),
-      staticPrune = staticPrune)
+      nprobe = point.getInt(0), shortlist = point.getInt(1))
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Readers for the harness tables used by the extended (§2b) operators.
   *
@@ -11,6 +12,12 @@ import org.apache.spark.sql.functions._
   * would be partitioned (e.g. `documents` by `source`, `events` by day);
   * the operators below only ever add single-column filters and prunable
   * projections, so partition pruning composes for free.
+  *
+  * Both read with a declared schema: the harness schema is fixed
+  * (FIXTURES.md), and a bare `spark.read.parquet` runs a schema-inference
+  * Spark job on every call, so building either DataFrame runs no job.
+  * (`Replication.events` normalizes instead: its `ts` type varies by
+  * fixture generation.)
   */
 object Tables {
 
@@ -24,13 +31,20 @@ object Tables {
     * explicitly at their expansion point instead.
     */
   def documents(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    spark.read.schema(graft.sources.Sources.documentsSchema)
+      .parquet(s"$dir/documents.parquet")
 
   /** `embeddings(vec_id, embedding: array<float>, label)` — 64-dim unit
     * vectors for similarity search.
     */
   def embeddings(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/embeddings.parquet")
+    spark.read.schema(embeddingsSchema).parquet(s"$dir/embeddings.parquet")
+
+  /** The `embeddings` schema (FIXTURES.md). */
+  val embeddingsSchema: StructType = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType)),
+    StructField("label", IntegerType)))
 
   /** Whitespace tokenizer shared by every text operator. Must stay
     * byte-for-byte equivalent to the oracle's `string_split(text, ' ')`:

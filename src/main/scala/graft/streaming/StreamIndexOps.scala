@@ -378,8 +378,7 @@ private[streaming] trait StreamIndexOps { self: StreamOps.type =>
       indexDir: String,
       queries: DataFrame,
       k: Int = 3,
-      nprobe: Int = 2,
-      staticPrune: Boolean = true): DataFrame = {
+      nprobe: Int = 2): DataFrame = {
     // the probe-side half of the generation stamp: the geometry about
     // to score these code rows must be the geometry that PRODUCED them
     // — a retrained sidecar over un-rebuilt generations refuses here
@@ -390,7 +389,7 @@ private[streaming] trait StreamIndexOps { self: StreamOps.type =>
       graft.operators.Similarity.ivfPqGeometryStamp(cents, cb, dim))
     graft.operators.Similarity.ivfPqTopKOverCells(
       spark, indexDir, spark.read.parquet(genPath.toString), queries, k, nprobe,
-      staticPrune, dedupReplays = true)
+      dedupReplays = true)
   }
 
   /** EXT-6as — the full production serving call on a STREAMING-
@@ -415,15 +414,13 @@ private[streaming] trait StreamIndexOps { self: StreamOps.type =>
       indexDir: String,
       corpusDir: String,
       queries: DataFrame,
-      k: Int = 3,
-      staticPrune: Boolean = true): DataFrame = {
+      k: Int = 3): DataFrame = {
     import org.apache.spark.sql.functions.col
     val point = graft.operators.Similarity.loadOperatingPoint(spark, indexDir)
       .select("nprobe", "shortlist").collect().head
     val (nprobe, shortlist) = (point.getInt(0), point.getInt(1))
     require(shortlist >= k, s"stamped shortlist ($shortlist) must be >= k ($k)")
-    val cand = ivfPqProbeLive(spark, indexDir, queries, k = shortlist,
-      nprobe = nprobe, staticPrune = staticPrune)
+    val cand = ivfPqProbeLive(spark, indexDir, queries, k = shortlist, nprobe = nprobe)
       .select(col("vec_id").as("qid"), col("neighbor_id").as("cid"))
     graft.operators.Similarity.refineByFloatStore(spark, corpusDir, cand,
       queries, k)
@@ -520,12 +517,11 @@ private[streaming] trait StreamIndexOps { self: StreamOps.type =>
       indexDir: String,
       queries: DataFrame,
       k: Int = 3,
-      nprobe: Int = 1,
-      staticPrune: Boolean = true): DataFrame = {
+      nprobe: Int = 1): DataFrame = {
     val genPath = validatedLiveGeneration(spark, indexDir, "IVF", ivfStamp(spark, indexDir))
     graft.operators.Similarity.ivfTopKOverCells(
       spark, indexDir, spark.read.parquet(genPath.toString), queries, k,
-      nprobe, staticPrune, dedupReplays = true)
+      nprobe, dedupReplays = true)
   }
 
   private def ivfCents(

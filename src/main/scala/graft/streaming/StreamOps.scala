@@ -949,10 +949,10 @@ object StreamOps extends StreamIndexOps {
     * operation order, same Σg = 0 ⇒ CV² = NULL guard, and a
     * (window, type) with no gap emits nothing on either face.
     *
-    * Seal discipline is [[windowSealed]]'s verbatim (EventTimeTimeout
-    * at max(winEnd, wm+1), state removed before emission — exactly
-    * once), with the key widened to (window, event_type) so hot types
-    * don't serialize a window through one task. Replays within the
+    * Sealed through [[windowSealed]] (EventTimeTimeout at
+    * max(winEnd, wm+1), state removed before emission — exactly once),
+    * keyed by (window, event_type) so hot types don't serialize a
+    * window through one task. Replays within the
     * watermark re-deliver into the buffered multiset idempotently only
     * if the source deduplicates; at-least-once ingest composes
     * [[dedupStream]] on event_id in front, the 6b discipline.
@@ -963,55 +963,40 @@ object StreamOps extends StreamIndexOps {
       watermarkDelay: String = "10 minutes"): Dataset[WindowBurst] = {
     import events.sparkSession.implicits._
     require(windowMs > 0, s"windowMs must be positive, got $windowMs")
-    events.withWatermark("ts", watermarkDelay)
-      .groupByKey(e => (Math.floorDiv(e.ts.getTime, windowMs) * windowMs, e.event_type))
-      .flatMapGroupsWithState[BurstBuf, WindowBurst](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: (Long, String), items: Iterator[Event], state: GroupState[BurstBuf]) =>
-          val (winStart, etype) = key
-          val winEnd = winStart + windowMs
-          if (state.hasTimedOut) {
-            val st = state.get
-            state.remove()
-            // exact micros: ms + the sub-ms part of the nanos field
-            // (Timestamp.getTime already carries the integral ms)
-            var n = 0L
-            var s = 0L
-            var q = BigInt(0)
-            st.rows.groupBy(_._1).valuesIterator.foreach { evs =>
-              val us = evs.map { case (_, u, id) => (u, id) }.sorted
-              var i = 1
-              while (i < us.length) {
-                val g = us(i)._1 - us(i - 1)._1
-                n += 1L; s += g; q += BigInt(g) * BigInt(g)
-                i += 1
-              }
-            }
-            if (n == 0L) Iterator.empty
-            else {
-              // the batch double spelling verbatim: qD is the exact
-              // integer correctly rounded to the nearest double (what
-              // Spark's DECIMAL(38,0)→double cast also produces)
-              val nD = n.toDouble
-              val sD = s.toDouble
-              val qD = q.doubleValue
-              val cv2 =
-                if (s == 0L) None else Some((nD * qD - sD * sD) / (sD * sD))
-              Iterator.single(WindowBurst(new java.sql.Timestamp(winStart), etype,
-                n, s, q.toString, sD / nD, cv2))
-            }
-          } else {
-            val prior = state.getOption.getOrElse(BurstBuf(Vector.empty)).rows
-            val fresh = items.map { e =>
-              val us = e.ts.getTime * 1000L + (e.ts.getNanos / 1000) % 1000L
-              (e.user_id, us, e.event_id)
-            }.toVector
-            state.update(BurstBuf(prior ++ fresh))
-            state.setTimeoutTimestamp(
-              math.max(winEnd, state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
-          }
+    windowSealed[Event, (Long, String), BurstBuf, WindowBurst](
+      events, watermarkDelay, e => (tumbling(e.ts.getTime, windowMs), e.event_type),
+      _._1 + windowMs, BurstBuf(Vector.empty)) { (st, items) =>
+      // exact micros: ms + the sub-ms part of the nanos field
+      // (Timestamp.getTime already carries the integral ms)
+      BurstBuf(st.rows ++ items.map { e =>
+        (e.user_id, e.ts.getTime * 1000L + (e.ts.getNanos / 1000) % 1000L, e.event_id)
+      })
+    } { case ((winStart, etype), st) =>
+      var n = 0L
+      var s = 0L
+      var q = BigInt(0)
+      st.rows.groupBy(_._1).valuesIterator.foreach { evs =>
+        val us = evs.map { case (_, u, id) => (u, id) }.sorted
+        var i = 1
+        while (i < us.length) {
+          val g = us(i)._1 - us(i - 1)._1
+          n += 1L; s += g; q += BigInt(g) * BigInt(g)
+          i += 1
+        }
       }
+      if (n == 0L) Iterator.empty
+      else {
+        // the batch double spelling verbatim: qD is the exact integer
+        // correctly rounded to the nearest double (what Spark's
+        // DECIMAL(38,0)→double cast also produces)
+        val nD = n.toDouble
+        val sD = s.toDouble
+        val qD = q.doubleValue
+        val cv2 = if (s == 0L) None else Some((nD * qD - sD * sD) / (sD * sD))
+        Iterator.single(WindowBurst(new java.sql.Timestamp(winStart), etype,
+          n, s, q.toString, sD / nD, cv2))
+      }
+    }
   }
 
   /** One sealed (day, hour) concurrency leaf — EXT-6ah's emission. */
@@ -1032,7 +1017,7 @@ object StreamOps extends StreamIndexOps {
     * assembles absolute concurrency by prefixing leaf NETS (x148's
     * levels 2–3 verbatim over a \|hours\| relation).
     *
-    * Seal discipline is [[windowSealed]]'s (EventTimeTimeout at
+    * Sealed through [[windowSealed]] (EventTimeTimeout at
     * max(hourEnd, wm+1), state removed before emission); state per open
     * hour is the buffered boundary multiset — the 6ae price of EXACT
     * order statistics under out-of-order arrival. Contract: the
@@ -1053,46 +1038,30 @@ object StreamOps extends StreamIndexOps {
       .as[(java.sql.Timestamp, java.sql.Timestamp)]
       .flatMap { case (s, e) => Seq((s, 1L), (e, -1L)) }
       .toDF("ts", "delta")
-      .withWatermark("ts", watermarkDelay)
       .as[(java.sql.Timestamp, Long)]
-    deltas
-      .groupByKey { case (ts, _) =>
-        val us = ts.getTime * 1000L + (ts.getNanos / 1000) % 1000L
-        us / 1000000L / 3600L * 3600L
+    def micros(ts: java.sql.Timestamp): Long =
+      ts.getTime * 1000L + (ts.getNanos / 1000) % 1000L
+    windowSealed[(java.sql.Timestamp, Long), Long, ConcBuf, HourConcurrency](
+      deltas, watermarkDelay, { case (ts, _) => micros(ts) / 1000000L / 3600L * 3600L },
+      hourS => (hourS + 3600L) * 1000L, ConcBuf(Vector.empty)) { (st, items) =>
+      ConcBuf(st.rows ++ items.map { case (ts, d) => (micros(ts), d) })
+    } { (hourS, st) =>
+      // the batch leaf spelling verbatim: (us asc, +1 before -1),
+      // running sum, max
+      val sorted = st.rows.sortBy { case (us, d) => (us, -d) }
+      var run = 0L
+      var peak = Long.MinValue
+      var ns = 0L
+      var ne = 0L
+      sorted.foreach { case (_, d) =>
+        run += d
+        if (run > peak) peak = run
+        if (d > 0) ns += 1L else ne += 1L
       }
-      .flatMapGroupsWithState[ConcBuf, HourConcurrency](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (hourS: Long, items: Iterator[(java.sql.Timestamp, Long)],
-            state: GroupState[ConcBuf]) =>
-          if (state.hasTimedOut) {
-            val st = state.get
-            state.remove()
-            // the batch leaf spelling verbatim: (us asc, +1 before -1),
-            // running sum, max
-            val sorted = st.rows.sortBy { case (us, d) => (us, -d) }
-            var run = 0L
-            var peak = Long.MinValue
-            var ns = 0L
-            var ne = 0L
-            sorted.foreach { case (_, d) =>
-              run += d
-              if (run > peak) peak = run
-              if (d > 0) ns += 1L else ne += 1L
-            }
-            if (sorted.isEmpty) Iterator.empty
-            else Iterator.single(HourConcurrency(
-              hourS / 86400L * 86400L, hourS, ns, ne, run, peak))
-          } else {
-            val prior = state.getOption.getOrElse(ConcBuf(Vector.empty)).rows
-            val fresh = items.map { case (ts, d) =>
-              (ts.getTime * 1000L + (ts.getNanos / 1000) % 1000L, d)
-            }.toVector
-            state.update(ConcBuf(prior ++ fresh))
-            state.setTimeoutTimestamp(
-              math.max((hourS + 3600L) * 1000L, state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
-          }
-      }
+      if (sorted.isEmpty) Iterator.empty
+      else Iterator.single(HourConcurrency(
+        hourS / 86400L * 86400L, hourS, ns, ne, run, peak))
+    }
   }
 
   /** One arriving catalog record (the `part` shape the linkage family
@@ -1454,44 +1423,47 @@ object StreamOps extends StreamIndexOps {
   }
 
   /** The watermark-seal scaffold shared by every windowed monitor
-    * (EXT-6k drift, EXT-6n trending): bucket rows into tumbling
-    * event-time windows keyed by window start, fold arrivals into
-    * per-window state, and when the watermark seals the window emit
-    * ONCE and leave state. The safety subtleties live here exactly
-    * once: the timeout is `max(winEnd, wm+1)` (always legal — a data
-    * invocation can never observe wm ≥ winEnd for its own window,
-    * since arrivals are admitted only at ts > wm), and state is
-    * removed BEFORE emission so a sealed window can never re-fire.
+    * (EXT-6k drift, EXT-6n trending, EXT-6ae burstiness, EXT-6ah
+    * concurrency): key rows into event-time windows by `key` (whose
+    * window ends at `winEndMs(key)`), fold arrivals into per-window
+    * state, and when the watermark seals the window emit ONCE and leave
+    * state. The safety subtleties live here exactly once: the timeout is
+    * `max(winEnd, wm+1)` (always legal — a data invocation can never
+    * observe wm ≥ winEnd for its own window, since arrivals are admitted
+    * only at ts > wm), and state is removed BEFORE emission so a sealed
+    * window can never re-fire. [[tumbling]] is the usual key.
     */
-  private def windowSealed[T, S <: Product: org.apache.spark.sql.Encoder,
+  private def windowSealed[T, K: org.apache.spark.sql.Encoder,
+      S <: Product: org.apache.spark.sql.Encoder,
       O <: Product: org.apache.spark.sql.Encoder](
       ds: Dataset[T],
-      tsMs: T => Long,
-      windowMs: Long,
       watermarkDelay: String,
+      key: T => K,
+      winEndMs: K => Long,
       zero: => S)(
       fold: (S, Iterator[T]) => S)(
-      emit: (Long, S) => Iterator[O]): Dataset[O] = {
-    import ds.sparkSession.implicits._
+      emit: (K, S) => Iterator[O]): Dataset[O] =
     ds.withWatermark("ts", watermarkDelay)
-      .groupByKey(t => Math.floorDiv(tsMs(t), windowMs) * windowMs)
+      .groupByKey(key)
       .flatMapGroupsWithState[S, O](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (winStart: Long, items: Iterator[T], state: GroupState[S]) =>
-          val winEnd = winStart + windowMs
+        (k: K, items: Iterator[T], state: GroupState[S]) =>
           if (state.hasTimedOut) {
             // wm >= winEnd: sealed — no in-scope arrival can still land
             val st = state.get
             state.remove()
-            emit(winStart, st)
+            emit(k, st)
           } else {
             state.update(fold(state.getOption.getOrElse(zero), items))
             state.setTimeoutTimestamp(
-              math.max(winEnd, state.getCurrentWatermarkMs() + 1))
+              math.max(winEndMs(k), state.getCurrentWatermarkMs() + 1))
             Iterator.empty
           }
       }
-  }
+
+  /** The start (epoch ms) of the `windowMs` tumbling window holding `tsMs`. */
+  private def tumbling(tsMs: Long, windowMs: Long): Long =
+    Math.floorDiv(tsMs, windowMs) * windowMs
 
   /** Per-window trending state: event counts per key for an open window. */
   case class TrendState(counts: Map[Long, Long])
@@ -1530,8 +1502,9 @@ object StreamOps extends StreamIndexOps {
     import events.sparkSession.implicits._
     require(k > 0, s"k must be positive, got $k")
     require(windowMs > 0, s"windowMs must be positive, got $windowMs")
-    windowSealed[Event, TrendState, TrendingKey](
-      events, _.ts.getTime, windowMs, watermarkDelay, TrendState(Map.empty)) {
+    windowSealed[Event, Long, TrendState, TrendingKey](
+      events, watermarkDelay, e => tumbling(e.ts.getTime, windowMs),
+      _ + windowMs, TrendState(Map.empty)) {
       (st, es) =>
         var counts = st.counts
         for (e <- es)
@@ -1586,8 +1559,9 @@ object StreamOps extends StreamIndexOps {
     require(k > 0, s"k must be positive, got $k")
     require(capacity >= k, s"capacity ($capacity) must be at least k ($k)")
     require(windowMs > 0, s"windowMs must be positive, got $windowMs")
-    windowSealed[Event, SSState, TrendingKeyApprox](
-      events, _.ts.getTime, windowMs, watermarkDelay, SSState(Seq.empty)) {
+    windowSealed[Event, Long, SSState, TrendingKeyApprox](
+      events, watermarkDelay, e => tumbling(e.ts.getTime, windowMs),
+      _ + windowMs, SSState(Seq.empty)) {
       (st, es) =>
         val s = graft.operators.SpaceSavingSummary.fromEntries(
           capacity, st.entries.map(e => (e.key, e.count, e.err)))
@@ -1739,8 +1713,9 @@ object StreamOps extends StreamIndexOps {
     import events.sparkSession.implicits._
     require(reference.nonEmpty, "reference census must be non-empty")
     require(windowMs > 0, s"windowMs must be positive, got $windowMs")
-    windowSealed[TimedPayload, KeyCensusState, WindowKeyDrift](
-      events, _.ts.getTime, windowMs, watermarkDelay,
+    windowSealed[TimedPayload, Long, KeyCensusState, WindowKeyDrift](
+      events, watermarkDelay, e => tumbling(e.ts.getTime, windowMs),
+      _ + windowMs,
       KeyCensusState(Map.empty, 0L)) { (st, evs) =>
       var counts = st.counts
       var n = st.nEvents
@@ -1790,8 +1765,9 @@ object StreamOps extends StreamIndexOps {
       "reference distribution must be non-empty with positive counts")
     require(windowMs > 0, s"windowMs must be positive, got $windowMs")
     val nRef = reference.valuesIterator.sum
-    windowSealed[TimedDoc, DriftState, WindowDrift](
-      docs, _.ts.getTime, windowMs, watermarkDelay, DriftState(Map.empty, 0L)) {
+    windowSealed[TimedDoc, Long, DriftState, WindowDrift](
+      docs, watermarkDelay, e => tumbling(e.ts.getTime, windowMs),
+      _ + windowMs, DriftState(Map.empty, 0L)) {
       (st, ds) =>
         var counts = st.counts
         var n = st.nTokens

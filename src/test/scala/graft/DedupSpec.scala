@@ -239,6 +239,31 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("MinHash-LSH entry points refuse an uneven (numHashes, bands) with one message") {
+    import spark.implicits._
+    val docs = Seq((1L, (1 to 30).map(i => s"w$i").mkString(" "))).toDF("doc_id", "text")
+    val index = Dedup.bandSignatures(docs)
+    val entries: Seq[(String, (Int, Int) => Any)] = Seq(
+      "minhashLsh" -> ((h, b) => Dedup.minhashLsh(spark, dir, numHashes = h, bands = b)),
+      "incrementalMinhash" ->
+        ((h, b) => Dedup.incrementalMinhash(spark, dir, numHashes = h, bands = b)),
+      "lshCalibration" -> ((h, b) => Dedup.lshCalibration(spark, dir, numHashes = h, bands = b)),
+      "editNearDup" -> ((h, b) => Dedup.editNearDup(spark, dir, numHashes = h, bands = b)),
+      "containmentEstimate" ->
+        ((h, b) => Dedup.containmentEstimate(spark, dir, numHashes = h, bands = b)),
+      "bandSignatures" -> ((h, b) => Dedup.bandSignatures(docs, numHashes = h, bands = b)),
+      "indexCandidates" ->
+        ((h, b) => Dedup.indexCandidates(docs, index, numHashes = h, bands = b)))
+    // 16/3 discards a trailing hash; 4/8 would band zero hashes per band
+    for ((h, b) <- Seq((16, 3), (4, 8))) {
+      val refusals = entries.map { case (name, call) =>
+        name -> intercept[IllegalArgumentException](call(h, b)).getMessage
+      }
+      val expected = s"requirement failed: numHashes ($h) must be a positive multiple of bands ($b)"
+      refusals.foreach { case (name, msg) => assert(msg == expected, s"$name at ($h, $b)") }
+    }
+  }
+
   test("dupDegree: hub documents count every partner once, loners absent") {
     val t = (1 to 30).map(i => s"h$i").mkString(" ")
     val dir = TestTables.documentsDir(spark, Seq(

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.Tables
 import graft.sources.Sources
 
 /** File-format ingestion: explicit-schema JSONL/CSV readers and the
@@ -160,5 +161,18 @@ class SourcesSpec extends AnyFunSuite with SparkSuite {
     // filters push into the ORC scan (PushedFilters in the physical plan)
     val plan = back.filter($"doc_id" === 2L).queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("doc_id"), plan)
+  }
+
+  test("Tables.documents / embeddings: declared schemas equal the inferred ones; building runs no job") {
+    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
+      val dir = s"/root/testdata/$sf"
+      for ((table, read) <- Seq[(String, String => org.apache.spark.sql.DataFrame)](
+          "documents" -> (d => Tables.documents(spark, d)),
+          "embeddings" -> (d => Tables.embeddings(spark, d)))) {
+        val (df, activity) = SparkActivity.during(spark)(read(dir))
+        assert(activity.jobs == 0, s"$table at $sf: building the DataFrame ran ${activity.jobs} job(s)")
+        assert(df.schema == spark.read.parquet(s"$dir/$table.parquet").schema, s"$table at $sf")
+      }
+    }
   }
 }
