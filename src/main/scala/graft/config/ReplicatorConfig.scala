@@ -92,17 +92,14 @@ object ReplicatorConfig {
     Right(out.result())
   }
 
-  /** A3 — reject unknown params; require the four mandatory ones
-    * (reference: FlinkKafkaReplicator.java:139-152, required list :63-68).
-    */
   /** Passthrough keys Spark's Kafka connector REJECTS at stream start
     * (KafkaSourceProvider validates and throws) — each with the flag or
     * behavior that replaces it. Catching them here turns an opaque
     * post-reconciliation crash (the admin side effects are already
     * applied by then) into an A3 validation error.
     */
-  private val UnsupportedPassthrough: Map[String, String] = Map(
-    "consumer.auto.offset.reset" -> "use --earliest-offset / --latest-offset",
+  private[graft] val UnsupportedPassthrough: Map[String, String] = Map(
+    "consumer.auto.offset.reset" -> "earliest is the default; use --latest-offset for latest",
     "consumer.enable.auto.commit" -> "Spark manages offsets via the checkpoint",
     "consumer.key.deserializer" -> "the source always reads raw bytes",
     "consumer.value.deserializer" -> "the source always reads raw bytes",
@@ -110,6 +107,9 @@ object ReplicatorConfig {
     "producer.key.serializer" -> "the sink always writes raw bytes",
     "producer.value.serializer" -> "the sink always writes raw bytes")
 
+  /** A3 — reject unknown params; require the four mandatory ones
+    * (reference: FlinkKafkaReplicator.java:139-152, required list :63-68).
+    */
   def validate(params: Map[String, String]): Seq[String] = {
     val known = BooleanOptions ++ IntOptions + "topics"
     val unknown = params.keys.filterNot { k =>

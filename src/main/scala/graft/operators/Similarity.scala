@@ -50,6 +50,17 @@ object Similarity extends SimilarityIndexOps {
       .orderBy("vec_id", "rank")
   }
 
+  /** Session-lifetime memo for the guard's measurements, keyed by
+    * (input path, filter): the measured footprint is a STATISTIC of an
+    * immutable input — the same thing a catalog caches after ANALYZE —
+    * so repeated plan builds over the same path pay the measurement
+    * scan once, not per build. The harness's inputs are immutable
+    * snapshot directories; a catalog that rewrites files in place under
+    * an unchanged path would need invalidation here, the standard
+    * statistics-staleness trade.
+    */
+  private val measuredBytes = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
   /** Broadcast eligibility by MEASUREMENT, not assumption: count the
     * relation (a column-pruned scan — for the pmod-filtered query side
     * that reads ONE int64 column, a vanishing fraction of corpus bytes
@@ -66,17 +77,6 @@ object Similarity extends SimilarityIndexOps {
     * it (measured: the r6 un-hinted x5 plan fell to the cartesian at
     * sf0.1, 2.6× slower).
     */
-  /** Session-lifetime memo for the guard's measurements, keyed by
-    * (input path, filter): the measured footprint is a STATISTIC of an
-    * immutable input — the same thing a catalog caches after ANALYZE —
-    * so repeated plan builds over the same path pay the measurement
-    * scan once, not per build. The harness's inputs are immutable
-    * snapshot directories; a catalog that rewrites files in place under
-    * an unchanged path would need invalidation here, the standard
-    * statistics-staleness trade.
-    */
-  private val measuredBytes = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   private[operators] def broadcastIfMeasuredUnder(
       df: DataFrame, key: String, estRowBytes: () => Long, maxBytes: Long): DataFrame = {
     if (maxBytes <= 0) return df
@@ -144,6 +144,44 @@ object Similarity extends SimilarityIndexOps {
     if (d.isNullAt(0) || d.getInt(0) <= 0) -1L else 4L * d.getInt(0) + 64L
   }
 
+  /** [[embRowBytes]] for an int64 (BIGINT-coded int8) vector: twice the float payload. */
+  private[operators] def int64RowBytes(vecs: DataFrame, vecCol: String): Long = {
+    val b = embRowBytes(vecs, vecCol)
+    if (b < 0) b else b * 2
+  }
+
+  /** The deterministic query sample: the rows with `vec_id % queryMod == 0`. */
+  private[operators] def sampled(rows: DataFrame, queryMod: Int): DataFrame =
+    rows.filter(pmod(col("vec_id"), lit(queryMod)) === 0)
+
+  /** The sampled query side of a brute scan: [[sampled]] rows projected
+    * to `cols`, broadcast under the measured guard with the memo key
+    * `dir|family|mod=queryMod` (`family` names the projection's width).
+    */
+  private[operators] def sampledQueries(
+      rows: DataFrame, dir: String, family: String, queryMod: Int,
+      maxBroadcastBytes: Long, estRowBytes: DataFrame => Long)(cols: Column*): DataFrame = {
+    val raw = sampled(rows, queryMod).select(cols: _*)
+    broadcastIfMeasuredUnder(raw, s"$dir|$family|mod=$queryMod",
+      () => estRowBytes(raw), maxBroadcastBytes)
+  }
+
+  /** The two sides of a float brute scan: the sampled `(qid, qe)` query
+    * side and the spread `(cid, ce)` corpus, each also carrying its
+    * label (`qlabel`/`clabel`) when `labeled`.
+    */
+  private def bruteSides(
+      spark: SparkSession, dir: String, queryMod: Int, maxBroadcastBytes: Long,
+      labeled: Boolean = false): (DataFrame, DataFrame) = {
+    val emb = Tables.embeddings(spark, dir)
+    def side(id: String, vec: String, label: String) =
+      Seq(col("vec_id").as(id), col("embedding").as(vec)) ++
+        (if (labeled) Seq(col("label").as(label)) else Nil)
+    val queries = sampledQueries(emb, dir, if (labeled) "emb+label" else "emb", queryMod,
+      maxBroadcastBytes, embRowBytes(_, "qe"))(side("qid", "qe", "qlabel"): _*)
+    (queries, expansionPartitioned(emb.select(side("cid", "ce", "clabel"): _*)))
+  }
+
   /** EXT-S1 — exact top-k neighbors by brute force for a query subset
     * (`vec_id % queryMod == 0`). Cost is O(|queries|·|corpus|·dim):
     * exact, and the honest baseline an ANN variant must beat.
@@ -166,18 +204,18 @@ object Similarity extends SimilarityIndexOps {
       dir: String,
       k: Int = 5,
       queryMod: Int = 10,
-      maxBroadcastBytes: Long = 64L << 20): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val queriesRaw = emb.filter(pmod(col("vec_id"), lit(queryMod)) === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val queries = broadcastIfMeasuredUnder(queriesRaw,
-      s"$dir|emb|mod=$queryMod", () => embRowBytes(queriesRaw, "qe"), maxBroadcastBytes)
-    val corpus = expansionPartitioned(
-      emb.select(col("vec_id").as("cid"), col("embedding").as("ce")))
-    val scored = queries
-      .join(corpus, col("qid") =!= col("cid"))
+      maxBroadcastBytes: Long = 64L << 20): DataFrame =
+    presentTopK(bruteScored(spark, dir, queryMod, maxBroadcastBytes), k)
+
+  /** The exact scored pairs `(qid, cid, sim)` of [[bruteForceTopK]]:
+    * the sampled query side against the spread corpus, self excluded.
+    * Also the dense leg of [[retrievalLegs]].
+    */
+  private def bruteScored(
+      spark: SparkSession, dir: String, queryMod: Int, maxBroadcastBytes: Long): DataFrame = {
+    val (queries, corpus) = bruteSides(spark, dir, queryMod, maxBroadcastBytes)
+    queries.join(corpus, col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"), dot(col("qe"), col("ce")).as("sim"))
-    presentTopK(scored, k)
   }
 
   /** EXT-S30 (`x158_mmr_rerank`) — Maximal Marginal Relevance
@@ -210,13 +248,7 @@ object Similarity extends SimilarityIndexOps {
       maxBroadcastBytes: Long = 64L << 20): DataFrame = {
     require(k >= 1 && m >= k, s"need m ($m) >= k ($k) >= 1")
     require(lambdaPct >= 0 && lambdaPct <= 100, s"lambdaPct ($lambdaPct) is a percent")
-    val emb = Tables.embeddings(spark, dir)
-    val queriesRaw = emb.filter(pmod(col("vec_id"), lit(queryMod)) === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val queries = broadcastIfMeasuredUnder(queriesRaw,
-      s"$dir|emb|mod=$queryMod", () => embRowBytes(queriesRaw, "qe"), maxBroadcastBytes)
-    val corpus = expansionPartitioned(
-      emb.select(col("vec_id").as("cid"), col("embedding").as("ce")))
+    val (queries, corpus) = bruteSides(spark, dir, queryMod, maxBroadcastBytes)
     val rel = queries.join(corpus, col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"), dot(col("qe"), col("ce")).as("rel"))
     // top-m relevance candidates via the bounded map-side fold (the
@@ -282,13 +314,7 @@ object Similarity extends SimilarityIndexOps {
       k: Int = 3,
       queryMod: Int = 5,
       maxBroadcastBytes: Long = 64L << 20): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val queriesRaw = emb.filter(pmod(col("vec_id"), lit(queryMod)) === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("label").as("qlabel"))
-    val queries = broadcastIfMeasuredUnder(queriesRaw,
-      s"$dir|emb+label|mod=$queryMod", () => embRowBytes(queriesRaw, "qe"), maxBroadcastBytes)
-    val corpus = expansionPartitioned(emb.select(col("vec_id").as("cid"),
-      col("embedding").as("ce"), col("label").as("clabel")))
+    val (queries, corpus) = bruteSides(spark, dir, queryMod, maxBroadcastBytes, labeled = true)
     val scored = queries
       .join(corpus, col("qid") =!= col("cid") && col("qlabel") =!= col("clabel"))
       .select(col("qid"), col("cid"), dot(col("qe"), col("ce")).as("sim"))
@@ -395,13 +421,7 @@ object Similarity extends SimilarityIndexOps {
       dir: String,
       queryMod: Int = 5,
       maxBroadcastBytes: Long = 64L << 20): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val queriesRaw = emb.filter(pmod(col("vec_id"), lit(queryMod)) === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("label").as("qlabel"))
-    val queries = broadcastIfMeasuredUnder(queriesRaw,
-      s"$dir|emb+label|mod=$queryMod", () => embRowBytes(queriesRaw, "qe"), maxBroadcastBytes)
-    val corpus = expansionPartitioned(emb.select(col("vec_id").as("cid"),
-      col("embedding").as("ce"), col("label").as("clabel")))
+    val (queries, corpus) = bruteSides(spark, dir, queryMod, maxBroadcastBytes, labeled = true)
     queries.join(corpus, col("qid") =!= col("cid"))
       .select(col("qid"), col("qlabel"),
         (col("qlabel") === col("clabel")).as("same"),
@@ -438,26 +458,34 @@ object Similarity extends SimilarityIndexOps {
       k: Int = 3,
       queryMod: Int = 10,
       nCentroids: Int = 16): DataFrame = {
-    val exact = bruteForceTopK(spark, dir, k, queryMod)
-      .select(col("vec_id"), col("neighbor_id"))
-      .localCheckpoint() // consumed by the query list AND the hit join
+    val exact = exactTruth(spark, dir, k, queryMod)
     // queryMod pushed INTO the cell join: the index side stays full, but
     // unsampled queries are never scored (a post-hoc filter would pay
     // the whole-corpus top-k first and discard ~90% of it)
-    val ann = ivfTopK(spark, dir, k, nCentroids, queryMod = Some(queryMod))
-      .select(col("vec_id"), col("neighbor_id"))
-    recallTail(exact, ann, k)
+    recallTail(exact, ivfTopK(spark, dir, k, nCentroids, queryMod = Some(queryMod)), k)
   }
+
+  /** The float brute-force truth every recall audit and sweep measures
+    * against: [[bruteForceTopK]]'s `(vec_id, neighbor_id)` pairs under
+    * the default broadcast bound, checkpointed because each consumer
+    * reads it twice (the query census AND the hit join).
+    */
+  private[operators] def exactTruth(
+      spark: SparkSession, dir: String, k: Int, queryMod: Int): DataFrame =
+    bruteForceTopK(spark, dir, k, queryMod)
+      .select(col("vec_id"), col("neighbor_id"))
+      .localCheckpoint()
 
   /** The recall@k measurement tail shared by every recall audit
     * ([[annRecall]] x51, [[quantizedRecall]] x91, [[pqRecall]] x105):
-    * semi-join hit count of the approximate (vec_id, neighbor_id) pairs
-    * against the exact truth, zero-hit queries restored by the left
-    * join. One definition — the audits differ only in which candidate
+    * semi-join hit count of the approximate ranking's (vec_id,
+    * neighbor_id) pairs against the exact truth, zero-hit queries
+    * restored by the left join. One definition — the audits differ only in which candidate
     * ranking they measure, never in how recall is counted.
     */
   private[operators] def recallTail(exact: DataFrame, approx: DataFrame, k: Int): DataFrame = {
-    val hits = exact.join(approx, Seq("vec_id", "neighbor_id"), "left_semi")
+    val hits = exact
+      .join(approx.select(col("vec_id"), col("neighbor_id")), Seq("vec_id", "neighbor_id"), "left_semi")
       .groupBy("vec_id").agg(count(lit(1)).as("hits"))
     exact.select("vec_id").distinct()
       .join(hits, Seq("vec_id"), "left_outer")
@@ -488,20 +516,14 @@ object Similarity extends SimilarityIndexOps {
       k: Int = 3,
       queryMod: Int = 10,
       maxBroadcastBytes: Long = 64L << 20): DataFrame = {
-    val exact = bruteForceTopK(spark, dir, k, queryMod)
-      .select(col("vec_id"), col("neighbor_id"))
-      .localCheckpoint() // consumed by the query list AND the hit join
+    val exact = exactTruth(spark, dir, k, queryMod)
     val qz = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr(
         "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 127.0 + 0.5) AS BIGINT))")
         .as("qv"))
-    val queriesRaw = qz.filter(pmod(col("vec_id"), lit(queryMod)) === 0)
-      .select(col("vec_id").as("qid"), col("qv").as("qe"))
     // distinct memo key: the int64 codes are 2× the float payload
-    val queries = broadcastIfMeasuredUnder(queriesRaw,
-      s"$dir|embq|mod=$queryMod",
-      () => { val b = embRowBytes(queriesRaw, "qe"); if (b < 0) b else b * 2 },
-      maxBroadcastBytes)
+    val queries = sampledQueries(qz, dir, "embq", queryMod, maxBroadcastBytes,
+      int64RowBytes(_, "qe"))(col("vec_id").as("qid"), col("qv").as("qe"))
     val corpus = expansionPartitioned(
       qz.select(col("vec_id").as("cid"), col("qv").as("ce")))
     // codegen'd integer dot ([[graft.functions.LongDotProductExpression]])
@@ -512,8 +534,7 @@ object Similarity extends SimilarityIndexOps {
       .join(corpus, col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
         graft.functions.DotProduct.dot_l(col("qe"), col("ce")).cast("double").as("sim"))
-    val quant = presentTopK(scored, k).select(col("vec_id"), col("neighbor_id"))
-    recallTail(exact, quant, k)
+    recallTail(exact, presentTopK(scored, k), k)
   }
 
   /** Sign-bucket LSH signature: one bit per leading dimension
@@ -570,11 +591,6 @@ object Similarity extends SimilarityIndexOps {
     ivfProbe(withCell, scoredCells, nCentroids, k, queryMod, nprobe)
   }
 
-  /** The ONE expensive IVF corpus pass of [[ivfTopK]], shared with
-    * [[annNprobeSweep]] so a sweep pays it once: the cell-labeled,
-    * cell-partitioned, materialized corpus plus the argmax expression
-    * the query side reuses for multi-probe fan-out.
-    */
   /** The per-row (score, inverted-id) cell-candidate array over an
     * embedding column — the ONE spelling of the coarse IVF geometry:
     * argmax via array_max over (score, inverted-id), ties picking the
@@ -599,14 +615,36 @@ object Similarity extends SimilarityIndexOps {
   /** The nprobe BEST probe cells of a query row as an exploded column —
     * the ONE multi-probe fan-out spelling (best first; sorting
     * ascending then reversing puts highest score, then lowest centroid
-    * id, first — the argmax tie-break).
+    * id, first — the argmax tie-break). nprobe = 1 is the argmax cell
+    * itself, with no sort.
     */
   private[operators] def probeCellsCol(
       scoredCells: Column, nCentroids: Int, nprobe: Int): Column =
-    explode(transform(
+    if (nprobe == 1) argmaxCell(scoredCells, nCentroids)
+    else explode(transform(
       slice(reverse(array_sort(scoredCells)), 1, nprobe),
       p => lit(nCentroids - 1) - p.getField("nk")))
 
+  /** The RANKED fan-out of a sweep: each query row of `qSrc` fanned out
+    * to its `maxNp` best probe cells with the probe rank `prank`
+    * (1 = best) carried, under [[probeCellsCol]]'s best-first order and
+    * tie-break. Probe sets nest, so sweep point np is the `prank <= np`
+    * slice. Rows are `(qid, <carry>, prank, cell)`, where `carry` names
+    * the query payload `carried` (the float query or its ADC table).
+    */
+  private[operators] def rankedFanOut(
+      qSrc: DataFrame, carry: String, carried: Column, scoredCells: Column,
+      nCentroids: Int, maxNp: Int): DataFrame =
+    qSrc.select(col("vec_id").as("qid"), carried.as(carry),
+      posexplode(slice(reverse(array_sort(scoredCells)), 1, maxNp)).as(Seq("pr", "pc")))
+      .select(col("qid"), col(carry), (col("pr") + 1).cast("int").as("prank"),
+        (lit(nCentroids - 1) - col("pc").getField("nk")).as("cell"))
+
+  /** The ONE expensive IVF corpus pass of [[ivfTopK]], shared with
+    * [[annNprobeSweep]] so a sweep pays it once: the cell-labeled,
+    * cell-partitioned, materialized corpus plus the argmax expression
+    * the query side reuses for multi-probe fan-out.
+    */
   private[operators] def ivfAssignment(
       spark: SparkSession, dir: String, nCentroids: Int): (DataFrame, Column) = {
     val emb = Tables.embeddings(spark, dir)
@@ -641,8 +679,7 @@ object Similarity extends SimilarityIndexOps {
     // candidate side always stays full — recall is against the whole
     // index). A candidate lives in exactly ONE cell and a query's probe
     // cells are distinct, so no (qid, cid) pair can repeat — no dedup
-    val qSrc = queryMod.fold(withCell)(m =>
-      withCell.filter(pmod(col("vec_id"), lit(m)) === 0))
+    val qSrc = queryMod.fold(withCell)(sampled(withCell, _))
     // the query's top-nprobe cells, best first (multi-probe IVF — the
     // recall/cost knob: each query searches its nprobe nearest cells,
     // candidates stay indexed under their single argmax cell, so the
@@ -758,58 +795,83 @@ object Similarity extends SimilarityIndexOps {
     require(nprobes.distinct.size == nprobes.size,
       s"nprobes (${nprobes.mkString(",")}) contains duplicates")
     import spark.implicits._
-    val exact = bruteForceTopK(spark, dir, k, queryMod)
-      .select(col("vec_id"), col("neighbor_id"))
-      .localCheckpoint() // the one expensive truth leg, shared by every sweep point
+    val exact = exactTruth(spark, dir, k, queryMod) // shared by every sweep point
     // the cell assignment is the OTHER shared expensive pass: built once
     // here, each sweep point varies only the query-side probe fan-out
     val (withCell, scoredCells) = ivfAssignment(spark, dir, nCentroids)
     // r18 (guide §2.4, one pass instead of |nprobes|): probe sets NEST,
     // so the whole sweep is served by ONE fan-out at the widest nprobe
-    // with the probe RANK carried (x182's fan-out discipline — same
-    // best-first tie-break as probeCellsCol), ONE cell-join scoring
-    // pass, and ONE bounded TopK aggregation keyed by (np, qid): each
-    // scored pair is dealt row-locally to every sweep point with
-    // np >= its probe rank. The previous per-point union re-ran the
+    // with the probe RANK carried (rankedFanOut), ONE cell-join scoring
+    // pass, and ONE bounded TopK aggregation keyed by (np, qid)
+    // (topKByPoint). The previous per-point union re-ran the
     // corpus-expansion join and its exchanges |nprobes| times (4 probe
     // joins + 4 TopK shuffles + 4 recall joins -> 1 + 1 + 1); the
     // per-point top-k sets are unchanged because the prank <= np slice
     // IS that point's candidate set, scored by the same dot.
     val maxNp = nprobes.max
-    val qSrc = withCell.filter(pmod(col("vec_id"), lit(queryMod)) === 0)
+    val qSrc = sampled(withCell, queryMod)
     val qFan =
       if (maxNp == 1)
         qSrc.select(col("vec_id").as("qid"), col("embedding").as("qe"),
           lit(1).as("prank"), col("cell"))
-      else
-        qSrc.select(col("vec_id").as("qid"), col("embedding").as("qe"),
-          posexplode(slice(reverse(array_sort(scoredCells)), 1, maxNp)).as(Seq("pr", "pc")))
-          .select(col("qid"), col("qe"), (col("pr") + 1).cast("int").as("prank"),
-            (lit(nCentroids - 1) - col("pc").getField("nk")).as("cell"))
+      else rankedFanOut(qSrc, "qe", col("embedding"), scoredCells, nCentroids, maxNp)
     val idx = withCell.select(col("cell"), col("vec_id").as("cid"), col("embedding").as("ce"))
     val scoredAll = qFan.join(idx, Seq("cell")).filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"), col("prank"), dot(col("qe"), col("ce")).as("sim"))
+    withPointRecall(nprobes.toDF("np"), Seq("np"), topKByPoint(scoredAll, nprobes, k), exact)
+      .select(col("np").as("nprobe"), col("n_queries"), pointHits.as("n_hits"),
+        recall4(pointHits, k).as("recall4"))
+      .orderBy("nprobe")
+  }
+
+  /** Deal a row to every sweep point whose width covers its `rank` —
+    * the nesting law every sweep folds by: point p sees exactly the rows
+    * of rank ≤ p.
+    */
+  private[operators] def dealToPoints(points: Seq[Int], rank: String, as: String): Column =
+    explode(filter(typedlit(points), p => p >= col(rank))).as(as)
+
+  /** The per-point top-k of a probe sweep over `(qid, cid, prank, sim)`
+    * pairs scored once at the widest probe width: each pair dealt to
+    * every point covering its probe rank ([[dealToPoints]]), then ONE
+    * bounded TopK aggregation keyed by (np, qid) folds all points
+    * map-side. Rows are `(np, vec_id, neighbor_id)`.
+    */
+  private[operators] def topKByPoint(scored: DataFrame, points: Seq[Int], k: Int): DataFrame = {
     val topkAgg = graft.functions.TopK.topk(k)
-    val byNp = scoredAll
-      .select(col("qid"), col("sim"), col("cid"),
-        explode(filter(typedlit(nprobes), n => n >= col("prank"))).as("np"))
+    scored
+      .select(col("qid"), col("sim"), col("cid"), dealToPoints(points, "prank", "np"))
       .groupBy(col("np"), col("qid"))
       .agg(topkAgg(col("sim"), col("cid")).as("nb"))
       .select(col("np"), col("qid").as("vec_id"), explode(col("nb.entries")).as("e"))
       .select(col("np"), col("vec_id"), col("e.cid").as("neighbor_id"))
-    val hitsByNp = byNp.join(exact, Seq("vec_id", "neighbor_id"), "left_semi")
-      .groupBy("np").agg(count(lit(1)).as("n_hits"))
+  }
+
+  /** The per-point recall fold of every sweep — [[recallTail]]'s algebra
+    * aggregated: each point's `approx` pairs `(keys…, vec_id,
+    * neighbor_id)` semi-joined to the `exact` truth and counted by point
+    * (`n_hits`), and the distinct-query census `n_queries` as a 1-row
+    * broadcast. `points` is the grid, already joined to the cost columns
+    * reported before the hits; `after` joins those reported after them.
+    * Callers project [[pointHits]] and [[recall4]].
+    */
+  private[operators] def withPointRecall(
+      points: DataFrame, keys: Seq[String], approx: DataFrame, exact: DataFrame,
+      after: DataFrame => DataFrame = identity): DataFrame = {
+    val hits = approx.join(exact, Seq("vec_id", "neighbor_id"), "left_semi")
+      .groupBy(keys.map(col): _*).agg(count(lit(1)).as("n_hits"))
     val nQueries = exact.select("vec_id").distinct()
       .agg(count(lit(1)).as("n_queries"))
-    nprobes.toDF("np")
-      .join(hitsByNp, Seq("np"), "left")
+    after(points.join(hits, keys, "left"))
       .crossJoin(broadcast(nQueries)) // 1-row totals join
-      .select(col("np").as("nprobe"), col("n_queries"),
-        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-        round(coalesce(col("n_hits"), lit(0L)).cast("double") / (col("n_queries") * k), 4)
-          .as("recall4"))
-      .orderBy("nprobe")
   }
+
+  /** A sweep point's hit mass off [[withPointRecall]] (zero if nothing hit). */
+  private[operators] def pointHits: Column = coalesce(col("n_hits"), lit(0L))
+
+  /** Mean recall@k of a sweep point: one IEEE division, rounded to 4 dp. */
+  private[operators] def recall4(hits: Column, k: Int): Column =
+    round(hits.cast("double") / (col("n_queries") * k), 4)
 
   /** EXT-S4 — int8 embedding quantization: `q_i = floor(127·x_i + 0.5)`
     * (explicit half-up — spelled as floor so no engine rounding-mode
@@ -1053,40 +1115,6 @@ object Similarity extends SimilarityIndexOps {
       .orderBy("cid")
   }
 
-  /** EXT-S32 (`x180_cluster_separation`) — cluster SEPARATION audit
-    * over the trained cells: per vector the int8-lattice assignment
-    * OBJECTIVE of its own cell minus the best other cell's — the exact
-    * integer `2·qv·c8 − ‖c8‖²` per centroid, the lattice twin of the
-    * float argmax's `x·c − ‖c‖²/2` — folded per cell to population,
-    * margin mass, mean margin, and the misfit share (vectors the int8
-    * L2-argmax assigns to a DIFFERENT cell than the float argmax). x57
-    * measures cluster TIGHTNESS (own-centroid cosine), x114 flags
-    * within-cell outliers; this measures BETWEEN-cell separation — the
-    * "are these clusters real" go/no-go read before trusting any
-    * cell-scoped consumer (x54's dedup scope, x100's packing cells,
-    * x144's drift cells, x162's label census). A cell with a high
-    * misfit share or near-zero mean margin is two topics fused (or one
-    * split): retrain with a different k before shipping its artifacts.
-    * Dead cells surface as zero rows (x172's absence-is-the-finding
-    * rule).
-    *
-    * Exactness: assignment rides the FLOAT trained-centroid argmax —
-    * the ONE x54/x57 parity spelling ([[cellColumn]]) — while margins
-    * are exact BIGINTs on the int8 lattice (vectors AND centroids
-    * quantized, x114's device), so the per-cell sums are order-free
-    * and the two ratios are single IEEE divisions. Margins are scored
-    * on the SAME objective the assignment maximizes (`2·qv·c8 − ‖c8‖²`
-    * — for trained centroids with unequal norms a plain dot would rank
-    * cells by centroid norm, not proximity, and a "misfit" could be
-    * the omitted norm term rather than quantization disagreement — the
-    * r15 advisory). A negative margin is therefore a REAL boundary
-    * case: the int8 L2-argmax disagrees with the float assignment —
-    * exactly the vectors a quantized router mis-routes first.
-    *
-    * Scale: one row-local projection (2k centroid literals — k float
-    * for assignment, k int8 for margins), one |k|-bounded fold, a
-    * k-row frame join. Nothing data-sized shuffles.
-    */
   /** The row-local margin projection behind [[clusterSeparation]] —
     * over ANY `(vec_id, ed: array<double>)` relation, batch or
     * unbounded stream: per vector its float-argmax cell, its exact
@@ -1127,6 +1155,40 @@ object Similarity extends SimilarityIndexOps {
       .withColumn("misfit", col("margin") < 0L)
   }
 
+  /** EXT-S32 (`x180_cluster_separation`) — cluster SEPARATION audit
+    * over the trained cells: per vector the int8-lattice assignment
+    * OBJECTIVE of its own cell minus the best other cell's — the exact
+    * integer `2·qv·c8 − ‖c8‖²` per centroid, the lattice twin of the
+    * float argmax's `x·c − ‖c‖²/2` — folded per cell to population,
+    * margin mass, mean margin, and the misfit share (vectors the int8
+    * L2-argmax assigns to a DIFFERENT cell than the float argmax). x57
+    * measures cluster TIGHTNESS (own-centroid cosine), x114 flags
+    * within-cell outliers; this measures BETWEEN-cell separation — the
+    * "are these clusters real" go/no-go read before trusting any
+    * cell-scoped consumer (x54's dedup scope, x100's packing cells,
+    * x144's drift cells, x162's label census). A cell with a high
+    * misfit share or near-zero mean margin is two topics fused (or one
+    * split): retrain with a different k before shipping its artifacts.
+    * Dead cells surface as zero rows (x172's absence-is-the-finding
+    * rule).
+    *
+    * Exactness: assignment rides the FLOAT trained-centroid argmax —
+    * the ONE x54/x57 parity spelling ([[cellColumn]]) — while margins
+    * are exact BIGINTs on the int8 lattice (vectors AND centroids
+    * quantized, x114's device), so the per-cell sums are order-free
+    * and the two ratios are single IEEE divisions. Margins are scored
+    * on the SAME objective the assignment maximizes (`2·qv·c8 − ‖c8‖²`
+    * — for trained centroids with unequal norms a plain dot would rank
+    * cells by centroid norm, not proximity, and a "misfit" could be
+    * the omitted norm term rather than quantization disagreement — the
+    * r15 advisory). A negative margin is therefore a REAL boundary
+    * case: the int8 L2-argmax disagrees with the float assignment —
+    * exactly the vectors a quantized router mis-routes first.
+    *
+    * Scale: one row-local projection (2k centroid literals — k float
+    * for assignment, k int8 for margins), one |k|-bounded fold, a
+    * k-row frame join. Nothing data-sized shuffles.
+    */
   def clusterSeparation(
       spark: SparkSession, dir: String, k: Int = 8, iters: Int = 2,
       exactMeans: Boolean = false): DataFrame = {
@@ -1254,8 +1316,8 @@ object Similarity extends SimilarityIndexOps {
     * (v1, v2, sim) pair relation consumers contract over
     * ([[graft.operators.Curation.semanticClusters]]) without inheriting
     * a sort exchange they immediately destroy.
-    */
-  /** The candidate join is SALTED: `bits=2` means FOUR distinct join
+    *
+    * The candidate join is SALTED: `bits=2` means FOUR distinct join
     * keys, so the pair expansion's parallelism is capped at 4 tasks no
     * matter the cluster — measured at the 10× slice (60k vectors,
     * ~450M candidate pairs): 59 s/run at 4-way vs the machine's 32
@@ -1289,31 +1351,6 @@ object Similarity extends SimilarityIndexOps {
       .filter(col("sim") >= threshold)
   }
 
-  /** EXT-S11 — embedding-space drift between two corpus snapshots (even
-    * vec_ids = A, odd = B, the same parity convention as the token-drift
-    * monitor [[Curation.tokenDrift]]): per-dimension shift of the mean
-    * embedding, computed in EXACT integer arithmetic over the int8
-    * quantization (`floor(127·x + 0.5)` — [[quantize]]'s formula, the
-    * form a serving index stores anyway). `mean_a − mean_b =
-    * (sum_a·n_b − sum_b·n_a) / (n_a·n_b)` — integer numerator and
-    * denominator, ONE IEEE division per dimension — so the oracle
-    * reproduces it bit-for-bit (an FP mean would be summation-order-
-    * sensitive). The embedding twin of the distribution-shift check a
-    * pipeline runs between crawls: a new scrape or encoder version that
-    * moves the corpus centroid shows up as per-dimension shift before
-    * any downstream metric degrades.
-    *
-    * Scale: one narrow explode (n·dim rows) into a `dim`-keyed partial
-    * agg — map-side combine collapses each partition to `dim` rows
-    * before the only shuffle; output is `dim` rows total. The integer
-    * products bound: `sum·n` fits BIGINT up to ~8·10⁸ vectors per side
-    * (127·n·n ≤ 2⁶³); beyond that, DECIMAL(38,0) numerators — the
-    * shape is unchanged (same note as [[Curation.tokenDrift]]).
-    *
-    * Output: (dim 1-based, n_a, n_b, sum_a, sum_b, shift_numer,
-    * q_shift = numer/(n_a·n_b) in quantized units; divide by 127 for
-    * original units).
-    */
   /** EXT-S17 (x94) — embedding dimension-health audit: per-dimension
     * value-distribution facts (counts of zero/positive/negative, exact
     * float min/max, and the dead-dimension verdict min == max). Dead or
@@ -1396,6 +1433,31 @@ object Similarity extends SimilarityIndexOps {
       .limit(topN)
   }
 
+  /** EXT-S11 — embedding-space drift between two corpus snapshots (even
+    * vec_ids = A, odd = B, the same parity convention as the token-drift
+    * monitor [[Curation.tokenDrift]]): per-dimension shift of the mean
+    * embedding, computed in EXACT integer arithmetic over the int8
+    * quantization (`floor(127·x + 0.5)` — [[quantize]]'s formula, the
+    * form a serving index stores anyway). `mean_a − mean_b =
+    * (sum_a·n_b − sum_b·n_a) / (n_a·n_b)` — integer numerator and
+    * denominator, ONE IEEE division per dimension — so the oracle
+    * reproduces it bit-for-bit (an FP mean would be summation-order-
+    * sensitive). The embedding twin of the distribution-shift check a
+    * pipeline runs between crawls: a new scrape or encoder version that
+    * moves the corpus centroid shows up as per-dimension shift before
+    * any downstream metric degrades.
+    *
+    * Scale: one narrow explode (n·dim rows) into a `dim`-keyed partial
+    * agg — map-side combine collapses each partition to `dim` rows
+    * before the only shuffle; output is `dim` rows total. The integer
+    * products bound: `sum·n` fits BIGINT up to ~8·10⁸ vectors per side
+    * (127·n·n ≤ 2⁶³); beyond that, DECIMAL(38,0) numerators — the
+    * shape is unchanged (same note as [[Curation.tokenDrift]]).
+    *
+    * Output: (dim 1-based, n_a, n_b, sum_a, sum_b, shift_numer,
+    * q_shift = numer/(n_a·n_b) in quantized units; divide by 127 for
+    * original units).
+    */
   def embeddingDrift(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .select((col("vec_id") % 2).as("parity"),
@@ -1430,6 +1492,78 @@ object Similarity extends SimilarityIndexOps {
         (col("pos") + 1).cast("int").as("rank"))
   }
 
+  /** Shared leg construction for the retrieval family ([[rankFusion]],
+    * [[retrieverAgreement]], and whatever retrieval audit lands next):
+    * the SCORED `(qid, cid, sim)` relations for the lexical leg
+    * (distinct-3-shingle overlap via the inverted-index equi-join —
+    * never all pairs) and the dense leg (the x5 measured-guard
+    * broadcast cosine). Callers truncate with [[rankedTopK]] at their
+    * own k — truncation is the only thing the two consumers disagree
+    * on, so it stays out of the builder. The lexical `sim` is the exact
+    * integer overlap riding a Double losslessly (≤ 2^53).
+    */
+  private def retrievalLegs(
+      spark: SparkSession,
+      dir: String,
+      queryMod: Int,
+      maxBroadcastBytes: Long): (DataFrame, DataFrame) = {
+    val sh = Tables.documents(spark, dir)
+      .select(col("doc_id"),
+        explode(Tables.shingles(Tables.tokens(col("text")))).as("shingle"))
+    val qSh = sh.filter(pmod(col("doc_id"), lit(queryMod)) === 0)
+      .select(col("doc_id").as("qid"), col("shingle"))
+    val cSh = sh.select(col("doc_id").as("cid"), col("shingle"))
+    val lexScored = qSh.join(cSh, Seq("shingle"))
+      .filter(col("qid") =!= col("cid"))
+      .groupBy("qid", "cid")
+      .agg(count(lit(1)).cast("double").as("sim"))
+    (lexScored, bruteScored(spark, dir, queryMod, maxBroadcastBytes))
+  }
+
+  /** EXT-S18 (x103) — retriever-agreement audit: per query, how much the
+    * lexical top-k (3-shingle overlap) and the dense top-k (cosine)
+    * AGREE — `n_common` and `overlap_frac = n_common / k`. This is the
+    * diagnostic that justifies (or retires) x79's fusion: high agreement
+    * means one retriever is redundant and fusion buys nothing; low
+    * agreement means the two see different relevance and RRF has
+    * something to combine. Run it before tuning fusion weights — the
+    * overlap distribution is the evidence.
+    *
+    * Same leg construction as [[rankFusion]] (the inverted-index lexical
+    * leg and the measured-guard dense leg), truncated at k instead of
+    * kLeg; the agreement join is over two ≤ |queries|·k relations, so
+    * everything after the legs is bounded by construction. A query with
+    * no lexical candidates (nothing shares a shingle) reports n_lex = 0
+    * honestly — dense always retrieves, which is itself the signal.
+    */
+  def retrieverAgreement(
+      spark: SparkSession,
+      dir: String,
+      k: Int = 5,
+      queryMod: Int = 10,
+      maxBroadcastBytes: Long = 64L << 20): DataFrame = {
+    val (lexScored, vecScored) =
+      retrievalLegs(spark, dir, queryMod, maxBroadcastBytes)
+    // r19 (guide §2.6): the two legs are INDEPENDENT relations — their
+    // checkpoints ran back to back on the driver, leaving the cluster
+    // idle through each leg's tail. Materialize them concurrently; two
+    // consumers each, as before.
+    val (lex, vec) = Par.bothDF(
+      rankedTopK(lexScored, k).localCheckpoint(),
+      rankedTopK(vecScored, k).localCheckpoint())
+    val lexN = lex.groupBy("qid").agg(count(lit(1)).as("n_lex"))
+    val vecN = vec.groupBy("qid").agg(count(lit(1)).as("n_vec"))
+    val common = lex.join(vec, Seq("qid", "cid"))
+      .groupBy("qid").agg(count(lit(1)).as("n_common"))
+    vecN.join(lexN, Seq("qid"), "left_outer")
+      .join(common, Seq("qid"), "left_outer")
+      .select(col("qid").as("query_id"),
+        coalesce(col("n_lex"), lit(0L)).as("n_lex"), col("n_vec"),
+        coalesce(col("n_common"), lit(0L)).as("n_common"),
+        (coalesce(col("n_common"), lit(0L)).cast("double") / k).as("overlap_frac"))
+      .orderBy("query_id")
+  }
+
   /** EXT-S14 — reciprocal-rank fusion of a lexical and a vector ranking
     * (hybrid retrieval; RRF per Cormack et al., SIGIR 2009). For each
     * query document (`doc_id % queryMod == 0`): the top-`kLeg` corpus
@@ -1461,87 +1595,6 @@ object Similarity extends SimilarityIndexOps {
     * break to the lower cid, mirrored by the oracle's `row_number`
     * spelling.
     */
-  /** EXT-S18 (x103) — retriever-agreement audit: per query, how much the
-    * lexical top-k (3-shingle overlap) and the dense top-k (cosine)
-    * AGREE — `n_common` and `overlap_frac = n_common / k`. This is the
-    * diagnostic that justifies (or retires) x79's fusion: high agreement
-    * means one retriever is redundant and fusion buys nothing; low
-    * agreement means the two see different relevance and RRF has
-    * something to combine. Run it before tuning fusion weights — the
-    * overlap distribution is the evidence.
-    *
-    * Same leg construction as [[rankFusion]] (the inverted-index lexical
-    * leg and the measured-guard dense leg), truncated at k instead of
-    * kLeg; the agreement join is over two ≤ |queries|·k relations, so
-    * everything after the legs is bounded by construction. A query with
-    * no lexical candidates (nothing shares a shingle) reports n_lex = 0
-    * honestly — dense always retrieves, which is itself the signal.
-    */
-  /** Shared leg construction for the retrieval family ([[rankFusion]],
-    * [[retrieverAgreement]], and whatever retrieval audit lands next):
-    * the SCORED `(qid, cid, sim)` relations for the lexical leg
-    * (distinct-3-shingle overlap via the inverted-index equi-join —
-    * never all pairs) and the dense leg (the x5 measured-guard
-    * broadcast cosine). Callers truncate with [[rankedTopK]] at their
-    * own k — truncation is the only thing the two consumers disagree
-    * on, so it stays out of the builder. The lexical `sim` is the exact
-    * integer overlap riding a Double losslessly (≤ 2^53).
-    */
-  private def retrievalLegs(
-      spark: SparkSession,
-      dir: String,
-      queryMod: Int,
-      maxBroadcastBytes: Long): (DataFrame, DataFrame) = {
-    val sh = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        explode(Tables.shingles(Tables.tokens(col("text")))).as("shingle"))
-    val qSh = sh.filter(pmod(col("doc_id"), lit(queryMod)) === 0)
-      .select(col("doc_id").as("qid"), col("shingle"))
-    val cSh = sh.select(col("doc_id").as("cid"), col("shingle"))
-    val lexScored = qSh.join(cSh, Seq("shingle"))
-      .filter(col("qid") =!= col("cid"))
-      .groupBy("qid", "cid")
-      .agg(count(lit(1)).cast("double").as("sim"))
-    val emb = Tables.embeddings(spark, dir)
-    val queriesRaw = emb.filter(pmod(col("vec_id"), lit(queryMod)) === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val queries = broadcastIfMeasuredUnder(queriesRaw,
-      s"$dir|emb|mod=$queryMod", () => embRowBytes(queriesRaw, "qe"), maxBroadcastBytes)
-    val corpus = expansionPartitioned(
-      emb.select(col("vec_id").as("cid"), col("embedding").as("ce")))
-    val vecScored = queries.join(corpus, col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), dot(col("qe"), col("ce")).as("sim"))
-    (lexScored, vecScored)
-  }
-
-  def retrieverAgreement(
-      spark: SparkSession,
-      dir: String,
-      k: Int = 5,
-      queryMod: Int = 10,
-      maxBroadcastBytes: Long = 64L << 20): DataFrame = {
-    val (lexScored, vecScored) =
-      retrievalLegs(spark, dir, queryMod, maxBroadcastBytes)
-    // r19 (guide §2.6): the two legs are INDEPENDENT relations — their
-    // checkpoints ran back to back on the driver, leaving the cluster
-    // idle through each leg's tail. Materialize them concurrently; two
-    // consumers each, as before.
-    val (lex, vec) = Par.bothDF(
-      rankedTopK(lexScored, k).localCheckpoint(),
-      rankedTopK(vecScored, k).localCheckpoint())
-    val lexN = lex.groupBy("qid").agg(count(lit(1)).as("n_lex"))
-    val vecN = vec.groupBy("qid").agg(count(lit(1)).as("n_vec"))
-    val common = lex.join(vec, Seq("qid", "cid"))
-      .groupBy("qid").agg(count(lit(1)).as("n_common"))
-    vecN.join(lexN, Seq("qid"), "left_outer")
-      .join(common, Seq("qid"), "left_outer")
-      .select(col("qid").as("query_id"),
-        coalesce(col("n_lex"), lit(0L)).as("n_lex"), col("n_vec"),
-        coalesce(col("n_common"), lit(0L)).as("n_common"),
-        (coalesce(col("n_common"), lit(0L)).cast("double") / k).as("overlap_frac"))
-      .orderBy("query_id")
-  }
-
   def rankFusion(
       spark: SparkSession,
       dir: String,
@@ -1609,8 +1662,6 @@ object Similarity extends SimilarityIndexOps {
       queryMod: Int = 10,
       dim: Int = 64,
       maxBroadcastBytes: Long = 64L << 20): DataFrame = {
-    val loBits = math.min(32, dim)
-    val hiBits = math.max(0, dim - 32)
     val emb = Tables.embeddings(spark, dir)
     // localCheckpoint (lazy) is a MATERIALIZATION BARRIER, not a cache
     // nicety: without it Catalyst inlines the two 32-`when` pack folds
@@ -1621,14 +1672,9 @@ object Similarity extends SimilarityIndexOps {
     // materialized relation is the 16-byte-per-vector signature table —
     // at 100 TB of vectors ~1.6 TB across the cluster, the same narrow
     // artifact a production binary index persists anyway.
-    val sigs = emb.select(col("vec_id"),
-      packSignBits(col("embedding"), 0, loBits).as("lo"),
-      (if (hiBits > 0) packSignBits(col("embedding"), 32, hiBits) else lit(0L)).as("hi"))
-      .localCheckpoint(false)
-    val qRaw = sigs.filter(pmod(col("vec_id"), lit(queryMod)) === 0)
-      .select(col("vec_id").as("qid"), col("lo").as("qlo"), col("hi").as("qhi"))
-    val queries = broadcastIfMeasuredUnder(qRaw,
-      s"$dir|sig|mod=$queryMod", () => 3L * 8 + 64, maxBroadcastBytes)
+    val sigs = signSignatureProjection(emb, dim).localCheckpoint(false)
+    val queries = sampledQueries(sigs, dir, "sig", queryMod, maxBroadcastBytes,
+      _ => 3L * 8 + 64)(col("vec_id").as("qid"), col("lo").as("qlo"), col("hi").as("qhi"))
     val corpus = expansionPartitioned(
       sigs.select(col("vec_id").as("cid"), col("lo"), col("hi")))
     val ham = queries.join(corpus, col("qid") =!= col("cid"))

@@ -42,7 +42,7 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     // mis-partition cells relative to every probe
     ivfCellProjection(Tables.embeddings(spark, dir), cents)
       .write.mode("overwrite").partitionBy("cell").parquet(s"$indexPath/cells")
-    writeIvfCentroids(spark, indexPath, cents, nCentroids)
+    writeIvfCentroids(spark, indexPath, cents)
   }
 
   /** EXT-6ar's init half — stamp the float-IVF index's coarse geometry
@@ -56,17 +56,19 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       dir: String,
       indexPath: String,
       nCentroids: Int = 16): Unit =
-    writeIvfCentroids(spark, indexPath,
-      ivfSeedCentroids(spark, dir, nCentroids), nCentroids)
+    writeIvfCentroids(spark, indexPath, ivfSeedCentroids(spark, dir, nCentroids))
 
+  /** The coarse-centroid sidecar of every IVF-family index: `centroids/`
+    * stamped with `n_centroids` = the table's row count, the stamp every
+    * probe validates ([[loadCoarseCentroids]]).
+    */
   private def writeIvfCentroids(
       spark: SparkSession,
       indexPath: String,
-      cents: Seq[(Int, Seq[Float])],
-      nCentroids: Int): Unit = {
+      cents: Seq[(Int, Seq[Float])]): Unit = {
     import spark.implicits._
     cents.toDF("cid", "embedding")
-      .withColumn("n_centroids", lit(nCentroids))
+      .withColumn("n_centroids", lit(cents.length))
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$indexPath/centroids")
   }
@@ -232,10 +234,8 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       queries: DataFrame, scoredCells: Column,
       nCentroids: Int, nprobe: Int): Seq[Int] = {
     import queries.sparkSession.implicits._
-    val cellsOnly =
-      if (nprobe == 1) queries.select(argmaxCell(scoredCells, nCentroids).as("cell"))
-      else queries.select(probeCellsCol(scoredCells, nCentroids, nprobe).as("cell"))
-    cellsOnly.distinct().as[Int].collect().toSeq
+    queries.select(probeCellsCol(scoredCells, nCentroids, nprobe).as("cell"))
+      .distinct().as[Int].collect().toSeq
   }
 
   /** EXT-S13 probe path: top-k cosine neighbors for an arbitrary
@@ -301,13 +301,8 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     // query. The spread moves only the narrow query rows; identity once
     // the batch arrives with ≥ parallelism partitions.
     val qSpread = expansionPartitioned(queries)
-    val q =
-      if (nprobe == 1)
-        qSpread.select(col("vec_id").as("qid"), col("embedding").as("qe"),
-          argmaxCell(scoredCells, nCentroids).as("cell"))
-      else
-        qSpread.select(col("vec_id").as("qid"), col("embedding").as("qe"),
-          probeCellsCol(scoredCells, nCentroids, nprobe).as("cell"))
+    val q = qSpread.select(col("vec_id").as("qid"), col("embedding").as("qe"),
+      probeCellsCol(scoredCells, nCentroids, nprobe).as("cell"))
     val cells = distinctProbeCells(queries, scoredCells, nCentroids, nprobe)
     val idxPruned = cellRows.filter(col("cell").isin(cells.map(Int.box): _*))
     // expansionPartitioned on the streamed index side: a freshly-written
@@ -345,8 +340,7 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       dim: Int = 64): Unit = {
     signSignatureProjection(Tables.embeddings(spark, dir), dim)
       .write.mode("overwrite").parquet(s"$indexPath/signatures")
-    spark.range(1).select(lit(dim).as("dim"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/meta")
+    initSignIndex(spark, indexPath, dim)
   }
 
   /** EXT-6aq's init half — stamp the sign index's layout (`meta/` with
@@ -437,11 +431,8 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       dedupReplays: Boolean): DataFrame = {
     val dim = loadSignDim(spark, sidecarPath)
     requireUniformDim(queries, dim, "packed dim")
-    val loBits = math.min(32, dim)
-    val hiBits = math.max(0, dim - 32)
-    val qRaw = queries.select(col("vec_id").as("qid"),
-      packSignBits(col("embedding"), 0, loBits).as("qlo"),
-      (if (hiBits > 0) packSignBits(col("embedding"), 32, hiBits) else lit(0L)).as("qhi"))
+    val qRaw = signSignatureProjection(queries, dim)
+      .select(col("vec_id").as("qid"), col("lo").as("qlo"), col("hi").as("qhi"))
     val qSig = broadcastIfMeasuredNow(qRaw, () => 3L * 8 + 64, maxBroadcastBytes)
     val sigProjected = sigRows.select(col("vec_id").as("cid"), col("lo"), col("hi"))
     val idx = expansionPartitioned(
@@ -856,12 +847,8 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     val layout = new PqLayout(spark, dir, m, ksub, iters, opq)
     val codes = pqAssign(layout.corpus, layout.cb, layout.dsub)
       .select(col("vec_id").as("cid"), col("codes"))
-    val queriesRaw = layout.corpus.filter(pmod(col("vec_id"), lit(queryMod)) === 0)
-      .select(col("vec_id").as("qid"), col("qv").as("qe"))
-    val queries = broadcastIfMeasuredUnder(queriesRaw,
-      s"$dir|${if (opq) "pqopqq" else "pqq"}|mod=$queryMod",
-      () => { val b = embRowBytes(queriesRaw, "qe"); if (b < 0) b else b * 2 },
-      maxBroadcastBytes)
+    val queries = sampledQueries(layout.corpus, dir, if (opq) "pqopqq" else "pqq", queryMod,
+      maxBroadcastBytes, int64RowBytes(_, "qe"))(col("vec_id").as("qid"), col("qv").as("qe"))
     adcTopK(queries, codes, layout.cb, layout.dsub, k)
   }
 
@@ -887,12 +874,8 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       maxBroadcastBytes: Long = 64L << 20,
       iters: Int = 2,
       opq: Boolean = false): DataFrame = {
-    val exact = bruteForceTopK(spark, dir, k, queryMod)
-      .select(col("vec_id"), col("neighbor_id"))
-      .localCheckpoint() // consumed by the query list AND the hit join
-    val approx = pqTopK(spark, dir, k, queryMod, m, ksub, maxBroadcastBytes, iters, opq)
-      .select(col("vec_id"), col("neighbor_id"))
-    recallTail(exact, approx, k)
+    val exact = exactTruth(spark, dir, k, queryMod)
+    recallTail(exact, pqTopK(spark, dir, k, queryMod, m, ksub, maxBroadcastBytes, iters, opq), k)
   }
 
   /** EXT-S31 (x176) — IVF-PQ composite serving (the FAISS "IVFADC"
@@ -938,7 +921,7 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     // query side: sample FIRST (unprobed corpus rows never pay the
     // nprobe-cell sort), keep full int8 precision (asymmetric ADC), fan
     // out to the nprobe best cells under the ivfProbe tie-break
-    val q = withCell.filter(pmod(col("vec_id"), lit(queryMod)) === 0)
+    val q = sampled(withCell, queryMod)
       .select(col("vec_id").as("qid"),
         adcTableCol(layout.int8(col("embedding")), layout.cb, layout.dsub).as("dtab"),
         (if (nprobe == 1) col("cell")
@@ -1028,10 +1011,7 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       dsub: Int,
       cents: Seq[(Int, Seq[Float])] = Nil): Unit = {
     import spark.implicits._
-    if (cents.nonEmpty)
-      cents.toDF("cid", "embedding")
-        .withColumn("n_centroids", lit(cents.length))
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/centroids")
+    if (cents.nonEmpty) writeIvfCentroids(spark, indexPath, cents)
     val rows = for {
       s <- cb.indices; c <- cb(s).indices; d <- cb(s)(c).indices
     } yield (s, c, d, cb(s)(c)(d))
@@ -1091,9 +1071,7 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       .select(col("vec_id").as("qid"),
         perm.fold(int8Quantize(col("embedding")))(p =>
           permutedVec(int8Quantize(col("embedding")), p)).as("qe"))
-    val q = broadcastIfMeasuredNow(qRaw,
-      () => { val b = embRowBytes(qRaw, "qe"); if (b < 0) b else b * 2 },
-      maxBroadcastBytes)
+    val q = broadcastIfMeasuredNow(qRaw, () => int64RowBytes(qRaw, "qe"), maxBroadcastBytes)
     val codes = spark.read.parquet(s"$indexPath/codes")
       .select(col("vec_id").as("cid"), col("codes"))
     adcTopK(q, codes, cb, dsub, k)
@@ -1120,12 +1098,9 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       m: Int = 8,
       ksub: Int = 16,
       iters: Int = 2): DataFrame = {
-    val exact = bruteForceTopK(spark, dir, k, queryMod)
-      .select(col("vec_id"), col("neighbor_id"))
-      .localCheckpoint() // consumed by the query list AND the hit join
-    val approx = ivfPqTopK(spark, dir, k, nCentroids, queryMod, nprobe, m, ksub, iters)
-      .select(col("vec_id"), col("neighbor_id"))
-    recallTail(exact, approx, k)
+    val exact = exactTruth(spark, dir, k, queryMod)
+    recallTail(exact,
+      ivfPqTopK(spark, dir, k, nCentroids, queryMod, nprobe, m, ksub, iters), k)
   }
 
   /** EXT-S34 (`x186_ivfpq_refined`) — the IVF-PQ composite with an
@@ -1293,10 +1268,7 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       require(m >= 1 && ksub >= 1, s"degenerate geometry ($nc, $m, $ksub)")
     }
     import spark.implicits._
-    // the one float brute truth leg, shared by every sweep cell
-    val exact = bruteForceTopK(spark, dir, k, queryMod)
-      .select(col("vec_id"), col("neighbor_id"))
-      .localCheckpoint()
+    val exact = exactTruth(spark, dir, k, queryMod) // shared by every sweep cell
     // one coarse assignment per DISTINCT nCentroids in the grid
     val assignments = scala.collection.mutable.Map.empty[Int, (DataFrame, Column)]
     def assignment(nc: Int): (DataFrame, Column) =
@@ -1310,36 +1282,18 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       // replaces the per-point re-expansion — the coded-corpus join, the
       // m-lookup ADC scoring, and the bounded TopK exchange each ran
       // |nprobes| times over nested candidate sets (the prank <= np
-      // slices); now each pair is scored once and dealt row-locally to
-      // every point with np >= its probe rank, and ONE TopK aggregation
-      // keyed by (np, qid) folds all sweep points map-side. Top-k sets
-      // per point are unchanged: the np slice of the deal IS the
-      // prank <= np candidate set under the same sim and tie-break.
-      val topkAgg = graft.functions.TopK.topk(k)
-      val byNp = scoredAll
-        .select(col("qid"), col("sim"), col("cid"), dealToPoints(nprobes, "prank", "np"))
-        .groupBy(col("np"), col("qid"))
-        .agg(topkAgg(col("sim"), col("cid")).as("nb"))
-        .select(col("np"), col("qid").as("vec_id"), explode(col("nb.entries")).as("e"))
-        .select(col("np"), col("vec_id"), col("e.cid").as("neighbor_id"))
-      // recall hits for every point in one semi-join + one fold (the
-      // recallTail algebra aggregated: n_hits = |approx ∩ exact| pairs,
-      // n_queries = |distinct exact queries| — identical by uniqueness
-      // of both pair relations on (vec_id, neighbor_id) within a point)
-      val hitsByNp = byNp.join(exact, Seq("vec_id", "neighbor_id"), "left_semi")
-        .groupBy("np").agg(count(lit(1)).as("n_hits"))
-      val nQueries = exact.select("vec_id").distinct()
-        .agg(count(lit(1)).as("n_queries"))
-      nprobes.toDF("np")
-        .join(candByNp, Seq("np"), "left")
-        .join(hitsByNp, Seq("np"), "left")
-        .crossJoin(broadcast(nQueries)) // 1-row totals join
+      // slices); now each pair is scored once and folded per point by
+      // topKByPoint. Top-k sets per point are unchanged: the np slice of
+      // the deal IS the prank <= np candidate set under the same sim and
+      // tie-break. n_hits and n_queries agree with recallTail's by
+      // uniqueness of both pair relations on (vec_id, neighbor_id)
+      // within a point.
+      withPointRecall(nprobes.toDF("np").join(candByNp, Seq("np"), "left"), Seq("np"),
+        topKByPoint(scoredAll, nprobes, k), exact)
         .select(lit(nc).as("n_centroids"), lit(m).as("m"), lit(ksub).as("ksub"),
           col("np").as("nprobe"), col("n_queries"),
-          (col("cand_sum") - col("nq")).as("n_candidates"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"))
-        .withColumn("recall4",
-          round(col("n_hits").cast("double") / (col("n_queries") * k), 4))
+          (col("cand_sum") - col("nq")).as("n_candidates"), pointHits.as("n_hits"))
+        .withColumn("recall4", recall4(col("n_hits"), k))
     }.reduce(_ unionByName _).orderBy("n_centroids", "m", "ksub", "nprobe")
   }
 
@@ -1347,9 +1301,8 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     * layout) geometry, returned as (fan-out, census, scored pairs):
     *  - the coded corpus ([[cellCodedCorpus]]);
     *  - the query fan-out ONCE at the widest probe width, probe RANK
-    *    carried (posexplode over the same best-first slice as
-    *    probeCellsCol — identical tie-break): nprobe = np is the
-    *    `prank ≤ np` slice. Each fan-out row carries the per-query ADC
+    *    carried ([[rankedFanOut]]): nprobe = np is the `prank ≤ np`
+    *    slice. Each fan-out row carries the per-query ADC
     *    distance TABLE in place of the raw int8 query, so every scored
     *    pair pays m lookups. Materialized: |queries|·maxNp rows
     *    (|queries|·maxNp·m·ksub-bounded), consumed by the scoring pass
@@ -1376,12 +1329,9 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       nprobes: Seq[Int],
       queryMod: Int): (DataFrame, DataFrame, DataFrame) = {
     val corpusCoded = cellCodedCorpus(withCell, layout)
-    val q = withCell.filter(pmod(col("vec_id"), lit(queryMod)) === 0)
-      .select(col("vec_id").as("qid"),
-        adcTableCol(layout.int8(col("embedding")), layout.cb, layout.dsub).as("dtab"),
-        posexplode(slice(reverse(array_sort(scoredCells)), 1, nprobes.max)).as(Seq("pr", "pc")))
-      .select(col("qid"), col("dtab"), (col("pr") + 1).cast("int").as("prank"),
-        (lit(nCentroids - 1) - col("pc").getField("nk")).as("cell"))
+    val q = rankedFanOut(sampled(withCell, queryMod), "dtab",
+      adcTableCol(layout.int8(col("embedding")), layout.cb, layout.dsub),
+      scoredCells, nCentroids, nprobes.max)
       .localCheckpoint()
     val cellSizes = corpusCoded.groupBy("cell").agg(count(lit(1)).as("csz"))
     val candByNp = q.select(col("prank"), col("cell"))
@@ -1395,13 +1345,6 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       .select(col("qid"), col("cid"), col("prank"), adcSim(layout.cb.length))
     (q, candByNp, scoredAll)
   }
-
-  /** Deal a row to every sweep point whose width covers its `rank` —
-    * the nesting law both sweeps fold by: point p sees exactly the rows
-    * of rank ≤ p.
-    */
-  private def dealToPoints(points: Seq[Int], rank: String, as: String): Column =
-    explode(filter(typedlit(points), p => p >= col(rank))).as(as)
 
   /** EXT-S35 (`x187_refined_tuning_sweep`) — the refined composite's
     * OPERATING-POINT tuning table: per (nprobe × shortlist) point, at a
@@ -1489,10 +1432,7 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       s"shortlists (${shortlists.mkString(",")}) must be >= k ($k)")
     import spark.implicits._
     val maxSl = shortlists.max
-    // the one float brute truth leg, shared by every sweep point
-    val exact = bruteForceTopK(spark, dir, k, queryMod)
-      .select(col("vec_id"), col("neighbor_id"))
-      .localCheckpoint()
+    val exact = exactTruth(spark, dir, k, queryMod) // shared by every sweep point
     val layout = new PqLayout(spark, dir, m, ksub, iters, opq)
     val (withCell, scoredCells) = ivfAssignment(spark, dir, nCentroids)
     // the coded corpus, the widest-probe fan-out, its census and the one
@@ -1547,27 +1487,18 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       .select(col("np"), col("sl"), col("qid").as("vec_id"),
         explode(col("nb.entries")).as("e"))
       .select(col("np"), col("sl"), col("vec_id"), col("e.cid").as("neighbor_id"))
-    // recall hits for every grid point in one semi-join + one fold (the
-    // recallTail algebra aggregated — ivfPqTuningSweep's note)
-    val hitRows = refTop.join(exact, Seq("vec_id", "neighbor_id"), "left_semi")
-      .groupBy("np", "sl").agg(count(lit(1)).as("n_hits"))
     val ffRows = refScoredAll
       .select(col("np"), dealToPoints(shortlists, "adc_rank", "sl"))
       .groupBy("np", "sl").agg(count(lit(1)).as("n_float_fetches"))
-    val nQueries = exact.select("vec_id").distinct()
-      .agg(count(lit(1)).as("n_queries"))
-    nprobes.flatMap(np => shortlists.map(sl => (np, sl))).toDF("np", "sl")
-      .join(candByNp, Seq("np"), "left")
-      .join(hitRows, Seq("np", "sl"), "left")
-      .join(ffRows, Seq("np", "sl"), "left")
-      .crossJoin(broadcast(nQueries)) // 1-row totals join
+    val grid = nprobes.flatMap(np => shortlists.map(sl => (np, sl))).toDF("np", "sl")
+    withPointRecall(grid.join(candByNp, Seq("np"), "left"), Seq("np", "sl"), refTop, exact,
+      _.join(ffRows, Seq("np", "sl"), "left"))
       .select(col("np").as("nprobe"), col("sl").as("shortlist"),
         col("n_queries"),
         (col("cand_sum") - col("nq")).as("n_candidates"),
         coalesce(col("n_float_fetches"), lit(0L)).as("n_float_fetches"),
-        coalesce(col("n_hits"), lit(0L)).as("n_hits"))
-      .withColumn("recall4",
-        round(col("n_hits").cast("double") / (col("n_queries") * k), 4))
+        pointHits.as("n_hits"))
+      .withColumn("recall4", recall4(col("n_hits"), k))
       .orderBy("nprobe", "shortlist")
   }
 
@@ -1734,8 +1665,7 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     // query side anyway.
     val q = queries.select(col("vec_id").as("qid"),
       adcTableCol(int8Quantize(col("embedding")), cb, dsub).as("dtab"),
-      (if (nprobe == 1) argmaxCell(scoredCells, nCentroids)
-       else probeCellsCol(scoredCells, nCentroids, nprobe)).as("cell"))
+      probeCellsCol(scoredCells, nCentroids, nprobe).as("cell"))
     // cell-only derivation: the prune pass never re-evaluates the int8
     // quantize projection the probe side carries
     val cells = distinctProbeCells(queries, scoredCells, nCentroids, nprobe)
@@ -1912,17 +1842,26 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       corpusDir: String,
       queries: DataFrame,
       k: Int = 3): DataFrame = {
+    val (nprobe, shortlist) = servingPoint(spark, indexPath, k)
+    ivfPqTopKRefinedFromIndex(spark, indexPath, corpusDir, queries, k, nprobe, shortlist)
+  }
+
+  /** The validated `(nprobe, shortlist)` a tuned index serves a top-`k`
+    * call at — shared by the static ([[ivfPqTopKRefinedFromIndexAuto]])
+    * and live (`StreamOps.ivfPqRefinedProbeLiveAuto`) serving calls:
+    * [[loadOperatingPoint]]'s refusals, plus the stamped shortlist must
+    * cover `k` (an index tuned for a smaller k would otherwise return
+    * under-filled top-k rows instead of naming the fix).
+    */
+  private[graft] def servingPoint(
+      spark: SparkSession, indexPath: String, k: Int): (Int, Int) = {
     val point = loadOperatingPoint(spark, indexPath)
       .select("nprobe", "shortlist").collect().head
-    // r18 (ADVICE): the stamped shortlist must cover the serve call's k
-    // — the streaming twin (ivfPqRefinedProbeLiveAuto) already refuses;
-    // without this, an index tuned for a smaller k silently returns
-    // under-filled top-k rows instead of naming the fix
-    require(point.getInt(1) >= k,
-      s"stamped operating point at $indexPath has shortlist " +
-        s"${point.getInt(1)} < requested k ($k) — the index was tuned " +
-        "for a smaller k; re-run tuneIvfPqIndex with k >= the serve k")
-    ivfPqTopKRefinedFromIndex(spark, indexPath, corpusDir, queries, k,
-      nprobe = point.getInt(0), shortlist = point.getInt(1))
+    val (nprobe, shortlist) = (point.getInt(0), point.getInt(1))
+    require(shortlist >= k,
+      s"stamped operating point at $indexPath has shortlist $shortlist < " +
+        s"requested k ($k) — the index was tuned for a smaller k; re-run " +
+        "tuneIvfPqIndex with k >= the serve k")
+    (nprobe, shortlist)
   }
 }

@@ -1000,7 +1000,7 @@ object TextAnalysis {
     * `length`/`substr` semantics). The one split both trainers and
     * [[bpeFertility]] start from.
     */
-  private def bpeSymbols(word: String): Array[String] = {
+  private[graft] def bpeSymbols(word: String): Array[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     var i = 0
     while (i < word.length) {
@@ -1015,7 +1015,7 @@ object TextAnalysis {
     * skip-after-merge scan ("aaaa" + (a,a) → [aa, aa], NOT [aa, a]
     * twice), shared by both trainers and [[bpeFertility]].
     */
-  private def applyBpeMerge(syms: Array[String], l: String, r: String): Array[String] = {
+  private[graft] def applyBpeMerge(syms: Array[String], l: String, r: String): Array[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     var i = 0
     while (i < syms.length) {
@@ -1030,66 +1030,8 @@ object TextAnalysis {
     out.toArray
   }
 
-  /** EXT-T15 — iterative BPE merge training: `nMerges` rounds of
-    * count-pairs → pick the argmax → apply it to the vocabulary, the
-    * actual BPE training loop (Sennrich et al. 2016) under the repo's
-    * bounded-driver-loop contract ([[Similarity.trainCentroids]]'
-    * shape): each round collects exactly ONE (left, right, count) row,
-    * and the re-segmented vocabulary is `localCheckpoint`ed so round
-    * r+1 never replays rounds 1..r. All per-round relations are
-    * |vocab|-bounded — the corpus is scanned once, for the initial word
-    * count.
-    *
-    * Words split by [[bpeSymbols]] and merges apply by
-    * [[applyBpeMerge]], both as Scala UDFs over the word's symbols: the
-    * skip-after-merge scan is inherently sequential per word — no
-    * declarative spelling exists — and word-local, so the UDF never
-    * breaks a shuffle boundary. Ties rank by (count DESC, left, right),
-    * the [[bpePairStats]] order, making the whole training run
-    * deterministic; rounds stop early once no pair remains.
-    */
-  def trainBpeMerges(
-      spark: SparkSession,
-      dir: String,
-      nMerges: Int = 10): Seq[(Int, String, String, Long)] = {
-    val split = udf((word: String) => bpeSymbols(word).toSeq)
-    val applyMerge = udf { (syms: Seq[String], l: String, r: String) =>
-      applyBpeMerge(syms.toArray, l, r).toSeq
-    }
-    var vocab = Tables.documents(spark, dir)
-      .select(explode(Tables.tokens(col("text"))).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("n_word"))
-      .select(split(col("word")).as("syms"), col("n_word"))
-      .localCheckpoint()
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    var rank = 1
-    var exhausted = false
-    while (rank <= nMerges && !exhausted) {
-      val top = vocab
-        .filter(size(col("syms")) >= 2)
-        .select(explode(expr(
-          "transform(sequence(1, size(syms) - 1), " +
-            "i -> struct(element_at(syms, i) AS l, element_at(syms, i + 1) AS r))"))
-          .as("p"), col("n_word"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum("n_word").as("n"))
-        .orderBy(desc("n"), col("l"), col("r"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (l, r, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((rank, l, r, n))
-        vocab = vocab
-          .withColumn("syms", applyMerge(col("syms"), lit(l), lit(r)))
-          .localCheckpoint()
-        rank += 1
-      }
-    }
-    merges.result()
-  }
-
-  /** EXT-T15b — BPE merge training at PRODUCTION merge counts: the same
-    * training loop as [[trainBpeMerges]], but run in driver memory over
+  /** EXT-T15b — BPE merge training at PRODUCTION merge counts: the
+    * EXT-T15 training loop (Sennrich et al. 2016), run in driver memory over
     * the collected vocabulary. A real tokenizer is 32k–100k merges;
     * the relational loop is one Spark job (pair agg + `limit(1).collect()`
     * + `localCheckpoint`) PER MERGE — that many driver round trips over a
@@ -1099,7 +1041,9 @@ object TextAnalysis {
     * ceiling the whole text family leans on), so ONE corpus-sized Spark
     * job collects it and the merge loop never touches the cluster again.
     *
-    * Exact-equality contract with [[trainBpeMerges]], pinned by spec:
+    * Exact-equality contract with EXT-T15's relational loop (the specs'
+    * reference, `BpeReference.trainBpeMerges` in the test tree), pinned by
+    * spec:
     *  - words split to symbols by CODE POINT ([[bpeSymbols]], the same
     *    split), never UTF-16 code units — a supplementary character is
     *    one symbol in both spellings;
@@ -1201,7 +1145,7 @@ object TextAnalysis {
   }
 
   /** EXT-T16 — tokenizer fertility: apply a trained merge list
-    * ([[trainBpeMerges]]' artifact) to the corpus and report, per
+    * ([[trainBpeMergesLocal]]' artifact) to the corpus and report, per
     * language, subword tokens per word occurrence — the standard metric
     * for how well a vocabulary fits a corpus (a tokenizer trained on
     * English typically shows fertility ≫ 1 on unseen scripts; teams

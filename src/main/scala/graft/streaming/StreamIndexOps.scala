@@ -395,8 +395,9 @@ private[streaming] trait StreamIndexOps { self: StreamOps.type =>
   /** EXT-6as — the full production serving call on a STREAMING-
     * MAINTAINED composite index, at the STAMPED operating point: the
     * validated (nprobe, shortlist) from the index's `opp/` sidecar
-    * ([[graft.operators.Similarity.loadOperatingPoint]] — untuned
-    * refuses naming the fix, retrained-since-tuning refuses) drives the
+    * ([[graft.operators.Similarity.servingPoint]] — untuned refuses
+    * naming the fix, retrained-since-tuning refuses, a shortlist below
+    * k refuses) drives the
     * live-generation ADC shortlist ([[ivfPqProbeLive]] — generation
     * stamp, static pruning, replay dedup unchanged) and the exact-refine
     * tail fetches float vectors from `corpusDir` by candidate id only
@@ -416,10 +417,7 @@ private[streaming] trait StreamIndexOps { self: StreamOps.type =>
       queries: DataFrame,
       k: Int = 3): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val point = graft.operators.Similarity.loadOperatingPoint(spark, indexDir)
-      .select("nprobe", "shortlist").collect().head
-    val (nprobe, shortlist) = (point.getInt(0), point.getInt(1))
-    require(shortlist >= k, s"stamped shortlist ($shortlist) must be >= k ($k)")
+    val (nprobe, shortlist) = graft.operators.Similarity.servingPoint(spark, indexDir, k)
     val cand = ivfPqProbeLive(spark, indexDir, queries, k = shortlist, nprobe = nprobe)
       .select(col("vec_id").as("qid"), col("neighbor_id").as("cid"))
     graft.operators.Similarity.refineByFloatStore(spark, corpusDir, cand,

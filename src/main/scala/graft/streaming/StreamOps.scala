@@ -1642,34 +1642,6 @@ object StreamOps extends StreamIndexOps {
   case class WindowDrift(window_start: java.sql.Timestamp, n_tokens: Long,
       tv_numer: Long, tv_distance: Double)
 
-  /** EXT-6k — streaming corpus-drift monitor: the unbounded twin of
-    * [[graft.operators.Curation.tokenDrift]]. Arriving documents are
-    * bucketed into tumbling event-time windows; when the watermark
-    * seals a window (wm ≥ window end ⇒ no in-scope arrival can still
-    * land in it, since Spark admits only ts > wm), the monitor emits
-    * the total-variation distance between that window's token frequency
-    * distribution and a fixed REFERENCE distribution (the accepted
-    * corpus / last crawl) — the "did ingest quality move this window"
-    * alarm, per window, exactly once.
-    *
-    * Same exact-integer spelling as the batch twin: numerator
-    * `Σ_tok |c_tok·N_ref − r_tok·N_win|` over the token union in Long
-    * arithmetic (order-insensitive — safe to fold over an unordered
-    * map), ONE IEEE division by `2·N_win·N_ref` at emission. The spec
-    * asserts stream == batch bit-for-bit on the shared numerator law.
-    *
-    * Scale: state is one token-count map per OPEN window — bounded by
-    * (windows inside the watermark horizon) × (per-window vocabulary),
-    * never by the stream; a sealed window leaves state at emission. The
-    * reference rides the task closure as a plain map (bounded by
-    * construction: a vocabulary, not a corpus — the same bounded-
-    * broadcast rule as the Bloom index). Null-text documents count zero
-    * tokens; empty text contributes ONE empty-string token — exactly
-    * the batch tokenizer's `split` contract ([[graft.operators.Tables
-    * .tokens]]), so stream and batch count the same corpus. A window
-    * with no tokens emits nothing (0/0 is not a drift signal — the
-    * [[graft.operators.TextAnalysis.compressionRatio]] null contract).
-    */
   /** One timestamped payload of a CDC/event stream (props = the opaque
     * JSON value, as in the `events` table).
     */
@@ -1755,6 +1727,34 @@ object StreamOps extends StreamIndexOps {
     */
   private[streaming] val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
+  /** EXT-6k — streaming corpus-drift monitor: the unbounded twin of
+    * [[graft.operators.Curation.tokenDrift]]. Arriving documents are
+    * bucketed into tumbling event-time windows; when the watermark
+    * seals a window (wm ≥ window end ⇒ no in-scope arrival can still
+    * land in it, since Spark admits only ts > wm), the monitor emits
+    * the total-variation distance between that window's token frequency
+    * distribution and a fixed REFERENCE distribution (the accepted
+    * corpus / last crawl) — the "did ingest quality move this window"
+    * alarm, per window, exactly once.
+    *
+    * Same exact-integer spelling as the batch twin: numerator
+    * `Σ_tok |c_tok·N_ref − r_tok·N_win|` over the token union in Long
+    * arithmetic (order-insensitive — safe to fold over an unordered
+    * map), ONE IEEE division by `2·N_win·N_ref` at emission. The spec
+    * asserts stream == batch bit-for-bit on the shared numerator law.
+    *
+    * Scale: state is one token-count map per OPEN window — bounded by
+    * (windows inside the watermark horizon) × (per-window vocabulary),
+    * never by the stream; a sealed window leaves state at emission. The
+    * reference rides the task closure as a plain map (bounded by
+    * construction: a vocabulary, not a corpus — the same bounded-
+    * broadcast rule as the Bloom index). Null-text documents count zero
+    * tokens; empty text contributes ONE empty-string token — exactly
+    * the batch tokenizer's `split` contract ([[graft.operators.Tables
+    * .tokens]]), so stream and batch count the same corpus. A window
+    * with no tokens emits nothing (0/0 is not a drift signal — the
+    * [[graft.operators.TextAnalysis.compressionRatio]] null contract).
+    */
   def driftStream(
       docs: Dataset[TimedDoc],
       reference: Map[String, Long],

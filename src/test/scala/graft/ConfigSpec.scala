@@ -50,6 +50,13 @@ class ConfigSpec extends AnyFunSuite {
     // arbitrary OTHER passthrough keys still flow (the A5 contract)
     assert(ReplicatorConfig.fromArgs(
       minimal ++ Seq("--consumer.fetch.min.bytes", "1024")).isRight)
+    // every replacement flag a message names is itself an accepted option
+    val named = ReplicatorConfig.UnsupportedPassthrough.values
+      .flatMap("--([a-z0-9.-]+)".r.findAllMatchIn(_).map(_.group(1))).toSet
+    named.foreach { opt =>
+      assert(!ReplicatorConfig.validate(Map(opt -> "1")).contains(s"unknown parameter: --$opt"),
+        s"an unsupported-passthrough message names --$opt, which is not an accepted option")
+    }
   }
 
   test("an invalid --topics regex fails validation, never escapes as an exception") {

@@ -702,6 +702,18 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
       .collect().map(_.toString).toSeq
     assert(got == manual && got.nonEmpty,
       "auto probe diverged from the manual probe at the stamped point")
+    // a serve k above the stamped shortlist refuses, with ONE message on
+    // the static and the live serving paths (both resolve the point
+    // through servingPoint)
+    val bigK = sp.getAs[Int]("shortlist") + 1
+    val staticK = intercept[IllegalArgumentException](
+      Similarity.ivfPqTopKRefinedFromIndexAuto(spark, indexPath, dir, queries, k = bigK))
+    val liveK = intercept[IllegalArgumentException](
+      graft.streaming.StreamOps.ivfPqRefinedProbeLiveAuto(spark, indexPath, dir, queries, k = bigK))
+    assert(staticK.getMessage == liveK.getMessage, liveK.getMessage)
+    assert(staticK.getMessage.contains(
+      s"shortlist ${sp.getAs[Int]("shortlist")} < requested k ($bigK)") &&
+      staticK.getMessage.contains("tuneIvfPqIndex"), staticK.getMessage)
     // RETRAIN after tuning refuses: the stamped point was chosen on
     // recall numbers the new quantizer never produced
     Similarity.writeIvfPqIndex(spark, dir, indexPath, nCentroids = 16, m = 4)

@@ -449,7 +449,7 @@ class TextAnalysisSpec extends AnyFunSuite with SparkSuite {
     // skip -> [aa, aa]; round 2 merges (aa,aa)=1 -> [aaaa]; round 3
     // finds no pair and stops early
     val d = TestTables.documentsDir(spark, Seq(1L -> "aaaa"))
-    val got = TextAnalysis.trainBpeMerges(spark, d, nMerges = 5)
+    val got = BpeReference.trainBpeMerges(spark, d, nMerges = 5)
     assert(got == Seq((1, "a", "a", 3L), (2, "aa", "aa", 1L)))
   }
 
@@ -486,14 +486,14 @@ class TextAnalysisSpec extends AnyFunSuite with SparkSuite {
       out.result()
     }
     val d = TestTables.documentsDir(spark, Seq(1L -> words.mkString(" ")))
-    assert(TextAnalysis.trainBpeMerges(spark, d, nMerges = 6) == naive(words, 6))
+    assert(BpeReference.trainBpeMerges(spark, d, nMerges = 6) == naive(words, 6))
   }
 
   test("trainBpeMergesLocal: bit-identical to the relational loop (overlaps, ties, multi-doc)") {
     val d = TestTables.documentsDir(spark, Seq(
       1L -> "low low low lower newest newest", 2L -> "widest aaaa abab"))
     assert(TextAnalysis.trainBpeMergesLocal(spark, d, nMerges = 12) ==
-      TextAnalysis.trainBpeMerges(spark, d, nMerges = 12))
+      BpeReference.trainBpeMerges(spark, d, nMerges = 12))
   }
 
   test("trainBpeMergesLocal: UTF-8 byte tie-break agrees with Spark's binary string order on supplementary chars") {
@@ -505,14 +505,14 @@ class TextAnalysisSpec extends AnyFunSuite with SparkSuite {
     val supp = new String(Character.toChars(0x10000)) // UTF-8: F0 90 80 80
     val d = TestTables.documentsDir(spark, Seq(1L -> s"${hi}x ${supp}x"))
     val local = TextAnalysis.trainBpeMergesLocal(spark, d, nMerges = 2)
-    assert(local == TextAnalysis.trainBpeMerges(spark, d, nMerges = 2))
+    assert(local == BpeReference.trainBpeMerges(spark, d, nMerges = 2))
     assert(local.head._2 == hi, "UTF-8 byte order ranks U+E000 before U+10000")
   }
 
   test("trainBpeMergesLocal: equals the relational loop on the sf0.001 corpus; 1k merges run in driver memory") {
     val dir = "/root/testdata/sf0.001"
     assert(TextAnalysis.trainBpeMergesLocal(spark, dir, nMerges = 20) ==
-      TextAnalysis.trainBpeMerges(spark, dir, nMerges = 20))
+      BpeReference.trainBpeMerges(spark, dir, nMerges = 20))
     // the synthetic corpus holds only 31 distinct tokens, so training
     // exhausts well before production merge counts — the local loop must
     // stop exactly where the relational loop would, with dense ranks
@@ -566,7 +566,7 @@ class TextAnalysisSpec extends AnyFunSuite with SparkSuite {
       ("fr", 1L, 1L, 1.0)))
     // a trained merge list applies in rank order: (a,a) then (aa,aa)
     val d2 = TestTables.documentsDir(spark, Seq(1L -> "aaaa aaaa aa"))
-    val trained = TextAnalysis.trainBpeMerges(spark, d2, nMerges = 2)
+    val trained = TextAnalysis.trainBpeMergesLocal(spark, d2, nMerges = 2)
       .map(m => (m._2, m._3))
     val f2 = TextAnalysis.bpeFertility(spark, d2, trained).collect()
       .map(r => (r.getLong(1), r.getLong(2), r.getDouble(3)))

@@ -5,10 +5,11 @@
 # end-of-round (or otherwise unverified) commit:
 #   1. Test/compile           — the r17 failure class (main OR test broken)
 #   2. QueryIndexSpec         — QUERY_INDEX.md anchors not stale
-#   3. 7-query smoke Verify   — one query per heavy family actually runs
+#   3. 9-query smoke Verify   — one query per heavy family actually runs
 #      end-to-end at sf0.001 and oracle-passes in DuckDB (both PQ
 #      layouts: x105 plain, x189 OPQ; the persisted BM25 index: x184;
-#      the shared near-dup candidate stage: x52 LSH, x116 PPJoin prefix)
+#      the shared near-dup candidate stage: x52 LSH, x116 PPJoin prefix;
+#      the shared exact-scoring path: x5 brute top-k, x170 nprobe sweep)
 #   4. perfbench self-tests   — the benchmark's statistics and schedule
 #   5. perfbench scalac build — src/main + perfbench/src compile together,
 #      so a main-source change that breaks the benchmark fails here
@@ -20,7 +21,7 @@
 set -u
 cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.001}
-SMOKE=${PREFLIGHT_SMOKE:-x1_exact_dedup,x105_pq_recall,x119_vocab_coverage,x189_pq_codes_opq,x184_bm25_topk_indexed,x52_lsh_calibration,x116_containment}
+SMOKE=${PREFLIGHT_SMOKE:-x1_exact_dedup,x105_pq_recall,x119_vocab_coverage,x189_pq_codes_opq,x184_bm25_topk_indexed,x52_lsh_calibration,x116_containment,x5_topk_cosine,x170_ann_nprobe_sweep}
 OUT=$(mktemp -d /tmp/preflight.XXXXXX)
 trap 'rm -rf "$OUT"' EXIT
 
