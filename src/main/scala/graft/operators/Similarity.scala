@@ -517,10 +517,7 @@ object Similarity extends SimilarityIndexOps {
       queryMod: Int = 10,
       maxBroadcastBytes: Long = 64L << 20): DataFrame = {
     val exact = exactTruth(spark, dir, k, queryMod)
-    val qz = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(
-        "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 127.0 + 0.5) AS BIGINT))")
-        .as("qv"))
+    val qz = int8Corpus(spark, dir)
     // distinct memo key: the int64 codes are 2× the float payload
     val queries = sampledQueries(qz, dir, "embq", queryMod, maxBroadcastBytes,
       int64RowBytes(_, "qe"))(col("vec_id").as("qid"), col("qv").as("qe"))
@@ -885,20 +882,20 @@ object Similarity extends SimilarityIndexOps {
     * result cells, and an array cell is unhashable there — serializing to
     * a scalar in BOTH engines keeps the check exact and executable.
     */
-  def quantize(spark: SparkSession, dir: String): DataFrame =
+  def quantize(spark: SparkSession, dir: String): DataFrame = {
+    val embedding = col("embedding")
+    val q = int8Quantize(embedding)
     Tables.embeddings(spark, dir)
       .select(col("vec_id"),
-        concat_ws(",",
-          expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 127.0 + 0.5) AS INT))"))
-          .as("q_csv"),
-        // direct element transform: no index arithmetic (sequence(1, 0)
-        // counts down on an empty array, and ANSI mode makes the
-        // resulting out-of-bounds access a query-killing error)
-        expr("array_max(transform(embedding, x -> " +
-          "abs(CAST(x AS DOUBLE) - " +
-          "CAST(floor(CAST(x AS DOUBLE) * 127.0 + 0.5) AS DOUBLE) / 127.0)))")
+        concat_ws(",", q.cast("array<string>")).as("q_csv"),
+        // element-wise zip: no index arithmetic (sequence(1, 0) counts
+        // down on an empty array, and ANSI mode makes the resulting
+        // out-of-bounds access a query-killing error)
+        array_max(zip_with(embedding, q,
+          (x, qx) => abs(x.cast("double") - qx.cast("double") / lit(127.0))))
           .as("max_err"))
       .orderBy("vec_id")
+  }
 
   /** EXT-S5 — deterministic k-means centroid training (Lloyd iterations
     * with a fixed seed and a fixed iteration count): the drop-in producer
@@ -1461,9 +1458,7 @@ object Similarity extends SimilarityIndexOps {
   def embeddingDrift(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .select((col("vec_id") % 2).as("parity"),
-        posexplode(expr(
-          "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 127.0 + 0.5) AS BIGINT))"))
-          .as(Seq("d0", "q")))
+        posexplode(int8Quantize(col("embedding"))).as(Seq("d0", "q")))
       .groupBy((col("d0") + 1).cast("long").as("dim"))
       .agg(
         sum(when(col("parity") === 0, 1L).otherwise(0L)).as("n_a"),

@@ -43,6 +43,85 @@ class KafkaBatchWriterSpec extends AnyFunSuite with SparkSuite {
     assert(CollectingSender.snapshot().head.partition.isEmpty)
   }
 
+  /** The messages of every throwable in `e`'s cause chain: a task's
+    * exception reaches the driver inside Spark's job-abort wrapper.
+    */
+  private def causeMessages(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).flatMap(t => Option(t.getMessage)).toSeq
+
+  test("timestamps are forwarded under spark.sql.datetime.java8API.enabled") {
+    // the external Row's timestamp becomes java.time.Instant under this
+    // conf; the sink reads the epoch-µs long, so the conf must not matter
+    val key = "spark.sql.datetime.java8API.enabled"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try KafkaBatchWriter.write(newSender(), preservePartitioning = true)(
+      KafkaMessage.toDF(spark, Seq(msg(0, 3, 1700000000123L), msg(1, 5, 1700000000456L))), 0L)
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(CollectingSender.snapshot().map(_.tsMs).sorted == Seq(1700000000123L, 1700000000456L))
+  }
+
+  test("a null timestamp is refused in both partition modes, naming the column") {
+    import org.apache.spark.sql.functions.lit
+    val df = KafkaMessage.toDF(spark, Seq(msg(0, 3, 10L)))
+      .withColumn("timestamp", lit(null).cast("timestamp"))
+    for (preserve <- Seq(true, false)) {
+      val e = intercept[Exception](
+        KafkaBatchWriter.write(newSender(), preservePartitioning = preserve)(df, 0L))
+      assert(causeMessages(e).exists(_.contains("`timestamp` is null")), causeMessages(e))
+      assert(CollectingSender.flushes() == 0, "a refused batch must not reach the commit barrier")
+    }
+  }
+
+  test("a null partition is refused under preservePartitioning and routed by the producer without it") {
+    import org.apache.spark.sql.functions.lit
+    val df = KafkaMessage.toDF(spark, Seq(msg(0, 3, 10L)))
+      .withColumn("partition", lit(null).cast("int"))
+    val e = intercept[Exception](
+      KafkaBatchWriter.write(newSender(), preservePartitioning = true)(df, 0L))
+    assert(causeMessages(e).exists(_.contains("`partition` is null")), causeMessages(e))
+    KafkaBatchWriter.write(newSender(), preservePartitioning = false)(df, 0L)
+    val sent = CollectingSender.snapshot()
+    assert(sent.map(_.partition) == Seq(None) && sent.map(_.tsMs) == Seq(10L))
+  }
+
+  test("pre-epoch timestamps floor to the millisecond: -1 ms (NO_TIMESTAMP) and -1500 us") {
+    import org.apache.spark.sql.functions.{col, lit, timestamp_micros, when}
+    val df = KafkaMessage.toDF(spark, Seq(msg(0, 0, 0L), msg(1, 0, 0L)))
+      .withColumn("timestamp", timestamp_micros(
+        when(col("offset") === 0, lit(-1000L)).otherwise(lit(-1500L))))
+    KafkaBatchWriter.write(newSender(), preservePartitioning = true)(df, 0L)
+    val sent = CollectingSender.snapshot().sortBy(s => new String(s.key))
+    assert(sent.map(_.tsMs) == Seq(-1L, -2L))
+  }
+
+  test("the sink is one SQL execution and one job over the executed plan, with no Row deserializer") {
+    import org.apache.spark.sql.execution.{DeserializeToObjectExec, QueryExecution}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add((funcName, qe))
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        seen.add((funcName, qe))
+    }
+    val df = KafkaMessage.toDF(spark, Seq(msg(0, 3, 10L), msg(1, 5, 20L)))
+    spark.listenerManager.register(listener)
+    // `during` closes the block with a sync job on the same listener
+    // bus, so the execution-end event has been delivered when it returns
+    val (_, activity) =
+      try SparkActivity.during(spark) {
+        KafkaBatchWriter.write(newSender(), preservePartitioning = true)(df, 0L)
+      } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val executions = seen.asScala.toSeq
+    assert(executions.map(_._1) == Seq("foreachPartition"))
+    val plan = executions.head._2.executedPlan
+    assert(plan.collectFirst { case d: DeserializeToObjectExec => d }.isEmpty, plan.treeString)
+    assert(activity.jobs == 1 && activity.sqlCallSites.length == 1, activity)
+    assert(CollectingSender.snapshot().length == 2)
+  }
+
   test("exactlyOnceSink skips a replayed batch id end-to-end") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -5,13 +5,16 @@
 # end-of-round (or otherwise unverified) commit:
 #   1. Test/compile           — the r17 failure class (main OR test broken)
 #   2. QueryIndexSpec         — QUERY_INDEX.md anchors not stale
-#   3. 9-query smoke Verify   — one query per heavy family actually runs
+#   3. sink specs             — KafkaBatchWriterSpec + PipelineSpec: the
+#      replication sink's envelope, null refusals, plan shape and
+#      exactly-once replay, so a sink change is gated before commit
+#   4. 9-query smoke Verify   — one query per heavy family actually runs
 #      end-to-end at sf0.001 and oracle-passes in DuckDB (both PQ
 #      layouts: x105 plain, x189 OPQ; the persisted BM25 index: x184;
 #      the shared near-dup candidate stage: x52 LSH, x116 PPJoin prefix;
 #      the shared exact-scoring path: x5 brute top-k, x170 nprobe sweep)
-#   4. perfbench self-tests   — the benchmark's statistics and schedule
-#   5. perfbench scalac build — src/main + perfbench/src compile together,
+#   5. perfbench self-tests   — the benchmark's statistics and schedule
+#   6. perfbench scalac build — src/main + perfbench/src compile together,
 #      so a main-source change that breaks the benchmark fails here
 # Exit 0 = safe to commit. Anything else = DO NOT COMMIT THE SNAPSHOT.
 # It first prints the main-Scala line count, so a change's net size
@@ -27,21 +30,28 @@ trap 'rm -rf "$OUT"' EXIT
 
 echo "[preflight] main Scala lines: $(find src/main -name '*.scala' | xargs cat | wc -l)"
 
-echo "[preflight] 1/5 Test/compile"
+echo "[preflight] 1/6 Test/compile"
 if ! sbt -batch "Test/compile" >"$OUT/compile.log" 2>&1; then
   tail -30 "$OUT/compile.log"
   echo "[preflight] FAIL: Test/compile broken — this is exactly the r17 loss; fix before committing" >&2
   exit 1
 fi
 
-echo "[preflight] 2/5 QueryIndexSpec (QUERY_INDEX.md staleness)"
+echo "[preflight] 2/6 QueryIndexSpec (QUERY_INDEX.md staleness)"
 if ! sbt -batch "testOnly graft.QueryIndexSpec" >"$OUT/index.log" 2>&1; then
   tail -30 "$OUT/index.log"
   echo "[preflight] FAIL: QUERY_INDEX.md is stale — run: sbt \"Test/runMain graft.QueryIndexGen\" and re-check" >&2
   exit 1
 fi
 
-echo "[preflight] 3/5 smoke Verify ($SMOKE @ $SF)"
+echo "[preflight] 3/6 sink specs (KafkaBatchWriterSpec, PipelineSpec)"
+if ! sbt -batch "testOnly graft.KafkaBatchWriterSpec graft.PipelineSpec" >"$OUT/sink.log" 2>&1; then
+  tail -30 "$OUT/sink.log"
+  echo "[preflight] FAIL: a replication sink spec failed" >&2
+  exit 1
+fi
+
+echo "[preflight] 4/6 smoke Verify ($SMOKE @ $SF)"
 if ! SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} \
     sbt -batch "runMain graft.Verify $SF $OUT/verify $SMOKE" >"$OUT/verify.log" 2>&1; then
   tail -30 "$OUT/verify.log"
@@ -59,14 +69,14 @@ if ! python3 tools/check.py "$SF" "$OUT/verify" >"$OUT/check.log" 2>&1; then
 fi
 tail -1 "$OUT/check.log"
 
-echo "[preflight] 4/5 perfbench self-tests"
+echo "[preflight] 5/6 perfbench self-tests"
 if ! python3 -m unittest discover -s perfbench/tests >"$OUT/perftest.log" 2>&1; then
   tail -30 "$OUT/perftest.log"
   echo "[preflight] FAIL: perfbench self-tests" >&2
   exit 1
 fi
 
-echo "[preflight] 5/5 perfbench scalac build (src/main + perfbench/src)"
+echo "[preflight] 6/6 perfbench scalac build (src/main + perfbench/src)"
 # the jar directory perfbench/run.py uses: $SPARK_HOME/jars, else build.sbt's unmanagedBase
 JARS=${SPARK_HOME:+$SPARK_HOME/jars}
 JARS=${JARS:-$(sed -n 's/^unmanagedBase := file("\(.*\)")$/\1/p' build.sbt)}
