@@ -116,6 +116,10 @@ private[operators] trait CurationClusters extends CurationQuality {
       .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/meta")
   }
 
+  /** The read schema of the cluster index's one-row `meta/` stamp. */
+  private[graft] val ClusterIndexMeta = "max_hamming INT, bands INT, bits INT, n_buckets INT, " +
+    "n_docs BIGINT, doc_xor BIGINT, text_xor BIGINT"
+
   private case class CorpusStamp(nDocs: Long, docXor: Long, textXor: Long)
 
   /** Corpus identity for the stamp: count + order-insensitive doc_id
@@ -171,9 +175,7 @@ private[operators] trait CurationClusters extends CurationQuality {
     */
   private def clusterMeta(spark: SparkSession, indexPath: String): ClusterMeta =
     IndexCache.cached(spark, s"clustermeta|$indexPath", Seq(s"$indexPath/meta")) {
-      val rows = spark.read.parquet(s"$indexPath/meta")
-        .select("max_hamming", "bands", "bits", "n_buckets", "n_docs", "doc_xor", "text_xor")
-        .collect()
+      val rows = spark.read.schema(ClusterIndexMeta).parquet(s"$indexPath/meta").collect()
       require(rows.length == 1, s"corrupt cluster index: ${rows.length} meta rows")
       val m = rows(0)
       ClusterMeta(m.getInt(0), m.getInt(1), m.getInt(2), m.getInt(3),

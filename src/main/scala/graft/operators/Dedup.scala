@@ -657,6 +657,12 @@ object Dedup {
       .withColumn("bands", lit(bands))
   }
 
+  /** The read schema of [[bandSignatures]] rows at its default
+    * (numHashes, bands) = (16, 4), the layout the streaming LSH
+    * maintainer appends. */
+  private[graft] val BandSignatures = "doc_id BIGINT, band INT, m0 BIGINT, m1 BIGINT, " +
+    "m2 BIGINT, m3 BIGINT, num_hashes INT, bands INT"
+
   /** EXT-D11 — duplicated-SPAN detection: per document, the maximal
     * token spans whose every k-token window also occurs elsewhere in the
     * corpus (or again in the same document) — the distributed
@@ -753,6 +759,9 @@ object Dedup {
       .withColumn("win_k", lit(k))
       .withColumn("win_w", lit(wWin))
   }
+
+  /** The read schema of [[winnowSignatures]] rows. */
+  private[graft] val WinnowSignatures = "doc_id BIGINT, h BIGINT, win_k INT, win_w INT"
 
   /** EXT-D12 probe — fresh documents against a PERSISTED winnow index
     * (the relation [[winnowSignatures]] emits and
@@ -1072,6 +1081,9 @@ object Dedup {
       .select("doc_id", "h")
       .distinct()
       .withColumn("seg_tokens", lit(segTokens))
+
+  /** The read schema of [[segmentSignatures]] rows. */
+  private[graft] val SegmentSignatures = "doc_id BIGINT, h STRING, seg_tokens INT"
 
   /** The probe half of EXT-6p: repair `docs` against a maintained
     * segment index — a segment is boilerplate when the INDEX has seen it

@@ -29,9 +29,6 @@ import org.apache.spark.sql.functions._
   */
 object Linkage {
 
-  private def part(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/part.parquet")
-
   /** EXT-L1 (`x118_entity_resolution`) — best-match record linkage over
     * the `part` catalog: records blocked by `(p_brand, p_size)`, scored
     * within a block by exact character Levenshtein on `p_name`
@@ -55,7 +52,7 @@ object Linkage {
     * with the exact Levenshtein distance and the rounded similarity.
     */
   private def scoredPairs(spark: SparkSession, dir: String): DataFrame = {
-    val p = part(spark, dir)
+    val p = Tables.part(spark, dir)
       .select(col("p_partkey"), col("p_brand"), col("p_size"),
         col("p_name"), length(col("p_name")).cast("long").as("len"))
     val a = p.select(col("p_partkey"), col("p_brand"), col("p_size"),
@@ -73,7 +70,7 @@ object Linkage {
   }
 
   def entityResolution(spark: SparkSession, dir: String): DataFrame = {
-    val p = part(spark, dir)
+    val p = Tables.part(spark, dir)
       .select(col("p_partkey"), col("p_brand"), col("p_size"),
         col("p_name"), length(col("p_name")).cast("long").as("len"))
     val scored = scoredPairs(spark, dir)
@@ -130,7 +127,7 @@ object Linkage {
       .select(col("p_partkey").as("d1"), col("cand_key").as("d2"))
     val members = Graph.connectedComponents(edges, maxRounds)
       .select(col("doc_id").as("p_partkey"), col("cluster"))
-      .join(part(spark, dir).select("p_partkey", "p_type", "p_retailprice"), "p_partkey")
+      .join(Tables.part(spark, dir).select("p_partkey", "p_type", "p_retailprice"), "p_partkey")
       .localCheckpoint() // consumed by the member fold AND the majority sub-fold
     val byType = members.groupBy("cluster", "p_type").agg(count(lit(1)).as("n_t"))
       .groupBy("cluster").agg(max(struct(col("n_t"), col("p_type"))).as("mj"))

@@ -344,6 +344,10 @@ object Multimodal {
       .withColumn("band_bits", lit(12))
   }
 
+  /** The read schema of [[phashSignatures]] rows. */
+  private[graft] val PhashSignatures =
+    "doc_id BIGINT, phash BIGINT, pdigest STRING, n_bands INT, band_bits INT"
+
   /** EXT-6ap's probe: perceptual near-dup MATCHES of an arriving media
     * batch against a persisted fingerprint index ([[phashSignatures]]
     * rows — static or the live generation of

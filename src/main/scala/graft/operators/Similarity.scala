@@ -618,9 +618,18 @@ object Similarity extends SimilarityIndexOps {
   private[operators] def probeCellsCol(
       scoredCells: Column, nCentroids: Int, nprobe: Int): Column =
     if (nprobe == 1) argmaxCell(scoredCells, nCentroids)
-    else explode(transform(
+    else explode(probeCellArray(scoredCells, nCentroids, nprobe))
+
+  /** [[probeCellsCol]]'s probe cells of a query row as one array, not
+    * exploded — a projection Spark can evaluate over a local relation
+    * on the driver.
+    */
+  private[operators] def probeCellArray(
+      scoredCells: Column, nCentroids: Int, nprobe: Int): Column =
+    if (nprobe == 1) array(argmaxCell(scoredCells, nCentroids))
+    else transform(
       slice(reverse(array_sort(scoredCells)), 1, nprobe),
-      p => lit(nCentroids - 1) - p.getField("nk")))
+      p => lit(nCentroids - 1) - p.getField("nk"))
 
   /** The RANKED fan-out of a sweep: each query row of `qSrc` fanned out
     * to its `maxNp` best probe cells with the probe rank `prank`
@@ -1127,11 +1136,10 @@ object Similarity extends SimilarityIndexOps {
       relation: DataFrame, cents: Seq[(Int, Array[Double])]): DataFrame = {
     require(cents.length >= 2,
       s"cluster separation needs k >= 2 cells (got ${cents.length})")
-    val c8 = cents.sortBy(_._1).map { case (_, cd) =>
-      cd.map(v => math.floor(v * 127.0 + 0.5).toLong).toSeq
-    }
-    // int8Quantize is the ONE lattice spelling (shared with x32/x91/PQ
-    // serving) — the margins must live on the exact lattice they audit.
+    val c8 = cents.sortBy(_._1).map { case (_, cd) => cd.map(int8Lattice).toSeq }
+    // int8Quantize / int8Lattice are the ONE lattice spelling (shared
+    // with x32/x91/PQ serving) — the margins must live on the exact
+    // lattice they audit.
     // Per cell the score is the L2-assignment OBJECTIVE on that lattice
     // (2·qv·c8 − ‖c8‖², exact BIGINT): the same maximand as the float
     // argmax, so a margin < 0 is assignment disagreement by definition,
@@ -1700,6 +1708,10 @@ object Similarity extends SimilarityIndexOps {
     */
   private[graft] def int8Quantize(emb: Column): Column =
     transform(emb, x => floor(x.cast("double") * lit(127.0) + lit(0.5)).cast("long"))
+
+  /** [[int8Quantize]]'s lattice point of one value on the driver (plan
+    * literals such as int8 centroids) — property-pinned equal to it. */
+  private[graft] def int8Lattice(v: Double): Long = math.floor(v * 127.0 + 0.5).toLong
 
   /** The int8-quantized corpus, the shared entry point of the PQ family. */
   private[operators] def int8Corpus(spark: SparkSession, dir: String): DataFrame =

@@ -45,6 +45,14 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     writeIvfCentroids(spark, indexPath, cents)
   }
 
+  /** The read schemas of the vector-index relations, one DDL beside each
+    * writer — declared, so a probe's reads plan without a
+    * schema-inference job. `cells/` of the float IVF index (static
+    * layout and every live generation of
+    * [[graft.streaming.StreamOps.maintainIvfIndex]]).
+    */
+  private[graft] val IvfCells = "vec_id BIGINT, embedding ARRAY<FLOAT>, cell INT"
+
   /** EXT-6ar's init half — stamp the float-IVF index's coarse geometry
     * (`centroids/` with the `n_centroids` stamp, seeded from `dir`) and
     * NO cell rows: the cell relation is then populated incrementally by
@@ -73,6 +81,9 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       .write.mode("overwrite").parquet(s"$indexPath/centroids")
   }
 
+  /** `centroids/` ([[writeIvfCentroids]]). */
+  private[graft] val Centroids = "cid INT, embedding ARRAY<FLOAT>, n_centroids INT"
+
   /** Row-local coarse-cell routing over ANY `(vec_id, embedding)`
     * relation — the cell half of [[ivfPqAssignProjection]] without the
     * coding: shared by the static writer and the streaming maintainer
@@ -95,12 +106,11 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     * an unchanged index pays the parquet job once per session, a
     * rewritten one re-reads AND re-validates (refusals never cache).
     */
-  private def loadCoarseCentroids(
+  private[graft] def loadCoarseCentroids(
       spark: SparkSession, indexPath: String): (Seq[(Int, Seq[Float])], Int) =
     IndexCache.cached(spark, s"coarse|$indexPath", Seq(s"$indexPath/centroids")) {
       import spark.implicits._
-      val centRows = spark.read.parquet(s"$indexPath/centroids")
-        .select(col("cid"), col("embedding"), col("n_centroids"))
+      val centRows = spark.read.schema(Centroids).parquet(s"$indexPath/centroids")
         .as[(Int, Seq[Float], Int)].collect()
       val stamps = centRows.map(_._3).distinct
       require(stamps.length == 1 && stamps.head == centRows.length,
@@ -109,18 +119,12 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     }
 
   /** The measured-query-width refusal shared by every persisted-index
-    * probe: min AND max vector width over the WHOLE batch must both
-    * equal the index's stamped dim — one narrow column scan (a single
-    * `size` projection folded map-side to three scalars), so a ragged
-    * batch refuses no matter where its odd rows sit. (The r16 advisory:
-    * the earlier 1024-row sample could pass a ragged batch whose
-    * short/long rows all fell outside the sample — the full min/max
-    * aggregate costs one 4-byte-per-row pass and closes the hole.)
-    * An EMPTY batch passes: in the per-microbatch serving shape
-    * (EXT-6an) an empty trigger is a normal streaming event whose probe
-    * must yield an empty result, not kill the stream — but a non-empty
-    * batch of NULL/empty vectors still refuses (there is data and its
-    * width is wrong).
+    * probe: min AND max vector width over the WHOLE batch (one narrow
+    * `size` scan folded to three scalars — a sample could miss a ragged
+    * batch's odd rows, the r16 advisory) must both equal the index's
+    * stamped dim. An EMPTY batch passes: an empty trigger is a normal
+    * streaming event (EXT-6an) whose probe yields an empty result; a
+    * non-empty batch of NULL/empty vectors still refuses.
     */
   private[graft] def requireUniformDim(queries: DataFrame, dim: Int, what: String): Unit = {
     val qDim = queries.select(size(col("embedding")).as("d"))
@@ -134,27 +138,15 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
   }
 
   /** Bounded PQ-geometry read shared by the persisted PQ and IVF-PQ
-    * probes (EXT-S20b's refusal contract): the one-row meta stamp, the
-    * measured query-batch width checked against the coded dim (a
-    * mismatched OR ragged batch must REFUSE, not mis-rank), and the
-    * ksub·dim long-form codebook rebuilt into the plan-literal array.
-    * `label` names the index family in the refusal messages.
-    */
-  private def loadPqGeometry(
-      spark: SparkSession, indexPath: String, queries: DataFrame,
-      label: String): (Array[Array[Array[Long]]], Int) = {
-    // the meta/codebook reads memoize per (indexPath, listing signature)
-    // — the per-call check below depends on the QUERY batch, so it can
-    // never cache: a ragged or mis-sized batch refuses on every probe
-    val (cb, dim, dsub) = loadPqMeta(spark, indexPath, label)
-    requireUniformDim(queries, dim, "coded dim")
-    (cb, dsub)
-  }
-
-  /** The cached meta/codebook half of [[loadPqGeometry]] — also the
-    * geometry source for the streaming INGEST side (EXT-6ao encodes
-    * arrivals with the index's own stamped layout), which has no query
-    * batch to width-check at load time.
+    * probes (EXT-S20b's refusal contract) and the streaming INGEST side
+    * (EXT-6ao encodes arrivals with the index's own stamped layout): the
+    * one-row meta stamp and the ksub·dim long-form codebook rebuilt into
+    * the plan-literal array, memoized per (indexPath, listing
+    * signature). The probes then check the measured query-batch width
+    * against the coded dim on every call ([[requireUniformDim]]: a
+    * mismatched OR ragged batch must REFUSE, not mis-rank) — that check
+    * depends on the QUERY batch, so it never caches. `label` names the
+    * index family in the refusal messages.
     */
   private def loadPqMeta(
       spark: SparkSession, indexPath: String,
@@ -163,13 +155,13 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       spark, s"pqgeom|$label|$indexPath",
       Seq(s"$indexPath/meta", s"$indexPath/codebook")) {
       import spark.implicits._
-      val metaRows = spark.read.parquet(s"$indexPath/meta")
-        .select("m", "ksub", "dim").as[(Int, Int, Int)].collect()
+      val metaRows = spark.read.schema(PqMeta).parquet(s"$indexPath/meta")
+        .as[(Int, Int, Int)].collect()
       require(metaRows.length == 1, s"corrupt $label index: ${metaRows.length} meta rows")
       val (m, ksub, d) = metaRows.head
       val ds = d / m
-      val cbRows = spark.read.parquet(s"$indexPath/codebook")
-        .select(col("s"), col("code"), col("d"), col("v")).as[(Int, Int, Int, Long)].collect()
+      val cbRows = spark.read.schema(PqCodebook).parquet(s"$indexPath/codebook")
+        .as[(Int, Int, Int, Long)].collect()
       require(cbRows.length == ksub * d,
         s"corrupt $label index: ${cbRows.length} codebook rows, expected ${ksub * d}")
       val cbArr = Array.fill(m)(Array.fill(ksub)(Array.fill(ds)(0L)))
@@ -177,14 +169,6 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       (cbArr, d, ds)
     }
   }
-
-  /** The stamped coarse-centroid table alone — the float-IVF index's
-    * whole geometry (EXT-6ar's maintainer view; the composite's view is
-    * [[loadIvfPqGeometry]]).
-    */
-  private[graft] def loadIvfCentroids(
-      spark: SparkSession, indexPath: String): Seq[(Int, Seq[Float])] =
-    loadCoarseCentroids(spark, indexPath)._1
 
   /** Both sidecar geometries of a persisted IVF-PQ index in one load —
     * the streaming maintainer's view (EXT-6ao): coarse centroids +
@@ -221,21 +205,77 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     scala.util.hashing.MurmurHash3.orderedHash(flat.result()).toHexString
   }
 
-  /** The batch's DISTINCT probe cells for the static partition filter:
-    * ≤ nCentroids values by construction (cells are 0..nCentroids−1),
-    * so the collect is bounded no matter how large the query relation
-    * is. Derived from a CELL-ONLY projection of the raw query relation
-    * — never the probe's full (qid, qe, cell) plan — so the pruning
-    * pass pays the coarse scoring only, not a second evaluation of the
-    * probe side's quantization/fan-out projection (the r15 ivfpq
-    * double-eval finding).
+  /** [[ivfPqGeometryStamp]] of a persisted IVF-PQ index's current
+    * sidecars — the one spelling of the family's generation stamp: the
+    * streaming maintainer claims it, the live probe validates it, and a
+    * tuned operating point is bound to it.
     */
-  private def distinctProbeCells(
-      queries: DataFrame, scoredCells: Column,
-      nCentroids: Int, nprobe: Int): Seq[Int] = {
+  private[graft] def ivfPqIndexStamp(spark: SparkSession, indexPath: String): String = {
+    val (cents, cb, dim, _) = loadIvfPqGeometry(spark, indexPath)
+    ivfPqGeometryStamp(cents, cb, dim)
+  }
+
+  /** The batch's DISTINCT probe cells, the partitions a probe reads —
+    * ≤ nCentroids values, a bounded collect at any query-batch size —
+    * from a CELL-ONLY projection of the raw queries (never the probe
+    * side's payload: the r15 ivfpq double-eval finding). A batch already
+    * on the driver (the projection optimizes to a local relation) is
+    * read there with no Spark job; any other pays the distinct's job.
+    */
+  private def distinctProbeCells(queries: DataFrame, probeCells: Column): Seq[Int] = {
     import queries.sparkSession.implicits._
-    queries.select(probeCellsCol(scoredCells, nCentroids, nprobe).as("cell"))
-      .distinct().as[Int].collect().toSeq
+    val cells = queries.select(probeCells.as("cells"))
+    if (cells.queryExecution.optimizedPlan.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      cells.as[Seq[Int]].collect().flatten.distinct.toSeq
+    else cells.select(explode(col("cells"))).distinct().as[Int].collect().toSeq
+  }
+
+  /** The ONE cell-probe plan of the IVF family (float IVF and IVF-PQ,
+    * static and live): stamp-checked coarse centroids and the nprobe
+    * check; the caller's query side (`qid`, its payload, and the fan-out
+    * column it is handed as `cell`); [[distinctProbeCells]]; a read of
+    * only those cells' directories under `cellsRoot` (a static `cells/`
+    * or a live generation) under the declared `cellsSchema`; the index
+    * side `(cell, cid, indexPayload)` through [[indexSide]]; and the
+    * `cell` equi-join without self-pairs, which the caller scores.
+    */
+  private def cellProbe(
+      spark: SparkSession,
+      sidecarPath: String,
+      cellsRoot: String,
+      cellsSchema: String,
+      indexPayload: Column,
+      queries: DataFrame,
+      nprobe: Int,
+      dedupReplays: Boolean)(
+      querySide: Column => DataFrame): DataFrame = {
+    val (cents, nCentroids) = loadCoarseCentroids(spark, sidecarPath)
+    require(nprobe >= 1 && nprobe <= nCentroids,
+      s"nprobe ($nprobe) must be in [1, nCentroids=$nCentroids]")
+    val scoredCells = ivfScoredCells(cents, col("embedding"))
+    val q = querySide(probeCellsCol(scoredCells, nCentroids, nprobe).as("cell"))
+    val cells = distinctProbeCells(queries, probeCellArray(scoredCells, nCentroids, nprobe))
+    val idx = graft.sources.Sources.readPartitions(spark, cellsRoot, cellsSchema, "cell", cells)
+      .select(col("cell"), col("vec_id").as("cid"), indexPayload)
+    q.join(indexSide(idx, dedupReplays), Seq("cell")).filter(col("qid") =!= col("cid"))
+  }
+
+  /** The index side of a probe join, `(cid, …)` rows: `dedupReplays`
+    * drops the byte-identical rows at-least-once appends repeat (pruned
+    * rows only), and the rows spread to the default parallelism when the
+    * SCAN arrives in fewer partitions — fresh small files arrive as one
+    * partition, and a broadcast probe batch would run the whole
+    * expansion in ONE task (x175 on the slice bench: 46+ min). Decided
+    * from the scan, which plans no job: asked of the deduplicated
+    * relation, AQE runs the dedup's exchange at planning and again at
+    * execution. Identity at production scale.
+    */
+  private def indexSide(rows: DataFrame, dedupReplays: Boolean): DataFrame = {
+    val target = rows.sparkSession.sparkContext.defaultParallelism
+    val spread = rows.rdd.getNumPartitions < target
+    val kept = if (dedupReplays) rows.dropDuplicates("cid") else rows
+    if (spread) kept.repartition(target) else kept
   }
 
   /** EXT-S13 probe path: top-k cosine neighbors for an arbitrary
@@ -251,18 +291,16 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     * fan-out); the index side is read already partitioned by cell, so
     * the equi-join shuffles only the query fan-out at most.
     *
-    * The probe pins the batch's DISTINCT probe cells — at most
-    * nCentroids values by construction, the legitimate bounded collect —
-    * as a literal partition filter on the index read, so the pruned scan
-    * is guaranteed by the PLANNER (`PartitionFilters` with
-    * `selectedPartitions` resolved before execution), not left to the
-    * dynamic-partition-pruning heuristic (which does not consider an
-    * unfiltered query batch "selective" and would scan every cell).
-    * Cost: one extra narrow pass over the query side to derive the cell
-    * set — for any index big enough to matter, reading
-    * nprobe/nCentroids of the FILES repays it immediately. This is the
-    * per-microbatch serving shape (EXT-6i): train once, probe each
-    * arriving query batch against only the cells it fans out to.
+    * The probe reads only the batch's DISTINCT probe cells' directories,
+    * fixed before execution rather than left to dynamic partition
+    * pruning (which does not find an unfiltered query batch "selective"
+    * and would scan every cell): nprobe/nCentroids of the FILES — the
+    * per-microbatch serving shape (EXT-6i).
+    *
+    * Planning (warm sidecar memo) runs no index job: only the probed
+    * cells' directories are listed, under the declared schema. The
+    * distinct cell derivation runs no job for a query batch already on
+    * the driver, and the distinct's job for any other ([[cellProbe]]).
     */
   def ivfTopKFromIndex(
       spark: SparkSession,
@@ -270,56 +308,33 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       queries: DataFrame,
       k: Int = 3,
       nprobe: Int = 1): DataFrame =
-    ivfTopKOverCells(spark, indexPath,
-      spark.read.parquet(s"$indexPath/cells"), queries, k, nprobe, dedupReplays = false)
+    ivfTopKOverCells(spark, indexPath, s"$indexPath/cells", queries, k, nprobe,
+      dedupReplays = false)
 
-  /** The float-IVF probe over an EXPLICIT cell relation — shared by the
-    * static layout (reads `cells/`) and the streaming-maintained one
-    * (EXT-6ar probes the live generation). Same contract as
-    * [[ivfPqTopKOverCells]]: `dedupReplays` shields the generational
-    * layout's at-least-once appends (byte-identical duplicate rows
-    * dropped over the PRUNED minority before scoring); the static path
-    * skips it so x175's bit-pinned plan is untouched.
+  /** The float-IVF probe over the cell rows under `cellsRoot` — the
+    * static layout's `cells/` or a live generation (EXT-6ar) — with the
+    * stamped sidecars under `sidecarPath`: [[cellProbe]] with the float
+    * query as the payload, scored by the exact dot. `dedupReplays`
+    * shields the generational layout's at-least-once appends
+    * ([[indexSide]]); the static path skips it.
     */
   private[graft] def ivfTopKOverCells(
       spark: SparkSession,
       sidecarPath: String,
-      cellRows: DataFrame,
+      cellsRoot: String,
       queries: DataFrame,
       k: Int,
       nprobe: Int,
       dedupReplays: Boolean): DataFrame = {
-    val (cents, nCentroids) = loadCoarseCentroids(spark, sidecarPath)
-    require(nprobe >= 1 && nprobe <= nCentroids,
-      s"nprobe ($nprobe) must be in [1, nCentroids=$nCentroids]")
-    val scoredCells = ivfScoredCells(cents, col("embedding"))
-    // spread the QUERY side too (r18): a single-file query batch arrives
-    // as ONE scan partition, and when the planner broadcasts the (often
-    // smaller) index side the whole Σ|cell| expansion + dot + TopK
-    // partial agg runs in that one task — measured on x175 (full-corpus
-    // query batch): one 3.8–4.3 s single-task stage was the entire
-    // query. The spread moves only the narrow query rows; identity once
-    // the batch arrives with ≥ parallelism partitions.
-    val qSpread = expansionPartitioned(queries)
-    val q = qSpread.select(col("vec_id").as("qid"), col("embedding").as("qe"),
-      probeCellsCol(scoredCells, nCentroids, nprobe).as("cell"))
-    val cells = distinctProbeCells(queries, scoredCells, nCentroids, nprobe)
-    val idxPruned = cellRows.filter(col("cell").isin(cells.map(Int.box): _*))
-    // expansionPartitioned on the streamed index side: a freshly-written
-    // cell-partitioned index is SMALL FILES locally, so the scan arrives
-    // as one partition and a broadcast-joined probe batch then runs the
-    // whole Σ|cell|² expansion + the TopK partial agg in ONE task — the
-    // r13/r14 single-task expansion class, 6th site (found when x175 put
-    // this probe on the slice bench: 46+ min single-task vs minutes
-    // spread). At production scale the pruned cells already arrive as
-    // ≥ parallelism file partitions and this is the identity.
-    val idxProjected = idxPruned
-      .select(col("cell"), col("vec_id").as("cid"), col("embedding").as("ce"))
-    val idx = expansionPartitioned(
-      if (dedupReplays) idxProjected.dropDuplicates("cid") else idxProjected)
-    val scored = q.join(idx, Seq("cell")).filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), dot(col("qe"), col("ce")).as("sim"))
-    presentTopK(scored, k)
+    val pairs = cellProbe(spark, sidecarPath, cellsRoot, IvfCells,
+        col("embedding").as("ce"), queries, nprobe, dedupReplays) { cell =>
+      // spread the QUERY side too (r18): when the planner broadcasts the
+      // index side, a one-partition query batch runs the whole expansion
+      // in one task (x175: one 3.8–4.3 s single-task stage was the query)
+      expansionPartitioned(queries)
+        .select(col("vec_id").as("qid"), col("embedding").as("qe"), cell)
+    }
+    presentTopK(pairs.select(col("qid"), col("cid"), dot(col("qe"), col("ce")).as("sim")), k)
   }
 
   /** EXT-S15b build — persist the sign-signature relation: ONE corpus
@@ -342,6 +357,12 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       .write.mode("overwrite").parquet(s"$indexPath/signatures")
     initSignIndex(spark, indexPath, dim)
   }
+
+  /** `signatures/` of the sign index (static layout and every live
+    * generation of [[graft.streaming.StreamOps.maintainSignIndex]]). */
+  private[graft] val SignSignatures = "vec_id BIGINT, lo BIGINT, hi BIGINT"
+  /** The sign index's one-row `meta/` dim stamp. */
+  private[graft] val SignMeta = "dim INT"
 
   /** EXT-6aq's init half — stamp the sign index's layout (`meta/` with
     * the packed dim) and NO signature rows: the signature relation is
@@ -386,6 +407,10 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     * (bounded sample, the [[embRowBytes]] discipline): a query batch
     * whose vectors do not match the index's packed layout is REFUSED,
     * not silently mis-ranked.
+    *
+    * Planning (warm dim memo) runs no index job: the signatures read
+    * declares its schema. It runs the query batch's width check and the
+    * measured broadcast guard of the query side.
     */
   def hammingTopKFromIndex(
       spark: SparkSession,
@@ -395,9 +420,8 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       candidates: Int = 20,
       k: Int = 3,
       maxBroadcastBytes: Long = 64L << 20): DataFrame =
-    hammingTopKOverSignatures(spark, indexPath,
-      spark.read.parquet(s"$indexPath/signatures"), corpusDir, queries,
-      candidates, k, maxBroadcastBytes, dedupReplays = false)
+    hammingTopKOverSignatures(spark, indexPath, s"$indexPath/signatures", corpusDir,
+      queries, candidates, k, maxBroadcastBytes, dedupReplays = false)
 
   /** The stamped dim of a persisted sign index — shared by the static
     * probe, the streaming maintainer (EXT-6aq packs arrivals with the
@@ -407,22 +431,21 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     import spark.implicits._
     IndexCache.cached[java.lang.Integer](
         spark, s"signmeta|$indexPath", Seq(s"$indexPath/meta")) {
-      val metaRows = spark.read.parquet(s"$indexPath/meta").select("dim").as[Int].collect()
+      val metaRows = spark.read.schema(SignMeta).parquet(s"$indexPath/meta").as[Int].collect()
       require(metaRows.length == 1, s"corrupt index: ${metaRows.length} meta rows")
       Int.box(metaRows.head)
     }
   }
 
-  /** The sign-sketch probe over an EXPLICIT signature relation — shared
-    * by the static layout (reads `signatures/`) and the streaming-
-    * maintained one (EXT-6aq probes the live generation; `dedupReplays`
-    * drops at-least-once duplicate signature rows before the Hamming
-    * pass, the [[ivfPqTopKOverCells]] shield).
+  /** The sign-sketch probe over the signature rows under `sigRoot` — the
+    * static layout's `signatures/` or a live generation (EXT-6aq;
+    * `dedupReplays` drops at-least-once duplicate signature rows before
+    * the Hamming pass, the [[indexSide]] shield).
     */
   private[graft] def hammingTopKOverSignatures(
       spark: SparkSession,
       sidecarPath: String,
-      sigRows: DataFrame,
+      sigRoot: String,
       corpusDir: String,
       queries: DataFrame,
       candidates: Int,
@@ -434,9 +457,8 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     val qRaw = signSignatureProjection(queries, dim)
       .select(col("vec_id").as("qid"), col("lo").as("qlo"), col("hi").as("qhi"))
     val qSig = broadcastIfMeasuredNow(qRaw, () => 3L * 8 + 64, maxBroadcastBytes)
-    val sigProjected = sigRows.select(col("vec_id").as("cid"), col("lo"), col("hi"))
-    val idx = expansionPartitioned(
-      if (dedupReplays) sigProjected.dropDuplicates("cid") else sigProjected)
+    val idx = indexSide(spark.read.schema(SignSignatures).parquet(sigRoot)
+      .select(col("vec_id").as("cid"), col("lo"), col("hi")), dedupReplays)
     val ham = qSig.join(idx, col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
         (bit_count(col("qlo").bitwiseXOR(col("lo"))) +
@@ -997,6 +1019,15 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     }
   }
 
+  /** `codes/` of the PQ index. */
+  private[graft] val PqCodes = "vec_id BIGINT, codes ARRAY<INT>"
+  /** The OPQ layout's `perm/` sidecar (pos → dim). */
+  private[graft] val PqPerm = "pos INT, d INT"
+
+  /** The PQ and IVF-PQ `codebook/` (long form) and one-row `meta/`. */
+  private[graft] val PqCodebook = "s INT, code INT, d INT, v BIGINT"
+  private[graft] val PqMeta = "m INT, ksub INT, dim INT"
+
   /** The bounded sidecar tables of a persisted PQ or IVF-PQ index — the
     * one spelling shared by [[writePqIndex]], [[writeIvfPqIndex]] and the
     * streaming init [[initIvfPqIndex]] (a drifted stamp layout would make
@@ -1038,8 +1069,8 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(path)) None
       else {
-        val rows = spark.read.parquet(s"$indexPath/perm")
-          .select(col("pos"), col("d")).as[(Int, Int)].collect() // dim rows, bounded
+        val rows = spark.read.schema(PqPerm).parquet(s"$indexPath/perm")
+          .as[(Int, Int)].collect() // dim rows, bounded
         require(rows.length == dim && rows.map(_._2).sorted.sameElements(0 until dim),
           s"corrupt perm sidecar: ${rows.length} rows for dim $dim")
         Some(rows.sortBy(_._1).map(_._2).toSeq)
@@ -1072,7 +1103,7 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
         perm.fold(int8Quantize(col("embedding")))(p =>
           permutedVec(int8Quantize(col("embedding")), p)).as("qe"))
     val q = broadcastIfMeasuredNow(qRaw, () => int64RowBytes(qRaw, "qe"), maxBroadcastBytes)
-    val codes = spark.read.parquet(s"$indexPath/codes")
+    val codes = spark.read.schema(PqCodes).parquet(s"$indexPath/codes")
       .select(col("vec_id").as("cid"), col("codes"))
     adcTopK(q, codes, cb, dsub, k)
   }
@@ -1568,6 +1599,10 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     writePqSidecars(spark, indexPath, cb, dsub, cents)
   }
 
+  /** `cells/` of the IVF-PQ index (static layout and every live
+    * generation of [[graft.streaming.StreamOps.maintainIvfPqIndex]]). */
+  private[graft] val IvfPqCells = "vec_id BIGINT, codes ARRAY<INT>, cell INT"
+
   /** EXT-6ao's init half — train the IVF-PQ GEOMETRY on `dir` and write
     * only the bounded sidecar tables (`centroids/`, `codebook/`,
     * `meta/`) under `indexPath`, with NO code rows: the code relation
@@ -1597,11 +1632,12 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
     * the [[ivfTopKFromIndex]] centroid stamp (a corrupt coarse
     * quantizer must refuse, not mis-route probes) and the
     * [[pqTopKFromIndex]] measured query width vs the coded dim (a
-    * mismatched batch must refuse, not mis-rank) — and its static
-    * pruning: the batch's distinct probe cells pin a literal partition
-    * filter (≤ nCentroids values, the bounded collect), so the planner
-    * guarantees only nprobe/nCentroids of the code FILES are read, each
-    * an 8-byte-per-row scan.
+    * mismatched batch must refuse, not mis-rank) — and its pruning:
+    * only the probed cells' code directories are read (nprobe/nCentroids
+    * of the code FILES, 8 bytes per row).
+    *
+    * Planning (warm sidecar memo) runs no index job; it runs the query
+    * batch's width check and the distinct cell derivation ([[cellProbe]]).
     */
   def ivfPqTopKFromIndex(
       spark: SparkSession,
@@ -1609,76 +1645,41 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       queries: DataFrame,
       k: Int = 3,
       nprobe: Int = 2): DataFrame =
-    ivfPqTopKOverCells(spark, indexPath,
-      spark.read.parquet(s"$indexPath/cells"), queries, k, nprobe, dedupReplays = false)
+    ivfPqTopKOverCells(spark, indexPath, s"$indexPath/cells", queries, k, nprobe,
+      dedupReplays = false)
 
-  /** The composite probe over an EXPLICIT code-row relation — shared by
-    * the static layout ([[ivfPqTopKFromIndex]] reads `cells/`) and the
-    * streaming-maintained layout (EXT-6ao probes the live GENERATION
-    * directory validated by `StreamIndexOps.ivfPqProbeLive`). `sidecarPath` is
-    * where the stamped centroids/codebook/meta live — the two layouts
-    * share it.
-    *
-    * `dedupReplays` is the generational layout's replay shield: the
-    * maintainer's at-least-once appends can only duplicate IDENTICAL
-    * (cell, vec_id, codes) rows (the 6h contract — arrivals are new
-    * vec_ids; re-encoding an existing id is out of contract), and a
-    * duplicated code row would duplicate its (qid, cid) scored pair and
-    * eat a top-k slot. `dropDuplicates` over the PRUNED code rows (m
-    * bytes/row, nprobe/nCentroids of the relation) makes the probe
-    * replay-IMMUNE, the winnowCandidates discipline; the static layout
-    * skips it (overwrite semantics cannot duplicate) so x179's
-    * bit-pinned plan is untouched.
+  /** The composite probe over the code rows under `cellsRoot` — the
+    * static layout's `cells/` or a live generation (EXT-6ao), with the
+    * stamped sidecars under `sidecarPath`: [[cellProbe]] with the
+    * query's ADC distance table as the payload, scored by [[adcSim]].
+    * `dedupReplays` is the generational layout's replay shield: replays
+    * can only duplicate IDENTICAL code rows (the 6h contract), and a
+    * duplicate would repeat its scored pair and eat a top-k slot; the
+    * static layout skips it (overwrite semantics cannot duplicate).
     */
   private[graft] def ivfPqTopKOverCells(
       spark: SparkSession,
       sidecarPath: String,
-      cellRows: DataFrame,
+      cellsRoot: String,
       queries: DataFrame,
       k: Int,
       nprobe: Int,
       dedupReplays: Boolean): DataFrame = {
-    val (cents, nCentroids) = loadCoarseCentroids(spark, sidecarPath)
-    require(nprobe >= 1 && nprobe <= nCentroids,
-      s"nprobe ($nprobe) must be in [1, nCentroids=$nCentroids]")
-    val (cb, dsub) = loadPqGeometry(spark, sidecarPath, queries, "ivfpq")
-    val scoredCells = ivfScoredCells(cents, col("embedding"))
-    // the probe side carries its ADC distance TABLE (adcTableCol) in
-    // place of the raw int8 query: the cell equi-join's exchange (or
-    // broadcast) materializes it once per (query, probe-cell) row, and
-    // the candidate stream pays m lookups per code row.
-    // r19 (VERDICT r18 task 2): the r18 query-side spread is REMOVED on
-    // this path — the driver measured it regressing the queries it was
-    // meant to help (x179 1.26→1.54 s, x191 2.53→2.82 s vs the pre-opt
-    // base) and a same-session A/B against the spread-free path
-    // confirmed it. The float path (ivfTopKOverCells) keeps its
-    // spread: there the per-pair work is a dim-wide dot product and the
-    // one-task expansion measured 3.8–4.3 s (x175); here it is m table
-    // lookups over ALREADY-PRUNED code rows, so the added exchange (and
-    // its extra AQE stage) costs more than the parallelism buys.
-    // Scale-safety without the spread: a single-partition query batch
-    // only serializes the expansion when the planner BROADCASTS the
-    // index side, which it does only when the pruned code relation is
-    // under the broadcast threshold — and a sub-threshold code relation
-    // bounds the expansion to |q|·(small) cheap ADC lookups. A larger
-    // pruned index plans a shuffle join, whose exchange spreads the
-    // query side anyway.
-    val q = queries.select(col("vec_id").as("qid"),
-      adcTableCol(int8Quantize(col("embedding")), cb, dsub).as("dtab"),
-      probeCellsCol(scoredCells, nCentroids, nprobe).as("cell"))
-    // cell-only derivation: the prune pass never re-evaluates the int8
-    // quantize projection the probe side carries
-    val cells = distinctProbeCells(queries, scoredCells, nCentroids, nprobe)
-    val idxPruned = cellRows.filter(col("cell").isin(cells.map(Int.box): _*))
-    val idxProjected = idxPruned
-      .select(col("cell"), col("vec_id").as("cid"), col("codes"))
-    val idxDeduped =
-      if (dedupReplays) idxProjected.dropDuplicates("cid") else idxProjected
-    // freshly-written cell partitions are small files locally — spread
-    // the probe expansion off the scan's task count (the x175 site)
-    val idx = expansionPartitioned(idxDeduped)
-    presentAdcTopK(q.join(idx, Seq("cell")).filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), adcSim(cb.length)), k)
+    val (cb, dim, dsub) = loadPqMeta(spark, sidecarPath, "ivfpq")
+    val pairs = cellProbe(spark, sidecarPath, cellsRoot, IvfPqCells, col("codes"),
+        queries, nprobe, dedupReplays) { cell =>
+      requireUniformDim(queries, dim, "coded dim")
+      // the probe side carries its ADC distance TABLE, materialized once
+      // per (query, probe-cell) row by the join's exchange or broadcast;
+      // a candidate then costs m lookups. No query-side spread (r19):
+      // it regressed x179 1.26→1.54 s and x191 2.53→2.82 s, since m
+      // lookups over pruned code rows cost less than the extra exchange;
+      // a broadcast index side is sub-threshold, so its one-task
+      // expansion stays small, and a larger one plans a shuffle join.
+      queries.select(col("vec_id").as("qid"),
+        adcTableCol(int8Quantize(col("embedding")), cb, dsub).as("dtab"), cell)
+    }
+    presentAdcTopK(pairs.select(col("qid"), col("cid"), adcSim(cb.length)), k)
   }
 
   /** The operating-point SELECTION rule over a [[refinedTuningSweep]]
@@ -1770,7 +1771,7 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       k: Int = 3,
       queryMod: Int = 10): DataFrame = {
     val (cents, cb, dim, _) = loadIvfPqGeometry(spark, indexPath)
-    val stamp = ivfPqGeometryStamp(cents, cb, dim)
+    val stamp = ivfPqIndexStamp(spark, indexPath)
     val nCentroids = cents.length
     val m = cb.length
     val ksub = cb.headOption.map(_.length).getOrElse(0)
@@ -1786,8 +1787,14 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
       m, ksub, iters, nprobes, shortlists, k, queryMod)
       .withColumn("geom_stamp", lit(stamp))
     point.coalesce(1).write.mode("overwrite").parquet(s"$indexPath/opp")
-    spark.read.parquet(s"$indexPath/opp")
+    spark.read.schema(IvfPqOpp).parquet(s"$indexPath/opp")
   }
+
+  /** The tuned index's one-row `opp/` sidecar: [[chooseOperatingPoint]]'s
+    * row and the geometry stamp it was measured under. */
+  private[graft] val IvfPqOpp = "nprobe INT, shortlist INT, n_queries BIGINT, " +
+    "n_candidates BIGINT, n_float_fetches BIGINT, n_hits BIGINT, recall4 DOUBLE, " +
+    "cleared BOOLEAN, budget DOUBLE, geom_stamp STRING"
 
   /** The stamped operating point of a tuned IVF-PQ index — the 1-row
     * `opp/` sidecar, validated before every serve: an UNTUNED index
@@ -1808,13 +1815,12 @@ private[operators] trait SimilarityIndexOps { self: Similarity.type =>
         "tuneIvfPqIndex(indexPath, corpusDir, budget) first")
     val row = IndexCache.cached(
       spark, s"ivfpqopp|$indexPath", Seq(s"$indexPath/opp")) {
-      val rows = spark.read.parquet(s"$indexPath/opp").collect()
+      val rows = spark.read.schema(IvfPqOpp).parquet(s"$indexPath/opp").collect()
       require(rows.length == 1,
         s"corrupt opp sidecar at $indexPath: ${rows.length} rows")
       rows.head
     }
-    val (cents, cb, dim, _) = loadIvfPqGeometry(spark, indexPath)
-    val current = ivfPqGeometryStamp(cents, cb, dim)
+    val current = ivfPqIndexStamp(spark, indexPath)
     val tuned = row.getAs[String]("geom_stamp")
     require(tuned == current,
       s"stamped operating point at $indexPath was tuned under geometry " +

@@ -13,9 +13,9 @@ import org.apache.spark.sql.types._
   * the operators below only ever add single-column filters and prunable
   * projections, so partition pruning composes for free.
   *
-  * Both read with a declared schema: the harness schema is fixed
+  * Every reader declares its schema: the harness schema is fixed
   * (FIXTURES.md), and a bare `spark.read.parquet` runs a schema-inference
-  * Spark job on every call, so building either DataFrame runs no job.
+  * Spark job on every call, so building any of these DataFrames runs no job.
   * (`Replication.events` normalizes instead: its `ts` type varies by
   * fixture generation.)
   */
@@ -45,6 +45,21 @@ object Tables {
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType)),
     StructField("label", IntegerType)))
+
+  /** `part(p_partkey, p_name, p_brand, p_type, p_size, p_retailprice)` —
+    * the product catalog the record-linkage operators block and match.
+    */
+  def part(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(partSchema).parquet(s"$dir/part.parquet")
+
+  /** The `part` schema (FIXTURES.md). */
+  val partSchema: StructType = StructType(Seq(
+    StructField("p_partkey", LongType),
+    StructField("p_name", StringType),
+    StructField("p_brand", StringType),
+    StructField("p_type", StringType),
+    StructField("p_size", IntegerType),
+    StructField("p_retailprice", DoubleType)))
 
   /** Whitespace tokenizer shared by every text operator. Must stay
     * byte-for-byte equivalent to the oracle's `string_split(text, ' ')`:

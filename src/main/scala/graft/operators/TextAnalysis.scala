@@ -394,9 +394,9 @@ object TextAnalysis {
 
   /** The read schemas of the BM25 index relations — declared, so a
     * probe's reads plan without a schema-inference job. */
-  private val Bm25Postings = "doc_id BIGINT, token STRING, tf BIGINT, bucket INT"
-  private val Bm25Doclens = "doc_id BIGINT, dl BIGINT"
-  private val Bm25Lexicon = "token STRING, df BIGINT"
+  private[graft] val Bm25Postings = "doc_id BIGINT, token STRING, tf BIGINT, bucket INT"
+  private[graft] val Bm25Doclens = "doc_id BIGINT, dl BIGINT"
+  private[graft] val Bm25Lexicon = "token STRING, df BIGINT"
 
   /** EXT-T9b build — persist the BM25 inverted index: the `meta/`
     * bucket-count stamp ([[initBm25Index]]), the [[bm25Relations]]
@@ -482,7 +482,8 @@ object TextAnalysis {
     *
     * Planning runs no Spark job: the terms' buckets come from a local
     * relation (collected on the driver without a job), only those
-    * buckets' directories are listed and read, and every read carries
+    * buckets' directories are listed and read
+    * ([[graft.sources.Sources.readPartitions]]), and every read carries
     * its declared schema. The cost: the doc-length aggregate scans the
     * 16-byte doclens rows per probe (linear in docs, not tokens);
     * bucket pruning bounds the postings bytes, the relation that scales
@@ -502,22 +503,9 @@ object TextAnalysis {
     require(terms.nonEmpty, "probe term list must be non-empty")
     val probeTerms = terms.distinct
     val buckets = probeTerms.toDF("token").select(bm25Bucket(col("token"), nBuckets))
-      .collect().map(_.getInt(0)).distinct
-    // read only the probed buckets' directories: discovering partitions
-    // under `postings/` lists every bucket, and past
-    // `parallelPartitionDiscovery.threshold` (32) directories Spark
-    // lists them in a Spark job
-    val postingsDir = new org.apache.hadoop.fs.Path(s"$root/postings")
-    val fs = postingsDir.getFileSystem(spark.sessionState.newHadoopConf())
-    val bucketDirs = buckets.toSeq
-      .map(bk => new org.apache.hadoop.fs.Path(postingsDir, s"bucket=$bk"))
-      .filter(fs.exists).map(_.toString)
-    val postings =
-      if (bucketDirs.isEmpty)
-        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(Bm25Postings))
-      else spark.read.schema(Bm25Postings).option("basePath", postingsDir.toString)
-        .parquet(bucketDirs: _*)
+      .collect().map(_.getInt(0)).toSeq
+    val postings = graft.sources.Sources.readPartitions(
+      spark, s"$root/postings", Bm25Postings, "bucket", buckets)
     val matched = postings.filter(col("token").isin(probeTerms: _*))
       .select("token", "doc_id", "tf")
     val cand = if (dedupReplays) matched.dropDuplicates("token", "doc_id") else matched

@@ -194,4 +194,29 @@ object Sources {
       .partitionBy(partitionCols: _*)
       .parquet(outDir)
   }
+
+  /** Read only the `partCol=<v>` directories of a partitioned parquet
+    * relation (the layout [[compactParquet]] preserves) for the given
+    * values, under its declared `schema` (DDL). A value with no
+    * directory contributes no rows, and no directory at all gives an
+    * empty relation of that schema. Planning runs no Spark job: the
+    * schema is declared, and only the probed directories are listed,
+    * where discovering every partition under `dir` is a Spark listing
+    * job past `parallelPartitionDiscovery.threshold` (32) directories.
+    */
+  def readPartitions(
+      spark: SparkSession,
+      dir: String,
+      schema: String,
+      partCol: String,
+      values: Seq[Int]): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val dirs = values.distinct.map(v => new org.apache.hadoop.fs.Path(root, s"$partCol=$v"))
+      .filter(fs.exists).map(_.toString)
+    if (dirs.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        StructType.fromDDL(schema))
+    else spark.read.schema(schema).option("basePath", dir).parquet(dirs: _*)
+  }
 }

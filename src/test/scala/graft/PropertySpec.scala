@@ -134,6 +134,28 @@ class PropertySpec extends AnyFunSuite with SparkSuite {
   }
 
 
+  test("int8 lattice: the driver spelling equals int8Quantize on floats and doubles, ties and negatives included") {
+    import spark.implicits._
+    import graft.operators.Similarity.{int8Lattice, int8Quantize}
+    // ties: v·127 + 0.5 lands on (or next to) an integer at v = (2n+1)/254,
+    // and the raw ±x.5 values; the rest spans the embedding range and past it
+    val genV: Gen[Double] = Gen.oneOf(
+      Gen.chooseNum(-127, 126).map(n => (2 * n + 1) / 254.0),
+      Gen.chooseNum(-4, 3).map(_ + 0.5),
+      Gen.chooseNum(-1.0, 1.0),
+      Gen.chooseNum(-300.0, 300.0))
+    check(Prop.forAll(Gen.listOfN(24, genV)) { vs =>
+      val floats = vs.map(_.toFloat)
+      val row = Seq((vs, floats)).toDF("d", "f")
+        .select(int8Quantize(org.apache.spark.sql.functions.col("d")),
+          int8Quantize(org.apache.spark.sql.functions.col("f")))
+        .as[(Seq[Long], Seq[Long])].head()
+      assert(row._1 == vs.map(int8Lattice), s"doubles $vs")
+      assert(row._2 == floats.map(f => int8Lattice(f.toDouble)), s"floats $floats")
+      true
+    }, n = 50)
+  }
+
   test("winnowing laws: planted-copy guarantee, subset of gram hashes, density bound") {
     val genTok = Gen.chooseNum(0, 25).map(i => s"t$i")
     val gen = for {

@@ -168,7 +168,8 @@ class SourcesSpec extends AnyFunSuite with SparkSuite {
       val dir = s"/root/testdata/$sf"
       for ((table, read) <- Seq[(String, String => org.apache.spark.sql.DataFrame)](
           "documents" -> (d => Tables.documents(spark, d)),
-          "embeddings" -> (d => Tables.embeddings(spark, d)))) {
+          "embeddings" -> (d => Tables.embeddings(spark, d)),
+          "part" -> (d => Tables.part(spark, d)))) {
         val (df, activity) = SparkActivity.during(spark)(read(dir))
         assert(activity.jobs == 0, s"$table at $sf: building the DataFrame ran ${activity.jobs} job(s)")
         assert(df.schema == spark.read.parquet(s"$dir/$table.parquet").schema, s"$table at $sf")

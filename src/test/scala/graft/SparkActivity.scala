@@ -8,11 +8,14 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListe
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
-/** What a block of driver code asked of Spark: the jobs it started and
-  * the long call sites of the SQL executions it ran (an execution that
-  * needs no job, such as a local relation's `collect`, still posts one).
+/** What a block of driver code asked of Spark: the jobs it started, each
+  * job's stage names (its short call site, such as `parquet at …` for a
+  * schema inference) and description (the listed paths of a
+  * partition-discovery job), and the
+  * long call sites of the SQL executions it ran (an execution that needs
+  * no job, such as a local relation's `collect`, still posts one).
   */
-final case class SparkActivity(jobs: Int, sqlCallSites: Seq[String])
+final case class SparkActivity(jobs: Int, sqlCallSites: Seq[String], jobSites: Seq[String] = Nil)
 
 object SparkActivity {
   private val SyncGroup = "graft-spec-sync"
@@ -49,9 +52,15 @@ object SparkActivity {
       val out = body
       sync()
       val seen = events.asScala.toSeq
+      val jobStarts = seen.collect { case js: SparkListenerJobStart => js }
       (out, SparkActivity(
-        seen.count(_.isInstanceOf[SparkListenerJobStart]),
-        seen.collect { case s: SparkListenerSQLExecutionStart => s.details }))
+        jobStarts.length,
+        seen.collect { case s: SparkListenerSQLExecutionStart => s.details },
+        jobStarts.map { js =>
+          (js.stageInfos.map(_.name).distinct ++
+            Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description"))))
+            .mkString(" | ")
+        }))
     } finally sc.removeSparkListener(listener)
   }
 }

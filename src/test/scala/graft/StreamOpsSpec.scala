@@ -1583,6 +1583,145 @@ class StreamOpsSpec extends AnyFunSuite with SparkSuite {
     assert(l.collect().map(_.toString).toSeq == expect)
   }
 
+  test("vector probes: a warm live probe plans with the jobs of its static twin; float IVF plans with none; no planning job reads an index") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val sfDir = "/root/testdata/sf0.001"
+    val tmp = java.nio.file.Files.createTempDirectory("graft-vec-plan").toString
+    // 40 cells: past 32 directories, discovering every `cell=` partition
+    // of an index is a Spark listing job
+    val nc = 40
+    graft.operators.Similarity.writeIvfIndex(spark, sfDir, s"$tmp/ivf", nCentroids = nc)
+    graft.operators.Similarity.writeIvfPqIndex(spark, sfDir, s"$tmp/ivfpq", nCentroids = nc)
+    graft.operators.Similarity.writeSignIndex(spark, sfDir, s"$tmp/sign")
+    graft.operators.Similarity.initIvfIndex(spark, sfDir, s"$tmp/ivf-live", nCentroids = nc)
+    graft.operators.Similarity.initIvfPqIndex(spark, sfDir, s"$tmp/ivfpq-live", nCentroids = nc)
+    graft.operators.Similarity.initSignIndex(spark, s"$tmp/sign-live")
+    val vecs = graft.operators.Tables.embeddings(spark, sfDir)
+      .select("vec_id", "embedding").as[(Long, Seq[Float])].collect().toSeq
+    for ((name, maintain) <- Seq[(String, (org.apache.spark.sql.DataFrame, String, String) =>
+        org.apache.spark.sql.streaming.StreamingQuery)](
+        "ivf-live" -> ((d, i, c) => StreamOps.maintainIvfIndex(d, i, c)),
+        "ivfpq-live" -> ((d, i, c) => StreamOps.maintainIvfPqIndex(d, i, c)),
+        "sign-live" -> ((d, i, c) => StreamOps.maintainSignIndex(d, i, c)))) {
+      val stream = MemoryStream[(Long, Seq[Float])]
+      val q = maintain(stream.toDF().toDF("vec_id", "embedding"), s"$tmp/$name", s"$tmp/ckpt-$name")
+      try {
+        vecs.grouped(300).foreach { g =>
+          stream.addData(g.toIndexedSeq); q.processAllAvailable()
+        }
+      } finally q.stop()
+    }
+    val populated = new java.io.File(s"$tmp/ivfpq/cells").listFiles()
+      .count(_.getName.startsWith("cell="))
+    assert(populated > 32, s"only $populated of $nc cells populated")
+    val queries = vecs.filter(_._1 % 25 == 0).toDF("vec_id", "embedding")
+    val probes = Seq[(String, () => org.apache.spark.sql.DataFrame, () => org.apache.spark.sql.DataFrame)](
+      ("ivf",
+        () => graft.operators.Similarity.ivfTopKFromIndex(spark, s"$tmp/ivf", queries, nprobe = 2),
+        () => StreamOps.ivfProbeLive(spark, s"$tmp/ivf-live", queries, nprobe = 2)),
+      ("ivfpq",
+        () => graft.operators.Similarity.ivfPqTopKFromIndex(spark, s"$tmp/ivfpq", queries),
+        () => StreamOps.ivfPqProbeLive(spark, s"$tmp/ivfpq-live", queries)),
+      ("sign",
+        () => graft.operators.Similarity.hammingTopKFromIndex(spark, s"$tmp/sign", sfDir, queries),
+        () => StreamOps.hammingProbeLive(spark, s"$tmp/sign-live", sfDir, queries)))
+    for ((family, static, live) <- probes) {
+      // warm: the first probes read and memoize every sidecar
+      val expect = static().collect().map(_.toString).toSeq
+      assert(expect.nonEmpty && live().collect().map(_.toString).toSeq == expect, family)
+      val (s, sAct) = SparkActivity.during(spark)(static())
+      val (l, lAct) = SparkActivity.during(spark)(live())
+      def shown(a: SparkActivity) = a.jobSites.mkString("\n  ", "\n  ", "")
+      assert(lAct.jobs == sAct.jobs,
+        s"$family: planning the live probe ran ${lAct.jobs} jobs, the static one ${sAct.jobs}:" +
+          s"\nstatic:${shown(sAct)}\nlive:${shown(lAct)}")
+      if (family == "ivf")
+        assert(sAct.jobs == 0, s"planning the warm float-IVF probe ran jobs:${shown(sAct)}")
+      for (site <- sAct.jobSites ++ lAct.jobSites)
+        assert(!site.startsWith("parquet at") && !site.contains(tmp),
+          s"$family: a planning job read the index: $site")
+      // planning is not execution: the plans still answer, and agree
+      assert(s.collect().map(_.toString).toSeq == expect, family)
+      assert(l.collect().map(_.toString).toSeq == expect, family)
+    }
+  }
+
+  test("index relations: every declared read schema equals the inferred schema of what its writer or maintainer wrote, static and live") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.operators.{Curation, Dedup, Multimodal, Similarity, TextAnalysis}
+    val sfDir = "/root/testdata/sf0.001"
+    val tmp = java.nio.file.Files.createTempDirectory("graft-index-schemas").toString
+    // the static layouts
+    Similarity.writeIvfIndex(spark, sfDir, s"$tmp/ivf")
+    Similarity.writeIvfPqIndex(spark, sfDir, s"$tmp/ivfpq")
+    Similarity.tuneIvfPqIndex(spark, s"$tmp/ivfpq", sfDir, budget = 0.5,
+      nprobes = Seq(2), shortlists = Seq(8))
+    Similarity.writeSignIndex(spark, sfDir, s"$tmp/sign")
+    Similarity.writePqIndex(spark, sfDir, s"$tmp/pq", opq = true)
+    TextAnalysis.writeBm25Index(spark, sfDir, s"$tmp/bm25")
+    Curation.writeClusterIndex(spark, sfDir, s"$tmp/cluster")
+    // the live layouts: one generation each
+    Similarity.initIvfIndex(spark, sfDir, s"$tmp/ivf-live")
+    Similarity.initIvfPqIndex(spark, sfDir, s"$tmp/ivfpq-live")
+    Similarity.initSignIndex(spark, s"$tmp/sign-live")
+    TextAnalysis.initBm25Index(spark, s"$tmp/bm25-live")
+    val vecs = graft.operators.Tables.embeddings(spark, sfDir)
+      .select("vec_id", "embedding").as[(Long, Seq[Float])].collect().toSeq
+    val docs = graft.operators.Tables.documents(spark, sfDir)
+      .select("doc_id", "text").as[(Long, String)].collect().toSeq
+    def drive[T: org.apache.spark.sql.Encoder](rows: Seq[T])(start: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+      val stream = MemoryStream[T]
+      val q = start(stream.toDF())
+      try { stream.addData(rows); q.processAllAvailable() } finally q.stop()
+    }
+    def ck(name: String) = s"$tmp/ckpt-$name"
+    drive(vecs)(s => StreamOps.maintainIvfIndex(s.toDF("vec_id", "embedding"), s"$tmp/ivf-live", ck("ivf")))
+    drive(vecs)(s => StreamOps.maintainIvfPqIndex(s.toDF("vec_id", "embedding"), s"$tmp/ivfpq-live", ck("ivfpq")))
+    drive(vecs)(s => StreamOps.maintainSignIndex(s.toDF("vec_id", "embedding"), s"$tmp/sign-live", ck("sign")))
+    drive(docs)(s => StreamOps.maintainBm25Index(s.toDF("doc_id", "text"), s"$tmp/bm25-live", ck("bm25")))
+    drive(docs)(s => StreamOps.maintainLshIndex(s.toDF("doc_id", "text"), s"$tmp/lsh-live", ck("lsh")))
+    drive(docs)(s => StreamOps.maintainWinnowIndex(s.toDF("doc_id", "text"), s"$tmp/winnow-live", ck("winnow")))
+    drive(docs)(s => StreamOps.maintainSegmentIndex(s.toDF("doc_id", "text"), s"$tmp/segment-live", ck("segment")))
+    drive(docs.take(20))(s => StreamOps.maintainPhashIndex(s.toDF("doc_id", "text").selectExpr(
+      "doc_id", "encode(text, 'UTF-8') AS payload", "'text/plain' AS media_type"),
+      s"$tmp/phash-live", ck("phash")))
+    def gen(index: String) = s"$tmp/$index/gen-0"
+    val declared = Seq(
+      s"$tmp/ivf/cells" -> Similarity.IvfCells,
+      s"$tmp/ivf/centroids" -> Similarity.Centroids,
+      s"$tmp/ivfpq/cells" -> Similarity.IvfPqCells,
+      s"$tmp/ivfpq/centroids" -> Similarity.Centroids,
+      s"$tmp/ivfpq/codebook" -> Similarity.PqCodebook,
+      s"$tmp/ivfpq/meta" -> Similarity.PqMeta,
+      s"$tmp/ivfpq/opp" -> Similarity.IvfPqOpp,
+      s"$tmp/sign/signatures" -> Similarity.SignSignatures,
+      s"$tmp/sign/meta" -> Similarity.SignMeta,
+      s"$tmp/pq/codes" -> Similarity.PqCodes,
+      s"$tmp/pq/perm" -> Similarity.PqPerm,
+      s"$tmp/pq/codebook" -> Similarity.PqCodebook,
+      s"$tmp/pq/meta" -> Similarity.PqMeta,
+      s"$tmp/bm25/postings" -> TextAnalysis.Bm25Postings,
+      s"$tmp/bm25/doclens" -> TextAnalysis.Bm25Doclens,
+      s"$tmp/bm25/lexicon" -> TextAnalysis.Bm25Lexicon,
+      s"$tmp/cluster/meta" -> Curation.ClusterIndexMeta,
+      gen("ivf-live") -> Similarity.IvfCells,
+      gen("ivfpq-live") -> Similarity.IvfPqCells,
+      gen("sign-live") -> Similarity.SignSignatures,
+      s"${gen("bm25-live")}/postings" -> TextAnalysis.Bm25Postings,
+      s"${gen("bm25-live")}/doclens" -> TextAnalysis.Bm25Doclens,
+      gen("lsh-live") -> Dedup.BandSignatures,
+      gen("winnow-live") -> Dedup.WinnowSignatures,
+      gen("segment-live") -> Dedup.SegmentSignatures,
+      gen("phash-live") -> Multimodal.PhashSignatures)
+    for ((path, ddl) <- declared)
+      assert(spark.read.parquet(path).schema ==
+        org.apache.spark.sql.types.StructType.fromDDL(ddl),
+        s"$path: inferred ${spark.read.parquet(path).schema.toDDL}, declared $ddl")
+  }
+
   test("EXT-6aq maintainSignIndex: live probe equals the static probe across generations + replays; retrain refused") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, lit, pmod}

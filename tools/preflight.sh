@@ -8,11 +8,12 @@
 #   3. sink specs             — KafkaBatchWriterSpec + PipelineSpec: the
 #      replication sink's envelope, null refusals, plan shape and
 #      exactly-once replay, so a sink change is gated before commit
-#   4. 9-query smoke Verify   — one query per heavy family actually runs
+#   4. 12-query smoke Verify  — one query per heavy family actually runs
 #      end-to-end at sf0.001 and oracle-passes in DuckDB (both PQ
 #      layouts: x105 plain, x189 OPQ; the persisted BM25 index: x184;
 #      the shared near-dup candidate stage: x52 LSH, x116 PPJoin prefix;
-#      the shared exact-scoring path: x5 brute top-k, x170 nprobe sweep)
+#      the shared exact-scoring path: x5 brute top-k, x170 nprobe sweep;
+#      the persisted vector-index probes: x175 IVF, x179 IVF-PQ, x183 sign)
 #   5. perfbench self-tests   — the benchmark's statistics and schedule
 #   6. perfbench scalac build — src/main + perfbench/src compile together,
 #      so a main-source change that breaks the benchmark fails here
@@ -24,7 +25,7 @@
 set -u
 cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.001}
-SMOKE=${PREFLIGHT_SMOKE:-x1_exact_dedup,x105_pq_recall,x119_vocab_coverage,x189_pq_codes_opq,x184_bm25_topk_indexed,x52_lsh_calibration,x116_containment,x5_topk_cosine,x170_ann_nprobe_sweep}
+SMOKE=${PREFLIGHT_SMOKE:-x1_exact_dedup,x105_pq_recall,x119_vocab_coverage,x189_pq_codes_opq,x184_bm25_topk_indexed,x52_lsh_calibration,x116_containment,x5_topk_cosine,x170_ann_nprobe_sweep,x175_ivf_topk_indexed,x179_ivfpq_topk_indexed,x183_hamming_topk_indexed}
 OUT=$(mktemp -d /tmp/preflight.XXXXXX)
 trap 'rm -rf "$OUT"' EXIT
 
